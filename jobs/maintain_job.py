@@ -20,13 +20,8 @@ the fact — the ``rewrite_data_files`` / ``expire_snapshots`` /
     ... remove-orphans --table tier_1m               # GC unreferenced files
     ... mor-delete --table docs --doc-ids d1 d2      # merge-on-read delete
                                                      # (O(keys), no rewrite)
-    ... tag --table tier_1m --name release-1         # named snapshot ref
-    ... publish --table tier_1m --snapshot 5         # WAP publish / rollback
-    ... create-branch --table docs --name audit      # branch ref
-    ... fast-forward --table docs --name audit       # publish branch head
     ... inspect --table tier_1m --what files         # metadata tables
-                                                     # (snapshots/files/
-                                                     #  history/refs)
+                                                     # (snapshots/files)
 
 ``delete``/``restate`` read doc ids from ``--doc-ids`` or one-per-line
 from ``--doc-ids-file`` (compliance batches arrive as files).
@@ -89,25 +84,6 @@ def main(argv: list[str] | None = None) -> dict:
     p.add_argument("--older-than-s", type=float, default=3 * 86400)
     p.add_argument("--dry-run", action="store_true")
 
-    p = sub.add_parser("tag")
-    p.add_argument("--table", required=True)
-    p.add_argument("--name", required=True)
-    p.add_argument("--snapshot", type=int, default=None)
-    p.add_argument("--replace", action="store_true")
-
-    p = sub.add_parser("publish")
-    p.add_argument("--table", required=True)
-    p.add_argument("--snapshot", type=int, required=True)
-
-    p = sub.add_parser("create-branch")
-    p.add_argument("--table", required=True)
-    p.add_argument("--name", required=True)
-    p.add_argument("--snapshot", type=int, default=None)
-
-    p = sub.add_parser("fast-forward")
-    p.add_argument("--table", required=True)
-    p.add_argument("--name", required=True)
-
     p = sub.add_parser("changes")
     p.add_argument("--table", required=True)
     p.add_argument("--from-snapshot", type=int, required=True)
@@ -127,8 +103,7 @@ def main(argv: list[str] | None = None) -> dict:
     p = sub.add_parser("inspect")
     p.add_argument("--table", required=True)
     p.add_argument(
-        "--what", choices=("snapshots", "files", "history", "refs"),
-        default="snapshots",
+        "--what", choices=("snapshots", "files"), default="snapshots"
     )
     p.add_argument("--snapshot", type=int, default=None)
     p.add_argument("--with-rows", action="store_true")
@@ -136,7 +111,7 @@ def main(argv: list[str] | None = None) -> dict:
     args = ap.parse_args(argv)
 
     from pyreshaper_spark.config import RunConfig
-    from pyreshaper_spark.sources.catalog import get_catalog, require_caps
+    from pyreshaper_spark.sources.catalog import get_catalog
 
     cfg = RunConfig.read(args.config)
     spark = (
@@ -146,26 +121,6 @@ def main(argv: list[str] | None = None) -> dict:
         .getOrCreate()
     )
     cat = get_catalog(cfg.output_path)
-    # binding-time capability gate per subcommand (a core-only adapter
-    # fails here with one clear error, never deep inside the op)
-    _OP_CAPS = {
-        "delete": {"mutation"}, "restate": {"mutation"},
-        # refresh consumes CDC from the INPUT catalog, which
-        # refresh_from_changes gates itself on cat_in; the output-side
-        # binding-time hint is mutation only
-        "refresh": {"mutation"},
-        # mor-delete also reads the recorded schema (table_schema_json
-        # lives in the maintenance group) to cast the key column
-        "mor-delete": {"mutation", "maintenance"},
-        "compact": {"maintenance"}, "expire": {"maintenance"},
-        "remove-orphans": {"maintenance"}, "tag": {"refs"},
-        "publish": {"refs"}, "create-branch": {"refs"},
-        "fast-forward": {"refs"}, "changes": {"cdc"},
-        "inspect": {"refs"}, "diff": {"snapshots"},
-    }
-    if args.op in _OP_CAPS:
-        require_caps(cat, _OP_CAPS[args.op], f"maintain {args.op}")
-
     if args.op in ("delete", "restate"):
         from pyreshaper_spark.plans.delete import delete_docs, restate_docs
 
@@ -225,24 +180,6 @@ def main(argv: list[str] | None = None) -> dict:
             older_than_s=args.older_than_s,
         )
         out = {"op": "expire", "table": args.table, "files_deleted": n}
-    elif args.op == "tag":
-        sid = cat.tag(
-            args.table, args.name, snapshot_id=args.snapshot,
-            replace=args.replace,
-        )
-        out = {"op": "tag", "table": args.table, "name": args.name,
-               "snapshot_id": sid}
-    elif args.op == "publish":
-        sid = cat.publish(args.table, args.snapshot)
-        out = {"op": "publish", "table": args.table, "snapshot_id": sid}
-    elif args.op == "create-branch":
-        sid = cat.create_branch(args.table, args.name, snapshot_id=args.snapshot)
-        out = {"op": "create-branch", "table": args.table,
-               "name": args.name, "snapshot_id": sid}
-    elif args.op == "fast-forward":
-        sid = cat.fast_forward(args.table, args.name)
-        out = {"op": "fast-forward", "table": args.table,
-               "name": args.name, "snapshot_id": sid}
     elif args.op == "remove-orphans":
         removed = cat.remove_orphan_files(
             args.table, older_than_s=args.older_than_s, dry_run=args.dry_run
@@ -252,24 +189,20 @@ def main(argv: list[str] | None = None) -> dict:
             "dry_run": bool(args.dry_run), "files_removed": len(removed),
         }
     elif args.op == "inspect":
-        # metadata tables (Iceberg's t.snapshots / t.files / t.history /
-        # t.refs): print every row — these are O(manifest), never O(data)
+        # metadata tables (Iceberg's t.snapshots / t.files): print
+        # every row — these are O(manifest), never O(data)
         if args.snapshot is not None and args.what != "files":
             raise SystemExit(
-                "--snapshot only applies to --what files (snapshots/"
-                "history/refs always show the full log)"
+                "--snapshot only applies to --what files (snapshots "
+                "always shows the full log)"
             )
         if args.what == "snapshots":
             df = cat.inspect_snapshots(spark, args.table)
-        elif args.what == "files":
+        else:
             df = cat.inspect_files(
                 spark, args.table, snapshot_id=args.snapshot,
                 with_rows=args.with_rows,
             )
-        elif args.what == "history":
-            df = cat.inspect_history(spark, args.table)
-        else:
-            df = cat.inspect_refs(spark, args.table)
         rows = [r.asDict() for r in df.collect()]
         out = {"op": "inspect", "table": args.table, "what": args.what,
                "n": len(rows), "rows": rows}

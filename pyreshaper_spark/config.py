@@ -30,7 +30,6 @@ EPOCH0 = 1_704_067_200
 #: Event-time horizon: one week of seconds.
 HORIZON_S = 7 * 24 * 3600
 
-_ALLOWED_TABLE_FORMATS = ("parquet", "iceberg-lite")
 _ALLOWED_WRITE_MODES = ("skip", "overwrite", "append")
 
 
@@ -49,8 +48,6 @@ class RunConfig:
 
     Field mapping to the reference:
     * ``input_path``        ← Specifier.input_file_list
-    * ``table_format``      ← Specifier.netcdf_format (netcdf/netcdf4/netcdf4c)
-    * ``compression_level`` ← Specifier.compression_level (0..9)
     * ``output_path``       ← output_file_prefix/suffix
     * ``meta_once``         ← create_reshaper(once=...) once-file mode
     * ``write_mode``        ← s2srun skip/overwrite/append flags
@@ -64,8 +61,6 @@ class RunConfig:
     #: wire format of the input drop (sources.readers dispatch):
     #: parquet | orc | json | csv
     input_format: str = "parquet"
-    table_format: str = "parquet"
-    compression_level: int = 3  # parquet zstd level for table sinks
     tiers: tuple[TierSpec, ...] = field(
         default_factory=lambda: tuple(TierSpec(n, w) for n, w in DEFAULT_TIERS)
     )
@@ -73,9 +68,6 @@ class RunConfig:
     num_series_partitions: int = 32
     write_mode: str = "skip"
     meta_once: bool = False
-    time_variant_metadata: tuple[str, ...] = ("event_ts", "bucket_s")
-    epoch0: int = EPOCH0
-    horizon_s: int = HORIZON_S
     #: cap on the number of source series processed (the reference's
     #: ``convert(output_limit=N)`` smoke-run knob); None = all
     source_limit: int | None = None
@@ -107,15 +99,11 @@ class RunConfig:
             ("input_path", self.input_path, str),
             ("output_path", self.output_path, str),
             ("input_format", self.input_format, str),
-            ("table_format", self.table_format, str),
-            ("compression_level", self.compression_level, int),
             ("nsalt", self.nsalt, int),
             ("num_series_partitions", self.num_series_partitions, int),
             ("write_mode", self.write_mode, str),
             ("meta_once", self.meta_once, bool),
             ("overlap", self.overlap, bool),
-            ("epoch0", self.epoch0, int),
-            ("horizon_s", self.horizon_s, int),
         ]
         for name, value, typ in checks:
             if not isinstance(value, typ):
@@ -133,11 +121,6 @@ class RunConfig:
                 f"input_format must be one of {sorted(READERS)}, "
                 f"got {self.input_format!r}"
             )
-        if self.table_format not in _ALLOWED_TABLE_FORMATS:
-            raise ValueError(f"table_format must be one of "
-                             f"{_ALLOWED_TABLE_FORMATS}, got {self.table_format!r}")
-        if not 0 <= self.compression_level <= 9:
-            raise ValueError("compression_level must be in 0..9")
         if self.write_mode not in _ALLOWED_WRITE_MODES:
             raise ValueError(f"write_mode must be one of {_ALLOWED_WRITE_MODES}")
         if self.nsalt < 0:
@@ -219,7 +202,6 @@ class RunConfig:
     def from_json(cls, s: str) -> "RunConfig":
         d = json.loads(s)
         d["tiers"] = tuple(TierSpec(**t) for t in d.get("tiers", ()))
-        d["time_variant_metadata"] = tuple(d.get("time_variant_metadata", ()))
         d["analytics"] = tuple(d.get("analytics", ()))
         d["calendar"] = tuple(d.get("calendar", ()))
         return cls(**d).validate()

@@ -321,7 +321,7 @@ def doc_len_deciles(docs: DataFrame, two_pass: bool = False) -> DataFrame:
         Window.unboundedPreceding, Window.unboundedFollowing
     )
     cum = hist.select(
-        "n_chars",
+        F.col("n_chars").alias("_key"),
         (F.sum("_cnt").over(running) - F.col("_cnt")).alias("_cum_below"),
         F.sum("_cnt").over(whole).alias("_n"),
     )
@@ -331,8 +331,10 @@ def doc_len_deciles(docs: DataFrame, two_pass: bool = False) -> DataFrame:
     # no forced broadcast: the boundary relation is a LENGTH histogram
     # (small in any real corpus), but its cardinality is not bounded by
     # construction — AQE converts the join to broadcast when it fits
-    # and hash-partitions both sides when it doesn't
-    ranked = base.join(cum, "n_chars").select(
+    # and hash-partitions both sides when it doesn't. Null-safe: a NULL
+    # length is its own boundary (ranked NULLS FIRST, as in the window)
+    on = F.col("n_chars").eqNullSafe(F.col("_key"))
+    ranked = base.join(cum, on).select(
         "doc_id",
         "source",
         "n_chars",
@@ -415,8 +417,8 @@ def quality_pctl(docs: DataFrame, two_pass: bool = False) -> DataFrame:
             Window.unboundedPreceding, Window.currentRow
         )
         cum = hist.select(
-            "source",
-            "score",
+            F.col("source").alias("_src"),
+            F.col("score").alias("_score"),
             (F.sum("_cnt").over(wsrc) - F.col("_cnt")).alias("_cum_below"),
             F.sum("_cnt")
             .over(Window.partitionBy("source"))
@@ -426,8 +428,11 @@ def quality_pctl(docs: DataFrame, two_pass: bool = False) -> DataFrame:
             Window.partitionBy("source", "score").orderBy("doc_id")
         )
         # O(sources × 1001) boundary relation: usually broadcast-sized,
-        # but sources are unbounded — let AQE pick the join strategy
-        ranked = scored.join(cum, ["source", "score"]).select(
+        # but sources are unbounded — let AQE pick the join strategy.
+        # Null-safe, so a NULL source keeps its rows like the window form
+        on = F.col("source").eqNullSafe(F.col("_src")) & F.col(
+            "score").eqNullSafe(F.col("_score"))
+        ranked = scored.join(cum, on).select(
             "doc_id",
             "source",
             "score",

@@ -60,12 +60,13 @@ from pyreshaper_spark.operators.transpose import (
     with_salt,
 )
 from pyreshaper_spark.plans.checkpoint import Checkpoint
-from pyreshaper_spark.plans.pipeline import LINEAGE_COLS, _load_input
-from pyreshaper_spark.sources.catalog import (
-    TableCatalog,
-    get_catalog,
-    require_caps,
+from pyreshaper_spark.plans.pipeline import (
+    _load_input,
+    fidelity_bad_rows,
+    write_lineage,
 )
+from pyreshaper_spark.sources.catalog import get_catalog
+from pyreshaper_spark.sources.iceberglite import IcebergLite
 
 
 def _bucket(width_s: int) -> F.Column:
@@ -102,12 +103,9 @@ def _resolve_ids(
 
 def _load_run(
     op: str, spark: SparkSession, cfg: RunConfig, checkpoint_path: str
-) -> tuple[TableCatalog, Checkpoint, int]:
+) -> tuple[IcebergLite, Checkpoint, int]:
     cfg.validate()
     cat = get_catalog(cfg.output_path)
-    # binding-time gate: the repair walk commits via replace_rows /
-    # overwrite_partitions against pinned snapshot state
-    require_caps(cat, {"mutation", "snapshots"}, op)
     ckpt = Checkpoint.load(checkpoint_path)
     if ckpt.cycle is not None:
         raise RuntimeError(
@@ -236,7 +234,7 @@ def restate_docs(
 def _repair_run(
     spark: SparkSession,
     cfg: RunConfig,
-    cat: TableCatalog,
+    cat: IcebergLite,
     ckpt: Checkpoint,
     nsalt: int,
     victims: DataFrame,
@@ -289,13 +287,9 @@ def _repair_run(
     report["series_files_untouched"] = kept
 
     # metrics mirrors the live chunk set (same rebuild as the pipeline)
-    lineage = (
-        cat.read(spark, "series_enc", allow_empty=True)
-        .select(*LINEAGE_COLS)
-        .withColumn("attempt", F.lit(ckpt.attempt))
-        .withColumn("step", F.lit("delete"))
+    report["snapshot_ids"]["metrics"] = write_lineage(
+        spark, cat, ckpt.attempt, "delete"
     )
-    report["snapshot_ids"]["metrics"] = cat.overwrite("metrics", lineage)
 
     # ---- meta_source: recompute affected sources' rows ----------------
     meta_new = remaining.filter(F.col("source").isin(affected_sources)).groupBy(
@@ -440,16 +434,7 @@ def _repair_run(
 
     # ---- optional fidelity gate -----------------------------------------
     if cfg.verify_fidelity:
-        from pyreshaper_spark.operators.encode import decode_series_table
-
-        dec = decode_series_table(cat.read(spark, "series_enc", allow_empty=True))
-        j = remaining.alias("a").join(dec.alias("b"), "doc_id", "full_outer")
-        bad_rows = j.filter(
-            F.col("a.tokens").isNull()
-            | F.col("b.tokens").isNull()
-            | (F.col("a.tokens") != F.col("b.tokens"))
-            | (F.col("a.event_s") != F.col("b.event_s"))
-        ).count()
+        bad_rows = fidelity_bad_rows(spark, cat, remaining)
         if bad_rows:
             raise RuntimeError(
                 f"repair fidelity violated: {bad_rows} rows differ"
@@ -496,9 +481,6 @@ def refresh_from_changes(
     root, table = parts[0], parts[1]
     pin = int(parts[2]) if len(parts) > 2 and parts[2] else None
     cat_in = get_catalog(root)
-    require_caps(
-        cat_in, {"cdc", "snapshots"}, "refresh_from_changes(input)"
-    )
     to_sid = (
         to_snapshot_id if to_snapshot_id is not None
         else cat_in.current_snapshot_id(table)

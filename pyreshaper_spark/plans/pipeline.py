@@ -81,7 +81,8 @@ from pyreshaper_spark.operators.validate import (
     check_schema,
 )
 from pyreshaper_spark.plans.checkpoint import Checkpoint
-from pyreshaper_spark.sources.catalog import get_catalog, require_caps
+from pyreshaper_spark.sources.catalog import get_catalog
+from pyreshaper_spark.sources.iceberglite import IcebergLite
 
 LINEAGE_COLS = (
     "source",
@@ -117,6 +118,50 @@ def _load_input(spark: SparkSession, cfg: RunConfig) -> DataFrame:
         # per-variable input-file accounting
         seq = seq.withColumn("input_file", F.input_file_name())
     return ensure_event_time(seq)
+
+
+def ingested_files(spark: SparkSession, cat: IcebergLite) -> DataFrame:
+    """Distinct ``input_file`` frame of the input files already in the
+    LIVE ``series_enc`` lineage — the done set that append-cycle pins,
+    the encode anti-join, realtime reads and the fidelity gate all
+    compare against. Callers check ``cat.exists("series_enc")``."""
+    return (
+        cat.read(spark, "series_enc", allow_empty=True)
+        .select(F.explode("input_files").alias("input_file"))
+        .distinct()
+    )
+
+
+def write_lineage(
+    spark: SparkSession, cat: IcebergLite, attempt: int, step: str
+) -> int:
+    """Rebuild ``metrics`` from the live chunk set of ``series_enc``
+    (exactly one lineage row per chunk) and return its snapshot id."""
+    lineage = (
+        cat.read(spark, "series_enc", allow_empty=True)
+        .select(*LINEAGE_COLS)
+        .withColumn("attempt", F.lit(attempt))
+        .withColumn("step", F.lit(step))
+    )
+    return cat.overwrite("metrics", lineage)
+
+
+def fidelity_bad_rows(
+    spark: SparkSession, cat: IcebergLite, src: DataFrame
+) -> int:
+    """Port-fidelity check: rows of ``src`` whose token array or event
+    time differs from the decoded ``series_enc`` (or that exist on one
+    side only)."""
+    from pyreshaper_spark.operators.encode import decode_series_table
+
+    dec = decode_series_table(cat.read(spark, "series_enc", allow_empty=True))
+    j = src.alias("a").join(dec.alias("b"), "doc_id", "full_outer")
+    return j.filter(
+        F.col("a.tokens").isNull()
+        | F.col("b.tokens").isNull()
+        | (F.col("a.tokens") != F.col("b.tokens"))
+        | (F.col("a.event_s") != F.col("b.event_s"))
+    ).count()
 
 
 def run_pipeline(
@@ -221,11 +266,6 @@ def _run_pipeline(
     # 10^12 rows the per-append cost is O(new data) + O(tier rows).
     delta = None  # pending-file subset of seq (None = full recompute)
     if cfg.write_mode == "append":
-        # incremental merge pins base SNAPSHOTS — gate at binding time
-        # (overwrite/skip runs stay within the core protocol)
-        require_caps(
-            cat, {"snapshots"}, "run_pipeline(write_mode='append')"
-        )
         if ckpt.cycle is None:
             base_tables = (
                 ["meta_source"]
@@ -237,11 +277,7 @@ def _run_pipeline(
             done_files: set[str] = set()
             if cat.exists("series_enc"):
                 done_files = {
-                    r[0]
-                    for r in cat.read(spark, "series_enc", allow_empty=True)
-                    .select(F.explode("input_files").alias("f"))
-                    .distinct()
-                    .collect()
+                    r[0] for r in ingested_files(spark, cat).collect()
                 }
             all_files = [
                 r[0] for r in seq.select("input_file").distinct().collect()
@@ -331,13 +367,9 @@ def _run_pipeline(
             # land — including inside an existing (source, salt) chunk
             # (they become additional chunk rows; decode and downstream
             # reads treat a series as a bag of chunk rows already)
-            done_files = (
-                cat.read(spark, "series_enc", allow_empty=True)
-                .select(F.explode("input_files").alias("input_file"))
-                .distinct()
-            )
             pending = pending.join(
-                F.broadcast(done_files), "input_file", "left_anti"
+                F.broadcast(ingested_files(spark, cat)), "input_file",
+                "left_anti",
             )
         series = transpose_to_series(
             pending, nsalt, cfg.num_series_partitions,
@@ -366,14 +398,9 @@ def _run_pipeline(
             else cat.overwrite("series_enc", encoded, **wkw)
         )
         snapshot_ids["series_enc"] = sid
-        lineage = (
-            cat.read(spark, "series_enc", allow_empty=True)
-            .select(*LINEAGE_COLS)
-            .withColumn("attempt", F.lit(ckpt.attempt))
-            .withColumn("step", F.lit("encode"))
+        snapshot_ids["metrics"] = write_lineage(
+            spark, cat, ckpt.attempt, "encode"
         )
-        # metrics reflects the live chunk set exactly once per chunk
-        snapshot_ids["metrics"] = cat.overwrite("metrics", lineage)
         chunks = [
             (r["source"], r["salt"])
             for r in cat.read(spark, "series_enc", allow_empty=True)
@@ -670,26 +697,15 @@ def _run_pipeline(
     if cfg.verify_fidelity:
 
         def _verify():
-            from pyreshaper_spark.operators.encode import decode_series_table
-
             src = seq
             if cfg.write_mode == "append":
                 # compare against INGESTED files only — input files that
                 # arrived mid-cycle are deferred work, not lost data
-                lin = (
-                    cat.read(spark, "series_enc", allow_empty=True)
-                    .select(F.explode("input_files").alias("input_file"))
-                    .distinct()
+                src = seq.join(
+                    F.broadcast(ingested_files(spark, cat)), "input_file",
+                    "left_semi",
                 )
-                src = seq.join(F.broadcast(lin), "input_file", "left_semi")
-            dec = decode_series_table(cat.read(spark, "series_enc", allow_empty=True))
-            j = src.alias("a").join(dec.alias("b"), "doc_id", "full_outer")
-            bad = j.filter(
-                F.col("a.tokens").isNull()
-                | F.col("b.tokens").isNull()
-                | (F.col("a.tokens") != F.col("b.tokens"))
-                | (F.col("a.event_s") != F.col("b.event_s"))
-            ).count()
+            bad = fidelity_bad_rows(spark, cat, src)
             report = spark.createDataFrame(
                 [(int(bad), int(ckpt.attempt))], "bad_rows long, attempt long"
             )
@@ -757,12 +773,15 @@ def maintain(
     overwritten each cycle but their snapshot LOG grows without bound.
     Compaction bin-packs multi-file tables (preserving manifest column
     stats used for per-source file skipping); ``expire_keep`` trims
-    snapshot history and reclaims unreferenced data files.
+    snapshot history and reclaims unreferenced data files. Expiry
+    keeps the ``expire_keep`` newest snapshots and the current one;
+    no other snapshot is pinned.
 
-    Returns {table: {"compacted_snapshot": id|None, "expired_files": n}}.
+    Every table under the warehouse root (:meth:`IcebergLite.list_tables`)
+    is maintained. Returns {table: {"compacted_snapshot": id|None,
+    "expired_files": n}}.
     """
     cat = get_catalog(cfg.output_path)
-    require_caps(cat, {"maintenance"}, "pipeline.maintain")
     stats_for = {"series_enc": ("source",)}
     report: dict[str, dict] = {}
     for t in cat.list_tables():

@@ -1,225 +1,21 @@
-"""Catalog adapter seam — bind the pipeline to any table catalog.
+"""Catalog binding: every table root is an IcebergLite warehouse.
 
-The write/read/maintenance paths in ``plans/`` and ``streaming/``
-consume only the minimal :class:`TableCatalog` protocol below. The
-default binding is the offline :class:`~pyreshaper_spark.sources.
-iceberglite.IcebergLite` implementation (full Iceberg semantics on a
-local/posix root — snapshots, time travel, CDC, MOR deletes,
-compaction); a REAL catalog service binds behind the same protocol by
-registering a factory for its root-URI scheme — the import-gated
-registry pattern ``operators/multimodal.py`` uses for media decoders,
-so the sandbox never imports (or needs) the external client lib.
-
-Scheme dispatch on the table root:
-
-    /data/warehouse            → IcebergLite (default: plain path)
-    file:///data/warehouse     → IcebergLite
-    hivedir:///data/warehouse  → HiveDirCatalog (plain hive-layout
-                                 parquet directories; core capability
-                                 set only — no snapshots/CDC/refs)
-    rest://host/prefix         → Iceberg REST catalog binding (stub —
-                                 raises until a real client factory is
-                                 registered / the client lib exists)
-    <scheme>://...             → whatever ``register_catalog`` bound
-
-A deployment with a real Iceberg REST/HMS catalog registers its
-adapter once at startup::
-
-    from pyreshaper_spark.sources.catalog import register_catalog
-    register_catalog("rest", lambda root: MyRestAdapter(root))
-
-and every pipeline/CLI entry point picks it up through
-:func:`get_catalog` with zero changes to job code.
+The write/read/maintenance paths in ``plans/``, ``streaming/`` and
+``jobs/`` resolve their catalog here, so the table format has one
+construction point. A root is a plain filesystem path; a URI root
+(``scheme://...``) is rejected instead of being treated as a relative
+directory name.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from typing import Any, Protocol, runtime_checkable
-
-from pyspark.sql import DataFrame
+from pyreshaper_spark.sources.iceberglite import IcebergLite
 
 
-#: Optional capability groups and the adapter methods each one
-#: promises, beyond the always-required core protocol below. Jobs
-#: capability-check AT BINDING TIME (:func:`require_caps`) before
-#: calling into a group, so a third-party adapter that implements only
-#: the core surface fails with one clear error naming the missing
-#: capability — never deep inside a job. ``tests/test_catalog_seam.py``
-#: cross-checks this table against every ``cat.<method>(`` call site
-#: in ``plans/``, ``streaming/``, and ``jobs/``, so the documented
-#: surface cannot drift from the consumed one again.
-CAPABILITY_METHODS: dict[str, tuple[str, ...]] = {
-    # snapshot log + time travel (read(snapshot_id=...), pinned-base
-    # incremental merges, checkpoint/resume exactly-once bookkeeping)
-    "snapshots": ("snapshots", "current_snapshot_id"),
-    # CDC changelog between snapshots (incremental view maintenance,
-    # downstream invalidation)
-    "cdc": ("read_changes",),
-    # targeted row mutation (copy-on-write replace, merge-on-read
-    # equality deletes) — delete/restate jobs
-    "mutation": ("replace_rows", "delete_rows_mor"),
-    # table maintenance (file compaction, snapshot expiry, orphan
-    # reclamation, warehouse enumeration + layout introspection)
-    "maintenance": (
-        "compact",
-        "expire_snapshots",
-        "remove_orphan_files",
-        "list_tables",
-        "is_partitioned",
-        "table_schema_json",
-    ),
-    # named refs: tags, write-audit-publish, branches, and the
-    # metadata inspection tables the curate CLI surfaces
-    "refs": (
-        "tag",
-        "tags",
-        "resolve_tag",
-        "publish",
-        "create_branch",
-        "resolve_branch",
-        "fast_forward",
-        "inspect_snapshots",
-        "inspect_refs",
-        "inspect_history",
-        "inspect_files",
-    ),
-}
-
-
-class CatalogCapabilityError(RuntimeError):
-    """A job needs a capability group the bound adapter doesn't declare."""
-
-
-def require_caps(cat: "TableCatalog", caps: set[str], op: str) -> None:
-    """Binding-time capability gate: raise one clear error naming the
-    operation and the missing group(s) instead of letting the job fail
-    deep inside with an AttributeError."""
-    have = cat.capabilities()
-    missing = sorted(set(caps) - set(have))
-    if missing:
-        raise CatalogCapabilityError(
-            f"{op} needs catalog capability {missing} but the bound "
-            f"adapter ({type(cat).__name__}) declares only "
-            f"{sorted(have)}; bind a catalog with "
-            f"{'/'.join(missing)} support (e.g. IcebergLite) or use an "
-            "operation within the adapter's capabilities"
-        )
-
-
-@runtime_checkable
-class TableCatalog(Protocol):
-    """Core catalog surface EVERY adapter must provide — exactly what
-    the batch pipeline (``write_mode='overwrite'``) and the streaming
-    sinks consume.
-
-    Matches the IcebergLite call signatures (it is the reference
-    binding); any adapter must preserve these semantics:
-    ``append``/``overwrite`` accept ``gate=`` (a pre-commit barrier: a
-    raising gate must leave the table unchanged), ``append_once`` is
-    idempotent on its once key (exactly-once ingest, empty epochs
-    skipped), ``overwrite`` replaces the whole table in one commit,
-    ``overwrite_partitions`` replaces exactly the partitions present
-    in the frame, and ``read`` returns an empty TYPED frame for an
-    empty table when ``allow_empty`` (schema from the table metadata).
-
-    Everything else jobs consume is grouped into optional capability
-    sets (:data:`CAPABILITY_METHODS`): an adapter declares what it
-    supports via :meth:`capabilities` and jobs gate on
-    :func:`require_caps` at binding time. The reference IcebergLite
-    binding declares every group; the hive-layout directory binding
-    (:class:`~pyreshaper_spark.sources.hivedir.HiveDirCatalog`)
-    declares none (core only).
-    """
-
-    def capabilities(self) -> frozenset[str]: ...
-
-    def exists(self, name: str) -> bool: ...
-
-    def create_table(self, name: str, schema_json: str) -> int: ...
-
-    def read(self, name: str, *args: Any, **kwargs: Any) -> DataFrame: ...
-
-    def append(self, name: str, df: DataFrame, **kwargs: Any) -> int: ...
-
-    def append_once(
-        self, name: str, df: DataFrame, once_key: str, **kwargs: Any
-    ) -> int: ...
-
-    def overwrite(self, name: str, df: DataFrame, **kwargs: Any) -> int: ...
-
-    def overwrite_partitions(
-        self, name: str, df: DataFrame, keys: tuple[str, ...]
-    ) -> int: ...
-
-
-class RestCatalogStub:
-    """Placeholder binding for an Apache Iceberg REST catalog.
-
-    Import-gated like the media decoders: constructing it without a
-    registered real adapter (or the ``pyiceberg`` client lib, absent
-    in this container) raises immediately with instructions, instead
-    of failing deep inside a job. The Spark-side contract it would
-    implement is exactly :class:`TableCatalog`.
-    """
-
-    def __init__(self, root: str):
-        try:
-            import pyiceberg  # noqa: F401
-        except ImportError as exc:
-            raise NotImplementedError(
-                "Iceberg REST catalog binding requires the `pyiceberg` "
-                "client (not installed in this environment). Register a "
-                "real adapter with register_catalog('rest', factory) or "
-                "use a plain path root for the offline IcebergLite "
-                f"binding. (root={root!r})"
-            ) from exc
-        raise NotImplementedError(
-            "pyiceberg is importable but no REST adapter is registered; "
-            "register_catalog('rest', factory) with your binding."
-        )
-
-
-def _default_factory(root: str) -> TableCatalog:
-    from pyreshaper_spark.sources.iceberglite import IcebergLite
-
-    if root.startswith("file://"):
-        root = root[len("file://"):]
-    return IcebergLite(root)
-
-
-def _hivedir_factory(root: str) -> TableCatalog:
-    from pyreshaper_spark.sources.hivedir import HiveDirCatalog
-
-    return HiveDirCatalog(root.split("://", 1)[1] if "://" in root else root)
-
-
-_REGISTRY: dict[str, Callable[[str], TableCatalog]] = {
-    "file": _default_factory,
-    "hivedir": _hivedir_factory,
-    "rest": RestCatalogStub,
-}
-
-
-def register_catalog(
-    scheme: str, factory: Callable[[str], TableCatalog]
-) -> None:
-    """Bind ``factory`` (root-URI → adapter) to a scheme prefix."""
-    _REGISTRY[scheme] = factory
-
-
-def get_catalog(root: str) -> TableCatalog:
-    """Resolve the catalog binding for a table root.
-
-    ``<scheme>://...`` dispatches through the registry; a plain path
-    (no scheme) is the offline IcebergLite warehouse."""
-    scheme = "file"
+def get_catalog(root: str) -> IcebergLite:
+    """The IcebergLite catalog over the warehouse directory ``root``."""
     if "://" in root:
-        scheme = root.split("://", 1)[0]
-    factory = _REGISTRY.get(scheme)
-    if factory is None:
         raise ValueError(
-            f"no catalog binding registered for scheme {scheme!r} "
-            f"(root={root!r}); register_catalog({scheme!r}, factory)"
+            f"catalog root must be a plain filesystem path, got {root!r}"
         )
-    return factory(root)
+    return IcebergLite(root)

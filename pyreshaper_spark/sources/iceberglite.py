@@ -19,15 +19,9 @@ snapshot are invisible, exactly like Iceberg orphan files):
 ``snapshots.json``::
 
     {"current": 3,
-     "refs": {"audited-2026-08": 3},
      "snapshots": [{"id": 1, "parent": 0, "op": "append",
                     "files": [{"path": "s1/source=src0/part-....parquet",
                                "partition": {"source": "src0"}}, ...]}]}
-
-``refs`` are named tags (:meth:`IcebergLite.tag`); a snapshot carrying
-``"staged": true`` was committed with ``stage=True`` (write-audit-
-publish) and stays invisible to readers and timestamp travel until
-:meth:`IcebergLite.publish` moves ``current`` onto it.
 
 Manifest entries carry the partition tuple per file (parsed from the
 hive path), so `read(..., partition_filter=...)` prunes at planning
@@ -46,7 +40,6 @@ from __future__ import annotations
 import glob
 import json
 import os
-import re
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,104 +48,6 @@ from pyspark.sql import functions as F
 
 class SnapshotNotFound(KeyError):
     pass
-
-
-# -- hidden partitioning (Iceberg partition TRANSFORMS) ----------------------
-#
-# A ``partition_by`` entry may be a plain column name (hive identity
-# partitioning) or a transform spec ``bucket(N, col)`` / ``truncate(W,
-# col)`` — Iceberg's hidden partitioning: the table is physically laid
-# out by a DERIVED value (hash bucket / prefix) that never appears in
-# the logical schema. Derived hive columns use the reserved ``_pb_``
-# prefix and are stripped on read; :meth:`IcebergLite.eq_filter` maps
-# equality predicates on the SOURCE column through the transform so a
-# point lookup over 10^12 rows plans to 1/N of the files from the
-# manifest alone.
-
-#: reserved hive-column prefix for hidden (transform-derived) partitions
-PB_PREFIX = "_pb_"
-
-#: directory name Spark writes for a null/empty partition value
-HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
-
-#: characters Spark's partitioned write %XX-escapes in directory values
-#: (ExternalCatalogUtils.escapePathName parity — verified empirically:
-#: control chars, DEL, and "#%'*/:=?\^{[] ; note '}' and space are NOT
-#: escaped)
-_HIVE_ESCAPE_CHARS = (
-    frozenset('"#%\'*/:=?\\^{[]')
-    | frozenset(chr(c) for c in range(0x20))
-    | frozenset({"\x7f"})
-)
-
-_TRANSFORM_RE = re.compile(r"^(bucket|truncate)\((\d+)\s*,\s*(\w+)\)$")
-
-
-def _hive_escape(value) -> str:
-    """The directory rendering Spark's partitioned write gives a
-    partition VALUE — what :func:`_parse_partition` recovers into the
-    manifest. Manifest-side predicate values MUST pass through this
-    before comparing against manifest partitions, or any value
-    containing an escaped character silently prunes to nothing."""
-    if value is None:
-        return HIVE_DEFAULT_PARTITION
-    s = str(value)
-    if s == "":
-        return HIVE_DEFAULT_PARTITION
-    return "".join(
-        f"%{ord(c):02X}" if c in _HIVE_ESCAPE_CHARS else c for c in s
-    )
-
-
-def _parse_spec(entry: str):
-    """``"bucket(16,doc_id)"`` → ("bucket", 16, "doc_id", hive_name);
-    a plain column name → None (identity partitioning)."""
-    if "(" not in entry:
-        return None
-    m = _TRANSFORM_RE.match(entry.replace(" ", ""))
-    if not m:
-        raise ValueError(f"unsupported partition transform: {entry!r}")
-    kind, n, col = m.group(1), int(m.group(2)), m.group(3)
-    if n < 1:
-        raise ValueError(f"transform width/buckets must be >= 1: {entry!r}")
-    suffix = "bkt" if kind == "bucket" else "trunc"
-    return kind, n, col, f"{PB_PREFIX}{col}_{suffix}{n}"
-
-
-def _h32_py(value) -> int:
-    """Python twin of ``functions.xhash.h32`` (md5 word hash) — the
-    manifest-side bucket computation MUST match the Spark-side derived
-    column byte-for-byte."""
-    import hashlib
-
-    return int(hashlib.md5(str(value).encode()).hexdigest()[:8], 16)
-
-
-def _transform_py(kind: str, n: int, value):
-    """Transform output for ``value`` (pre-escaping; None stays None —
-    Spark's derived column is NULL for a NULL input, which lands in the
-    __HIVE_DEFAULT_PARTITION__ directory)."""
-    if value is None:
-        return None
-    if kind == "bucket":
-        return str(_h32_py(value) % n)
-    if isinstance(value, str):
-        return value[:n]
-    return str(value - (value % n))  # python % is pmod for n > 0
-
-
-def _transform_col(kind: str, n: int, col: str, dtype: str) -> F.Column:
-    """Spark column computing the same hive value as
-    :func:`_transform_py` (written as a string so the hive directory
-    and the manifest-side recomputation agree exactly)."""
-    from pyreshaper_spark.functions.xhash import h32
-
-    c = F.col(col)
-    if kind == "bucket":
-        return F.pmod(h32(c.cast("string")), F.lit(n)).cast("string")
-    if dtype == "string":
-        return F.substring(c, 1, n)
-    return (c - F.pmod(c, F.lit(n))).cast("string")
 
 
 def _footer_stats(
@@ -221,9 +116,13 @@ class IcebergLite:
 
     def _next_sid(self, name: str) -> int:
         """Next snapshot id: one past the max of current and every
-        recorded snapshot (staged snapshots sit in the list WITHOUT
-        advancing current, so ``current + 1`` alone could collide)."""
-        log = self._read_log(name)
+        recorded snapshot. Logs written by older versions may hold
+        staged snapshots above ``current``, so ``current + 1`` alone
+        could collide."""
+        return self._sid_after(self._read_log(name))
+
+    @staticmethod
+    def _sid_after(log: dict) -> int:
         return max([log["current"], *(s["id"] for s in log["snapshots"])]) + 1
 
     def _write_log(self, name: str, log: dict) -> None:
@@ -240,9 +139,7 @@ class IcebergLite:
         files: list[dict],
         op: str,
         schema: str | None = None,
-        stage: bool = False,
         deletes: list[dict] | None = None,
-        parent_id: int | None = None,
         commit_key: str | None = None,
     ) -> int:
         """Atomically append a snapshot referencing ``files`` (full live set).
@@ -251,11 +148,6 @@ class IcebergLite:
         Iceberg's per-snapshot schema — so readers can type an EMPTY
         snapshot (e.g. a fully-pruned table's changelog).
 
-        ``stage``: record the snapshot WITHOUT advancing ``current`` —
-        the write half of write-audit-publish. Readers keep seeing the
-        published state; the staged snapshot is readable only by
-        explicit id (or a tag) until :meth:`publish` moves current.
-
         ``deletes``: the snapshot's live EQUALITY-DELETE files (see
         :meth:`delete_rows_mor`) — each ``{"paths": [rel...],
         "key_cols": [...], "seq": commit-id}``, applied at read time to
@@ -263,12 +155,10 @@ class IcebergLite:
         import time
 
         log = self._read_log(name)
-        sid = max([log["current"], *(s["id"] for s in log["snapshots"])]) + 1
+        sid = self._sid_after(log)
         snap = {
             "id": sid,
-            "parent": (
-                log["current"] if parent_id is None else parent_id
-            ),
+            "parent": log["current"],
             "op": op,
             "ts": time.time(),
             "files": files,
@@ -277,173 +167,18 @@ class IcebergLite:
             snap["schema"] = schema
         if deletes:
             snap["deletes"] = deletes
-        if stage:
-            snap["staged"] = True
         if commit_key is not None:
             snap["commit_key"] = commit_key
         log["snapshots"].append(snap)
-        if not stage:
-            log["current"] = sid
+        log["current"] = sid
         self._write_log(name, log)
         return sid
 
     def snapshots(self, name: str) -> list[dict]:
         return self._read_log(name)["snapshots"]
 
-    def snapshot_as_of(self, name: str, ts: float) -> int:
-        """Iceberg ``FOR TIMESTAMP AS OF``: the id of the last snapshot
-        committed at or before wall-clock ``ts`` (epoch seconds).
-        Raises if the table did not exist yet. Snapshots written before
-        commit timestamps were recorded (no ``ts`` field) are treated
-        as infinitely old — still reachable by any later ts."""
-        best = 0
-        for s in self._read_log(name)["snapshots"]:
-            if s.get("staged"):
-                continue  # never published — not part of table history
-            if s.get("ts", 0.0) <= ts:
-                best = s["id"]
-        if best == 0:
-            raise SnapshotNotFound(f"{name}: no snapshot at or before {ts}")
-        return best
-
     def current_snapshot_id(self, name: str) -> int:
         return self._read_log(name)["current"]
-
-    # -- refs: tags + write-audit-publish ---------------------------------
-    def tag(
-        self,
-        name: str,
-        tag_name: str,
-        snapshot_id: int | None = None,
-        replace: bool = False,
-    ) -> int:
-        """Name a snapshot (Iceberg tag): a durable ref that time
-        travel can use (``read(tag=...)``) and that
-        :meth:`expire_snapshots` will never drop. Defaults to the
-        current snapshot; refuses to move an existing tag unless
-        ``replace=True``."""
-        log = self._read_log(name)
-        sid = log["current"] if snapshot_id is None else snapshot_id
-        if not any(s["id"] == sid for s in log["snapshots"]):
-            raise SnapshotNotFound(f"{name}@{sid}")
-        refs = log.setdefault("refs", {})
-        if tag_name in refs and refs[tag_name] != sid and not replace:
-            raise ValueError(
-                f"tag {tag_name!r} already points at {refs[tag_name]} "
-                "(pass replace=True to move it)"
-            )
-        refs[tag_name] = sid
-        self._write_log(name, log)
-        return sid
-
-    def drop_tag(self, name: str, tag_name: str) -> None:
-        log = self._read_log(name)
-        if tag_name not in log.get("refs", {}):
-            raise KeyError(f"{name}: no tag {tag_name!r}")
-        del log["refs"][tag_name]
-        self._write_log(name, log)
-
-    def tags(self, name: str) -> dict[str, int]:
-        return dict(self._read_log(name).get("refs", {}))
-
-    def resolve_tag(self, name: str, tag_name: str) -> int:
-        refs = self._read_log(name).get("refs", {})
-        if tag_name not in refs:
-            raise SnapshotNotFound(f"{name}: no tag {tag_name!r}")
-        return refs[tag_name]
-
-    def publish(self, name: str, snapshot_id: int) -> int:
-        """Move ``current`` to an existing snapshot — the publish half
-        of write-audit-publish: ``append(..., stage=True)`` writes an
-        invisible snapshot, audit jobs read it by id (or tag), and
-        publish makes it the table state atomically. Publishing an
-        older id is also how a bad published commit is rolled back
-        (Iceberg ``rollback_to_snapshot``)."""
-        log = self._read_log(name)
-        for s in log["snapshots"]:
-            if s["id"] == snapshot_id:
-                s.pop("staged", None)
-                log["current"] = snapshot_id
-                self._write_log(name, log)
-                return snapshot_id
-        raise SnapshotNotFound(f"{name}@{snapshot_id}")
-
-    # -- branches: isolated multi-commit write lineages --------------------
-    def create_branch(
-        self, name: str, branch_name: str, snapshot_id: int | None = None
-    ) -> int:
-        """Create a BRANCH ref (Iceberg branch): an independent commit
-        lineage starting at ``snapshot_id`` (default: current). Writes
-        with ``branch=`` chain onto the branch head as STAGED snapshots
-        — readers of the table keep seeing the published main state
-        until :meth:`fast_forward` moves ``current`` onto the branch
-        head. This is multi-commit write-audit-publish: an ingest job
-        can land several commits on an ``audit`` branch, validation
-        reads the branch, and one atomic fast-forward publishes all of
-        them (or none)."""
-        log = self._read_log(name)
-        sid = log["current"] if snapshot_id is None else snapshot_id
-        if sid != 0 and not any(s["id"] == sid for s in log["snapshots"]):
-            raise SnapshotNotFound(f"{name}@{sid}")
-        branches = log.setdefault("branches", {})
-        if branch_name in branches:
-            raise ValueError(f"branch {branch_name!r} already exists")
-        branches[branch_name] = sid
-        self._write_log(name, log)
-        return sid
-
-    def branches(self, name: str) -> dict[str, int]:
-        return dict(self._read_log(name).get("branches", {}))
-
-    def resolve_branch(self, name: str, branch_name: str) -> int:
-        br = self._read_log(name).get("branches", {})
-        if branch_name not in br:
-            raise SnapshotNotFound(f"{name}: no branch {branch_name!r}")
-        return br[branch_name]
-
-    def drop_branch(self, name: str, branch_name: str) -> None:
-        log = self._read_log(name)
-        if branch_name not in log.get("branches", {}):
-            raise KeyError(f"{name}: no branch {branch_name!r}")
-        del log["branches"][branch_name]
-        self._write_log(name, log)
-
-    def _advance_branch(self, name: str, branch_name: str, sid: int) -> None:
-        log = self._read_log(name)
-        log.setdefault("branches", {})[branch_name] = sid
-        self._write_log(name, log)
-
-    def _ancestors(self, name: str, sid: int) -> set[int]:
-        """Snapshot ids on the parent chain from ``sid`` down to the
-        table root (inclusive of ``sid`` and of id 0)."""
-        by_id = {s["id"]: s for s in self._read_log(name)["snapshots"]}
-        out = {0}
-        while sid in by_id:
-            out.add(sid)
-            sid = by_id[sid].get("parent", 0)
-        return out
-
-    def fast_forward(self, name: str, branch_name: str) -> int:
-        """Publish a branch: atomically move ``current`` onto the
-        branch head (Iceberg's ``fast_forward``). Refuses when the
-        published state is NOT an ancestor of the branch head — main
-        moved on since the branch was cut, and "publishing" the branch
-        would silently un-publish main's intervening commits (real
-        Iceberg fast-forward has the same guard; resolve by rebasing:
-        re-run the branch job from a fresh branch). The head snapshot
-        loses its staged flag; the branch's INTERMEDIATE snapshots stay
-        staged (branch history — readable by explicit id, invisible to
-        timestamp travel, reclaimable by expiry once the branch is
-        dropped)."""
-        head = self.resolve_branch(name, branch_name)
-        cur = self.current_snapshot_id(name)
-        if cur not in self._ancestors(name, head):
-            raise ValueError(
-                f"fast_forward: current snapshot {cur} is not an ancestor "
-                f"of branch {branch_name!r} head {head} — main advanced "
-                "since the branch was cut; rebase the branch instead"
-            )
-        return self.publish(name, head)
 
     def _snapshot(self, name: str, snapshot_id: int | None) -> dict:
         log = self._read_log(name)
@@ -466,31 +201,11 @@ class IcebergLite:
     ) -> list[dict]:
         sid = self._next_sid(name)
         ddir = os.path.join(self._data(name), f"s{sid}")
-        if any(c.startswith(PB_PREFIX) for c in df.columns):
-            raise ValueError(
-                f"column prefix {PB_PREFIX!r} is reserved for hidden "
-                "partition transforms"
-            )
-        # hidden partitioning: materialize transform specs as derived
-        # _pb_ hive columns (directory-encoded only — partitionBy keeps
-        # them out of the parquet payload; the read path strips them)
-        hive_cols: list[str] = []
-        for entry in partition_by:
-            spec = _parse_spec(entry)
-            if spec is None:
-                hive_cols.append(entry)
-                continue
-            kind, n, col, hname = spec
-            dtype = dict(df.dtypes).get(col)
-            if dtype is None:
-                raise ValueError(f"transform column not in schema: {entry!r}")
-            df = df.withColumn(hname, _transform_col(kind, n, col, dtype))
-            hive_cols.append(hname)
         w = df.write.mode("overwrite")
         for k, v in (options or {}).items():
             w = w.option(k, v)
-        if hive_cols:
-            w = w.partitionBy(*hive_cols)
+        if partition_by:
+            w = w.partitionBy(*partition_by)
         w.parquet(ddir)
         paths = sorted(
             glob.glob(os.path.join(ddir, "**", "*.parquet"), recursive=True)
@@ -522,10 +237,7 @@ class IcebergLite:
         streaming sinks. No-op when the table is already READABLE
         (``current > 0``, matching :meth:`exists`; the current id is
         returned unchanged and the schema argument is ignored — schema
-        evolution goes through ``add_column``). A table holding only
-        STAGED snapshots is not yet readable on main, so create still
-        commits the typed empty head (staged snapshots keep their ids
-        and publish as before)."""
+        evolution goes through ``add_column``)."""
         log = self._read_log(name)
         if log["current"]:
             return log["current"]
@@ -539,8 +251,6 @@ class IcebergLite:
         stats_cols: tuple[str, ...] = (),
         options: dict | None = None,
         gate=None,
-        stage: bool = False,
-        branch: str | None = None,
     ) -> int:
         new = self._write_data(name, df, partition_by, stats_cols, options)
         if gate is not None:
@@ -551,24 +261,12 @@ class IcebergLite:
             # The pipeline uses this to overlap encode with validation
             # while keeping "invalid input commits nothing" airtight.
             gate()
-        if branch is not None:
-            # branch writes chain onto the BRANCH head (staged — main
-            # readers unaffected until fast_forward publishes the head)
-            base_sid = self.resolve_branch(name, branch)
-            parent = self._snapshot(name, base_sid)
-            sid = self._commit(
-                name, parent["files"] + new, "append", df.schema.json(),
-                stage=True, deletes=parent.get("deletes"),
-                parent_id=base_sid,
-            )
-            self._advance_branch(name, branch, sid)
-            return sid
         parent = self._snapshot(name, None)
         live = parent["files"] + new
         # equality-delete files stay live: they apply to the OLD data
         # files (seq < delete seq), never to this append's new files
         return self._commit(
-            name, live, "append", df.schema.json(), stage,
+            name, live, "append", df.schema.json(),
             deletes=parent.get("deletes"),
         )
 
@@ -629,12 +327,11 @@ class IcebergLite:
         stats_cols: tuple[str, ...] = (),
         options: dict | None = None,
         gate=None,
-        stage: bool = False,
     ) -> int:
         new = self._write_data(name, df, partition_by, stats_cols, options)
         if gate is not None:
             gate()  # see append(): pre-commit barrier, orphan-safe
-        return self._commit(name, new, "overwrite", df.schema.json(), stage)
+        return self._commit(name, new, "overwrite", df.schema.json())
 
     def overwrite_partitions(
         self, name: str, df: DataFrame, keys: tuple[str, ...]
@@ -668,13 +365,9 @@ class IcebergLite:
         partition_filter: Callable[[dict[str, str]], bool] | None = None,
         stats_filter: Callable[[dict[str, list]], bool] | None = None,
         allow_empty: bool = False,
-        tag: str | None = None,
         apply_deletes: bool = True,
-        branch: str | None = None,
     ) -> DataFrame:
-        """Read a snapshot (time travel via ``snapshot_id`` / ``tag``,
-        or a branch head via ``branch`` — staged branch commits are
-        readable here before they are published).
+        """Read a snapshot (time travel via ``snapshot_id``).
 
         ``partition_filter`` prunes files from the manifest BEFORE any
         parquet is opened (planning-time partition pruning). Files are
@@ -694,14 +387,6 @@ class IcebergLite:
         delete file against the data files it covers. Pass ``False``
         to see the raw data files (merge-on-read debugging).
         """
-        if tag is not None:
-            if snapshot_id is not None:
-                raise ValueError("pass snapshot_id OR tag, not both")
-            snapshot_id = self.resolve_tag(name, tag)
-        if branch is not None:
-            if snapshot_id is not None or tag is not None:
-                raise ValueError("pass snapshot_id OR tag OR branch")
-            snapshot_id = self.resolve_branch(name, branch)
         snap = self._snapshot(name, snapshot_id)
         files = snap["files"]
         if partition_filter is not None:
@@ -776,9 +461,7 @@ class IcebergLite:
             # commit's recorded schema makes Spark parse each directory
             # value directly AS the declared type (a string column
             # keeps its exact text), so the logical type AND value
-            # survive the round-trip. Hidden `_pb_*` transform columns
-            # are not in the logical schema; they still surface
-            # (inferred) and are dropped below.
+            # survive the round-trip.
             sj = schema_by_id.get(self._file_seq(sdir))
             if sj is not None:
                 from pyspark.sql.types import StructType
@@ -791,49 +474,7 @@ class IcebergLite:
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p, allowMissingColumns=True)
-        # hidden partitioning: transform-derived hive columns are
-        # physical layout, not logical schema — strip them (Iceberg
-        # semantics: a bucket(16, doc_id) table still reads as its
-        # declared columns)
-        hidden = [c for c in df.columns if c.startswith(PB_PREFIX)]
-        return df.drop(*hidden) if hidden else df
-
-    @staticmethod
-    def eq_filter(
-        partition_by: tuple[str, ...], where_eq: dict[str, list]
-    ) -> Callable[[dict[str, str]], bool]:
-        """Build a manifest ``partition_filter`` from equality
-        predicates on SOURCE columns, mapped through the table's
-        partition spec (identity columns AND hidden transforms) —
-        Iceberg's predicate-to-partition-transform pushdown.
-
-        Evolution-safe: a file whose partition tuple lacks the key
-        (written under an older spec) cannot prove non-match and is
-        kept."""
-        expected: dict[str, set[str]] = {}
-        for entry in partition_by:
-            spec = _parse_spec(entry)
-            if spec is None:
-                if entry in where_eq:
-                    # manifest partitions hold the hive-ESCAPED dir
-                    # value — compare escaped-to-escaped
-                    expected[entry] = {
-                        _hive_escape(v) for v in where_eq[entry]
-                    }
-                continue
-            kind, n, col, hname = spec
-            if col in where_eq:
-                expected[hname] = {
-                    _hive_escape(_transform_py(kind, n, v))
-                    for v in where_eq[col]
-                }
-        def _keep(part: dict[str, str]) -> bool:
-            return all(
-                part[k] in allowed
-                for k, allowed in expected.items()
-                if k in part
-            )
-        return _keep
+        return df
 
     # -- merge-on-read (equality) deletes ---------------------------------
     @staticmethod
@@ -908,9 +549,9 @@ class IcebergLite:
         readers subtract the keys with a broadcast anti-join, applied
         only to data files with an older sequence number (so a later
         re-insert of the same key survives — Iceberg v2 sequence-number
-        semantics). Compaction (:meth:`compact` / :meth:`zorder_compact`)
-        materializes outstanding deletes into the rewritten files and
-        drops entries no remaining file needs.
+        semantics). Compaction (:meth:`compact`) materializes
+        outstanding deletes into the rewritten files and drops entries
+        no remaining file needs.
 
         Delete cost: O(keys). Read cost: one broadcast anti-join per
         outstanding delete file — which is why periodic compaction
@@ -1095,29 +736,14 @@ class IcebergLite:
             out = out.unionByName(p, allowMissingColumns=True)
         return out
 
-    def partitions(
-        self, name: str, snapshot_id: int | None = None
-    ) -> set[tuple[tuple[str, str], ...]]:
-        """Distinct partition tuples in a snapshot — from the manifest only."""
-        snap = self._snapshot(name, snapshot_id)
-        return {tuple(sorted(f["partition"].items())) for f in snap["files"]}
-
     def exists(self, name: str) -> bool:
         return self.current_snapshot_id(name) > 0
 
-    def capabilities(self) -> frozenset[str]:
-        """The reference binding declares every optional group (see
-        ``catalog.CAPABILITY_METHODS``)."""
-        return frozenset(
-            {"snapshots", "cdc", "mutation", "maintenance", "refs"}
-        )
-
     def list_tables(self) -> list[str]:
         """All table names under the warehouse root that carry a
-        snapshot log — including tables whose only commits are staged
+        snapshot log — including tables with no readable snapshot
         (``current == 0``), which :meth:`exists` reports False for but
-        maintenance still owns. Public face of the old private
-        ``_log_path`` probe the maintenance walk used."""
+        maintenance still owns."""
         if not os.path.isdir(self.root):
             return []
         return sorted(
@@ -1140,15 +766,15 @@ class IcebergLite:
         the ``_snapshot(...)["schema"]`` probe the maintain CLI used."""
         return self._snapshot(name, None).get("schema")
 
-    # -- metadata tables (Iceberg's t.snapshots / t.files / t.history /
-    # t.refs inspection surface). Built driver-side from the manifest —
-    # exactly where Iceberg itself plans from — so they are O(manifest),
+    # -- metadata tables (Iceberg's t.snapshots / t.files inspection
+    # surface). Built driver-side from the manifest — exactly where
+    # Iceberg itself plans from — so they are O(manifest),
     # never O(data), and come back as ordinary DataFrames that can be
     # joined/filtered like any other relation.
     def inspect_snapshots(self, spark: SparkSession, name: str) -> DataFrame:
-        """One row per recorded snapshot (published AND staged):
-        (snapshot_id, parent_id, operation, committed_at_s, is_staged,
-        is_current, n_data_files, n_delete_files)."""
+        """One row per recorded snapshot: (snapshot_id, parent_id,
+        operation, committed_at_s, is_current, n_data_files,
+        n_delete_files)."""
         log = self._read_log(name)
         rows = [
             (
@@ -1156,7 +782,6 @@ class IcebergLite:
                 s.get("parent", 0),
                 s["op"],
                 float(s.get("ts", 0.0)),
-                bool(s.get("staged", False)),
                 s["id"] == log["current"],
                 len(s["files"]),
                 sum(len(d["paths"]) for d in s.get("deletes", [])),
@@ -1166,7 +791,7 @@ class IcebergLite:
         return spark.createDataFrame(
             rows,
             "snapshot_id long, parent_id long, operation string, "
-            "committed_at_s double, is_staged boolean, is_current boolean, "
+            "committed_at_s double, is_current boolean, "
             "n_data_files int, n_delete_files int",
         )
 
@@ -1211,37 +836,6 @@ class IcebergLite:
             rows,
             "content string, file_path string, partition map<string,string>, "
             "seq long, stats map<string,array<string>>, record_count long",
-        )
-
-    def inspect_history(self, spark: SparkSession, name: str) -> DataFrame:
-        """Published table history — every non-staged snapshot with
-        whether it is an ancestor of current (Iceberg's history table;
-        rollback via publish() makes superseded lineage visible as
-        is_current_ancestor=false)."""
-        log = self._read_log(name)
-        anc = self._ancestors(name, log["current"]) if log["current"] else set()
-        rows = [
-            (float(s.get("ts", 0.0)), s["id"], s.get("parent", 0),
-             s["id"] in anc)
-            for s in log["snapshots"]
-            if not s.get("staged")
-        ]
-        return spark.createDataFrame(
-            rows,
-            "made_current_at_s double, snapshot_id long, parent_id long, "
-            "is_current_ancestor boolean",
-        )
-
-    def inspect_refs(self, spark: SparkSession, name: str) -> DataFrame:
-        """All named refs plus main: (ref_name, ref_type, snapshot_id)."""
-        log = self._read_log(name)
-        rows = [("main", "branch", log["current"])]
-        rows += [(t, "tag", sid) for t, sid in
-                 sorted(log.get("refs", {}).items())]
-        rows += [(b, "branch", sid) for b, sid in
-                 sorted(log.get("branches", {}).items())]
-        return spark.createDataFrame(
-            rows, "ref_name string, ref_type string, snapshot_id long"
         )
 
     def replace_rows(
@@ -1381,74 +975,6 @@ class IcebergLite:
             deletes=self._applicable_deletes(snap.get("deletes"), kept),
         )
 
-    def zorder_compact(
-        self,
-        spark: SparkSession,
-        name: str,
-        zorder_by: tuple[str, str],
-        partition_by: tuple[str, ...] = (),
-        target_file_bytes: int = 128 << 20,
-        min_files: int = 1,
-        stats_cols: tuple[str, ...] = (),
-    ) -> int | None:
-        """Z-ORDER rewrite — Databricks ``OPTIMIZE ... ZORDER BY`` /
-        Iceberg's z-order `rewrite_data_files` strategy for TWO-column
-        clustering: a linear sort gives perfect pruning on its leading
-        column and none on the second; bit-interleaving both columns'
-        grid positions into one key makes every file cover a small
-        RECTANGLE of the (a, b) value space, so min/max stats prune on
-        BOTH dimensions (asserted against the linear sort in pytest).
-
-        Each column is normalized to a 16-bit grid against its observed
-        min/max (one tiny scalar aggregate), then the 32-bit Morton key
-        is pure codegen (32 shift/mask terms); the rewrite itself is
-        :meth:`compact`'s range-partition+sort on the derived key.
-        """
-        a, b = zorder_by
-        snap = self._snapshot(name, None)
-        if len(snap["files"]) < min_files:
-            return None
-        # full rewrite: materialize equality deletes, commit delete-free
-        df = self._df_for_files(spark, name, snap["files"], snap.get("deletes"))
-        lo_a, hi_a, lo_b, hi_b = df.agg(
-            F.min(a), F.max(a), F.min(b), F.max(b)
-        ).collect()[0]
-        grid = 0xFFFF
-
-        def g(col: str, lo, hi) -> F.Column:
-            span = int(hi) - int(lo)
-            if span <= 0:
-                return F.lit(0).cast("long")
-            return (
-                (F.col(col).cast("long") - F.lit(int(lo))) * grid / span
-            ).cast("long")
-        ga, gb = g(a, lo_a, hi_a), g(b, lo_b, hi_b)
-        zkey = F.lit(0).cast("long")
-        for i in range(16):
-            bit_a = F.shiftright(ga, i).bitwiseAND(F.lit(1))
-            bit_b = F.shiftright(gb, i).bitwiseAND(F.lit(1))
-            zkey = (
-                zkey
-                + F.shiftleft(bit_a, 2 * i + 1)
-                + F.shiftleft(bit_b, 2 * i)
-            )
-        import math
-
-        data = self._data(name)
-        total = sum(
-            os.path.getsize(os.path.join(data, f["path"]))
-            for f in snap["files"]
-        )
-        n = max(1, math.ceil(total / target_file_bytes))
-        out = (
-            df.withColumn("_zkey", zkey)
-            .repartitionByRange(n, *partition_by, "_zkey")
-            .sortWithinPartitions(*partition_by, "_zkey")
-            .drop("_zkey")
-        )
-        new = self._write_data(name, out, partition_by, stats_cols)
-        return self._commit(name, new, "rewrite", out.schema.json())
-
     def expire_snapshots(
         self,
         name: str,
@@ -1481,9 +1007,8 @@ class IcebergLite:
         log = self._read_log(name)
         if len(log["snapshots"]) <= keep_last:
             return 0
-        # retained = newest keep_last, plus the published current (it
-        # may not be the list tail when staged snapshots exist) and
-        # every tagged snapshot — refs pin history, as in Iceberg
+        # retained = newest keep_last, plus current (not the list tail
+        # in logs written by older versions with staged snapshots)
         keep_ids = {s["id"] for s in log["snapshots"][-keep_last:]}
         if older_than_s is not None:
             cutoff = time.time() - older_than_s
@@ -1493,20 +1018,6 @@ class IcebergLite:
                 if float(s.get("ts", 0.0)) > cutoff
             )
         keep_ids.add(log["current"])
-        keep_ids.update(log.get("refs", {}).values())
-        # a live branch pins its WHOLE staged lineage (head + every
-        # staged ancestor — the branch's own commits), not just the
-        # head: intermediates stay readable by id until drop_branch.
-        # The walk stops at the first published ancestor, so main
-        # history is not pinned through a branch.
-        by_id = {s["id"]: s for s in log["snapshots"]}
-        for head in log.get("branches", {}).values():
-            sid = head
-            while sid in by_id:
-                keep_ids.add(sid)
-                if not by_id[sid].get("staged"):
-                    break
-                sid = by_id[sid].get("parent", 0)
         kept_snaps = [s for s in log["snapshots"] if s["id"] in keep_ids]
         if len(kept_snaps) == len(log["snapshots"]):
             return 0

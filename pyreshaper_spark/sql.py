@@ -15,7 +15,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from pyreshaper_spark.config import RunConfig
-from pyreshaper_spark.sources.catalog import TableCatalog, get_catalog
+from pyreshaper_spark.sources.catalog import get_catalog
+from pyreshaper_spark.sources.iceberglite import IcebergLite
 
 
 def register_views(
@@ -29,16 +30,12 @@ def register_views(
     names: list[str] = []
     spark.read.parquet(cfg.input_path).createOrReplaceTempView("sequences")
     names.append("sequences")
-    import os
-
-    root = cat.root
-    if os.path.isdir(root):
-        for t in sorted(os.listdir(root)):
-            if not cat.exists(t):
-                continue
-            sid = (snapshot_ids or {}).get(t)
-            cat.read(spark, t, snapshot_id=sid).createOrReplaceTempView(t)
-            names.append(t)
+    for t in cat.list_tables():
+        if not cat.exists(t):
+            continue
+        sid = (snapshot_ids or {}).get(t)
+        cat.read(spark, t, snapshot_id=sid).createOrReplaceTempView(t)
+        names.append(t)
     return names
 
 
@@ -95,16 +92,13 @@ def read_rollup(
     if not realtime:
         return mat
 
-    from pyreshaper_spark.plans.pipeline import _load_input
+    from pyreshaper_spark.plans.pipeline import _load_input, ingested_files
 
     seq = _load_input(spark, cfg)
     if cat.exists("series_enc"):
-        done = (
-            cat.read(spark, "series_enc")
-            .select(F.explode("input_files").alias("input_file"))
-            .distinct()
+        seq = seq.join(
+            F.broadcast(ingested_files(spark, cat)), "input_file", "left_anti"
         )
-        seq = seq.join(F.broadcast(done), "input_file", "left_anti")
     if sources is not None:
         seq = seq.filter(F.col("source").isin(list(sources)))
     if t_min is not None:
@@ -116,7 +110,7 @@ def read_rollup(
 
 def read_tier(
     spark: SparkSession,
-    cat: TableCatalog,
+    cat: IcebergLite,
     table: str,
     sources: list[str] | None = None,
     t_min: int | None = None,
@@ -153,20 +147,10 @@ def read_tier(
                 return False
             return True
 
-    # Manifest pruning needs a snapshot log. On a manifest-less
-    # binding (hivedir) skip the planning-time filters — they are pure
-    # optimizations here, because the SAME predicates are re-applied
-    # row-level below (and Spark still prunes hive partition dirs from
-    # the .filter); a pinned-snapshot read still gates loudly.
-    if "snapshots" in cat.capabilities():
-        df = cat.read(
-            spark, table, snapshot_id=snapshot_id,
-            partition_filter=pf, stats_filter=sf, allow_empty=True,
-        )
-    else:
-        df = cat.read(
-            spark, table, snapshot_id=snapshot_id, allow_empty=True
-        )
+    df = cat.read(
+        spark, table, snapshot_id=snapshot_id,
+        partition_filter=pf, stats_filter=sf, allow_empty=True,
+    )
     if sources is not None:
         df = df.filter(F.col("source").isin(list(sources)))
     if t_min is not None:

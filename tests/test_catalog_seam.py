@@ -1,353 +1,76 @@
-"""Catalog adapter seam: scheme dispatch, protocol conformance of the
-default IcebergLite binding, fake-adapter registration, and the
-import-gated REST stub."""
+"""Catalog binding: a plain path binds IcebergLite, a URI root is
+rejected, and every catalog method the program calls — plus every name
+perfbench hooks — resolves on the bound classes (a static guard, so a
+removed method cannot keep a caller)."""
 
 from __future__ import annotations
 
+import os
+import re
+
 import pytest
 
-from pyreshaper_spark.sources.catalog import (
-    TableCatalog,
-    get_catalog,
-    register_catalog,
-)
+from pyreshaper_spark.sources.catalog import get_catalog
 from pyreshaper_spark.sources.iceberglite import IcebergLite
+
+_ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
 
 
 def test_plain_path_binds_iceberglite(tmp_path):
     cat = get_catalog(str(tmp_path))
     assert isinstance(cat, IcebergLite)
-    # protocol conformance: the default binding satisfies the seam
-    assert isinstance(cat, TableCatalog)
-
-
-def test_file_scheme_strips_prefix(tmp_path):
-    cat = get_catalog(f"file://{tmp_path}")
-    assert isinstance(cat, IcebergLite)
     assert cat.root == str(tmp_path)
 
 
-def test_rest_stub_raises_without_client():
-    # pyiceberg is not installed in this container: the stub must fail
-    # AT BINDING TIME with instructions, not deep inside a job
-    with pytest.raises(NotImplementedError, match="pyiceberg"):
-        get_catalog("rest://catalog.example/warehouse")
-
-
-def test_unknown_scheme_rejected():
-    with pytest.raises(ValueError, match="no catalog binding"):
-        get_catalog("s3catalog://bucket/warehouse")
-
-
-def test_registered_fake_adapter_dispatches(tmp_path):
-    class FakeCatalog:
-        def __init__(self, root):
-            self.root = root
-            self.appends = []
-
-        def capabilities(self):
-            return frozenset()
-
-        def exists(self, name):
-            return False
-
-        def create_table(self, name, schema_json):
-            return 0
-
-        def read(self, name, *a, **k):
-            raise KeyError(name)
-
-        def append(self, name, df, **k):
-            self.appends.append(name)
-            return 1
-
-        def append_once(self, name, df, once_key, **k):
-            return 1
-
-        def overwrite(self, name, df, **k):
-            return 1
-
-        def overwrite_partitions(self, name, df, keys):
-            return 1
-
-    register_catalog("faketest", FakeCatalog)
-    try:
-        cat = get_catalog("faketest://anywhere")
-        assert isinstance(cat, FakeCatalog)
-        assert isinstance(cat, TableCatalog)
-        assert cat.root == "faketest://anywhere"
-    finally:
-        from pyreshaper_spark.sources import catalog as _c
-
-        _c._REGISTRY.pop("faketest", None)
+@pytest.mark.parametrize("scheme", ["file", "hivedir", "rest", "s3catalog"])
+def test_uri_root_rejected(tmp_path, monkeypatch, scheme):
+    # a relative "hivedir://x" must not silently become a directory
+    # named "hivedir:" under the working directory
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="plain filesystem path"):
+        get_catalog(f"{scheme}://{tmp_path}/wh")
+    assert os.listdir(tmp_path) == []
 
 
 def test_pipeline_runs_through_the_seam(spark, tmp_path):
     # the pipeline's own tests exercise IcebergLite end-to-end; here we
-    # only prove the resolution point the pipeline calls is the seam
+    # only prove the resolution point the pipeline calls is get_catalog
     from pyreshaper_spark.plans import pipeline as pl
 
     assert pl.get_catalog is get_catalog
 
 
-# ---------------------------------------------------------------------------
-# round 5: capability layering + the second real adapter (HiveDirCatalog)
-# ---------------------------------------------------------------------------
-
-import os
-import re
-
-from pyreshaper_spark.sources.catalog import (
-    CAPABILITY_METHODS,
-    CatalogCapabilityError,
-    require_caps,
-)
-from pyreshaper_spark.sources.hivedir import HiveDirCatalog
-
-_PKG = os.path.join(os.path.dirname(__file__), "..")
+def _sources():
+    paths = [os.path.join(_ROOT, "__spark_entry__.py")]
+    for sub in ("pyreshaper_spark", "jobs", "tools", "perfbench"):
+        for d, _, fs in os.walk(os.path.join(_ROOT, sub)):
+            paths += [os.path.join(d, f) for f in fs if f.endswith(".py")]
+    return paths
 
 
-def test_protocol_covers_consumed_surface():
-    """Every ``cat.<method>(`` call site in plans/, streaming/, and
-    jobs/ must be either a core protocol method or listed in a
-    documented capability group — the ADVICE drift (jobs consuming
-    undeclared surface) cannot recur silently."""
-    core = {
-        "capabilities", "exists", "create_table", "read", "append",
-        "append_once", "overwrite", "overwrite_partitions",
-    }
-    optional = {m for ms in CAPABILITY_METHODS.values() for m in ms}
-    consumed = set()
-    for sub in ("pyreshaper_spark/plans", "pyreshaper_spark/streaming",
-                "jobs"):
-        d = os.path.join(_PKG, sub)
-        for fn in os.listdir(d):
-            if not fn.endswith(".py"):
-                continue
-            src = open(os.path.join(d, fn)).read()
-            consumed |= set(
-                re.findall(r"\bcat(?:_in)?\.([a-zA-Z_][a-zA-Z0-9_]*)\(", src)
-            )
-    undeclared = consumed - core - optional
-    assert not undeclared, f"jobs consume undeclared catalog surface: {sorted(undeclared)}"
+def test_consumed_catalog_surface_resolves():
+    """Every ``cat.<name>(`` call and ``IcebergLite.<name>`` reference
+    in the program resolves to an IcebergLite attribute, and every name
+    perfbench's tracer hooks by ``getattr`` exists."""
+    import pyreshaper_spark.sql as sqlmod
+    from perfbench.tracing import WRITE_METHODS
+    from pyreshaper_spark.plans.checkpoint import Checkpoint
 
+    call = re.compile(r"\bcat(?:_in)?\.([A-Za-z_]\w*)\(")
+    ref = re.compile(r"\bIcebergLite\.([A-Za-z_]\w*)")
+    missing = set()
+    for p in _sources():
+        src = open(p, encoding="utf-8").read()
+        for name in set(call.findall(src)) | set(ref.findall(src)):
+            if not hasattr(IcebergLite, name):
+                missing.add((os.path.relpath(p, _ROOT), name))
+    assert not missing, f"catalog calls with no IcebergLite method: {sorted(missing)}"
 
-def test_iceberglite_declares_every_capability(tmp_path):
-    cat = IcebergLite(str(tmp_path))
-    assert cat.capabilities() == frozenset(CAPABILITY_METHODS)
-    for group, methods in CAPABILITY_METHODS.items():
-        for m in methods:
-            assert callable(getattr(cat, m)), (group, m)
-
-
-def test_require_caps_names_the_gap(tmp_path):
-    cat = HiveDirCatalog(str(tmp_path))
-    require_caps(cat, set(), "noop")  # vacuous pass
-    with pytest.raises(CatalogCapabilityError, match="mutation"):
-        require_caps(cat, {"mutation"}, "delete_docs")
-
-
-def test_hivedir_scheme_binds(tmp_path):
-    cat = get_catalog(f"hivedir://{tmp_path}")
-    assert isinstance(cat, HiveDirCatalog)
-    assert isinstance(cat, TableCatalog)
-    assert cat.root == str(tmp_path)
-
-
-def test_hivedir_core_semantics(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    cat = HiveDirCatalog(str(tmp_path))
-    df = spark.createDataFrame(
-        [("a", 1, 10), ("a", 2, 20), ("b", 3, 30)],
-        "source string, bucket_s long, cnt long",
-    )
-    # typed empty read after create_table
-    cat.create_table("t", df.schema.json())
-    assert cat.exists("t")
-    empty = cat.read(spark, "t", allow_empty=True)
-    assert empty.schema == df.schema and empty.count() == 0
-
-    # append + partitioned read round-trip (order/type restored)
-    cat.append("t", df, partition_by=("source",))
-    got = sorted(tuple(r) for r in cat.read(spark, "t").collect())
-    assert got == [("a", 1, 10), ("a", 2, 20), ("b", 3, 30)]
-    assert cat.read(spark, "t").schema == df.schema
-
-    # overwrite replaces everything
-    df2 = spark.createDataFrame(
-        [("c", 9, 90)], "source string, bucket_s long, cnt long"
-    )
-    cat.overwrite("t", df2, partition_by=("source",))
-    assert [tuple(r) for r in cat.read(spark, "t").collect()] == [("c", 9, 90)]
-
-    # dynamic partition overwrite keeps untouched partitions
-    cat.append("t", df, partition_by=("source",))  # a, b join c
-    up = spark.createDataFrame(
-        [("a", 7, 70)], "source string, bucket_s long, cnt long"
-    )
-    cat.overwrite_partitions("t", up, ("source",))
-    got = sorted(tuple(r) for r in cat.read(spark, "t").collect())
-    assert got == [("a", 7, 70), ("b", 3, 30), ("c", 9, 90)]
-
-    # append_once: replayed key no-ops; empty epoch records nothing
-    v1 = cat.append_once("t", up, key="sink:1", partition_by=("source",))
-    v2 = cat.append_once("t", up, key="sink:1", partition_by=("source",))
-    assert v1 == v2
-    assert cat.read(spark, "t").filter(F.col("bucket_s") == 7).count() == 2
-    v3 = cat.append_once("t", up.limit(0), key="sink:2",
-                         partition_by=("source",))
-    assert v3 == v2  # empty epoch: no commit
-
-    # gate contract: a raising gate leaves the table unchanged
-    before = sorted(tuple(r) for r in cat.read(spark, "t").collect())
-
-    def boom():
-        raise ValueError("invalid input")
-
-    with pytest.raises(ValueError):
-        cat.append("t", df2, gate=boom)
-    after = sorted(tuple(r) for r in cat.read(spark, "t").collect())
-    assert before == after
-
-    # optional kwargs this backend lacks fail loudly, not silently
-    with pytest.raises(CatalogCapabilityError, match="snapshot"):
-        cat.read(spark, "t", snapshot_id=3)
-    with pytest.raises(CatalogCapabilityError):
-        cat.append("t", df2, stage=True)
-
-
-def test_pipeline_green_under_both_bindings(spark, tmp_path):
-    """The full batch pipeline (write_mode='skip', fresh warehouse)
-    must produce identical tier content under the IcebergLite and the
-    hive-layout bindings — the seam's 'zero changes to job code'
-    promise, proven against two REAL adapters."""
-    from pyreshaper_spark.config import RunConfig, TierSpec
-    from pyreshaper_spark.fixtures import sequences_df
-    from pyreshaper_spark.plans.pipeline import run_pipeline
-
-    seq_path = str(tmp_path / "sequences")
-    sequences_df(spark, "/root/testdata/sf0.001").write.parquet(seq_path)
-    tiers = (TierSpec("10m", 600), TierSpec("1h", 3600))
-
-    results = {}
-    for label, out_root in (
-        ("iceberg", str(tmp_path / "wh_ice")),
-        ("hivedir", f"hivedir://{tmp_path / 'wh_hive'}"),
-    ):
-        cfg = RunConfig(
-            input_path=seq_path, output_path=out_root, tiers=tiers,
-            nsalt=4, num_series_partitions=4,
-        )
-        res = run_pipeline(spark, cfg, str(tmp_path / f"ck_{label}.json"))
-        assert "encode" in res.steps_run
-        cat = get_catalog(out_root)
-        results[label] = {
-            "tier_1h": sorted(
-                tuple(r)
-                for r in cat.read(spark, "tier_1h")
-                .select("source", "bucket_s", "cnt", "sum_n_tok")
-                .collect()
-            ),
-            "n_chunks": cat.read(spark, "series_enc").count(),
-        }
-    assert results["iceberg"] == results["hivedir"]
-
-
-def test_hivedir_capability_gates_block_at_binding(spark, tmp_path):
-    """Jobs needing optional groups refuse a core-only binding with
-    ONE clear error at binding time — the ADVICE failure mode
-    (AttributeError deep inside a job) is structurally gone."""
-    from pyreshaper_spark.config import RunConfig, TierSpec
-    from pyreshaper_spark.fixtures import sequences_df
-    from pyreshaper_spark.plans.delete import delete_docs
-    from pyreshaper_spark.plans.pipeline import maintain, run_pipeline
-
-    seq_path = str(tmp_path / "sequences")
-    sequences_df(spark, "/root/testdata/sf0.001").write.parquet(seq_path)
-    root = f"hivedir://{tmp_path / 'wh'}"
-    cfg = RunConfig(
-        input_path=seq_path, output_path=root,
-        tiers=(TierSpec("1h", 3600),), nsalt=4, num_series_partitions=4,
-    )
-    ck = str(tmp_path / "ck.json")
-    run_pipeline(spark, cfg, ck)
-
-    with pytest.raises(CatalogCapabilityError, match="mutation"):
-        delete_docs(spark, cfg, ck, ["1"])
-    with pytest.raises(CatalogCapabilityError, match="maintenance"):
-        maintain(spark, cfg)
-    import dataclasses
-
-    append_cfg = dataclasses.replace(cfg, write_mode="append")
-    with pytest.raises(CatalogCapabilityError, match="snapshots"):
-        run_pipeline(spark, append_cfg, ck)
-
-
-def test_streaming_ingest_through_hivedir(spark, tmp_path):
-    """The streaming tier-0 sink consumes only core catalog surface
-    (create_table / read / overwrite_partitions), so an availableNow
-    ingest into a hive-layout warehouse must land the same table the
-    IcebergLite binding does — the seam's streaming path proven on the
-    second adapter."""
-    from pyspark.sql import functions as F
-
-    from pyreshaper_spark.fixtures import sequences_df
-    from pyreshaper_spark.streaming.ingest import start_tier0_stream
-
-    seq_path = str(tmp_path / "seq")
-    sequences_df(spark, "/root/testdata/sf0.001").select(
-        "doc_id", "source", "event_s", "n_tok", "tokens"
-    ).write.parquet(seq_path)
-
-    results = {}
-    for label, root in (
-        ("iceberg", str(tmp_path / "wh_ice")),
-        ("hivedir", f"hivedir://{tmp_path / 'wh_hive'}"),
-    ):
-        sq = start_tier0_stream(
-            spark, seq_path, root, str(tmp_path / f"ck_{label}"),
-            width_s=3600,
-        )
-        sq.awaitTermination(300)
-        cat = get_catalog(root)
-        results[label] = sorted(
-            tuple(r)
-            for r in cat.read(spark, "tier_stream")
-            .select("source", "bucket_s", "cnt", "sum_n_tok")
-            .collect()
-        )
-    assert results["iceberg"] == results["hivedir"]
-    assert len(results["hivedir"]) > 0
-
-
-def test_read_rollup_degrades_gracefully_on_hivedir(spark, tmp_path):
-    """Tier-routed dashboard reads work on the manifest-less binding:
-    the planning-time manifest pruning is skipped (the predicates are
-    re-applied row-level), so read_rollup with source/time pruning
-    returns the same rows under both catalogs."""
-    from pyreshaper_spark.config import RunConfig, TierSpec
-    from pyreshaper_spark.fixtures import sequences_df
-    from pyreshaper_spark.plans.pipeline import run_pipeline
-    from pyreshaper_spark.sql import read_rollup
-
-    seq_path = str(tmp_path / "sequences")
-    sequences_df(spark, "/root/testdata/sf0.001").write.parquet(seq_path)
-    tiers = (TierSpec("10m", 600), TierSpec("1h", 3600))
-    results = {}
-    for label, root in (
-        ("iceberg", str(tmp_path / "wh_i")),
-        ("hivedir", f"hivedir://{tmp_path / 'wh_h'}"),
-    ):
-        cfg = RunConfig(
-            input_path=seq_path, output_path=root, tiers=tiers,
-            nsalt=4, num_series_partitions=4,
-        )
-        run_pipeline(spark, cfg, str(tmp_path / f"ck_{label}.json"))
-        df = read_rollup(spark, cfg, 3600, sources=["src0", "src1"])
-        results[label] = sorted(
-            tuple(r)
-            for r in df.select("source", "bucket_s", "cnt").collect()
-        )
-    assert results["iceberg"] == results["hivedir"]
-    assert len(results["hivedir"]) > 0
+    for owner, name in [
+        *((IcebergLite, m) for m in WRITE_METHODS),
+        (IcebergLite, "read"),
+        (Checkpoint, "save"),
+        (Checkpoint, "mark_step"),
+        (sqlmod, "read_tier"),
+    ]:
+        assert callable(getattr(owner, name, None)), (owner, name)

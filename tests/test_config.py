@@ -28,15 +28,9 @@ def test_json_round_trip(tmp_path):
 def test_type_validation():
     with pytest.raises(TypeError):
         _cfg(nsalt="8").validate()
-    with pytest.raises(TypeError):
-        _cfg(compression_level=3.5).validate()
 
 
 def test_value_validation():
-    with pytest.raises(ValueError):
-        _cfg(table_format="netcdf").validate()
-    with pytest.raises(ValueError):
-        _cfg(compression_level=11).validate()
     with pytest.raises(ValueError):
         _cfg(write_mode="truncate").validate()
     with pytest.raises(ValueError):

@@ -49,7 +49,10 @@ def test_manifest_partition_pruning(spark, cat):
     cat.overwrite("t", _df(spark, [("a", 0, 1), ("b", 0, 2)]), ("source",))
     only_b = cat.read(spark, "t", partition_filter=lambda p: p.get("source") == "b")
     assert [r["cnt"] for r in only_b.collect()] == [2]
-    assert cat.partitions("t") == {
+    assert {
+        tuple(sorted(f["partition"].items()))
+        for f in cat._snapshot("t", None)["files"]
+    } == {
         (("source", "a"),),
         (("source", "b"),),
     }
@@ -288,72 +291,6 @@ def test_sorted_compaction_enables_stats_pruning(spark, cat):
     assert cat.read(spark, "t").count() == 60
 
 
-def test_zorder_compaction_prunes_both_dimensions(spark, cat):
-    """Z-order clustering must beat a linear sort on 2-D box
-    predicates: the linear layout prunes only on its leading column,
-    the Morton layout prunes on both."""
-    rows = [
-        ("s", (i * 37) % 1000, (i * 613) % 997, i) for i in range(800)
-    ]
-    df = spark.createDataFrame(
-        rows, "source string, x long, y long, cnt long"
-    ).repartition(4)
-    for t in ("lin", "zord"):
-        cat.append(t, df, stats_cols=("x", "y"))
-
-    cat.compact(
-        spark, "lin", target_file_bytes=512, min_files=1,
-        stats_cols=("x", "y"), sort_by=("x",),
-    )
-    cat.zorder_compact(
-        spark, "zord", ("x", "y"), target_file_bytes=512,
-        stats_cols=("x", "y"),
-    )
-
-    def overlap(st):  # 2-D box [100,300] × [700,750] — narrow in y,
-        # where the x-sorted layout has NO clustering at all
-        return (
-            st["x"][0] <= 300 and st["x"][1] >= 100
-            and st["y"][0] <= 750 and st["y"][1] >= 700
-        )
-
-    def frac(t):
-        fs = cat._snapshot(t, None)["files"]
-        assert len(fs) > 4, (t, len(fs))
-        return sum(1 for f in fs if overlap(f["stats"])) / len(fs)
-
-    assert frac("zord") < frac("lin")
-    # pruned read is still exact
-    import pyspark.sql.functions as SF
-
-    got = cat.read(spark, "zord", stats_filter=overlap).filter(
-        SF.col("x").between(100, 300) & SF.col("y").between(700, 750)
-    )
-    want = df.filter(
-        SF.col("x").between(100, 300) & SF.col("y").between(700, 750)
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    assert cat.read(spark, "zord").count() == 800
-
-
-def test_time_travel_by_timestamp(spark, cat):
-    import time
-
-    import pyspark.sql.functions as SF  # noqa: F401
-
-    cat.append("t", _df(spark, [("a", 0, 1)]))
-    t_mid = time.time()
-    time.sleep(0.02)
-    cat.append("t", _df(spark, [("b", 60, 2)]))
-    sid = cat.snapshot_as_of("t", t_mid)
-    assert sid == 1
-    assert cat.read(spark, "t", snapshot_id=sid).count() == 1
-    # a timestamp after the last commit resolves to the current snapshot
-    assert cat.snapshot_as_of("t", time.time()) == 2
-    with pytest.raises(SnapshotNotFound):
-        cat.snapshot_as_of("t", 0.0)
-
-
 def test_commit_gate_blocks_snapshot_on_raise(spark, cat):
     """The write→gate→commit split: a raising gate leaves the data
     files orphaned and the table state UNCHANGED (append and overwrite
@@ -422,50 +359,6 @@ def test_remove_orphan_files(spark, cat):
         cat.remove_orphan_files("t", older_than_s=-1)
 
 
-def test_write_audit_publish(spark, cat):
-    """WAP: a staged snapshot is invisible to readers and to
-    timestamp travel until publish; publish is also rollback."""
-    import time
-
-    s1 = cat.append("t", _df(spark, [("a", 0, 1)]))
-    s2 = cat.append("t", _df(spark, [("b", 60, 2)]), stage=True)
-    assert s2 == 2
-    # published state unchanged; staged snapshot auditable by id
-    assert cat.current_snapshot_id("t") == s1
-    assert [r["source"] for r in cat.read(spark, "t").collect()] == ["a"]
-    assert sorted(
-        r["source"] for r in cat.read(spark, "t", snapshot_id=s2).collect()
-    ) == ["a", "b"]
-    # timestamp travel never sees unpublished snapshots
-    assert cat.snapshot_as_of("t", time.time() + 60) == s1
-
-    # audit passes → publish
-    cat.tag("t", "audited", s2)
-    assert sorted(
-        r["source"] for r in cat.read(spark, "t", tag="audited").collect()
-    ) == ["a", "b"]
-    assert cat.publish("t", s2) == s2
-    assert cat.current_snapshot_id("t") == s2
-    assert sorted(r["source"] for r in cat.read(spark, "t").collect()) == [
-        "a", "b",
-    ]
-    # published → now visible to as_of
-    assert cat.snapshot_as_of("t", time.time() + 60) == s2
-
-    # rollback = publish an older id
-    cat.publish("t", s1)
-    assert [r["source"] for r in cat.read(spark, "t").collect()] == ["a"]
-
-    # sid allocation never collides with staged snapshots
-    s3 = cat.append("t", _df(spark, [("c", 120, 3)]))
-    assert s3 == 3
-    # the append built on the PUBLISHED state (post-rollback), not the
-    # staged one
-    assert sorted(r["source"] for r in cat.read(spark, "t").collect()) == [
-        "a", "c",
-    ]
-
-
 def test_expire_snapshots_older_than_composes_with_keep_last(spark, cat):
     """Iceberg's retain_last AND older_than composition: a snapshot
     younger than the age cutoff is retained even past keep_last; old
@@ -491,117 +384,6 @@ def test_expire_snapshots_older_than_composes_with_keep_last(spark, cat):
     assert cat.read(spark, "t").count() == 4
     with pytest.raises(ValueError):
         cat.expire_snapshots("t", older_than_s=-1)
-
-
-def test_tags_pin_history_through_expire(spark, cat):
-    cat.append("t", _df(spark, [("a", 0, 1)]))
-    cat.overwrite("t", _df(spark, [("b", 60, 2)]))
-    cat.overwrite("t", _df(spark, [("c", 120, 3)]))
-    cat.tag("t", "v1", 1)
-    assert cat.tags("t") == {"v1": 1}
-    n = cat.expire_snapshots("t", keep_last=1)
-    assert n >= 1
-    # tagged snapshot survives expiry, untagged middle one is gone
-    assert [r["source"] for r in cat.read(spark, "t", tag="v1").collect()] == ["a"]
-    with pytest.raises(SnapshotNotFound):
-        cat.read(spark, "t", snapshot_id=2)
-
-    with pytest.raises(ValueError):
-        cat.tag("t", "v1", 3)  # moving a tag needs replace=True
-    cat.tag("t", "v1", 3, replace=True)
-    assert cat.resolve_tag("t", "v1") == 3
-    cat.drop_tag("t", "v1")
-    with pytest.raises(SnapshotNotFound):
-        cat.resolve_tag("t", "v1")
-    with pytest.raises(KeyError):
-        cat.drop_tag("t", "v1")
-    with pytest.raises(ValueError):
-        cat.read(spark, "t", snapshot_id=3, tag="x")
-
-
-# -- branches: isolated multi-commit write lineages ----------------------
-
-def test_branch_commits_stay_invisible_until_fast_forward(spark, cat):
-    cat.append("t", _df(spark, [("a", 0, 1)]))
-    cat.create_branch("t", "audit")
-    cat.append("t", _df(spark, [("b", 60, 2)]), branch="audit")
-    cat.append("t", _df(spark, [("c", 120, 3)]), branch="audit")
-    # main readers still see only the published state
-    assert {r["source"] for r in cat.read(spark, "t").collect()} == {"a"}
-    # branch readers see the full branch lineage
-    got = {r["source"] for r in cat.read(spark, "t", branch="audit").collect()}
-    assert got == {"a", "b", "c"}
-    # one atomic publish lands BOTH branch commits
-    cat.fast_forward("t", "audit")
-    got = {r["source"] for r in cat.read(spark, "t").collect()}
-    assert got == {"a", "b", "c"}
-
-
-def test_branch_isolated_from_main_commits(spark, cat):
-    cat.append("t", _df(spark, [("a", 0, 1)]))
-    cat.create_branch("t", "wip")
-    cat.append("t", _df(spark, [("b", 60, 2)]), branch="wip")
-    # a MAIN commit after the branch diverged
-    cat.append("t", _df(spark, [("m", 0, 9)]))
-    assert {r["source"] for r in cat.read(spark, "t").collect()} == {"a", "m"}
-    got = {r["source"] for r in cat.read(spark, "t", branch="wip").collect()}
-    assert got == {"a", "b"}  # branch did NOT pick up the main commit
-    # branch parent chain records the branch lineage, not main's
-    head = cat.resolve_branch("t", "wip")
-    snap = cat._snapshot("t", head)
-    assert snap["parent"] == 1 and snap.get("staged")
-
-
-def test_abandoned_branch_drops_cleanly(spark, cat):
-    cat.append("t", _df(spark, [("a", 0, 1)]))
-    cat.create_branch("t", "bad")
-    cat.append("t", _df(spark, [("x", 0, 7)]), branch="bad")
-    cat.drop_branch("t", "bad")
-    # head no longer pinned: expiry reclaims the staged branch commit
-    cat.append("t", _df(spark, [("b", 60, 2)]))
-    cat.expire_snapshots("t", keep_last=1)
-    assert {r["source"] for r in cat.read(spark, "t").collect()} == {"a", "b"}
-    import pytest as _pt
-
-    with _pt.raises(Exception):
-        cat.resolve_branch("t", "bad")
-
-
-def test_branch_from_empty_table_and_head_pinned_by_expiry(spark, cat):
-    cat.append("t", _df(spark, [("a", 0, 1)]))
-    cat.create_branch("t", "b0")
-    cat.append("t", _df(spark, [("z", 0, 5)]), branch="b0")
-    for i in range(3):
-        cat.append("t", _df(spark, [(f"m{i}", 0, i)]))
-    cat.expire_snapshots("t", keep_last=1)
-    # the branch head survived expiry (pinned like a tag)
-    got = {r["source"] for r in cat.read(spark, "t", branch="b0").collect()}
-    assert got == {"a", "z"}
-
-
-def test_branch_cli_roundtrip(spark, cat, tmp_path):
-    from jobs.maintain_job import main as maintain
-    from jobs.make_config import main as mkcfg
-
-    cat.append("t", _df(spark, [("a", 0, 1)]))
-    cfg_p = str(tmp_path / "run.json")
-    mkcfg([
-        "--input", str(tmp_path / "unused"), "--output", cat.root,
-        "--tiers", "1m:60", "-o", cfg_p,
-    ])
-    ck = str(tmp_path / "ck.json")
-    out = maintain([
-        "--config", cfg_p, "--checkpoint", ck, "create-branch",
-        "--table", "t", "--name", "audit",
-    ])
-    assert out["snapshot_id"] == 1
-    cat.append("t", _df(spark, [("b", 60, 2)]), branch="audit")
-    out = maintain([
-        "--config", cfg_p, "--checkpoint", ck, "fast-forward",
-        "--table", "t", "--name", "audit",
-    ])
-    assert out["snapshot_id"] == cat.current_snapshot_id("t")
-    assert {r["source"] for r in cat.read(spark, "t").collect()} == {"a", "b"}
 
 
 def test_partition_spec_evolution(spark, cat):
@@ -633,73 +415,23 @@ def test_partition_spec_evolution(spark, cat):
     assert got == {("a", 1), ("b", 2), ("a", 3)}
 
 
-def test_fast_forward_refuses_when_main_advanced(spark, cat):
-    """Review finding: publishing a branch whose base is behind main
-    would silently un-publish main's intervening commits — the guard
-    requires current to be an ancestor of the branch head."""
-    cat.append("t", _df(spark, [("a", 0, 1)]))
-    cat.create_branch("t", "audit")
-    cat.append("t", _df(spark, [("b", 60, 2)]), branch="audit")
-    cat.append("t", _df(spark, [("m", 0, 9)]))  # main moved on
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="not an ancestor"):
-        cat.fast_forward("t", "audit")
-    # main state untouched by the refused publish
-    assert {r["source"] for r in cat.read(spark, "t").collect()} == {"a", "m"}
-
-
-def test_expiry_pins_live_branch_intermediates(spark, cat):
-    """Review finding: a live branch pins its WHOLE staged lineage —
-    intermediate branch commits stay readable by id until the branch
-    is dropped, as fast_forward's contract documents."""
-    cat.append("t", _df(spark, [("a", 0, 1)]))
-    cat.create_branch("t", "audit")
-    cat.append("t", _df(spark, [("b", 60, 2)]), branch="audit")  # s2
-    mid = cat.resolve_branch("t", "audit")
-    cat.append("t", _df(spark, [("c", 120, 3)]), branch="audit")  # s3 head
-    for i in range(3):
-        cat.append("t", _df(spark, [(f"m{i}", 0, i)]))
-    cat.expire_snapshots("t", keep_last=1)
-    got = {r["source"] for r in cat.read(spark, "t", snapshot_id=mid).collect()}
-    assert got == {"a", "b"}
-    # after dropping the branch, expiry reclaims the staged lineage
-    cat.drop_branch("t", "audit")
-    cat.expire_snapshots("t", keep_last=1)
-    with _raises_snapshot_not_found():
-        cat.read(spark, "t", snapshot_id=mid)
-
-
-def _raises_snapshot_not_found():
-    import pytest as _pt
-
-    return _pt.raises(SnapshotNotFound)
-
-
 # -- metadata / inspection tables ------------------------------------------
 
 
-def test_inspect_snapshots_and_history(spark, cat):
+def test_inspect_snapshots(spark, cat):
     s1 = cat.append("t", _df(spark, [("a", 0, 1)]))
     s2 = cat.append("t", _df(spark, [("b", 60, 2)]))
-    staged = cat.append("t", _df(spark, [("c", 120, 3)]), stage=True)
-    snaps = {r["snapshot_id"]: r for r in
-             cat.inspect_snapshots(spark, "t").collect()}
-    assert set(snaps) == {s1, s2, staged}
-    assert snaps[s2]["is_current"] and not snaps[staged]["is_current"]
-    assert snaps[staged]["is_staged"] and not snaps[s1]["is_staged"]
+    df = cat.inspect_snapshots(spark, "t")
+    assert df.columns == [
+        "snapshot_id", "parent_id", "operation", "committed_at_s",
+        "is_current", "n_data_files", "n_delete_files",
+    ]
+    snaps = {r["snapshot_id"]: r for r in df.collect()}
+    assert set(snaps) == {s1, s2}
+    assert snaps[s2]["is_current"] and not snaps[s1]["is_current"]
     assert snaps[s1]["parent_id"] == 0 and snaps[s2]["parent_id"] == s1
     assert snaps[s2]["n_data_files"] > snaps[s1]["n_data_files"]
-    # history: published lineage only; staged snapshot absent
-    hist = {r["snapshot_id"]: r for r in
-            cat.inspect_history(spark, "t").collect()}
-    assert set(hist) == {s1, s2}
-    assert all(r["is_current_ancestor"] for r in hist.values())
-    # rollback via publish: superseded commit becomes non-ancestor
-    cat.publish("t", s1)
-    hist2 = {r["snapshot_id"]: r["is_current_ancestor"] for r in
-             cat.inspect_history(spark, "t").collect()}
-    assert hist2 == {s1: True, s2: False}
+    assert {r["operation"] for r in snaps.values()} == {"append"}
 
 
 def test_inspect_files_contents_and_rows(spark, cat):
@@ -724,24 +456,11 @@ def test_inspect_files_contents_and_rows(spark, cat):
     assert all(r["record_count"] is None for r in lazy)
 
 
-def test_inspect_refs(spark, cat):
-    cat.append("t", _df(spark, [("a", 0, 1)]))
-    cat.tag("t", "release-1")
-    cat.create_branch("t", "audit")
-    cat.append("t", _df(spark, [("b", 60, 2)]), branch="audit")
-    refs = {r["ref_name"]: (r["ref_type"], r["snapshot_id"]) for r in
-            cat.inspect_refs(spark, "t").collect()}
-    assert refs["main"] == ("branch", 1)
-    assert refs["release-1"] == ("tag", 1)
-    assert refs["audit"][0] == "branch" and refs["audit"][1] > 1
-
-
 def test_inspect_cli_roundtrip(spark, cat, tmp_path):
     from jobs.maintain_job import main as maintain
     from jobs.make_config import main as mkcfg
 
     cat.append("t", _df(spark, [("a", 0, 1)]))
-    cat.tag("t", "rel")
     cfg_p = str(tmp_path / "run.json")
     mkcfg([
         "--input", str(tmp_path / "unused"), "--output", cat.root,
@@ -750,132 +469,16 @@ def test_inspect_cli_roundtrip(spark, cat, tmp_path):
     ck = str(tmp_path / "ck.json")
     out = maintain([
         "--config", cfg_p, "--checkpoint", ck, "inspect",
-        "--table", "t", "--what", "refs",
+        "--table", "t", "--what", "snapshots",
     ])
-    got = {r["ref_name"]: r["snapshot_id"] for r in out["rows"]}
-    assert got == {"main": 1, "rel": 1}
+    got = {r["snapshot_id"]: r["is_current"] for r in out["rows"]}
+    assert got == {1: True}
     out = maintain([
         "--config", cfg_p, "--checkpoint", ck, "inspect",
         "--table", "t", "--what", "files", "--with-rows",
     ])
     assert out["n"] >= 1
     assert all(r["record_count"] is not None for r in out["rows"])
-
-
-# -- hidden partitioning (partition transforms) ------------------------------
-
-
-def test_bucket_transform_roundtrip_and_pruning(spark, cat):
-    """Iceberg hidden partitioning: bucket(4, doc_id) lays files out by
-    a derived hash bucket that (a) never appears in the logical schema
-    and (b) lets an equality predicate on doc_id prune the manifest to
-    1/N of the files before any parquet opens."""
-    from pyreshaper_spark.sources.iceberglite import (
-        IcebergLite, _h32_py, PB_PREFIX,
-    )
-
-    df = spark.createDataFrame(
-        [(f"d{i}", i) for i in range(40)], "doc_id string, v long"
-    )
-    cat.append("t", df, partition_by=("bucket(4,doc_id)",))
-    got = cat.read(spark, "t")
-    assert got.columns == ["doc_id", "v"]  # hidden col stripped
-    assert {(r["doc_id"], r["v"]) for r in got.collect()} == {
-        (f"d{i}", i) for i in range(40)
-    }
-    # manifest pruning: the filter keeps exactly one bucket's files
-    snap = cat._snapshot("t", None)
-    flt = IcebergLite.eq_filter(("bucket(4,doc_id)",), {"doc_id": ["d7"]})
-    kept = [f for f in snap["files"] if flt(f["partition"])]
-    want_bucket = str(_h32_py("d7") % 4)
-    assert kept and all(
-        f["partition"][f"{PB_PREFIX}doc_id_bkt4"] == want_bucket
-        for f in kept
-    )
-    assert len(kept) < len(snap["files"])
-    # the pruned read still returns the target doc
-    rows = cat.read(spark, "t", partition_filter=flt).collect()
-    assert "d7" in {r["doc_id"] for r in rows}
-
-
-def test_truncate_transform_string_and_int(spark, cat):
-    from pyreshaper_spark.sources.iceberglite import IcebergLite
-
-    df = spark.createDataFrame(
-        [("alpha", 17), ("alps", 23), ("beta", 101)],
-        "name string, v long",
-    )
-    cat.append("t", df, partition_by=("truncate(3,name)",))
-    parts = {dict(p)["_pb_name_trunc3"] for p in cat.partitions("t")}
-    assert parts == {"alp", "bet"}
-    flt = IcebergLite.eq_filter(("truncate(3,name)",), {"name": ["alps"]})
-    got = {r["name"] for r in
-           cat.read(spark, "t", partition_filter=flt).collect()}
-    assert "alps" in got and "beta" not in got
-    # integer truncate: floor to multiple of W
-    df2 = spark.createDataFrame([(7,), (12,), (25,)], "v long")
-    cat.append("u", df2, partition_by=("truncate(10,v)",))
-    parts = {dict(p)["_pb_v_trunc10"] for p in cat.partitions("u")}
-    assert parts == {"0", "10", "20"}
-
-
-def test_transform_evolution_safe_and_reserved_prefix(spark, cat):
-    """Files committed before the spec carried the transform have no
-    _pb_ key and cannot prove non-match — they survive pruning; user
-    columns may not use the reserved prefix."""
-    from pyreshaper_spark.sources.iceberglite import IcebergLite
-
-    cat.append("t", spark.createDataFrame([("old", 1)],
-                                          "doc_id string, v long"))
-    cat.append(
-        "t",
-        spark.createDataFrame([("new", 2)], "doc_id string, v long"),
-        partition_by=("bucket(4,doc_id)",),
-    )
-    flt = IcebergLite.eq_filter(("bucket(4,doc_id)",), {"doc_id": ["new"]})
-    got = {r["doc_id"] for r in
-           cat.read(spark, "t", partition_filter=flt).collect()}
-    assert got == {"old", "new"}  # pre-spec file kept (evolution-safe)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="reserved"):
-        cat.append("t", spark.createDataFrame(
-            [("x", 1)], "_pb_doc_id_bkt4 string, v long"))
-    with _pytest.raises(ValueError, match="unsupported"):
-        cat.append("t", spark.createDataFrame(
-            [("x",)], "doc_id string"), partition_by=("year(doc_id)",))
-
-
-def test_eq_filter_hive_escaped_and_null_values(spark, cat):
-    """Spark %XX-escapes special characters in partition directory
-    values (and writes __HIVE_DEFAULT_PARTITION__ for null/empty);
-    eq_filter must compare through the same escaping or those files
-    silently prune to nothing."""
-    from pyreshaper_spark.sources.iceberglite import IcebergLite
-
-    df = spark.createDataFrame(
-        [("web/crawl", 1), ("a=b:c", 2), ("plain", 3), (None, 4)],
-        "src string, v long",
-    )
-    cat.append("t", df, partition_by=("src",))
-    for val, want_v in (("web/crawl", 1), ("a=b:c", 2), ("plain", 3)):
-        flt = IcebergLite.eq_filter(("src",), {"src": [val]})
-        got = {(r["src"], r["v"]) for r in
-               cat.read(spark, "t", partition_filter=flt).collect()}
-        assert got == {(val, want_v)}, val
-    # null value lands in the hive default partition and is findable
-    flt = IcebergLite.eq_filter(("src",), {"src": [None]})
-    got = {r["v"] for r in
-           cat.read(spark, "t", partition_filter=flt).collect()}
-    assert got == {4}
-    # truncate transform whose prefix contains an escaped char
-    df2 = spark.createDataFrame([("a/b/c", 1), ("xyz", 2)],
-                                "name string, v long")
-    cat.append("u", df2, partition_by=("truncate(3,name)",))
-    flt = IcebergLite.eq_filter(("truncate(3,name)",), {"name": ["a/b/c"]})
-    got = {r["name"] for r in
-           cat.read(spark, "u", partition_filter=flt).collect()}
-    assert got == {"a/b/c"}
 
 
 def test_mixture_empty_budget_rejected(spark):
@@ -892,54 +495,6 @@ def test_mixture_empty_budget_rejected(spark):
                lambda: S.mix_quality_budget_sql({}, max_df=2)):
         with _pytest.raises(ValueError, match="non-empty"):
             fn()
-
-
-def test_eq_filter_escape_parity_nasty_values(spark, cat):
-    """One partitioned write over a battery of adversarial partition
-    values; eq_filter must find every one (escape-set parity with
-    Spark's directory writer, beyond the chars the unit test covers)."""
-    from pyreshaper_spark.sources.iceberglite import IcebergLite
-
-    vals = [
-        "web/crawl", "a=b", "c:d", "p%q", "sp ace", "tab\tx", "nl\nx",
-        "h#i", "br[ck]", "q?m", 'dq"x', "bs\\y", "st*ar", "sq'z",
-        "cu{rl}", "ca^ret", "del\x7fx", "unié", "pl+us", "co,mma",
-        "se;mi", "at@x", "ti~lde", "dol$lar", "%25", "__HIVE", "0",
-    ]
-    df = spark.createDataFrame(
-        [(v, i) for i, v in enumerate(vals)], "src string, v long"
-    )
-    cat.append("t", df, partition_by=("src",))
-    for i, v in enumerate(vals):
-        flt = IcebergLite.eq_filter(("src",), {"src": [v]})
-        got = {(r["src"], r["v"]) for r in
-               cat.read(spark, "t", partition_filter=flt).collect()}
-        assert got == {(v, i)}, repr(v)
-
-
-def test_bucket_transform_composes_with_mor_delete(spark, cat):
-    """Hidden partitioning + merge-on-read delete: the pruned read
-    applies outstanding equality deletes, and the delete's key file
-    does not disturb the transform layout."""
-    from pyreshaper_spark.sources.iceberglite import IcebergLite
-
-    df = spark.createDataFrame(
-        [(f"d{i}", i) for i in range(20)], "doc_id string, v long"
-    )
-    cat.append("t", df, partition_by=("bucket(4,doc_id)",))
-    keys = spark.createDataFrame([("d7",), ("d9",)], "doc_id string")
-    cat.delete_rows_mor(spark, "t", keys, ("doc_id",))
-    # full read: rows gone, hidden column still stripped
-    got = cat.read(spark, "t")
-    assert got.columns == ["doc_id", "v"]
-    ids = {r["doc_id"] for r in got.collect()}
-    assert "d7" not in ids and "d9" not in ids and len(ids) == 18
-    # pruned point lookup for a SURVIVING doc in d7's bucket still
-    # applies the delete
-    flt = IcebergLite.eq_filter(("bucket(4,doc_id)",), {"doc_id": ["d7"]})
-    pruned = {r["doc_id"] for r in
-              cat.read(spark, "t", partition_filter=flt).collect()}
-    assert "d7" not in pruned
 
 
 def test_partition_column_type_survives_directory_roundtrip(spark, cat):
@@ -976,9 +531,10 @@ def test_partition_value_text_survives_directory_roundtrip(spark, cat):
 
 def test_create_table_idempotent_and_staged_interplay(spark, cat):
     """create_table commits a typed zero-file head; it is a no-op on a
-    READABLE table (matching exists()), but a table holding only STAGED
-    snapshots still gets its empty main head — and publishing the
-    staged snapshot afterwards works unchanged."""
+    READABLE table (matching exists()). A log written by an older
+    version may hold a staged snapshot above ``current`` (current == 0
+    on a staged-only table): create still commits the readable head,
+    under a fresh id that never collides with the staged one."""
     df = _df(spark, [("a", 0, 1)])
     sid = cat.create_table("t", df.schema.json())
     assert sid == 1 and cat.exists("t")
@@ -988,13 +544,17 @@ def test_create_table_idempotent_and_staged_interplay(spark, cat):
     assert cat.create_table("t", df.schema.json()) == sid
     assert len(cat.snapshots("t")) == 1
 
-    # staged-only table: create still establishes the readable head
-    s_staged = cat.append("t2", df, stage=True)
+    # staged-only log: the appended snapshot is recorded without
+    # advancing current, as stage=True commits of older versions did
+    s_staged = cat.append("t2", df)
+    log = cat._read_log("t2")
+    log["current"] = 0
+    log["snapshots"][0]["staged"] = True
+    cat._write_log("t2", log)
     assert not cat.exists("t2")
     c2 = cat.create_table("t2", df.schema.json())
+    assert c2 == s_staged + 1
     assert cat.exists("t2")
     assert cat.read(spark, "t2", allow_empty=True).count() == 0
-    # the staged snapshot publishes as before and its data is intact
-    cat.publish("t2", s_staged)
-    assert cat.read(spark, "t2").count() == 1
-    assert c2 != s_staged
+    # the staged snapshot stays readable by id and its data is intact
+    assert cat.read(spark, "t2", snapshot_id=s_staged).count() == 1

@@ -445,19 +445,6 @@ def test_maintain_job_cli(spark, tmp_path):
     assert out["files_removed"] >= 0 and out["dry_run"] is False
     assert cat.read(spark, "tier_1m").count() > 0
 
-    cur = cat.current_snapshot_id("tier_1m")
-    out = maintain([
-        "--config", cfg_p, "--checkpoint", ck, "tag",
-        "--table", "tier_1m", "--name", "release-1",
-    ])
-    assert out["snapshot_id"] == cur
-    out = maintain([
-        "--config", cfg_p, "--checkpoint", ck, "publish",
-        "--table", "tier_1m", "--snapshot", str(cur),
-    ])
-    assert out["snapshot_id"] == cur
-    assert cat.resolve_tag("tier_1m", "release-1") == cur
-
 
 def test_append_retention_on_fine_tier_keeps_coarse_history(spark, tmp_path):
     """ADVICE r2 (medium): retention on a NON-coarsest tier must not bleed

@@ -130,8 +130,8 @@ def test_mix_quality_budget_cleanest_first(spark):
 
 def test_two_pass_global_ranks_parity(spark):
     """The 10^12-row boundary-broadcast path must reproduce the exact
-    windowed forms row for row — including heavy length/score ties and
-    N not divisible by 10 — and its plan must carry no corpus-global
+    windowed forms row for row — including heavy length/score ties,
+    NULL keys and N not divisible by 10 — and its plan must carry no corpus-global
     window (the only empty-partition window runs over the tiny
     distinct-boundary relation)."""
     from pyreshaper_spark.operators.sampling import (
@@ -140,12 +140,16 @@ def test_two_pass_global_ranks_parity(spark):
     )
 
     rows = []
-    for i in range(137):  # 137 % 10 == 7: uneven buckets
+    for i in range(137):
         # heavy ties: only 5 distinct lengths; texts with repeated words
         rows.append(
             (str(i), f"s{i % 3}", (i % 5) * 10 + 3,
              " ".join(f"w{j % (1 + i % 7)}" for j in range(1 + i % 11)))
         )
+    # NULL keys (length for the deciles, source for the percentiles):
+    # the window forms rank them NULLS FIRST, the two-pass joins must
+    # keep them too. 138 % 10 == 8: uneven buckets
+    rows.append(("137", None, None, "w0 w1 w0"))
     docs = spark.createDataFrame(
         rows, "doc_id string, source string, n_chars long, text string"
     )
