@@ -5,7 +5,10 @@
 
 Mirrors the reference CLI [U: scripts/s2smake → create_specifier →
 Specifier.validate → Specifier.write]: arguments → validated spec →
-serialized job file consumed by jobs/rollup_job.py.
+serialized job file consumed by jobs/rollup_job.py. ``--input`` is a
+parquet directory; the spec's tables are the count/sum/min/max tiers,
+their gap-filled versions, ``meta_source``, ``series_enc`` and
+``metrics`` (plus ``fidelity`` with ``--verify-fidelity``).
 """
 
 from __future__ import annotations
@@ -42,13 +45,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--verify-fidelity", action="store_true")
     ap.add_argument("--once", action="store_true", dest="meta_once",
                     help="once-file mode: metadata only in meta_source")
-    ap.add_argument("--analytics", nargs="+", default=None,
-                    help="extra aggregate families (ohlc m4 ndv_sketch "
-                         "hist50) materialized per tier")
-    ap.add_argument("--calendar", nargs="+", default=None,
-                    help="calendar tiers (week month quarter year) "
-                         "rebuilt each cycle from the coarsest "
-                         "day-aligned tier")
     ap.add_argument("-o", "--spec", required=True, help="output spec JSON path")
     args = ap.parse_args(argv)
 
@@ -64,10 +60,6 @@ def main(argv: list[str] | None = None) -> None:
     )
     if args.tiers is not None:
         kw["tiers"] = tuple(args.tiers)
-    if args.analytics is not None:
-        kw["analytics"] = tuple(args.analytics)
-    if args.calendar is not None:
-        kw["calendar"] = tuple(args.calendar)
     cfg = RunConfig(**kw).validate()
     cfg.write(args.spec)
     print(f"wrote {args.spec}:\n{cfg.to_json()}")

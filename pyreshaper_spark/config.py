@@ -6,7 +6,10 @@ a ``.s2s`` file and validates it with ``validate_types`` /
 ``validate_values`` [U: source/pyreshaper/specification.py ::
 Specifier — citation status per SURVEY.md §0]. Here the job spec is a
 frozen dataclass serialized to JSON; validation mirrors the reference's
-two-phase (types, then values) check.
+two-phase (types, then values) check. The netcdf format's analog is
+``input_format``: a parquet directory or an IcebergLite table. A spec
+JSON with a key that is not a field fails to load with a ``TypeError``
+naming that key.
 """
 
 from __future__ import annotations
@@ -31,6 +34,7 @@ EPOCH0 = 1_704_067_200
 HORIZON_S = 7 * 24 * 3600
 
 _ALLOWED_WRITE_MODES = ("skip", "overwrite", "append")
+_INPUT_FORMATS = ("parquet", "iceberglite")
 
 
 @dataclass(frozen=True)
@@ -58,8 +62,8 @@ class RunConfig:
 
     input_path: str
     output_path: str
-    #: wire format of the input drop (sources.readers dispatch):
-    #: parquet | orc | json | csv
+    #: where the input lives: a parquet directory, or an IcebergLite
+    #: table addressed as ``<root>::<table>[::<snapshot_id>]``
     input_format: str = "parquet"
     tiers: tuple[TierSpec, ...] = field(
         default_factory=lambda: tuple(TierSpec(n, w) for n, w in DEFAULT_TIERS)
@@ -78,19 +82,6 @@ class RunConfig:
     #: small commits hide behind the encode stage's executor work.
     #: Ignored (sequential) when a ``stop_after`` test hook is set.
     overlap: bool = False
-    #: extra continuous-aggregate families materialized per tier next to
-    #: the count/sum/min/max tables (names from
-    #: operators.rollup.ANALYTIC_FAMILIES: ohlc, m4, ndv_sketch, hist50);
-    #: each cascades and append-merges exactly like the main tiers
-    analytics: tuple[str, ...] = ()
-    #: calendar tiers (operators.rollup.CALENDAR_UNITS: week, month,
-    #: quarter, year) materialized as ``cal_<unit>`` tables. Irregular
-    #: widths can't ride the fixed-seconds cascade, so each cycle
-    #: REBUILDS cal_<unit> from the coarsest day-aligned tier (86400 %
-    #: width == 0) — exact by boundary nesting, O(that tier's rows).
-    #: That source tier must carry NO retention policy (a pruned source
-    #: would silently truncate calendar history — validated below).
-    calendar: tuple[str, ...] = ()
 
     # ---- validation (mirrors Specifier.validate: types then values) ----
 
@@ -114,11 +105,9 @@ class RunConfig:
                 raise TypeError("RunConfig.tiers items must be TierSpec")
 
     def validate_values(self) -> None:
-        from pyreshaper_spark.sources.readers import READERS
-
-        if self.input_format not in READERS:
+        if self.input_format not in _INPUT_FORMATS:
             raise ValueError(
-                f"input_format must be one of {sorted(READERS)}, "
+                f"input_format must be one of {_INPUT_FORMATS}, "
                 f"got {self.input_format!r}"
             )
         if self.write_mode not in _ALLOWED_WRITE_MODES:
@@ -144,47 +133,6 @@ class RunConfig:
         names = [t.name for t in self.tiers]
         if len(set(names)) != len(names):
             raise ValueError("tier names must be unique")
-        if self.analytics:
-            from pyreshaper_spark.operators.rollup import ANALYTIC_FAMILIES
-
-            bad = [a for a in self.analytics if a not in ANALYTIC_FAMILIES]
-            if bad:
-                raise ValueError(
-                    f"unknown analytics families {bad}; allowed: "
-                    f"{sorted(ANALYTIC_FAMILIES)}"
-                )
-        if self.calendar:
-            from pyreshaper_spark.operators.rollup import CALENDAR_UNITS
-
-            bad = [u for u in self.calendar if u not in CALENDAR_UNITS]
-            if bad:
-                raise ValueError(
-                    f"unknown calendar units {bad}; allowed: "
-                    f"{list(CALENDAR_UNITS)}"
-                )
-            src = self.calendar_source_tier()
-            if src is None:
-                raise ValueError(
-                    "calendar tiers need a day-aligned source tier "
-                    "(some tier width dividing 86400)"
-                )
-            if src.retention_buckets is not None:
-                raise ValueError(
-                    f"calendar source tier {src.name!r} must not carry "
-                    "a retention policy: calendar tables rebuild from "
-                    "it each cycle, and a pruned source would silently "
-                    "truncate calendar history"
-                )
-
-    def calendar_source_tier(self):
-        """The coarsest day-aligned tier — the cheapest exact source
-        for calendar re-aggregation (calendar boundaries nest on UTC
-        day boundaries, which nest on any width dividing 86400)."""
-        best = None
-        for t in self.tiers:
-            if 86400 % t.width_s == 0:
-                best = t  # widths strictly increase: last hit = coarsest
-        return best
 
     def validate(self) -> "RunConfig":
         self.validate_types()
@@ -202,8 +150,6 @@ class RunConfig:
     def from_json(cls, s: str) -> "RunConfig":
         d = json.loads(s)
         d["tiers"] = tuple(TierSpec(**t) for t in d.get("tiers", ()))
-        d["analytics"] = tuple(d.get("analytics", ()))
-        d["calendar"] = tuple(d.get("calendar", ()))
         return cls(**d).validate()
 
     def write(self, path: str) -> None:

@@ -158,10 +158,13 @@ def benchmark_decontaminate_sql(
     """DuckDB twin of :func:`benchmark_decontaminate` where the
     benchmark and corpus sides are ``documents`` rows selected by the
     given SQL predicates (the oracle face derives its benchmark from
-    the corpus deterministically)."""
+    the corpus deterministically). Each predicate filters ``documents``
+    in a CTE of its own, so its text is used verbatim."""
     h = h32_sql("shingle")
     return f"""
-WITH w AS (SELECT doc_id, source, {WORDS_SQL} AS words FROM documents),
+WITH bench_docs AS (SELECT * FROM documents WHERE {bench_pred}),
+corpus_docs AS (SELECT * FROM documents WHERE {corpus_pred}),
+w AS (SELECT doc_id, {WORDS_SQL} AS words FROM documents),
 shingles AS (
   SELECT DISTINCT doc_id,
          unnest(list_transform(generate_series(1, greatest(len(words) - {n - 1}, 0)),
@@ -171,9 +174,12 @@ shingles AS (
 ns AS (SELECT DISTINCT doc_id, {h} AS sh FROM shingles),
 bench_sh AS (
   SELECT DISTINCT sh FROM ns
-  WHERE {bench_pred}
+  WHERE doc_id IN (SELECT doc_id FROM bench_docs)
 ),
-corpus AS (SELECT doc_id, sh FROM ns WHERE {corpus_pred}),
+corpus AS (
+  SELECT doc_id, sh FROM ns
+  WHERE doc_id IN (SELECT doc_id FROM corpus_docs)
+),
 per_doc AS (SELECT doc_id, count(*) AS n_sh FROM corpus GROUP BY 1),
 hits AS (
   SELECT doc_id, count(*) AS n_hit
@@ -183,8 +189,7 @@ SELECT CAST(d.doc_id AS VARCHAR) AS doc_id, d.source,
        coalesce(p.n_sh, 0)  AS n_sh,
        coalesce(h2.n_hit, 0) AS n_hit,
        coalesce(h2.n_hit, 0) = 0 AS keep
-FROM documents d
+FROM corpus_docs d
 LEFT JOIN per_doc p ON CAST(d.doc_id AS VARCHAR) = CAST(p.doc_id AS VARCHAR)
 LEFT JOIN hits h2   ON CAST(d.doc_id AS VARCHAR) = CAST(h2.doc_id AS VARCHAR)
-WHERE {corpus_pred.replace('doc_id', 'd.doc_id')}
 """

@@ -79,13 +79,6 @@ _OUT_TYPE = pa.schema(
 )
 
 
-def pack_tokens_u16(tokens: np.ndarray) -> bytes:
-    """Vectorized 16-bit little-endian pack of a token id stream."""
-    if np.any((tokens < 0) | (tokens > 0xFFFF)):
-        raise ValueError("token id out of uint16 range")
-    return tokens.astype("<u2").tobytes()
-
-
 #: token-payload codec flags (first byte of tok_payload):
 #: bit 0 = zlib-deflated, bit 1 = 32-bit element width. Token ids are
 #: array<int32> in the input contract, so vocabularies beyond 65,535

@@ -915,67 +915,6 @@ WHERE rn = 1
 """
 
 
-#: Analytic aggregate families the pipeline can materialize as
-#: continuous-aggregate tables next to the count/sum/min/max tiers
-#: (RunConfig.analytics). Each entry is (tier0, cascade) with the
-#: uniform signature tier0(seq, width_s) / cascade(prev, width_s).
-#: Every family's aggregates are ASSOCIATIVE, which gives the pipeline
-#: two properties for free: tier k+1 never rescans raw data, and the
-#: append-cycle merge is simply cascade(base ∪ delta, same_width) —
-#: re-bucketing at the same width is the identity, so one re-aggregation
-#: over O(tier rows) merges a delta exactly.
-def _moments_overflow_guard(mom: DataFrame) -> DataFrame:
-    """Fail LOUDLY when a power sum overflows decimal(38,0). Spark's
-    non-ANSI decimal sum returns NULL on overflow while the DuckDB
-    oracle errors — a silent NULL s4 would be a wrong rollup. n_tok are
-    non-negative integers, so x ≤ x⁴ (pointwise, x=0 or x≥1) ⇒ s4 is
-    the first sum to overflow; guarding it covers s1..s3. O(buckets)
-    projection, no extra shuffle."""
-    s4 = F.when(
-        (F.col("n") > 0) & F.col("s4").isNull(),
-        F.raise_error(
-            "bucket_moments: sum(n_tok^4) overflowed decimal(38,0) — "
-            "the bucket's rows*max(n_tok)^4 must stay below 10^38"
-        ),
-    ).otherwise(F.col("s4")).alias("s4")
-    return mom.select("source", "bucket_s", "n", "s1", "s2", "s3", s4)
-
-
-def moments_cascade(prev: DataFrame, width_s: int) -> DataFrame:
-    """Coarser moments tier from a finer one — power sums add, so the
-    cascade is one exact decimal re-aggregation (same associativity
-    argument as the count/sum/min/max tiers)."""
-    return _moments_overflow_guard(
-        prev.select(
-            "source",
-            floor_to(F.col("bucket_s"), width_s)
-            .alias("bucket_s"),
-            "n", "s1", "s2", "s3", "s4",
-        )
-        .groupBy("source", "bucket_s")
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("s1").cast("decimal(38,0)").alias("s1"),
-            F.sum("s2").cast("decimal(38,0)").alias("s2"),
-            F.sum("s3").cast("decimal(38,0)").alias("s3"),
-            F.sum("s4").cast("decimal(38,0)").alias("s4"),
-        )
-    )
-
-
-ANALYTIC_FAMILIES: dict = {
-    "ohlc": (rollup_ohlc, ohlc_cascade),
-    "m4": (rollup_m4, m4_cascade),
-    "ndv_sketch": (ndv_sketch_tier0, ndv_sketch_cascade),
-    "hist50": (
-        lambda seq, w: bucket_histogram(seq, w, 50),
-        lambda prev, w: histogram_cascade(prev, w, 50),
-    ),
-}
-# "moments" is registered at the end of the module (bucket_moments is
-# defined below the registry).
-
-
 def cumulative_sql(relation: str) -> str:
     """DuckDB twin of :func:`cumulative_tier` over a named tier relation."""
     return f"""
@@ -1209,6 +1148,23 @@ GROUP BY CUBE(source, bucket_s)
 # --------------------------------------------------------------------------
 # Distribution moments — exact power sums per bucket (skew/kurtosis inputs)
 # --------------------------------------------------------------------------
+
+def _moments_overflow_guard(mom: DataFrame) -> DataFrame:
+    """Fail LOUDLY when a power sum overflows decimal(38,0). Spark's
+    non-ANSI decimal sum returns NULL on overflow while the DuckDB
+    oracle errors — a silent NULL s4 would be a wrong rollup. n_tok are
+    non-negative integers, so x ≤ x⁴ (pointwise, x=0 or x≥1) ⇒ s4 is
+    the first sum to overflow; guarding it covers s1..s3. O(buckets)
+    projection, no extra shuffle."""
+    s4 = F.when(
+        (F.col("n") > 0) & F.col("s4").isNull(),
+        F.raise_error(
+            "bucket_moments: sum(n_tok^4) overflowed decimal(38,0) — "
+            "the bucket's rows*max(n_tok)^4 must stay below 10^38"
+        ),
+    ).otherwise(F.col("s4")).alias("s4")
+    return mom.select("source", "bucket_s", "n", "s1", "s2", "s3", s4)
+
 
 def bucket_moments(seq: DataFrame, width_s: int) -> DataFrame:
     """Exact raw power sums of n_tok per (source, bucket): n, Σx, Σx²,
@@ -1769,9 +1725,6 @@ GROUP BY 1, 2
 """
 
 
-ANALYTIC_FAMILIES["moments"] = (bucket_moments, moments_cascade)
-
-
 # --------------------------------------------------------------------------
 # Time-of-day seasonality profile + robust spread (MAD) — tier analytics
 # --------------------------------------------------------------------------
@@ -2329,9 +2282,6 @@ FROM (
 )
 WHERE rn = 1
 """
-
-
-ANALYTIC_FAMILIES["lhist"] = (bucket_log_hist, log_hist_cascade)
 
 
 # --------------------------------------------------------------------------

@@ -132,16 +132,3 @@ def transpose_to_series(
         else salted.repartitionByRange(num_partitions, "source", "salt")
     )
     return parted.sortWithinPartitions("source", "salt", "event_s", "doc_id")
-
-
-def series_table_writer(series: DataFrame, path: str, mode: str = "overwrite"):
-    """Persist the series layout partitioned by source.
-
-    Partition-by-source on disk = the reference's one-file-per-variable
-    output: a later per-source read is a partition-pruned scan.
-    """
-    (
-        series.write.mode(mode)
-        .partitionBy("source")
-        .parquet(path)
-    )

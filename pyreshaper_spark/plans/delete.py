@@ -6,9 +6,9 @@ product of a completed pipeline run); :func:`restate_docs` is the
 upsert twin (the input rows for a set of ``doc_id``s were corrected in
 place — payload, source, or event time — and every data product must
 converge to a from-scratch run on the corrected input). Both repair
-encoded series chunks, all tier / filled / analytic continuous
-aggregates, per-source metadata, and lineage metrics — without
-recomputing any of them from scratch.
+encoded series chunks, the tier and gap-filled tier tables, per-source
+metadata, and lineage metrics — without recomputing any of them from
+scratch.
 
 Work is proportional to what the victims actually touched, never to
 the corpus:
@@ -25,9 +25,10 @@ the corpus:
   from the remaining raw rows of those buckets only (never from a
   finer tier, whose live rows may be retention-pruned). Untouched
   buckets of affected sources ride along unchanged (modulo refreshed
-  metadata replication columns); untouched sources keep their hive
-  partitions (``overwrite_partitions``) — their files are not
-  rewritten.
+  metadata replication columns). The commit is a
+  :meth:`IcebergLite.replace_rows` keyed on the affected sources:
+  untouched sources' hive partitions are carried by reference, so
+  their files are not rewritten.
 * **meta_source / metrics** — O(sources) / O(chunks) rebuilds.
 
 At a 10^12-row deployment the raw-side reads here prune to the
@@ -50,11 +51,8 @@ from pyspark.sql import functions as F
 
 from pyreshaper_spark.config import RunConfig
 from pyreshaper_spark.operators.encode import encode_series_table
-from pyreshaper_spark.operators.rollup import (
-    ANALYTIC_FAMILIES,
-    floor_to,
-    rollup_tier0,
-)
+from pyreshaper_spark.operators.gapfill import gapfill_locf
+from pyreshaper_spark.operators.rollup import floor_to, rollup_tier0
 from pyreshaper_spark.operators.transpose import (
     transpose_to_series,
     with_salt,
@@ -67,6 +65,7 @@ from pyreshaper_spark.plans.pipeline import (
 )
 from pyreshaper_spark.sources.catalog import get_catalog
 from pyreshaper_spark.sources.iceberglite import IcebergLite
+from pyreshaper_spark.sources.readers import split_table_path
 
 
 def _bucket(width_s: int) -> F.Column:
@@ -74,14 +73,14 @@ def _bucket(width_s: int) -> F.Column:
 
 
 def victim_bucket_fix(
-    rem_src: DataFrame, bad: DataFrame, tier0_fn, width_s: int
+    rem_src: DataFrame, bad: DataFrame, width_s: int
 ) -> DataFrame:
     """Recompute exactly the victim buckets of one tier from remaining
     raw rows: broadcast semi-join on (source, bucket) prunes the scan to
-    the affected buckets, then tier0_fn re-aggregates at this tier's
+    the affected buckets, then rollup_tier0 re-aggregates at this tier's
     width. The repair walk uses this for EVERY tier (plan-gated in
     tools/plan_report.py §15)."""
-    return tier0_fn(
+    return rollup_tier0(
         rem_src.withColumn("bucket_s", _bucket(width_s))
         .join(F.broadcast(bad), ["source", "bucket_s"], "left_semi")
         .drop("bucket_s"),
@@ -332,104 +331,66 @@ def _repair_run(
         )
         return sid
 
-    def _repair_tables(tier0_fn, table_of, with_meta: bool) -> None:
-        """Shared repair walk for the main tiers and each analytic
-        family: fix EVERY tier's affected buckets directly from the
-        remaining raw rows of those buckets (tier0_fn at that tier's
-        width — exact at any width by aggregate associativity).
-
-        Deliberately NOT a cascade from the repaired finer tier: if a
-        finer tier has a retention policy, its live rows (and hence the
-        repaired union) are pruned, and a coarse victim bucket whose
-        fine buckets aged out would repair from partial data — the same
-        divergence class the pipeline's append path guards against.
-        Cost stays bounded by the victim buckets (partition filter +
-        broadcast bucket semi-join prune the raw scan)."""
-        rem_src = remaining.filter(F.col("source").isin(affected_sources))
-        for tier in cfg.tiers:
-            tname = table_of(tier)
-            w = tier.width_s
-            bad = victims.select("source", _bucket(w)).distinct()
-            old = cat.read(
-                spark,
-                tname,
-                partition_filter=lambda p: p.get("source") in src_set,
-                # a retention-pruned tier may hold ZERO live rows for an
-                # affected source — that's an empty repair base, not an
-                # error
-                allow_empty=True,
-            )
-            meta_cols = [c for c in old.columns if c.startswith("src_")]
-            fixed = victim_bucket_fix(rem_src, bad, tier0_fn, w)
-            untouched_buckets = old.drop(*meta_cols).join(
-                F.broadcast(bad), ["source", "bucket_s"], "left_anti"
-            )
-            # the retention filter below applies only to what gets
-            # WRITTEN; the filled tables build from the pre-filter union
-            repaired = untouched_buckets.unionByName(fixed)
-            written = repaired
-            if tier.retention_buckets is not None:
-                # never resurrect aged-out buckets: re-filter against the
-                # live table's high-water mark
-                hw = cat.read(
-                    spark, tname, allow_empty=True
-                ).agg(F.max("bucket_s")).collect()[
-                    0
-                ][0]
-                if hw is not None:
-                    # empty live table ⇒ no high-water mark, nothing
-                    # can be resurrected — keep all repaired rows
-                    written = repaired.filter(
-                        F.col("bucket_s") > hw - tier.retention_buckets * w
-                    )
-            if with_meta and meta_cols:
-                mc = cat.read(spark, "meta_source", allow_empty=True).select(
-                    "source",
-                    F.col("n_docs").alias("src_n_docs"),
-                    F.col("total_tok").alias("src_total_tok"),
-                )
-                out = written.join(F.broadcast(mc), "source")
-            else:
-                out = written
-            report["snapshot_ids"][tname] = _replace_sources(tname, out)
-
-            fname = f"{tname}_filled"
-            if cat.exists(fname):
-                # pipeline ordering: filled tables are built from the
-                # pre-retention tier (prune runs after the cascade)
-                from pyreshaper_spark.operators.gapfill import gapfill_locf
-
-                report["snapshot_ids"][fname] = _replace_sources(
-                    fname, gapfill_locf(repaired, w)
-                )
-
-    _repair_tables(
-        rollup_tier0,
-        lambda t: f"tier_{t.name}",
-        with_meta=not cfg.meta_once,
-    )
-    for fam in cfg.analytics:
-        tier0_fn, _cascade_fn = ANALYTIC_FAMILIES[fam]
-        _repair_tables(
-            tier0_fn, lambda t, fam=fam: f"{fam}_{t.name}",
-            with_meta=False,
-        )
-
-    # calendar tables rebuild in full from the just-repaired day-aligned
-    # source tier (validated retention-free, so it IS the full truth;
-    # the rebuild is O(that tier's rows), tiny next to the repair scan)
-    if cfg.calendar:
-        from pyreshaper_spark.operators.rollup import calendar_cascade
-
-        cal_src = cat.read(
-            spark, f"tier_{cfg.calendar_source_tier().name}",
+    # Fix EVERY tier's affected buckets directly from the remaining raw
+    # rows of those buckets (rollup_tier0 at that tier's width — exact
+    # at any width by aggregate associativity). Deliberately NOT a
+    # cascade from the repaired finer tier: if a finer tier has a
+    # retention policy, its live rows (and hence the repaired union)
+    # are pruned, and a coarse victim bucket whose fine buckets aged out
+    # would repair from partial data — the same divergence class the
+    # pipeline's append path guards against. Cost stays bounded by the
+    # victim buckets (partition filter + broadcast bucket semi-join
+    # prune the raw scan).
+    rem_src = remaining.filter(F.col("source").isin(affected_sources))
+    for tier in cfg.tiers:
+        tname = f"tier_{tier.name}"
+        w = tier.width_s
+        bad = victims.select("source", _bucket(w)).distinct()
+        old = cat.read(
+            spark,
+            tname,
+            partition_filter=lambda p: p.get("source") in src_set,
+            # a retention-pruned tier may hold ZERO live rows for an
+            # affected source — that's an empty repair base, not an
+            # error
             allow_empty=True,
         )
-        for unit in cfg.calendar:
-            cname = f"cal_{unit}"
-            report["snapshot_ids"][cname] = cat.overwrite(
-                cname, calendar_cascade(cal_src, unit), ("source",),
-                stats_cols=("bucket_s",),
+        meta_cols = [c for c in old.columns if c.startswith("src_")]
+        fixed = victim_bucket_fix(rem_src, bad, w)
+        untouched_buckets = old.drop(*meta_cols).join(
+            F.broadcast(bad), ["source", "bucket_s"], "left_anti"
+        )
+        # the retention filter below applies only to what gets
+        # WRITTEN; the filled tables build from the pre-filter union
+        repaired = untouched_buckets.unionByName(fixed)
+        written = repaired
+        if tier.retention_buckets is not None:
+            # never resurrect aged-out buckets: re-filter against the
+            # live table's high-water mark
+            hw = cat.read(
+                spark, tname, allow_empty=True
+            ).agg(F.max("bucket_s")).collect()[0][0]
+            if hw is not None:
+                # empty live table ⇒ no high-water mark, nothing can be
+                # resurrected — keep all repaired rows
+                written = repaired.filter(
+                    F.col("bucket_s") > hw - tier.retention_buckets * w
+                )
+        if not cfg.meta_once and meta_cols:
+            mc = cat.read(spark, "meta_source", allow_empty=True).select(
+                "source",
+                F.col("n_docs").alias("src_n_docs"),
+                F.col("total_tok").alias("src_total_tok"),
+            )
+            written = written.join(F.broadcast(mc), "source")
+        report["snapshot_ids"][tname] = _replace_sources(tname, written)
+
+        fname = f"{tname}_filled"
+        if cat.exists(fname):
+            # pipeline ordering: filled tables are built from the
+            # pre-retention tier (prune runs after the cascade)
+            report["snapshot_ids"][fname] = _replace_sources(
+                fname, gapfill_locf(repaired, w)
             )
 
     # ---- optional fidelity gate -----------------------------------------
@@ -477,9 +438,7 @@ def refresh_from_changes(
     # the current snapshot would apply the 5→6 id set to snapshot-7
     # content. So resolve to_snapshot (default: current), reject a
     # conflicting pin, and pin the restate's input to that snapshot.
-    parts = cfg.input_path.split("::")
-    root, table = parts[0], parts[1]
-    pin = int(parts[2]) if len(parts) > 2 and parts[2] else None
+    root, table, pin = split_table_path(cfg.input_path)
     cat_in = get_catalog(root)
     to_sid = (
         to_snapshot_id if to_snapshot_id is not None

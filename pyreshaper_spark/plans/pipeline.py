@@ -17,9 +17,10 @@ Output tables under ``cfg.output_path`` (IcebergLite root):
                          (source, salt), partitioned by source
     metrics              per-chunk lineage rows (partition id, input
                          files, row counts, bytes, wall time)
-    <family>_<name>      optional analytic continuous aggregates
-                         (cfg.analytics: ohlc / m4 / ndv_sketch /
-                         hist50), cascaded + append-merged like tiers
+    fidelity             decode-and-compare report (cfg.verify_fidelity)
+
+The input is a parquet directory or an IcebergLite table
+(``cfg.input_format``).
 
 Scale notes: the tier cascade reads tier *k* back from its committed
 table (not the in-memory lineage), so a resumed run never recomputes
@@ -83,6 +84,7 @@ from pyreshaper_spark.operators.validate import (
 from pyreshaper_spark.plans.checkpoint import Checkpoint
 from pyreshaper_spark.sources.catalog import get_catalog
 from pyreshaper_spark.sources.iceberglite import IcebergLite
+from pyreshaper_spark.sources.readers import read_sequences_iceberglite
 
 LINEAGE_COLS = (
     "source",
@@ -110,9 +112,7 @@ def _load_input(spark: SparkSession, cfg: RunConfig) -> DataFrame:
         # (doc_num, variant fields) beyond the sequences contract
         seq = spark.read.parquet(cfg.input_path)
     else:
-        from pyreshaper_spark.sources.readers import read_sequences
-
-        seq = read_sequences(spark, cfg.input_path, cfg.input_format)
+        seq = read_sequences_iceberglite(spark, cfg.input_path)
     if "input_file" not in seq.columns:
         # captured at scan time (pre-shuffle) — the reference's
         # per-variable input-file accounting
@@ -267,13 +267,9 @@ def _run_pipeline(
     delta = None  # pending-file subset of seq (None = full recompute)
     if cfg.write_mode == "append":
         if ckpt.cycle is None:
-            base_tables = (
-                ["meta_source"]
-                + [f"tier_{t.name}" for t in cfg.tiers]
-                # analytic families only need their tier-0 base pinned:
-                # coarser family tiers recompute from the merged finer one
-                + [f"{fam}_{cfg.tiers[0].name}" for fam in cfg.analytics]
-            )
+            base_tables = ["meta_source"] + [
+                f"tier_{t.name}" for t in cfg.tiers
+            ]
             done_files: set[str] = set()
             if cat.exists("series_enc"):
                 done_files = {
@@ -586,78 +582,6 @@ def _run_pipeline(
                 )
 
             if commit_step(fname, _filled):
-                return PipelineResult(snapshot_ids, run, skipped, step_wall)
-
-    # ---- analytic aggregate families (OHLC / M4 / NDV sketch / hist) --
-    # Same commit/resume/append discipline as the main tiers. Every
-    # family's aggregates are associative, so the append-cycle merge is
-    # cascade(pinned base ∪ delta tier-0, same width) — re-bucketing at
-    # the same width is the identity, one O(tier rows) re-aggregation;
-    # coarser family tiers always recompute from the just-merged finer
-    # family table, never from raw data.
-    from pyreshaper_spark.operators.rollup import ANALYTIC_FAMILIES
-
-    for fam in cfg.analytics:
-        tier0_fn, cascade_fn = ANALYTIC_FAMILIES[fam]
-        prev_fam: str | None = None
-        for tier in cfg.tiers:
-            aname = f"{fam}_{tier.name}"
-
-            def _fam(
-                tier=tier, prev_fam=prev_fam, aname=aname,
-                tier0_fn=tier0_fn, cascade_fn=cascade_fn,
-            ):
-                if prev_fam is None:
-                    df = tier0_fn(
-                        seq if delta is None else delta, tier.width_s
-                    )
-                    if delta is not None:
-                        base = _tier_base(aname, list(df.columns))
-                        if base is None:
-                            # family enabled between append cycles: no
-                            # pinned base — backfill from the full raw
-                            # input instead of committing a truncated
-                            # delta-only table (same rule as the tiers)
-                            df = tier0_fn(seq, tier.width_s)
-                        else:
-                            df = cascade_fn(
-                                base.unionByName(df), tier.width_s
-                            )
-                else:
-                    df = cascade_fn(
-                        cat.read(spark, prev_fam, allow_empty=True),
-                        tier.width_s,
-                    )
-                snapshot_ids[aname] = cat.overwrite(
-                    aname, df, ("source",), stats_cols=("bucket_s",)
-                )
-
-            if commit_step(aname, _fam):
-                return PipelineResult(snapshot_ids, run, skipped, step_wall)
-            prev_fam = aname
-
-    # ---- calendar tiers (week/month/quarter/year) ----------------------
-    # Irregular widths can't ride the fixed-seconds cascade; each cycle
-    # REBUILDS cal_<unit> from the coarsest day-aligned tier — exact by
-    # boundary nesting and O(that tier's rows), and the source tier is
-    # validated retention-free, so the rebuild is always the full truth
-    # (fresh, append, and repair all converge to from-scratch).
-    if cfg.calendar:
-        from pyreshaper_spark.operators.rollup import calendar_cascade
-
-        cal_src = f"tier_{cfg.calendar_source_tier().name}"
-        for unit in cfg.calendar:
-            cname = f"cal_{unit}"
-
-            def _cal(unit=unit, cname=cname):
-                df = calendar_cascade(
-                    cat.read(spark, cal_src, allow_empty=True), unit
-                )
-                snapshot_ids[cname] = cat.overwrite(
-                    cname, df, ("source",), stats_cols=("bucket_s",)
-                )
-
-            if commit_step(cname, _cal):
                 return PipelineResult(snapshot_ids, run, skipped, step_wall)
 
     # ---- retention enforcement ----------------------------------------

@@ -1,214 +1,44 @@
-"""Source readers — normalize external deliveries into the engine's
-``sequences`` contract.
-
-The reference reads exactly one format (NetCDF slice files); the graft
-equivalent contract is the Iceberg/parquet ``sequences`` table
-(BASELINE.json input_hint). Real corpora, however, arrive as parquet,
-JSONL, CSV, or ORC drops — these readers land any of them in the SAME
-validated shape, so everything downstream (validate → transpose →
-tiers → encode) is format-agnostic:
+"""IcebergLite input — the north rule's "Iceberg table of pre-tokenized
+training sequences" (BASELINE.json input_hint) as the pipeline's actual
+upstream:
 
     sequences(doc_id string, tokens array<int>, n_tok int,
               source string, event_s long)
 
-Design rules (mirroring the reference's fixed-schema stance, SURVEY
-§1.1 "Schema system: fixed, validated, not inferred"):
-
-* **Never infer.** Every reader passes an explicit schema — inference
-  costs an extra full scan at 100 TB and silently drifts types.
-* **FAILFAST by default** — a malformed record is a pipeline stop, not
-  a silent null (the reference errors on schema mismatch); pass
-  ``mode="PERMISSIVE"`` to triage instead.
-* CSV cannot carry arrays: tokens travel as a space-delimited string
-  column and are parsed JVM-side (``split`` + element cast) — still a
-  pure codegen projection, no Python.
+An input path ``<catalog_root>::<table>[::<snapshot_id>]`` names the
+table and, optionally, a pinned snapshot. Reading through the catalog
+sees exactly that snapshot's live files, never dead files awaiting
+expiry, which is what snapshot-pinned reads and CDC-driven refresh
+(``plans.delete.refresh_from_changes``) build on. Parquet input needs
+no reader of its own: ``plans.pipeline._load_input`` reads it directly.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-SEQ_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("tokens", T.ArrayType(T.IntegerType()), False),
-    T.StructField("n_tok", T.IntegerType(), False),
-    T.StructField("source", T.StringType(), False),
-    T.StructField("event_s", T.LongType(), False),
-])
-
-#: CSV wire schema: arrays flattened to a space-delimited string.
-SEQ_CSV_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("tokens_str", T.StringType(), False),
-    T.StructField("n_tok", T.IntegerType(), False),
-    T.StructField("source", T.StringType(), False),
-    T.StructField("event_s", T.LongType(), False),
-])
+from pyreshaper_spark.sources.catalog import get_catalog
 
 _COLS = ["doc_id", "tokens", "n_tok", "source", "event_s"]
 
 
-def read_sequences_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(SEQ_SCHEMA).parquet(path).select(*_COLS)
-
-
-def read_sequences_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(SEQ_SCHEMA).orc(path).select(*_COLS)
-
-
-def read_sequences_json(
-    spark: SparkSession, path: str, mode: str = "FAILFAST"
-) -> DataFrame:
-    """JSON-lines delivery; arrays are native JSON arrays."""
-    return (
-        spark.read.schema(SEQ_SCHEMA)
-        .option("mode", mode)
-        .json(path)
-        .select(*_COLS)
-    )
-
-
-def read_sequences_csv(
-    spark: SparkSession, path: str, mode: str = "FAILFAST"
-) -> DataFrame:
-    """CSV delivery with tokens as a space-delimited string column."""
-    raw = (
-        spark.read.schema(SEQ_CSV_SCHEMA)
-        .option("header", "true")
-        .option("mode", mode)
-        .csv(path)
-    )
-    tokens = F.transform(
-        F.split(F.col("tokens_str"), " "), lambda t: t.cast("int")
-    )
-    return raw.select(
-        "doc_id",
-        tokens.alias("tokens"),
-        "n_tok",
-        "source",
-        "event_s",
-    )
-
-
-def read_sequences_iceberglite(spark: SparkSession, path: str) -> DataFrame:
-    """Input that LIVES in an IcebergLite table — the north rule's
-    "Iceberg table of pre-tokenized training sequences" as the actual
-    upstream, enabling snapshot-pinned reads and CDC-driven refresh
-    (plans.delete.refresh_from_changes). ``path`` is
-    ``<catalog_root>::<table>`` (optionally ``::<snapshot_id>``);
-    reading via the catalog sees exactly the LIVE snapshot's files,
-    never dead files awaiting expiry."""
-    from pyreshaper_spark.sources.catalog import get_catalog
-
+def split_table_path(path: str) -> tuple[str, str, int | None]:
+    """``<root>::<table>[::<snapshot_id>]`` → (root, table, snapshot id
+    or None)."""
     parts = path.split("::")
     if len(parts) not in (2, 3):
         raise ValueError(
             "iceberglite input path must be '<root>::<table>' or "
             f"'<root>::<table>::<snapshot_id>', got {path!r}"
         )
-    root, table = parts[0], parts[1]
     snap = int(parts[2]) if len(parts) == 3 else None
+    return parts[0], parts[1], snap
+
+
+def read_sequences_iceberglite(spark: SparkSession, path: str) -> DataFrame:
+    """The sequences of the IcebergLite table (and snapshot) ``path``
+    names, contract columns first."""
+    root, table, snap = split_table_path(path)
     df = get_catalog(root).read(spark, table, snapshot_id=snap)
     return df.select(*[c for c in _COLS if c in df.columns],
                      *[c for c in df.columns if c not in _COLS])
-
-
-def read_sequences_avro(spark: SparkSession, path: str) -> DataFrame:
-    """Avro delivery (Kafka-archive / schema-registry ecosystems ship
-    it). The `spark-avro` datasource is an EXTERNAL Spark module — not
-    bundled in this container's pyspark — so this reader is
-    import-gated like the media decoders: when the datasource is
-    missing it raises immediately with the deploy instruction instead
-    of a bare AnalysisException deep in a job. With the module on the
-    classpath (``spark-submit --packages
-    org.apache.spark:spark-avro_2.13:<spark version>``) the read is
-    schema-pinned and column-pruned exactly like the parquet/orc
-    paths."""
-    try:
-        return (
-            spark.read.schema(SEQ_SCHEMA)
-            .format("avro")
-            .load(path)
-            .select(*_COLS)
-        )
-    except Exception as exc:  # AnalysisException: missing datasource
-        if "Failed to find data source: avro" in str(exc):
-            raise NotImplementedError(
-                "the spark-avro external module is not on the "
-                "classpath; launch with `spark-submit --packages "
-                "org.apache.spark:spark-avro_2.13:<spark-version>` "
-                "(or add the jar) to read Avro sequence deliveries"
-            ) from exc
-        raise
-
-
-READERS = {
-    "parquet": read_sequences_parquet,
-    "orc": read_sequences_orc,
-    "json": read_sequences_json,
-    "csv": read_sequences_csv,
-    "avro": read_sequences_avro,
-    "iceberglite": read_sequences_iceberglite,
-}
-
-
-def read_sequences(
-    spark: SparkSession, path: str, fmt: str = "parquet"
-) -> DataFrame:
-    """Format-dispatching sequences reader (the one the jobs use)."""
-    try:
-        reader = READERS[fmt]
-    except KeyError:
-        raise ValueError(
-            f"unknown sequences format {fmt!r}; one of {sorted(READERS)}"
-        ) from None
-    return reader(spark, path)
-
-
-def write_sequences_csv(seq: DataFrame, path: str) -> None:
-    """Flatten to the CSV wire schema (tokens → space-joined string)."""
-    seq.select(
-        "doc_id",
-        F.concat_ws(
-            " ", F.transform(F.col("tokens"), lambda t: t.cast("string"))
-        ).alias("tokens_str"),
-        "n_tok",
-        "source",
-        "event_s",
-    ).write.option("header", "true").mode("overwrite").csv(path)
-
-
-def read_sequences_json_quarantine(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame]:
-    """JSON-lines ingest with a corrupt-record quarantine — the
-    realistic 100 TB delivery posture: a handful of mangled lines in a
-    multi-TB drop must neither kill the job (FAILFAST) nor silently
-    vanish (DROPMALFORMED). PERMISSIVE parsing routes each bad line's
-    raw text into a side column; the return is ``(good, bad)`` where
-    ``good`` has the clean sequences schema and ``bad`` carries
-    ``(raw_line)`` for offline triage / re-delivery accounting.
-
-    Notes for scale: the split is two filters over ONE cached parse —
-    no second read of the input; Spark requires the corrupt column to
-    be materialized (cache) before filtering on it.
-    """
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType(
-        list(SEQ_SCHEMA.fields) + [StructField("_raw", StringType())]
-    )
-    parsed = (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_raw")
-        .json(path)
-        .cache()
-    )
-    good = parsed.filter(F.col("_raw").isNull()).select(*_COLS)
-    bad = parsed.filter(F.col("_raw").isNotNull()).select(
-        F.col("_raw").alias("raw_line")
-    )
-    return good, bad

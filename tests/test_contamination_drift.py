@@ -196,3 +196,46 @@ def test_benchmark_decontaminate_semantics(spark):
     assert got["d3"][2] is True
     assert got["d4"] == (0, 0, True)
     assert set(got) == {"d1", "d2", "d3", "d4"}
+
+
+def test_benchmark_decontaminate_sql_predicate_is_verbatim(spark):
+    """The DuckDB twin applies each side's predicate as written: a
+    predicate whose string literal contains ``doc_id`` selects exactly
+    the rows it names, and the verdicts equal the Spark operator's."""
+    import duckdb
+
+    from pyreshaper_spark.operators.contamination import (
+        benchmark_decontaminate,
+        benchmark_decontaminate_sql,
+    )
+
+    rows = [
+        ("b1", "bench", "the quick brown fox jumps over"),
+        ("d1", "doc_id", "a very quick brown fox jumps today"),
+        ("d2", "doc_id", "quick brown fox sleeps all day long"),
+        ("d3", "doc_id", "too short"),
+        ("x1", "other", "the quick brown fox jumps over"),
+    ]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents (doc_id VARCHAR, source VARCHAR, text VARCHAR)"
+    )
+    con.executemany("INSERT INTO documents VALUES (?, ?, ?)", rows)
+    res = con.sql(benchmark_decontaminate_sql(
+        bench_pred="source = 'bench'", corpus_pred="source = 'doc_id'", n=4
+    ))
+    got = {r[0]: tuple(r[1:]) for r in res.fetchall()}
+    con.close()
+
+    docs = spark.createDataFrame(rows, "doc_id string, source string, text string")
+    want = {
+        r["doc_id"]: (r["source"], r["n_sh"], r["n_hit"], r["keep"])
+        for r in benchmark_decontaminate(
+            docs.filter(F.col("source") == "doc_id"),
+            docs.filter(F.col("source") == "bench"),
+            n=4,
+        ).collect()
+    }
+    assert got == want
+    assert set(got) == {"d1", "d2", "d3"}
+    assert got["d1"][3] is False and got["d2"][3] is True

@@ -1,12 +1,9 @@
-"""hod_band exact order statistics, tok_skipgram vs brute force, and
-the JSON corrupt-record quarantine reader."""
+"""hod_band exact order statistics and tok_skipgram vs brute force."""
 
 from __future__ import annotations
 
 import math
-import os
 import random
-import tempfile
 from collections import Counter
 
 
@@ -75,40 +72,6 @@ def test_tok_skipgram_brute_force(spark):
         for r in tok_skipgram(seq, w, min_count).collect()
     }
     assert got == want
-
-
-def test_json_quarantine_reader(spark):
-    from pyreshaper_spark.sources.readers import (
-        read_sequences_json_quarantine,
-    )
-
-    base = tempfile.mkdtemp(prefix="quarantine_")
-    path = os.path.join(base, "drop.jsonl")
-    good_lines = [
-        '{"doc_id": "1", "tokens": [1, 2, 3], "n_tok": 3, '
-        '"source": "a", "event_s": 100}',
-        '{"doc_id": "2", "tokens": [4], "n_tok": 1, '
-        '"source": "b", "event_s": 200}',
-    ]
-    bad_lines = [
-        '{"doc_id": "3", "tokens": [1, 2, BROKEN',
-        "not json at all",
-    ]
-    with open(path, "w") as f:
-        f.write("\n".join(good_lines + bad_lines) + "\n")
-    good, bad = read_sequences_json_quarantine(spark, path)
-    g = sorted(r["doc_id"] for r in good.collect())
-    assert g == ["1", "2"]
-    b = sorted(r["raw_line"] for r in bad.collect())
-    assert len(b) == 2 and "not json at all" in b
-    # clean columns only on the good side
-    assert "_raw" not in good.columns
-    # a fully-clean file quarantines nothing
-    path2 = os.path.join(base, "clean.jsonl")
-    with open(path2, "w") as f:
-        f.write("\n".join(good_lines) + "\n")
-    good2, bad2 = read_sequences_json_quarantine(spark, path2)
-    assert good2.count() == 2 and bad2.count() == 0
 
 
 def test_emb_norm_stats_numpy(spark):

@@ -1,6 +1,6 @@
 """Log2-histogram sketch family (rollup.bucket_log_hist): bin-mapping
-invariants, quantile containment vs the true order statistic, cascade
-exactness, and the pipeline analytic-family face."""
+invariants, quantile containment vs the true order statistic, and
+cascade exactness."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import math
 
 from pyspark.sql import functions as F
 
-from pyreshaper_spark.config import RunConfig, TierSpec
 from pyreshaper_spark.fixtures import sequences_df
 from pyreshaper_spark.operators.rollup import (
     bucket_log_hist,
@@ -17,8 +16,6 @@ from pyreshaper_spark.operators.rollup import (
     log_hist_cascade,
     log_hist_quantile,
 )
-from pyreshaper_spark.plans.pipeline import run_pipeline
-from pyreshaper_spark.sources.iceberglite import IcebergLite
 
 SF = "/root/testdata/sf0.001"
 
@@ -104,29 +101,3 @@ def test_quantile_contained_and_cascade_exact(spark):
     assert merged == direct
     seq.unpersist()
 
-
-def test_lhist_pipeline_family(spark, tmp_path):
-    """'lhist' as a RunConfig analytic family: fresh-run tables equal
-    the direct operator at every tier (count-sum mergeability)."""
-    seq = sequences_df(spark, SF)
-    p = str(tmp_path / "seq")
-    seq.write.parquet(p)
-    tiers = (TierSpec("10m", 600), TierSpec("1h", 3600))
-    cfg = RunConfig(
-        input_path=p, output_path=str(tmp_path / "out"),
-        tiers=tiers, nsalt=2, num_series_partitions=4,
-        analytics=("lhist",),
-    )
-    run_pipeline(spark, cfg, str(tmp_path / "ck.json"))
-    cat = IcebergLite(cfg.output_path)
-    cols = ["source", "bucket_s", "bin", "cnt"]
-    for t in tiers:
-        got = {
-            tuple(str(v) for v in r)
-            for r in cat.read(spark, f"lhist_{t.name}").select(*cols).collect()
-        }
-        want = {
-            tuple(str(v) for v in r)
-            for r in bucket_log_hist(seq, t.width_s).select(*cols).collect()
-        }
-        assert got == want, t.name

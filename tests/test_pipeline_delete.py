@@ -21,7 +21,7 @@ TIERS = (TierSpec("1m", 60), TierSpec("10m", 600), TierSpec("1h", 3600))
 def _cfg(inp, out, **kw):
     base = dict(
         input_path=inp, output_path=out, tiers=TIERS, nsalt=2,
-        num_series_partitions=4, analytics=("ohlc",),
+        num_series_partitions=4,
     )
     base.update(kw)
     return RunConfig(**base)
@@ -83,7 +83,6 @@ def deleted_state(spark, tmp_path_factory):
 TABLES = (
     "tier_1m", "tier_10m", "tier_1h",
     "tier_10m_filled", "tier_1h_filled",
-    "ohlc_1m", "ohlc_10m", "ohlc_1h",
     "meta_source",
 )
 
@@ -109,7 +108,7 @@ def test_victims_are_gone_everywhere(spark, deleted_state):
     dec = decode_series_table(cat.read(spark, "series_enc"))
     assert dec.filter(F.col("doc_id").isin(list(victims))).count() == 0
     gone = deleted_state["gone_src"]
-    for t in ("tier_1m", "tier_1h_filled", "ohlc_1h", "meta_source"):
+    for t in ("tier_1m", "tier_1h_filled", "meta_source"):
         assert (
             cat.read(spark, t).filter(F.col("source") == gone).count() == 0
         ), t
@@ -160,7 +159,7 @@ def test_delete_nothing_is_noop(spark, tmp_path):
     seq = sequences_df(spark, SF).limit(200)
     p = str(tmp_path / "seq")
     seq.write.parquet(p)
-    cfg = _cfg(p, str(tmp_path / "out"), analytics=())
+    cfg = _cfg(p, str(tmp_path / "out"))
     run_pipeline(spark, cfg, str(tmp_path / "ck.json"))
     cat = IcebergLite(cfg.output_path)
     before = cat.current_snapshot_id("series_enc")
@@ -175,7 +174,7 @@ def test_delete_refuses_midcycle(spark, tmp_path):
     seq = sequences_df(spark, SF).limit(100)
     p = str(tmp_path / "seq")
     seq.write.parquet(p)
-    cfg = _cfg(p, str(tmp_path / "out"), analytics=())
+    cfg = _cfg(p, str(tmp_path / "out"))
     ck = str(tmp_path / "ck.json")
     run_pipeline(spark, cfg, ck)
     from pyreshaper_spark.plans.checkpoint import Checkpoint
@@ -202,7 +201,7 @@ def test_delete_with_retention_on_fine_tier_repairs_coarse_from_raw(
         TierSpec("1m", 60, retention_buckets=30),
         TierSpec("10m", 600),
     )
-    cfg = _cfg(full_p, str(tmp_path / "out"), tiers=tiers, analytics=())
+    cfg = _cfg(full_p, str(tmp_path / "out"), tiers=tiers)
     run_pipeline(spark, cfg, str(tmp_path / "ck.json"))
 
     # victims: oldest docs of one source — their 1m buckets are already
@@ -217,9 +216,7 @@ def test_delete_with_retention_on_fine_tier_repairs_coarse_from_raw(
 
     filt_p = str(tmp_path / "seq_filt")
     seq.filter(~F.col("doc_id").isin(victims)).write.parquet(filt_p)
-    ref_cfg = _cfg(
-        filt_p, str(tmp_path / "ref_out"), tiers=tiers, analytics=()
-    )
+    ref_cfg = _cfg(filt_p, str(tmp_path / "ref_out"), tiers=tiers)
     run_pipeline(spark, ref_cfg, str(tmp_path / "ref_ck.json"))
 
     cat, ref = IcebergLite(cfg.output_path), IcebergLite(ref_cfg.output_path)

@@ -484,11 +484,11 @@ def test_append_retention_on_fine_tier_keeps_coarse_history(spark, tmp_path):
 
 
 def test_append_new_tier_backfills_full_history(spark, tmp_path):
-    """A tier (and an analytic family) ADDED to the config between
-    append cycles has no pinned base — the next cycle must backfill it
-    from the full raw input, not commit a delta-only table that
-    silently truncates history to the pending files' buckets."""
-    from pyreshaper_spark.operators.rollup import rollup_ohlc, rollup_tier0
+    """A tier ADDED to the config between append cycles has no pinned
+    base — the next cycle must backfill it from the full raw input, not
+    commit a delta-only table that silently truncates history to the
+    pending files' buckets."""
+    from pyreshaper_spark.operators.rollup import rollup_tier0
 
     seq = sequences_df(spark, SF)
     part = F.abs(F.xxhash64(F.col("doc_id").cast("string"))) % 2
@@ -502,11 +502,10 @@ def test_append_new_tier_backfills_full_history(spark, tmp_path):
     ck = str(tmp_path / "ck.json")
     run_pipeline(spark, cfg1, ck)  # cycle 1: only tier_1m exists
 
-    # cycle 2: new files + a new coarser tier + a new analytic family
+    # cycle 2: new files + a new coarser tier
     seq.filter(part == 1).write.mode("append").parquet(p)
     cfg2 = RunConfig(
-        tiers=(TierSpec("1m", 60), TierSpec("10m", 600)),
-        analytics=("ohlc",), **base_kw,
+        tiers=(TierSpec("1m", 60), TierSpec("10m", 600)), **base_kw,
     )
     run_pipeline(spark, cfg2, ck)
 
@@ -526,15 +525,6 @@ def test_append_new_tier_backfills_full_history(spark, tmp_path):
         for r in rollup_tier0(seq, 600).collect()
     }
     assert got == want
-    fam_got = {
-        (r["source"], r["bucket_s"])
-        for r in cat.read(spark, "ohlc_1m").collect()
-    }
-    fam_want = {
-        (r["source"], r["bucket_s"])
-        for r in rollup_ohlc(seq, 60).collect()
-    }
-    assert fam_got == fam_want
 
 
 def test_expire_snapshots_rejects_keep_last_zero(spark, tmp_path):

@@ -22,7 +22,7 @@ TIERS = (TierSpec("1m", 60), TierSpec("10m", 600), TierSpec("1h", 3600))
 def _cfg(inp, out, **kw):
     base = dict(
         input_path=inp, output_path=out, tiers=TIERS, nsalt=2,
-        num_series_partitions=4, analytics=("ohlc",),
+        num_series_partitions=4,
     )
     base.update(kw)
     return RunConfig(**base)
@@ -109,7 +109,6 @@ def restated_state(spark, tmp_path_factory):
 TABLES = (
     "tier_1m", "tier_10m", "tier_1h",
     "tier_10m_filled", "tier_1h_filled",
-    "ohlc_1m", "ohlc_10m", "ohlc_1h",
     "meta_source",
 )
 
@@ -147,7 +146,7 @@ def test_restate_nothing_is_noop(spark, tmp_path):
     seq = sequences_df(spark, SF).limit(100)
     p = str(tmp_path / "seq")
     seq.write.parquet(p)
-    cfg = _cfg(p, str(tmp_path / "out"), analytics=())
+    cfg = _cfg(p, str(tmp_path / "out"))
     ck = str(tmp_path / "ck.json")
     run_pipeline(spark, cfg, ck)
     cat = IcebergLite(cfg.output_path)
@@ -163,7 +162,7 @@ def test_unchanged_restate_is_lossless(spark, tmp_path):
     seq = sequences_df(spark, SF).limit(150)
     p = str(tmp_path / "seq")
     seq.write.parquet(p)
-    cfg = _cfg(p, str(tmp_path / "out"), analytics=())
+    cfg = _cfg(p, str(tmp_path / "out"))
     ck = str(tmp_path / "ck.json")
     run_pipeline(spark, cfg, ck)
     cat = IcebergLite(cfg.output_path)

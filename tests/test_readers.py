@@ -1,108 +1,11 @@
-"""Format-agnostic sequences ingestion: every reader lands the same
-validated frame; malformed records FAILFAST by default."""
+"""Input selection: RunConfig accepts parquet or IcebergLite input, and
+an IcebergLite input path is ``<root>::<table>[::<snapshot_id>]``."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from pyreshaper_spark.fixtures import sequences_df
-from pyreshaper_spark.sources.readers import (
-    read_sequences,
-    write_sequences_csv,
-)
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def seq(spark):
-    return sequences_df(spark, SF_SMOKE).cache()
-
-
-def _canon(df):
-    return sorted(
-        (r["doc_id"], tuple(r["tokens"]), r["n_tok"], r["source"],
-         r["event_s"])
-        for r in df.collect()
-    )
-
-
-def test_roundtrip_all_formats(spark, seq, tmp_path):
-    want = _canon(seq)
-    seq.write.parquet(str(tmp_path / "p"))
-    seq.write.orc(str(tmp_path / "o"))
-    seq.write.json(str(tmp_path / "j"))
-    write_sequences_csv(seq, str(tmp_path / "c"))
-    for fmt, sub in (("parquet", "p"), ("orc", "o"), ("json", "j"),
-                     ("csv", "c")):
-        got = read_sequences(spark, str(tmp_path / sub), fmt)
-        assert _canon(got) == want, fmt
-        assert got.schema["tokens"].dataType.simpleString() == "array<int>"
-
-
-def test_tier0_identical_across_formats(spark, seq, tmp_path):
-    from pyreshaper_spark.operators.rollup import rollup_tier0
-
-    seq.write.json(str(tmp_path / "j"))
-    got = rollup_tier0(
-        read_sequences(spark, str(tmp_path / "j"), "json"), 3600
-    )
-    want = rollup_tier0(seq, 3600)
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-
-
-def test_failfast_on_malformed_json(spark, tmp_path):
-    p = tmp_path / "bad"
-    p.mkdir()
-    (p / "part-0.json").write_text(
-        '{"doc_id": "a", "tokens": [1], "n_tok": 1, '
-        '"source": "s", "event_s": 1}\n'
-        "{this is not json}\n"
-    )
-    with pytest.raises(Exception, match="(?i)malformed|FAILFAST"):
-        read_sequences(spark, str(p), "json").collect()
-
-
-def test_unknown_format_rejected(spark):
-    with pytest.raises(ValueError, match="unknown sequences format"):
-        read_sequences(spark, "/nowhere", "xml")
-
-
-def test_pipeline_end_to_end_from_jsonl(spark, seq, tmp_path):
-    """The full pipeline over a JSONL input drop commits the same tier-0
-    as over parquet — the readers are wired through RunConfig."""
-    from pyreshaper_spark.config import RunConfig, TierSpec
-    from pyreshaper_spark.plans.pipeline import run_pipeline
-    from pyreshaper_spark.sources.iceberglite import IcebergLite
-
-    tiers = (TierSpec("1m", 60),)
-    paths = {}
-    seq.write.json(str(tmp_path / "seq_json"))
-    seq.write.parquet(str(tmp_path / "seq_parquet"))
-    for fmt in ("json", "parquet"):
-        cfg = RunConfig(
-            input_path=str(tmp_path / f"seq_{fmt}"),
-            output_path=str(tmp_path / f"out_{fmt}"),
-            input_format=fmt, tiers=tiers, nsalt=2,
-            num_series_partitions=4,
-        )
-        run_pipeline(spark, cfg, str(tmp_path / f"ck_{fmt}.json"))
-        paths[fmt] = cfg.output_path
-    rows = {
-        fmt: sorted(
-            map(
-                tuple,
-                IcebergLite(p)
-                .read(spark, "tier_1m")
-                .select("source", "bucket_s", "cnt", "sum_n_tok")
-                .collect(),
-            )
-        )
-        for fmt, p in paths.items()
-    }
-    assert rows["json"] == rows["parquet"]
+from pyreshaper_spark.sources.readers import split_table_path
 
 
 def test_runconfig_rejects_bad_input_format():
@@ -110,20 +13,13 @@ def test_runconfig_rejects_bad_input_format():
 
     with pytest.raises(ValueError, match="input_format"):
         RunConfig(
-            input_path="/x", output_path="/y", input_format="xml"
+            input_path="/x", output_path="/y", input_format="json"
         ).validate()
 
 
-def test_avro_reader_is_gated_not_broken(spark, tmp_path):
-    # spark-avro is an external module absent from this container: the
-    # dispatch must exist (avro is a valid input_format) and fail AT
-    # THE READER with the deploy instruction, not a bare
-    # AnalysisException deep in a job
-    from pyreshaper_spark.config import RunConfig
-    from pyreshaper_spark.sources.readers import read_sequences
-
-    RunConfig(
-        input_path="/x", output_path="/y", input_format="avro"
-    ).validate()
-    with pytest.raises(NotImplementedError, match="spark-avro"):
-        read_sequences(spark, str(tmp_path / "in.avro"), fmt="avro")
+def test_table_path_split_and_malformed_rejected():
+    assert split_table_path("/w::seq") == ("/w", "seq", None)
+    assert split_table_path("/w::seq::7") == ("/w", "seq", 7)
+    for bad in ("/w", "/w::seq::7::8"):
+        with pytest.raises(ValueError, match="iceberglite input path"):
+            split_table_path(bad)

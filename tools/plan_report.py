@@ -636,7 +636,6 @@ def main() -> None:
 
     # 15. delete/restate repair shapes + embedding-LSH bucket cap
     from pyreshaper_spark.operators.encode import decode_series_table
-    from pyreshaper_spark.operators.rollup import rollup_tier0
     from pyreshaper_spark.operators.similarity import cosine_near_dups
     from pyreshaper_spark.operators.transpose import with_salt
     from pyreshaper_spark.plans.delete import victim_bucket_fix
@@ -654,7 +653,7 @@ def main() -> None:
         ((F.col("event_s") / 600).cast("long") * 600).alias("bucket_s"),
     ).distinct()
     rem = seq.join(F.broadcast(ids), "doc_id", "left_anti")
-    p_fix = plan_of(victim_bucket_fix(rem, bad, rollup_tier0, 600))
+    p_fix = plan_of(victim_bucket_fix(rem, bad, 600))
 
     # restate's victim-chunk decode: chunks named by series_enc metadata
     # doc_ids, decode bounded to those chunks via broadcast semi-joins
