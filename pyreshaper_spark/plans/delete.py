@@ -59,13 +59,18 @@ from pyreshaper_spark.operators.transpose import (
 )
 from pyreshaper_spark.plans.checkpoint import Checkpoint
 from pyreshaper_spark.plans.pipeline import (
-    _load_input,
     fidelity_bad_rows,
+    ingest_ledger,
+    read_ingested,
     write_lineage,
 )
 from pyreshaper_spark.sources.catalog import get_catalog
 from pyreshaper_spark.sources.iceberglite import IcebergLite
-from pyreshaper_spark.sources.readers import split_table_path
+from pyreshaper_spark.sources.readers import (
+    list_input_files,
+    read_input,
+    split_table_path,
+)
 
 
 def _bucket(width_s: int) -> F.Column:
@@ -102,7 +107,7 @@ def _resolve_ids(
 
 def _load_run(
     op: str, spark: SparkSession, cfg: RunConfig, checkpoint_path: str
-) -> tuple[IcebergLite, Checkpoint, int]:
+) -> tuple[IcebergLite, Checkpoint, int, dict]:
     cfg.validate()
     cat = get_catalog(cfg.output_path)
     ckpt = Checkpoint.load(checkpoint_path)
@@ -112,11 +117,10 @@ def _load_run(
             "pinned cycle state); finish or replay it first"
         )
     nsalt = ckpt.nsalt or cfg.nsalt
-    if not nsalt:
-        raise RuntimeError(
-            f"{op}: no resolved nsalt (pipeline has not encoded yet)"
-        )
-    return cat, ckpt, nsalt
+    led = ingest_ledger(cat)
+    if not nsalt or led is None:
+        raise RuntimeError(f"{op}: the pipeline has not encoded yet")
+    return cat, ckpt, nsalt, led
 
 
 def delete_docs(
@@ -131,11 +135,29 @@ def delete_docs(
     ``doc_ids`` may be a Python sequence or a one-column ``doc_id``
     DataFrame. The victim list is assumed driver-manageable (a
     compliance batch, not a corpus) — it is broadcast into every probe.
+
+    The repair reads only the ingest ledger's files, and the
+    ``series_enc`` commit carries the ledger unchanged, so a file whose
+    every row was deleted stays ingested and a pending file stays
+    pending. Victims are looked up in every listed input file: a victim
+    that sits only in a pending file is counted in ``deleted_rows``, and
+    its chunk and buckets are re-derived from the ingested rows alone.
+    The input itself is never changed — the next append cycle ingests
+    that file, victim included, so compliance deletes must also remove
+    the rows from the input.
     """
-    cat, ckpt, nsalt = _load_run("delete_docs", spark, cfg, checkpoint_path)
+    cat, ckpt, nsalt, led = _load_run(
+        "delete_docs", spark, cfg, checkpoint_path
+    )
     ids = _resolve_ids(spark, doc_ids)
 
-    seq = _load_input(spark, cfg)
+    listed = list_input_files(cfg)
+    ingested = read_ingested(spark, cfg, led, listed)
+    seq = (
+        read_input(spark, cfg, listed, led["schema"])
+        if set(listed) - set(led["files"])
+        else ingested
+    )
     victims = (
         with_salt(
             seq.join(F.broadcast(ids), "doc_id", "left_semi"), nsalt
@@ -149,7 +171,7 @@ def delete_docs(
         victims.unpersist()
         return report
 
-    remaining = seq.join(F.broadcast(ids), "doc_id", "left_anti")
+    remaining = ingested.join(F.broadcast(ids), "doc_id", "left_anti")
     _repair_run(spark, cfg, cat, ckpt, nsalt, victims, remaining, report)
     victims.unpersist()
     return report
@@ -189,13 +211,23 @@ def restate_docs(
     re-applied after a restatement touching their neighborhoods) —
     the same rule real Iceberg deployments follow when a table is
     rebuildable from upstream data.
+
+    Corrections rewrite input files (a corrected parquet directory, a
+    copy-on-write commit to an IcebergLite input), so the current input
+    is every listed file, and the ``series_enc`` commit records that
+    listing as the new ingest ledger. A file that landed since the last
+    append cycle is therefore taken as ingested: run the cycle before
+    restating.
     """
-    cat, ckpt, nsalt = _load_run("restate_docs", spark, cfg, checkpoint_path)
+    cat, ckpt, nsalt, led = _load_run(
+        "restate_docs", spark, cfg, checkpoint_path
+    )
     ids = _resolve_ids(spark, doc_ids)
 
     from pyreshaper_spark.operators.encode import decode_series_table
 
-    seq = _load_input(spark, cfg)
+    listed = list_input_files(cfg)
+    seq = read_input(spark, cfg, listed, led["schema"])
     enc = cat.read(spark, "series_enc", allow_empty=True)
     old_chunks = (
         enc.select("source", "salt", F.explode("doc_ids").alias("doc_id"))
@@ -225,7 +257,10 @@ def restate_docs(
         victims.unpersist()
         return report
 
-    _repair_run(spark, cfg, cat, ckpt, nsalt, victims, seq, report)
+    _repair_run(
+        spark, cfg, cat, ckpt, nsalt, victims, seq, report,
+        ledger={"files": listed, "schema": led["schema"]},
+    )
     victims.unpersist()
     return report
 
@@ -239,13 +274,15 @@ def _repair_run(
     victims: DataFrame,
     current: DataFrame,
     report: dict,
+    ledger: dict | None = None,
 ) -> None:
     """Shared incremental repair: given victim positions (doc_id,
     source, salt, event_s — every placement whose chunk/buckets are
     stale) and ``current`` (the full post-change input relation),
     re-encode exactly the victim chunks and re-aggregate exactly the
     victim buckets so every table equals a from-scratch run on
-    ``current``."""
+    ``current``. ``ledger`` replaces the ``series_enc`` ingest ledger
+    (None carries it unchanged)."""
     remaining = current
     affected_sources = sorted(
         r[0] for r in victims.select("source").distinct().collect()
@@ -280,6 +317,7 @@ def _repair_run(
         ),
         stats_cols=("source",),
         options={"parquet.block.size": 32 * 1024 * 1024},
+        ledger=ledger,
     )
     report["snapshot_ids"]["series_enc"] = sid
     report["series_files_rewritten"] = rewritten

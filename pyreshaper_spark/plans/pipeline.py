@@ -24,23 +24,27 @@ The input is a parquet directory or an IcebergLite table
 
 Scale notes: the tier cascade reads tier *k* back from its committed
 table (not the in-memory lineage), so a resumed run never recomputes
-upstream tiers; the encode step's pending-work set is an anti-join of
-input files against the LIVE series table's input-file lineage — the
-file list is manifest-sized and broadcastable, the done-set is always
-consistent with committed data (crash-idempotent), and append mode
-encodes exactly the new files' rows.
+upstream tiers. What has been ingested is recorded, never rederived:
+the ``series_enc`` snapshot carries an ingest LEDGER — the input files
+its chunks cover and the input schema the scan used — committed in the
+same atomic log replace as the data (:func:`ingest_ledger`). A fresh or
+overwrite run scans exactly the files it listed and records exactly
+those; every pending set is driver-side set arithmetic, listed input
+files (:func:`sources.readers.list_input_files`, no Spark job) minus
+the ledger, and every input read passes the recorded schema.
 
 Append mode is FILE-INCREMENTAL end-to-end: a cycle pins {tier/meta
 base snapshot ids, pending input-file list} in the checkpoint, then
 every table update is a deterministic function of those immutable pins
-— validate/meta/tier-0 aggregate ONLY the pending rows and merge into
-the pinned base (count/sum/min/max compose associatively), cascade /
-gap-fill / retention recompute from the (small) merged tier tables,
-and encode appends the pending rows still absent from the lineage.
-Cost per append at 10^12 rows: O(new data) + O(tier rows) — the
-historical input is never rescanned. Replay after a crash at any step
-re-commits identical content; files arriving mid-cycle are deferred to
-the next cycle (tiers and series stay mutually consistent).
+— validate/meta/tier-0 aggregate and the encode read ONLY the pending
+files and merge into the pinned base (count/sum/min/max compose
+associatively), cascade / gap-fill / retention recompute from the
+(small) merged tier tables, and encode appends the pinned files still
+absent from the live ledger, extending the ledger in the same commit.
+The whole input is read only to size nsalt on a first run, to backfill
+a newly added tier, and for ``cfg.source_limit``. Replay after a crash
+at any step re-commits identical content; files arriving mid-cycle are
+deferred to the next cycle (tiers and series stay mutually consistent).
 """
 
 from __future__ import annotations
@@ -62,7 +66,6 @@ from pyspark.sql import functions as F
 
 from pyreshaper_spark.config import RunConfig
 from pyreshaper_spark.operators.encode import encode_series_table
-from pyreshaper_spark.operators.event_time import ensure_event_time
 from pyreshaper_spark.operators.gapfill import gapfill_locf
 from pyreshaper_spark.operators.rollup import (
     AGG_COLS,
@@ -84,7 +87,11 @@ from pyreshaper_spark.operators.validate import (
 from pyreshaper_spark.plans.checkpoint import Checkpoint
 from pyreshaper_spark.sources.catalog import get_catalog
 from pyreshaper_spark.sources.iceberglite import IcebergLite
-from pyreshaper_spark.sources.readers import read_sequences_iceberglite
+from pyreshaper_spark.sources.readers import (
+    input_schema,
+    list_input_files,
+    read_input,
+)
 
 LINEAGE_COLS = (
     "source",
@@ -106,30 +113,32 @@ class PipelineResult:
     step_wall_s: dict[str, float] = None  # per-step driver wall time
 
 
-def _load_input(spark: SparkSession, cfg: RunConfig) -> DataFrame:
-    if cfg.input_format == "parquet":
-        # schema-flexible default: test fixtures carry extra columns
-        # (doc_num, variant fields) beyond the sequences contract
-        seq = spark.read.parquet(cfg.input_path)
-    else:
-        seq = read_sequences_iceberglite(spark, cfg.input_path)
-    if "input_file" not in seq.columns:
-        # captured at scan time (pre-shuffle) — the reference's
-        # per-variable input-file accounting
-        seq = seq.withColumn("input_file", F.input_file_name())
-    return ensure_event_time(seq)
+def ingest_ledger(cat: IcebergLite) -> dict | None:
+    """The ingest ledger of the live ``series_enc`` snapshot —
+    ``{"files": [input_file_name() strings], "schema": input schema
+    JSON}`` — or None before the first encode commit. The only reader
+    of the ledger: append pins, the encode done set, realtime reads,
+    the fidelity gate and delete/restate all go through it."""
+    if not cat.exists("series_enc"):
+        return None
+    led = cat.ledger("series_enc")
+    if led is None:
+        raise RuntimeError(
+            f"series_enc snapshot {cat.current_snapshot_id('series_enc')} "
+            f"under {cat.root!r} has no ingest ledger (it was written by an "
+            "older version of the engine); rebuild the warehouse with "
+            'write_mode="overwrite"'
+        )
+    return led
 
 
-def ingested_files(spark: SparkSession, cat: IcebergLite) -> DataFrame:
-    """Distinct ``input_file`` frame of the input files already in the
-    LIVE ``series_enc`` lineage — the done set that append-cycle pins,
-    the encode anti-join, realtime reads and the fidelity gate all
-    compare against. Callers check ``cat.exists("series_enc")``."""
-    return (
-        cat.read(spark, "series_enc", allow_empty=True)
-        .select(F.explode("input_files").alias("input_file"))
-        .distinct()
-    )
+def read_ingested(
+    spark: SparkSession, cfg: RunConfig, led: dict, listed: list[str]
+) -> DataFrame:
+    """Rows of the ledger's files that are still in the input listing."""
+    known = set(listed)
+    files = [f for f in led["files"] if f in known]
+    return read_input(spark, cfg, files, led["schema"])
 
 
 def write_lineage(
@@ -243,50 +252,56 @@ def _run_pipeline(
         return stop_after == step
 
     t0 = time.perf_counter()
-    seq = _load_input(spark, cfg)
-    if cfg.source_limit is not None:
-        # the reference's convert(output_limit=N): cap the number of
-        # series processed — deterministic first-N sources by name
-        keep = [
-            r["source"]
-            for r in seq.select("source")
-            .distinct()
-            .orderBy("source")
-            .limit(cfg.source_limit)
-            .collect()
-        ]
-        seq = seq.filter(F.col("source").isin(keep))
-    # ---- append-cycle pins (file-incremental tier maintenance) --------
-    # In append mode, tier/meta updates NEVER rescan the full input:
-    # they merge a delta aggregate of only the PENDING files into the
-    # pinned base snapshot. Pins ({table base snapshot ids, pending
+    # ---- input files: listing, ledger, append-cycle pins ---------------
+    # The ledger says what is already ingested; past the schema
+    # inference of a run with no ledger (and cfg.source_limit), nothing
+    # here runs a Spark job. In append mode tier/meta updates NEVER rescan the full
+    # input: they merge a delta aggregate of only the PENDING files into
+    # the pinned base snapshot. Pins ({table base snapshot ids, pending
     # file list}) are established once per cycle and reused verbatim on
     # replay, so every step is a deterministic function of immutable
     # state — a crash at any point re-commits identical content. At
     # 10^12 rows the per-append cost is O(new data) + O(tier rows).
-    delta = None  # pending-file subset of seq (None = full recompute)
+    listed = list_input_files(cfg)
+    led = None if cfg.write_mode == "overwrite" else ingest_ledger(cat)
+    done = set(led["files"]) if led else set()
     if cfg.write_mode == "append":
         if ckpt.cycle is None:
             base_tables = ["meta_source"] + [
                 f"tier_{t.name}" for t in cfg.tiers
             ]
-            done_files: set[str] = set()
-            if cat.exists("series_enc"):
-                done_files = {
-                    r[0] for r in ingested_files(spark, cat).collect()
-                }
-            all_files = [
-                r[0] for r in seq.select("input_file").distinct().collect()
-            ]
             ckpt.cycle = {
                 "bases": {t: cat.current_snapshot_id(t) for t in base_tables},
-                "pending": sorted(set(all_files) - done_files),
+                "pending": sorted(set(listed) - done),
             }
             ckpt.save(checkpoint_path)
-        pend_df = spark.createDataFrame(
-            [(f,) for f in ckpt.cycle["pending"]], "input_file string"
-        )
-        delta = seq.join(F.broadcast(pend_df), "input_file", "left_semi")
+        scan = list(ckpt.cycle["pending"])
+    else:
+        scan = listed
+    schema = led["schema"] if led else input_schema(spark, cfg, scan)
+    # ledger ∪ scan: the whole input, read only where a step needs it
+    all_files = sorted((done & set(listed)) | set(scan))
+    keep = None
+    if cfg.source_limit is not None:
+        # the reference's convert(output_limit=N): cap the number of
+        # series processed — deterministic first-N sources by name
+        keep = [
+            r["source"]
+            for r in read_input(spark, cfg, all_files, schema)
+            .select("source")
+            .distinct()
+            .orderBy("source")
+            .limit(cfg.source_limit)
+            .collect()
+        ]
+
+    def read(files: list[str]) -> DataFrame:
+        df = read_input(spark, cfg, files, schema)
+        return df if keep is None else df.filter(F.col("source").isin(keep))
+
+    # the scanned rows: the full input, or the pinned pending files
+    src = read(scan)
+    delta = src if cfg.write_mode == "append" else None
 
     def _tier_base(tname: str, cols: list[str]) -> DataFrame | None:
         """Pinned-base read for the incremental merge (None = no base)."""
@@ -310,7 +325,6 @@ def _run_pipeline(
     # n_tok==size(tokens) contract stays deferred to the encode pass,
     # which materializes every token buffer anyway — tokens (~95% of the
     # bytes) never enters the validation/tier read.
-    src = seq if delta is None else delta
     check_schema(src)
     head = head_aggregate(src, cfg.tiers[0].width_s).persist()
     persisted.append(head)
@@ -332,8 +346,8 @@ def _run_pipeline(
 
     # ---- salted transpose + encode (file-incremental, resumable) ------
     # Defined (and, in overlap mode, STARTED) before validation and the
-    # tier chain: the encode step only reads the input + series_enc
-    # lineage — it shares nothing with the tier/meta tables, so a second
+    # tier chain: the encode step only reads the input files + the
+    # series_enc ledger — it shares nothing with the tier/meta tables, so a second
     # driver thread can run it as a concurrent Spark job; the validation
     # scans and the tier chain's many small commits (driver-latency-
     # bound, size-independent) hide behind the encode stage's executor
@@ -347,34 +361,30 @@ def _run_pipeline(
         # count would be a full extra pass over the corpus for a number
         # the power-of-two rounding only needs within 2×
         nsalt = ckpt.nsalt or cfg.nsalt or suggest_nsalt(
-            seq, sample_denom=100
+            read(all_files), sample_denom=100
         )
         ckpt.nsalt = nsalt
-        # append cycle: encode exactly the PINNED pending set (a file
-        # arriving mid-cycle must wait for the next cycle, or tiers and
-        # series_enc would disagree about what has been ingested) …
-        pending = seq if delta is None else delta
         resume = cfg.write_mode != "overwrite" and cat.exists("series_enc")
         if resume:
-            # … and the done set is derived from the LIVE committed
-            # table's input-file lineage, NOT the checkpoint: a crash
-            # between the table commit and the checkpoint save then
-            # re-appends nothing. New rows are picked up wherever they
-            # land — including inside an existing (source, salt) chunk
+            # the done set is the LIVE ledger, NOT the checkpoint: a
+            # crash between the table commit and the checkpoint save
+            # then re-appends nothing. An append cycle encodes exactly
+            # the PINNED pending files (a file arriving mid-cycle waits
+            # for the next cycle, or tiers and series_enc would disagree
+            # about what has been ingested). New rows land wherever they
+            # hash — including inside an existing (source, salt) chunk
             # (they become additional chunk rows; decode and downstream
             # reads treat a series as a bag of chunk rows already)
-            pending = pending.join(
-                F.broadcast(ingested_files(spark, cat)), "input_file",
-                "left_anti",
-            )
-        series = transpose_to_series(
-            pending, nsalt, cfg.num_series_partitions,
-            pack=True,
-        )
-        encoded = encode_series_table(series)
-        # append ONLY when resuming past a committed table (its chunks
-        # stay live); a fresh/overwrite run replaces the table —
-        # appending here would duplicate every chunk
+            live = ingest_ledger(cat)
+            todo = sorted(set(scan) - set(live["files"]))
+            rows = read(todo)
+            ledger = {
+                "files": sorted(set(live["files"]) | set(todo)),
+                "schema": live["schema"],
+            }
+        else:
+            todo, rows = scan, src
+            ledger = {"files": list(scan), "schema": schema}
         # unpartitioned write: rows arrive source-clustered from the
         # encoder, a hive layout would churn one writer per source with
         # multi-MB cells (observed executor OOM at 40M rows); per-source
@@ -387,13 +397,22 @@ def _run_pipeline(
             # after the input is proven valid (raises otherwise —
             # orphaned data files, no table change)
             gate=_validation_gate,
+            ledger=ledger,
         )
-        sid = (
-            cat.append("series_enc", encoded, **wkw)
-            if resume
-            else cat.overwrite("series_enc", encoded, **wkw)
-        )
-        snapshot_ids["series_enc"] = sid
+        if resume and not todo:
+            _validation_gate()  # nothing left to encode (a replay)
+        else:
+            encoded = encode_series_table(transpose_to_series(
+                rows, nsalt, cfg.num_series_partitions, pack=True,
+            ))
+            # append ONLY when resuming past a committed table (its
+            # chunks stay live); a fresh/overwrite run replaces the
+            # table — appending here would duplicate every chunk
+            snapshot_ids["series_enc"] = (
+                cat.append("series_enc", encoded, **wkw)
+                if resume
+                else cat.overwrite("series_enc", encoded, **wkw)
+            )
         snapshot_ids["metrics"] = write_lineage(
             spark, cat, ckpt.attempt, "encode"
         )
@@ -528,7 +547,7 @@ def _run_pipeline(
                     # buckets. Backfill once from the FULL raw input —
                     # the exact from-scratch answer at any width — and
                     # let later cycles pin and merge it incrementally.
-                    df = rollup_tier0(seq, tier.width_s)
+                    df = rollup_tier0(read(all_files), tier.width_s)
                 else:
                     df = base.unionByName(df).groupBy(
                         "source", "bucket_s"
@@ -621,15 +640,12 @@ def _run_pipeline(
     if cfg.verify_fidelity:
 
         def _verify():
-            src = seq
-            if cfg.write_mode == "append":
-                # compare against INGESTED files only — input files that
-                # arrived mid-cycle are deferred work, not lost data
-                src = seq.join(
-                    F.broadcast(ingested_files(spark, cat)), "input_file",
-                    "left_semi",
-                )
-            bad = fidelity_bad_rows(spark, cat, src)
+            # compare against the ledger's files only — input files that
+            # arrived mid-cycle are deferred work, not lost data
+            ingested = read_ingested(spark, cfg, ingest_ledger(cat), listed)
+            if keep is not None:
+                ingested = ingested.filter(F.col("source").isin(keep))
+            bad = fidelity_bad_rows(spark, cat, ingested)
             report = spark.createDataFrame(
                 [(int(bad), int(ckpt.attempt))], "bad_rows long, attempt long"
             )

@@ -21,7 +21,12 @@ snapshot are invisible, exactly like Iceberg orphan files):
     {"current": 3,
      "snapshots": [{"id": 1, "parent": 0, "op": "append",
                     "files": [{"path": "s1/source=src0/part-....parquet",
-                               "partition": {"source": "src0"}}, ...]}]}
+                               "partition": {"source": "src0"}}, ...],
+                    "ledger": {"files": [...], "schema": "..."}}]}
+
+A snapshot may carry an ingest ``ledger`` (see :meth:`ledger`): the
+pipeline records in ``series_enc`` which input files its data covers,
+so the ledger commits in the same atomic log replace as the data.
 
 Manifest entries carry the partition tuple per file (parsed from the
 hive path), so `read(..., partition_filter=...)` prunes at planning
@@ -141,6 +146,7 @@ class IcebergLite:
         schema: str | None = None,
         deletes: list[dict] | None = None,
         commit_key: str | None = None,
+        ledger: dict | None = None,
     ) -> int:
         """Atomically append a snapshot referencing ``files`` (full live set).
 
@@ -151,10 +157,17 @@ class IcebergLite:
         ``deletes``: the snapshot's live EQUALITY-DELETE files (see
         :meth:`delete_rows_mor`) — each ``{"paths": [rel...],
         "key_cols": [...], "seq": commit-id}``, applied at read time to
-        data files with a strictly older sequence number."""
+        data files with a strictly older sequence number.
+
+        ``ledger``: the snapshot's ingest ledger. When None, every
+        commit but a full ``overwrite`` carries the parent's ledger
+        unchanged (appends, row replacements, compactions and deletes
+        keep describing the same ingested input)."""
         import time
 
         log = self._read_log(name)
+        if ledger is None and op != "overwrite":
+            ledger = self._snapshot(name, log["current"], log).get("ledger")
         sid = self._sid_after(log)
         snap = {
             "id": sid,
@@ -169,6 +182,8 @@ class IcebergLite:
             snap["deletes"] = deletes
         if commit_key is not None:
             snap["commit_key"] = commit_key
+        if ledger is not None:
+            snap["ledger"] = ledger
         log["snapshots"].append(snap)
         log["current"] = sid
         self._write_log(name, log)
@@ -180,8 +195,10 @@ class IcebergLite:
     def current_snapshot_id(self, name: str) -> int:
         return self._read_log(name)["current"]
 
-    def _snapshot(self, name: str, snapshot_id: int | None) -> dict:
-        log = self._read_log(name)
+    def _snapshot(
+        self, name: str, snapshot_id: int | None, log: dict | None = None
+    ) -> dict:
+        log = log or self._read_log(name)
         sid = log["current"] if snapshot_id is None else snapshot_id
         if sid == 0:
             return {"id": 0, "files": []}
@@ -189,6 +206,20 @@ class IcebergLite:
             if s["id"] == sid:
                 return s
         raise SnapshotNotFound(f"{name}@{sid}")
+
+    def ledger(self, name: str) -> dict | None:
+        """The current snapshot's ingest ledger (``{"files": [...],
+        "schema": ...}``), or None when the snapshot carries none."""
+        return self._snapshot(name, None).get("ledger")
+
+    def live_paths(self, name: str, snapshot_id: int | None = None) -> list[str]:
+        """Absolute paths of the snapshot's live data files, from the
+        manifest alone."""
+        data = os.path.abspath(self._data(name))
+        return [
+            os.path.join(data, f["path"])
+            for f in self._snapshot(name, snapshot_id)["files"]
+        ]
 
     # -- writes ----------------------------------------------------------
     def _write_data(
@@ -251,6 +282,7 @@ class IcebergLite:
         stats_cols: tuple[str, ...] = (),
         options: dict | None = None,
         gate=None,
+        ledger: dict | None = None,
     ) -> int:
         new = self._write_data(name, df, partition_by, stats_cols, options)
         if gate is not None:
@@ -267,7 +299,7 @@ class IcebergLite:
         # files (seq < delete seq), never to this append's new files
         return self._commit(
             name, live, "append", df.schema.json(),
-            deletes=parent.get("deletes"),
+            deletes=parent.get("deletes"), ledger=ledger,
         )
 
     def _has_rows(self, name: str, files: list[dict]) -> bool:
@@ -327,11 +359,14 @@ class IcebergLite:
         stats_cols: tuple[str, ...] = (),
         options: dict | None = None,
         gate=None,
+        ledger: dict | None = None,
     ) -> int:
         new = self._write_data(name, df, partition_by, stats_cols, options)
         if gate is not None:
             gate()  # see append(): pre-commit barrier, orphan-safe
-        return self._commit(name, new, "overwrite", df.schema.json())
+        return self._commit(
+            name, new, "overwrite", df.schema.json(), ledger=ledger
+        )
 
     def overwrite_partitions(
         self, name: str, df: DataFrame, keys: tuple[str, ...]
@@ -366,6 +401,8 @@ class IcebergLite:
         stats_filter: Callable[[dict[str, list]], bool] | None = None,
         allow_empty: bool = False,
         apply_deletes: bool = True,
+        path_filter: Callable[[str], bool] | None = None,
+        file_col: str | None = None,
     ) -> DataFrame:
         """Read a snapshot (time travel via ``snapshot_id``).
 
@@ -386,9 +423,21 @@ class IcebergLite:
         (see :meth:`delete_rows_mor`) — a broadcast anti-join per
         delete file against the data files it covers. Pass ``False``
         to see the raw data files (merge-on-read debugging).
+
+        ``path_filter`` keeps only the files whose absolute path (as
+        :meth:`live_paths` reports it) it accepts — the pipeline reads
+        an input-file subset this way, with the snapshot's deletes
+        still applied. ``file_col`` names a column that receives each
+        row's ``input_file_name()``, taken at the scan (it cannot be
+        taken above a delete's anti-join).
         """
         snap = self._snapshot(name, snapshot_id)
         files = snap["files"]
+        if path_filter is not None:
+            data = os.path.abspath(self._data(name))
+            files = [
+                f for f in files if path_filter(os.path.join(data, f["path"]))
+            ]
         if partition_filter is not None:
             files = [f for f in files if partition_filter(f["partition"])]
         if stats_filter is not None:
@@ -411,7 +460,7 @@ class IcebergLite:
                 "filter pruned everything)"
             )
         deletes = snap.get("deletes") if apply_deletes else None
-        return self._df_for_files(spark, name, files, deletes)
+        return self._df_for_files(spark, name, files, deletes, file_col)
 
     def _df_for_files(
         self,
@@ -419,6 +468,7 @@ class IcebergLite:
         name: str,
         files: list[dict],
         deletes: list[dict] | None = None,
+        file_col: str | None = None,
     ) -> DataFrame:
         """DataFrame over an explicit manifest-file subset. Files are
         grouped per commit dir and each group read with its own
@@ -468,6 +518,8 @@ class IcebergLite:
 
                 reader = reader.schema(StructType.fromJson(json.loads(sj)))
             df = reader.parquet(*paths)
+            if file_col is not None:
+                df = df.withColumn(file_col, F.input_file_name())
             if keyed:
                 df = self._anti_join_deletes(df, keyed, self._file_seq(sdir))
             parts.append(df)
@@ -850,6 +902,7 @@ class IcebergLite:
         partition_by: tuple[str, ...] = (),
         stats_cols: tuple[str, ...] = (),
         options: dict | None = None,
+        ledger: dict | None = None,
     ) -> tuple[int, int, int]:
         """Copy-on-write row-level delete/upsert — Iceberg's
         ``MERGE``/``DELETE`` with copy-on-write semantics: rows whose
@@ -863,6 +916,9 @@ class IcebergLite:
         cost is O(affected files), not O(table). Prior snapshots still
         reference the old files (time travel across the delete works
         until :meth:`expire_snapshots`).
+
+        ``ledger`` replaces the ingest ledger; by default the parent's
+        is carried.
 
         Returns (snapshot_id, files_rewritten, files_untouched).
         """
@@ -899,6 +955,7 @@ class IcebergLite:
         sid = self._commit(
             name, untouched + new, "replace", df.schema.json(),
             deletes=self._applicable_deletes(snap.get("deletes"), untouched),
+            ledger=ledger,
         )
         return sid, len(cand), len(untouched)
 

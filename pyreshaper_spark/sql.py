@@ -58,15 +58,16 @@ def read_rollup(
     raw.
 
     ``realtime=True`` is the TimescaleDB real-time-continuous-aggregate
-    analog: rows of the raw input not yet ingested (files absent from
-    the encode lineage's ``input_files`` — the same pending-file set an
-    append cycle would process) are aggregated on the fly and merged
+    analog: rows of the raw input not yet ingested (listed input files
+    minus the ``series_enc`` ingest ledger — the same pending-file set
+    an append cycle would process) are aggregated on the fly and merged
     into the materialized read, so queries see data that arrived after
-    the last pipeline run without rescanning history. Cost is
-    O(buckets) + O(new rows). Caveats: the materialized leg reflects
-    any retention pruning already applied (pass ``t_min`` inside the
-    retention window), and the pending-file list is broadcast —
-    O(input files), the same bound the append cycle accepts.
+    the last pipeline run without rescanning history. The pending set
+    is driver-side set arithmetic (no Spark job) and the tail scans only
+    those files; with none pending the result is the materialized read
+    alone. Cost is O(buckets) + O(new rows). Caveat: the materialized
+    leg reflects any retention pruning already applied (pass ``t_min``
+    inside the retention window).
 
     ``t_min``/``t_max`` must be ``width_s``-aligned so tier-bucket
     pruning and output buckets agree.
@@ -92,13 +93,21 @@ def read_rollup(
     if not realtime:
         return mat
 
-    from pyreshaper_spark.plans.pipeline import _load_input, ingested_files
+    from pyreshaper_spark.plans.pipeline import ingest_ledger
+    from pyreshaper_spark.sources.readers import (
+        input_schema,
+        list_input_files,
+        read_input,
+    )
 
-    seq = _load_input(spark, cfg)
-    if cat.exists("series_enc"):
-        seq = seq.join(
-            F.broadcast(ingested_files(spark, cat)), "input_file", "left_anti"
-        )
+    led = ingest_ledger(cat)
+    pending = sorted(
+        set(list_input_files(cfg)) - set(led["files"] if led else ())
+    )
+    if not pending:
+        return mat
+    schema = led["schema"] if led else input_schema(spark, cfg, pending)
+    seq = read_input(spark, cfg, pending, schema)
     if sources is not None:
         seq = seq.filter(F.col("source").isin(list(sources)))
     if t_min is not None:

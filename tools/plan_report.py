@@ -842,23 +842,40 @@ def main() -> None:
     ))
 
     # 19. tier-routed + real-time rollup read (sql.read_rollup)
+    import shutil
+
     from pyreshaper_spark.config import RunConfig, TierSpec
-    from pyreshaper_spark.plans.pipeline import run_pipeline
+    from pyreshaper_spark.plans.pipeline import ingest_ledger, run_pipeline
+    from pyreshaper_spark.sources.catalog import get_catalog
+    from pyreshaper_spark.sources.readers import list_input_files
     from pyreshaper_spark.sql import read_rollup
 
+    # ALWAYS rebuild (as §20): a warehouse left by older code would make
+    # these checkmarks meaningless. Build, then land ONE pending file.
     rt_root = "/tmp/plan_report_rt"
+    shutil.rmtree(rt_root, ignore_errors=True)
+    rt_in = os.path.join(rt_root, "in")
+    seq.write.parquet(rt_in)
     rt_cfg = RunConfig(
-        input_path=seq_path, output_path=os.path.join(rt_root, "out"),
+        input_path=rt_in, output_path=os.path.join(rt_root, "out"),
         tiers=(TierSpec("1m", 60), TierSpec("10m", 600)),
         nsalt=1, num_series_partitions=4, write_mode="append",
     )
-    ck = os.path.join(rt_root, "ck.json")
-    if not os.path.exists(ck):
-        run_pipeline(spark, rt_cfg, ck)
+    run_pipeline(spark, rt_cfg, os.path.join(rt_root, "ck.json"))
+    seq.limit(50).withColumn(
+        "doc_id", F.concat("doc_id", F.lit("-late"))
+    ).coalesce(1).write.mode("append").parquet(rt_in)
+    led = ingest_ledger(get_catalog(rt_cfg.output_path))
+    pending = sorted(set(list_input_files(rt_cfg)) - set(led["files"]))
     p_route = plan_of(read_rollup(spark, rt_cfg, 1800))
     p_rt = plan_of(read_rollup(spark, rt_cfg, 1800, realtime=True))
     tail_schemas = [
         seg.split("\n")[0] for seg in p_rt.split("ReadSchema")[1:]
+    ]
+    # the input-side scans: Location lines naming the input directory
+    in_locs = [
+        ln for ln in p_rt.splitlines()
+        if ln.strip().startswith("Location:") and rt_in in ln
     ]
     sections.append((
         "Tier-routed + real-time rollup read",
@@ -866,12 +883,18 @@ def main() -> None:
         [
             ("routed read scans the 10m tier table (coarsest divisor "
              "of 30m), not raw input",
-             "tier_10m" in p_route and seq_path not in p_route),
+             "tier_10m" in p_route and rt_in not in p_route),
             ("routed read is one partial+final re-aggregation",
              p_route.count("HashAggregate") >= 2),
-            ("realtime tail: pending-file anti-join is a broadcast "
-             "(never shuffles the raw scan)",
-             "BroadcastHashJoin" in p_rt and "LeftAnti" in p_rt),
+            ("realtime tail: the scan lists exactly the one pending "
+             "file (ledger set arithmetic, no join on input_file)",
+             len(pending) == 1 and bool(in_locs)
+             and all(os.path.basename(pending[0]) in ln
+                     and "entries]" not in ln  # "[f, ... N entries]"
+                     for ln in in_locs)
+             and "LeftAnti" not in p_rt),
+            ("no scan of series_enc anywhere in the realtime plan",
+             "series_enc" not in p_rt),
             ("tail scan pruned — tokens/doc_id never read on the "
              "realtime path",
              bool(tail_schemas)
@@ -884,8 +907,6 @@ def main() -> None:
 
     # 20. merge-on-read equality-delete read
     from pyreshaper_spark.sources.iceberglite import IcebergLite
-
-    import shutil
 
     # ALWAYS rebuild: a stale /tmp table written by an older code
     # version would make these checkmarks meaningless
