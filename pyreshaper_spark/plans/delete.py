@@ -23,18 +23,21 @@ the corpus:
 * **tiers** — a victim at event time t invalidates exactly one bucket
   per tier width. Affected buckets at EVERY tier are re-aggregated
   from the remaining raw rows of those buckets only (never from a
-  finer tier, whose live rows may be retention-pruned). Untouched
-  buckets of affected sources ride along unchanged (modulo refreshed
-  metadata replication columns). The commit is a
-  :meth:`IcebergLite.replace_rows` keyed on the affected sources:
-  untouched sources' hive partitions are carried by reference, so
-  their files are not rewritten.
+  finer tier, whose live rows may be retention-pruned). The commit is
+  a :meth:`IcebergLite.replace_rows` keyed on the victim (source,
+  bucket_s) pairs: tier files are sorted on those columns with
+  manifest stats on both, so only files whose ranges can hold a victim
+  bucket are rewritten and every other file is carried by reference.
+  With per-source metadata replicated onto tier rows
+  (``meta_once=False``) every row of an affected source changes, so
+  the key is the source instead. Gap-filled tables are rebuilt per
+  affected source and committed keyed on the source.
 * **meta_source / metrics** — O(sources) / O(chunks) rebuilds.
 
 At a 10^12-row deployment the raw-side reads here prune to the
-affected sources' partitions and affected buckets' row groups (the
-victim bucket list is a broadcast semi-join key set); nothing rescans
-the historical corpus.
+affected buckets' row groups (the victim bucket list is a broadcast
+semi-join key set) and the tier reads to the files whose stats cover
+an affected source; nothing rescans the historical corpus.
 
 Retention interplay: repair never *adds* history — repaired buckets
 are re-filtered against the live table's retention high-water mark, so
@@ -59,13 +62,14 @@ from pyreshaper_spark.operators.transpose import (
 )
 from pyreshaper_spark.plans.checkpoint import Checkpoint
 from pyreshaper_spark.plans.pipeline import (
+    TIER_KEYS,
     fidelity_bad_rows,
     ingest_ledger,
     read_ingested,
     write_lineage,
 )
 from pyreshaper_spark.sources.catalog import get_catalog
-from pyreshaper_spark.sources.iceberglite import IcebergLite
+from pyreshaper_spark.sources.iceberglite import IcebergLite, stats_overlap
 from pyreshaper_spark.sources.readers import (
     list_input_files,
     read_input,
@@ -284,11 +288,15 @@ def _repair_run(
     ``current``. ``ledger`` replaces the ``series_enc`` ingest ledger
     (None carries it unchanged)."""
     remaining = current
-    affected_sources = sorted(
-        r[0] for r in victims.select("source").distinct().collect()
-    )
-    src_set = set(affected_sources)
+    # victim positions are a compliance batch: collected once, they
+    # give the affected sources and every tier's victim buckets
+    positions = victims.select("source", "event_s").distinct().collect()
+    affected_sources = sorted({r["source"] for r in positions})
     report["affected_sources"] = affected_sources
+
+    def of_sources(st: dict) -> bool:
+        """Stats filter: the file may hold an affected source."""
+        return any(stats_overlap(st, "source", s, s) for s in affected_sources)
 
     # ---- series_enc: re-encode exactly the affected chunks ------------
     chunk_keys = victims.select("source", "salt").distinct()
@@ -302,19 +310,13 @@ def _repair_run(
             rem_chunks, nsalt, cfg.num_series_partitions, pack=True
         )
     )
-    smin, smax = affected_sources[0], affected_sources[-1]
     sid, rewritten, kept = cat.replace_rows(
         spark,
         "series_enc",
         keys=F.broadcast(chunk_keys),
         key_cols=("source", "salt"),
         replacement=encoded,
-        # manifest column stats: skip files whose source range cannot
-        # intersect the affected source set
-        stats_filter=lambda st: (
-            "source" not in st
-            or (st["source"][0] <= smax and st["source"][1] >= smin)
-        ),
+        stats_filter=of_sources,
         stats_cols=("source",),
         options={"parquet.block.size": 32 * 1024 * 1024},
         ledger=ledger,
@@ -347,88 +349,91 @@ def _repair_run(
     src_keys = F.broadcast(
         spark.createDataFrame([(s,) for s in affected_sources], "source string")
     )
-
-    def _replace_sources(tname: str, out: DataFrame) -> int:
-        """Atomically swap the affected sources' rows for ``out``
-        (their full recomputed row set). Untouched sources' hive
-        partitions are carried by reference; a source whose rows all
-        vanished simply has no replacement rows — its partition is
-        dropped in the same commit (the ``overwrite_partitions`` path
-        would silently keep it)."""
-        sid, _, _ = cat.replace_rows(
-            spark,
-            tname,
-            keys=src_keys,
-            key_cols=("source",),
-            replacement=out,
-            partition_filter=lambda p: p.get("source") in src_set,
-            partition_by=("source",),
-            # keep per-file bucket_s stats on the rewritten files so
-            # read_tier's time-range pruning survives a repair commit
-            stats_cols=("bucket_s",),
+    layout = dict(sort_by=TIER_KEYS, stats_cols=TIER_KEYS)
+    mc = None
+    if not cfg.meta_once:
+        mc = cat.read(spark, "meta_source", allow_empty=True).select(
+            "source",
+            F.col("n_docs").alias("src_n_docs"),
+            F.col("total_tok").alias("src_total_tok"),
         )
-        return sid
 
     # Fix EVERY tier's affected buckets directly from the remaining raw
     # rows of those buckets (rollup_tier0 at that tier's width — exact
     # at any width by aggregate associativity). Deliberately NOT a
     # cascade from the repaired finer tier: if a finer tier has a
-    # retention policy, its live rows (and hence the repaired union)
-    # are pruned, and a coarse victim bucket whose fine buckets aged out
-    # would repair from partial data — the same divergence class the
-    # pipeline's append path guards against. Cost stays bounded by the
-    # victim buckets (partition filter + broadcast bucket semi-join
-    # prune the raw scan).
+    # retention policy, its live rows are pruned, and a coarse victim
+    # bucket whose fine buckets aged out would repair from partial data
+    # — the same divergence class the pipeline's append path guards
+    # against. Cost stays bounded by the victim buckets (the broadcast
+    # bucket semi-join prunes the raw scan).
     rem_src = remaining.filter(F.col("source").isin(affected_sources))
     for tier in cfg.tiers:
         tname = f"tier_{tier.name}"
         w = tier.width_s
-        bad = victims.select("source", _bucket(w)).distinct()
-        old = cat.read(
-            spark,
-            tname,
-            partition_filter=lambda p: p.get("source") in src_set,
-            # a retention-pruned tier may hold ZERO live rows for an
-            # affected source — that's an empty repair base, not an
-            # error
-            allow_empty=True,
-        )
-        meta_cols = [c for c in old.columns if c.startswith("src_")]
+        bad_keys = sorted({(s, e - e % w) for s, e in positions})
+        bad = F.broadcast(spark.createDataFrame(
+            bad_keys, "source string, bucket_s long"
+        ))
         fixed = victim_bucket_fix(rem_src, bad, w)
-        untouched_buckets = old.drop(*meta_cols).join(
-            F.broadcast(bad), ["source", "bucket_s"], "left_anti"
-        )
         # the retention filter below applies only to what gets
-        # WRITTEN; the filled tables build from the pre-filter union
-        repaired = untouched_buckets.unionByName(fixed)
-        written = repaired
+        # WRITTEN; the filled tables build from the pre-filter rows
+        written = fixed
         if tier.retention_buckets is not None:
             # never resurrect aged-out buckets: re-filter against the
-            # live table's high-water mark
+            # live table's high-water mark (an empty live table has none,
+            # and nothing can be resurrected)
             hw = cat.read(
                 spark, tname, allow_empty=True
             ).agg(F.max("bucket_s")).collect()[0][0]
             if hw is not None:
-                # empty live table ⇒ no high-water mark, nothing can be
-                # resurrected — keep all repaired rows
-                written = repaired.filter(
+                written = fixed.filter(
                     F.col("bucket_s") > hw - tier.retention_buckets * w
                 )
-        if not cfg.meta_once and meta_cols:
-            mc = cat.read(spark, "meta_source", allow_empty=True).select(
-                "source",
-                F.col("n_docs").alias("src_n_docs"),
-                F.col("total_tok").alias("src_total_tok"),
+        # the affected sources' live rows outside the victim buckets: the
+        # filled tables rebuild from them, and so do tier rows that
+        # carry the sources' replicated metadata
+        rest = (
+            cat.read(
+                spark, tname, stats_filter=of_sources,
+                # a retention-pruned tier may hold ZERO live rows for an
+                # affected source — an empty repair base, not an error
+                allow_empty=True,
             )
-            written = written.join(F.broadcast(mc), "source")
-        report["snapshot_ids"][tname] = _replace_sources(tname, written)
+            .filter(F.col("source").isin(affected_sources))
+            .select(*fixed.columns)
+            .join(bad, list(TIER_KEYS), "left_anti")
+        )
+        if mc is None:  # only the victim buckets' rows change
+            sid, _, _ = cat.replace_rows(
+                spark, tname, keys=bad, key_cols=TIER_KEYS,
+                replacement=written,
+                stats_filter=lambda st, keys=bad_keys: any(
+                    stats_overlap(st, "source", s, s)
+                    and stats_overlap(st, "bucket_s", b, b)
+                    for s, b in keys
+                ),
+                **layout,
+            )
+        else:  # the new metadata changes every row of those sources
+            sid, _, _ = cat.replace_rows(
+                spark, tname, keys=src_keys, key_cols=("source",),
+                replacement=rest.unionByName(written).join(
+                    F.broadcast(mc), "source"
+                ),
+                stats_filter=of_sources, **layout,
+            )
+        report["snapshot_ids"][tname] = sid
 
         fname = f"{tname}_filled"
         if cat.exists(fname):
             # pipeline ordering: filled tables are built from the
-            # pre-retention tier (prune runs after the cascade)
-            report["snapshot_ids"][fname] = _replace_sources(
-                fname, gapfill_locf(repaired, w)
+            # pre-retention tier, every row of a source, so an affected
+            # source is rebuilt whole
+            report["snapshot_ids"][fname], _, _ = cat.replace_rows(
+                spark, fname, keys=src_keys, key_cols=("source",),
+                replacement=gapfill_locf(rest.unionByName(fixed), w),
+                stats_filter=of_sources, **layout,
             )
 
     # ---- optional fidelity gate -----------------------------------------

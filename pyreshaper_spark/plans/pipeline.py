@@ -10,17 +10,27 @@ reference's skip-existing write-mode generalized to snapshot semantics.
 
 Output tables under ``cfg.output_path`` (IcebergLite root):
 
-    tier_<name>          sparse continuous aggregate, partitioned by source
-    tier_<name>_filled   gap-filled + LOCF version (non-raw tiers)
+    tier_<name>          sparse continuous aggregate, sorted on
+                         (source, bucket_s)
+    tier_<name>_filled   gap-filled + LOCF version (non-raw tiers),
+                         sorted the same way
     meta_source          per-source metadata (the once-file analog)
     series_enc           Gorilla-encoded series chunks, one row per
-                         (source, salt), partitioned by source
+                         (source, salt), clustered by source
     metrics              per-chunk lineage rows (partition id, input
                          files, row counts, bytes, wall time)
     fidelity             decode-and-compare report (cfg.verify_fidelity)
 
 The input is a parquet directory or an IcebergLite table
 (``cfg.input_format``).
+
+No table is hive-partitioned. Every tier, filled-tier and retention
+commit is one unpartitioned write sorted on :data:`TIER_KEYS`, with
+manifest min/max stats on both columns (:func:`write_tier`); AQE's
+partition coalescing sets the file count, so a small table is one file
+and a large one is range-clustered files of about the advisory size.
+Reads prune files on those stats (``sql.read_tier``), and parquet
+row-group stats prune inside each file.
 
 Scale notes: the tier cascade reads tier *k* back from its committed
 table (not the in-memory lineage), so a resumed run never recomputes
@@ -93,6 +103,8 @@ from pyreshaper_spark.sources.readers import (
     read_input,
 )
 
+TIER_KEYS = ("source", "bucket_s")
+
 LINEAGE_COLS = (
     "source",
     "salt",
@@ -111,6 +123,12 @@ class PipelineResult:
     steps_run: list[str]
     steps_skipped: list[str]
     step_wall_s: dict[str, float] = None  # per-step driver wall time
+
+
+def write_tier(cat: IcebergLite, name: str, df: DataFrame) -> int:
+    """Commit ``df`` as the whole of a tier-like table in the tier
+    layout: sorted on :data:`TIER_KEYS`, with stats on both columns."""
+    return cat.overwrite(name, df.orderBy(*TIER_KEYS), stats_cols=TIER_KEYS)
 
 
 def ingest_ledger(cat: IcebergLite) -> dict | None:
@@ -581,9 +599,7 @@ def _run_pipeline(
                     F.col("total_tok").alias("src_total_tok"),
                 )
                 df = df.join(F.broadcast(meta_cols), "source")
-            snapshot_ids[tname] = cat.overwrite(
-                tname, df, ("source",), stats_cols=("bucket_s",)
-            )
+            snapshot_ids[tname] = write_tier(cat, tname, df)
 
         if commit_step(tname, _tier):
             return PipelineResult(snapshot_ids, run, skipped, step_wall)
@@ -596,9 +612,7 @@ def _run_pipeline(
                 filled = gapfill_locf(
                     cat.read(spark, tname, allow_empty=True), tier.width_s
                 )
-                snapshot_ids[fname] = cat.overwrite(
-                    fname, filled, ("source",), stats_cols=("bucket_s",)
-                )
+                snapshot_ids[fname] = write_tier(cat, fname, filled)
 
             if commit_step(fname, _filled):
                 return PipelineResult(snapshot_ids, run, skipped, step_wall)
@@ -619,11 +633,7 @@ def _run_pipeline(
                 cat.read(spark, tname, allow_empty=True),
                 tier.width_s, tier.retention_buckets
             )
-            # stats_cols: a retention commit must not strip the per-file
-            # bucket_s stats that read_tier's time-range pruning needs
-            snapshot_ids[rname] = cat.overwrite(
-                tname, pruned, ("source",), stats_cols=("bucket_s",)
-            )
+            snapshot_ids[rname] = write_tier(cat, tname, pruned)
 
         if commit_step(rname, _retention):
             return PipelineResult(snapshot_ids, run, skipped, step_wall)
@@ -711,8 +721,11 @@ def maintain(
     file-incremental encode appends, never rewrites), so after many
     cycles its manifest holds many small files; tier tables are
     overwritten each cycle but their snapshot LOG grows without bound.
-    Compaction bin-packs multi-file tables (preserving manifest column
-    stats used for per-source file skipping); ``expire_keep`` trims
+    Compaction bin-packs multi-file tables, carrying forward the
+    manifest column stats reads prune on; tier tables are rewritten
+    sorted on :data:`TIER_KEYS`, so they stay range-clustered and a
+    table written hive-partitioned by an older version converges to the
+    current layout. ``expire_keep`` trims
     snapshot history and reclaims unreferenced data files. Expiry
     keeps the ``expire_keep`` newest snapshots and the current one;
     no other snapshot is pinned.
@@ -722,19 +735,14 @@ def maintain(
     "expired_files": n}}.
     """
     cat = get_catalog(cfg.output_path)
-    stats_for = {"series_enc": ("source",)}
     report: dict[str, dict] = {}
     for t in cat.list_tables():
         entry: dict = {"compacted_snapshot": None, "expired_files": 0}
-        # tier/filled/retention tables are hive-partitioned by source;
-        # series_enc and metrics are unpartitioned (stats-pruned)
-        partitioned = cat.is_partitioned(t)
         entry["compacted_snapshot"] = cat.compact(
             spark, t,
-            partition_by=("source",) if partitioned else (),
             target_file_bytes=target_file_bytes,
             min_files=min_files,
-            stats_cols=stats_for.get(t, ()),
+            sort_by=TIER_KEYS if t.startswith("tier_") else (),
         )
         if expire_keep is not None:
             entry["expired_files"] = cat.expire_snapshots(t, expire_keep)

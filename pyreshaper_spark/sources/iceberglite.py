@@ -28,11 +28,18 @@ A snapshot may carry an ingest ``ledger`` (see :meth:`ledger`): the
 pipeline records in ``series_enc`` which input files its data covers,
 so the ledger commits in the same atomic log replace as the data.
 
-Manifest entries carry the partition tuple per file (parsed from the
-hive path), so `read(..., partition_filter=...)` prunes at planning
-time from the manifest alone — the IcebergLite analog of Iceberg's
-manifest-based partition pruning; at 100 TB this is what turns a
-per-source query into a scan of one source's files.
+Manifest entries can carry per-file min/max ``stats`` of chosen
+columns (read from the parquet footer at commit time), so
+`read(..., stats_filter=...)` skips files at planning time from the
+manifest alone — the IcebergLite analog of Iceberg's manifest column
+stats. The engine's own tables are unpartitioned and clustered: tier
+tables are sorted on (source, bucket_s) with stats on both columns,
+``series_enc`` is clustered on source with stats on it, so a one-source,
+one-window query opens only the files whose ranges can hold it
+(:func:`stats_overlap`). Hive ``key=val`` partition directories are
+still supported for the streaming and curation tables: their entries
+carry the partition tuple (parsed from the path) and
+`read(..., partition_filter=...)` prunes on it.
 
 Reference analog: the snapshot log is the `.s2s` Specifier + the
 write-mode existence checks [U: specification.py :: Specifier.write;
@@ -82,6 +89,18 @@ def _footer_stats(
             if mins:
                 out[c] = [min(mins), max(maxs)]
     return out
+
+
+def stats_overlap(
+    stats: dict[str, list], col: str, lo: Any = None, hi: Any = None
+) -> bool:
+    """Whether a file with manifest ``stats`` can hold a ``col`` value in
+    ``[lo, hi]`` (a None bound is open). A file without stats on ``col``
+    cannot be proven to miss, so it is kept."""
+    if col not in stats:
+        return True
+    fmin, fmax = stats[col]
+    return (hi is None or fmin <= hi) and (lo is None or fmax >= lo)
 
 
 def _parse_partition(relpath: str) -> dict[str, str]:
@@ -804,14 +823,6 @@ class IcebergLite:
             if os.path.exists(self._log_path(d))
         )
 
-    def is_partitioned(self, name: str) -> bool:
-        """Whether the current snapshot's files carry hive partition
-        values — manifest-only, no parquet opened. Drives the
-        compaction grouping choice in ``pipeline.maintain``."""
-        return any(
-            f["partition"] for f in self._snapshot(name, None)["files"]
-        )
-
     def table_schema_json(self, name: str) -> str | None:
         """The current snapshot's recorded schema (Spark JSON), or
         None when the table predates schema recording. Public face of
@@ -903,6 +914,7 @@ class IcebergLite:
         stats_cols: tuple[str, ...] = (),
         options: dict | None = None,
         ledger: dict | None = None,
+        sort_by: tuple[str, ...] = (),
     ) -> tuple[int, int, int]:
         """Copy-on-write row-level delete/upsert — Iceberg's
         ``MERGE``/``DELETE`` with copy-on-write semantics: rows whose
@@ -918,7 +930,8 @@ class IcebergLite:
         until :meth:`expire_snapshots`).
 
         ``ledger`` replaces the ingest ledger; by default the parent's
-        is carried.
+        is carried. ``sort_by`` sorts the rewritten rows before the
+        write, so a table clustered on those columns stays clustered.
 
         Returns (snapshot_id, files_rewritten, files_untouched).
         """
@@ -951,6 +964,8 @@ class IcebergLite:
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
+        if sort_by:
+            df = df.orderBy(*sort_by)
         new = self._write_data(name, df, partition_by, stats_cols, options)
         sid = self._commit(
             name, untouched + new, "replace", df.schema.json(),
@@ -991,6 +1006,11 @@ class IcebergLite:
         global sort on every write. With ``min_files=1`` every
         partition is re-clustered even if already compacted.
 
+        The rewritten files record stats on ``stats_cols``, on the
+        ``sort_by`` columns, and on every column the files they replace
+        already had stats on — a compaction never strips the stats a
+        pruned read depends on.
+
         Logically lossless: rows are identical before and after (test
         asserts set equality), and prior snapshots still reference the
         old files — time travel across the compaction keeps working
@@ -1008,6 +1028,10 @@ class IcebergLite:
         if not todo:
             return None
         rewrite = [f for fs in todo for f in fs]
+        stats_cols = tuple(dict.fromkeys([
+            *stats_cols, *sort_by,
+            *(c for f in rewrite for c in f.get("stats", {})),
+        ]))
         data = self._data(name)
         total = sum(
             os.path.getsize(os.path.join(data, f["path"])) for f in rewrite

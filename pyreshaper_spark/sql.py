@@ -16,7 +16,7 @@ from pyspark.sql import SparkSession
 
 from pyreshaper_spark.config import RunConfig
 from pyreshaper_spark.sources.catalog import get_catalog
-from pyreshaper_spark.sources.iceberglite import IcebergLite
+from pyreshaper_spark.sources.iceberglite import IcebergLite, stats_overlap
 
 
 def register_views(
@@ -52,7 +52,8 @@ def read_rollup(
 
     Picks the coarsest committed tier whose width divides ``width_s``
     (:func:`operators.rollup.pick_tier`), reads it pruned
-    (:func:`read_tier` — manifest partition/stats pruning), and
+    (:func:`read_tier` — manifest min/max stats on source and
+    bucket_s), and
     re-aggregates to the requested width (exact by associativity). A
     45-minute chart over a 1m/5m/1h ladder reads the 5m tier, never
     raw.
@@ -128,37 +129,30 @@ def read_tier(
 ):
     """Predicate-pushed read of a tier table — the dashboard-query face.
 
-    ``sources`` prunes hive partitions from the MANIFEST (files of other
-    sources are never opened); ``[t_min, t_max)`` skips files via the
-    manifest's per-file bucket_s min/max stats (recorded at commit
-    time, ``stats_cols=("bucket_s",)``). Both prunings happen at
-    planning time against the snapshot log alone — at a 10^12-row
-    deployment this turns "one source, last 6 hours" into a scan of a
-    handful of files. The same predicates are re-applied row-level (a
-    file can straddle the range boundary).
+    Tier files are sorted on (source, bucket_s) and the manifest holds
+    each file's min/max of both columns (``pipeline.write_tier``). A
+    file is opened only if its ``source`` range can hold a requested
+    source and its ``bucket_s`` range can meet ``[t_min, t_max)`` —
+    pruning at planning time against the snapshot log alone, so at a
+    10^12-row deployment "one source, last 6 hours" scans the few files
+    whose ranges cover it, and parquet row-group stats prune inside
+    them. The same predicates are re-applied row-level (a file can
+    straddle the range boundary, and its range can span other sources).
     """
     from pyspark.sql import functions as F
 
-    pf = None
-    if sources is not None:
-        src_set = set(sources)
-        pf = lambda p: p.get("source") in src_set  # noqa: E731
+    srcs = None if sources is None else sorted(set(sources))
+    hi = None if t_max is None else t_max - 1
 
-    sf = None
-    if t_min is not None or t_max is not None:
-        def sf(st: dict) -> bool:
-            if "bucket_s" not in st:
-                return True  # no stats → cannot prove a miss
-            lo, hi = st["bucket_s"]
-            if t_max is not None and int(lo) >= t_max:
-                return False
-            if t_min is not None and int(hi) < t_min:
-                return False
-            return True
+    def sf(st: dict) -> bool:
+        return stats_overlap(st, "bucket_s", t_min, hi) and (
+            srcs is None
+            or any(stats_overlap(st, "source", s, s) for s in srcs)
+        )
 
     df = cat.read(
-        spark, table, snapshot_id=snapshot_id,
-        partition_filter=pf, stats_filter=sf, allow_empty=True,
+        spark, table, snapshot_id=snapshot_id, stats_filter=sf,
+        allow_empty=True,
     )
     if sources is not None:
         df = df.filter(F.col("source").isin(list(sources)))

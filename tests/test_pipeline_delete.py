@@ -1,8 +1,11 @@
 """Targeted document deletion (plans.delete.delete_docs): every table
 of a completed run must equal a from-scratch run on the filtered input,
-while untouched sources' files are carried by reference."""
+while tier files whose (source, bucket_s) stats miss every victim
+bucket are carried by reference."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,7 +14,7 @@ from pyreshaper_spark.config import RunConfig, TierSpec
 from pyreshaper_spark.fixtures import sequences_df
 from pyreshaper_spark.operators.encode import decode_series_table
 from pyreshaper_spark.plans.delete import delete_docs
-from pyreshaper_spark.plans.pipeline import run_pipeline
+from pyreshaper_spark.plans.pipeline import TIER_KEYS, run_pipeline
 from pyreshaper_spark.sources.iceberglite import IcebergLite
 
 SF = "/root/testdata/sf0.001"
@@ -44,7 +47,7 @@ def deleted_state(spark, tmp_path_factory):
     seq.write.parquet(full_p)
 
     # victims: a few docs from two sources + every doc of one source
-    # (exercises the partition-drop path)
+    # (exercises the emptied-source path)
     srcs = sorted(r[0] for r in seq.select("source").distinct().collect())
     gone_src = srcs[0]
     some = [
@@ -62,21 +65,35 @@ def deleted_state(spark, tmp_path_factory):
     filt_p = str(root / "seq_filtered")
     seq.filter(~F.col("doc_id").isin(victims)).write.parquet(filt_p)
 
-    cfg = _cfg(full_p, str(root / "out"), verify_fidelity=True)
+    # meta_once: tier rows carry no replicated per-source metadata, so
+    # the tier repair is keyed on the victim (source, bucket_s) pairs
+    cfg = _cfg(
+        full_p, str(root / "out"), verify_fidelity=True, meta_once=True
+    )
     run_pipeline(spark, cfg, str(root / "ck.json"))
     cat = IcebergLite(cfg.output_path)
+    # several range-clustered tier_1m files, so a repair can carry some
+    tier_bytes = sum(os.path.getsize(p) for p in cat.live_paths("tier_1m"))
+    cat.compact(
+        spark, "tier_1m", target_file_bytes=tier_bytes // 8, min_files=1,
+        sort_by=TIER_KEYS,
+    )
     files_before = {
-        t: {f["path"] for f in cat._snapshot(t, None)["files"]}
+        t: {f["path"]: f for f in cat._snapshot(t, None)["files"]}
         for t in ("tier_1m", "series_enc")
     }
     report = delete_docs(spark, cfg, str(root / "ck.json"), victims)
+    victim_buckets = {
+        (r["source"], r["event_s"] - r["event_s"] % 60)
+        for r in seq.filter(F.col("doc_id").isin(victims)).collect()
+    }
 
-    ref_cfg = _cfg(filt_p, str(root / "ref_out"))
+    ref_cfg = _cfg(filt_p, str(root / "ref_out"), meta_once=True)
     run_pipeline(spark, ref_cfg, str(root / "ref_ck.json"))
     return {
         "cfg": cfg, "ref_cfg": ref_cfg, "report": report,
         "victims": victims, "gone_src": gone_src,
-        "files_before": files_before,
+        "files_before": files_before, "victim_buckets_1m": victim_buckets,
     }
 
 
@@ -108,35 +125,41 @@ def test_victims_are_gone_everywhere(spark, deleted_state):
     dec = decode_series_table(cat.read(spark, "series_enc"))
     assert dec.filter(F.col("doc_id").isin(list(victims))).count() == 0
     gone = deleted_state["gone_src"]
-    for t in ("tier_1m", "tier_1h_filled", "meta_source"):
+    for t in TABLES:
         assert (
             cat.read(spark, t).filter(F.col("source") == gone).count() == 0
         ), t
-    # the emptied source's hive partition is dropped from the manifest
-    assert not any(
-        f["partition"].get("source") == gone
-        for f in cat._snapshot("tier_1m", None)["files"]
-    )
+    # no tier file entry is left whose stats cover only the emptied
+    # source, and every entry still carries stats on both columns
+    for t in TABLES[:-1]:
+        for f in cat._snapshot(t, None)["files"]:
+            assert set(TIER_KEYS) <= set(f["stats"]), (t, f["path"])
+            assert f["stats"]["source"] != [gone, gone], (t, f["path"])
 
 
 def test_untouched_files_carried_by_reference(spark, deleted_state):
-    """Copy-on-write: files of unaffected sources survive as the SAME
-    manifest entries — no rewrite."""
+    """Copy-on-write: tier files whose (source, bucket_s) stats miss
+    every victim bucket survive as the SAME manifest entries; every
+    file that can hold a victim bucket is rewritten."""
     cat = IcebergLite(deleted_state["cfg"].output_path)
-    report = deleted_state["report"]
-    affected = set(report["affected_sources"])
     before = deleted_state["files_before"]["tier_1m"]
-    after = {f["path"] for f in cat._snapshot("tier_1m", None)["files"]}
-    untouched_before = {
-        p for p in before
-        if not any(f"source={s}/" in p for s in affected)
+    after = {
+        f["path"]: f for f in cat._snapshot("tier_1m", None)["files"]
     }
-    assert untouched_before and untouched_before <= after
-    assert report["series_files_untouched"] >= 0
-    # affected-source tier files were replaced
-    assert not any(
-        f"source={next(iter(affected))}/" in p for p in after & before
-    ) or deleted_state["gone_src"] not in affected
+
+    def can_hold_victim(st):
+        (slo, shi), (blo, bhi) = st["source"], st["bucket_s"]
+        return any(
+            slo <= s <= shi and blo <= b <= bhi
+            for s, b in deleted_state["victim_buckets_1m"]
+        )
+
+    carried = {p for p, f in before.items() if not can_hold_victim(f["stats"])}
+    rewritten = set(before) - carried
+    assert carried and rewritten
+    assert all(after.get(p) == before[p] for p in carried)
+    assert not rewritten & set(after)
+    assert deleted_state["report"]["series_files_untouched"] >= 0
 
 
 def test_metrics_reflect_live_chunks(spark, deleted_state):

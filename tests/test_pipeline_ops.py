@@ -340,9 +340,11 @@ def test_resize_media_nearest_neighbor(spark):
 
 
 def test_read_tier_prunes_files_from_manifest(spark, tmp_path):
-    """read_tier: source predicate prunes hive partitions and the time
-    range skips files via manifest bucket_s stats — asserted by
-    counting the files the filters keep, not just the row results."""
+    """read_tier: on a multi-file table sorted on (source, bucket_s),
+    the source predicate and the time range skip files via manifest
+    source/bucket_s stats — asserted by counting the files the read
+    opens, not just the row results."""
+    from pyreshaper_spark.plans.pipeline import TIER_KEYS
     from pyreshaper_spark.sources.iceberglite import IcebergLite
     from pyreshaper_spark.sql import read_tier
 
@@ -354,10 +356,8 @@ def test_read_tier_prunes_files_from_manifest(spark, tmp_path):
     ]
     df = spark.createDataFrame(
         rows, "source string, bucket_s long, cnt long"
-    ).repartitionByRange(6, "source", "bucket_s").sortWithinPartitions(
-        "source", "bucket_s"
-    )
-    cat.overwrite("tier_x", df, ("source",), stats_cols=("bucket_s",))
+    ).repartitionByRange(6, *TIER_KEYS).sortWithinPartitions(*TIER_KEYS)
+    cat.overwrite("tier_x", df, stats_cols=TIER_KEYS)
 
     out = read_tier(
         spark, cat, "tier_x", sources=["b"], t_min=600 * 10, t_max=600 * 20
@@ -365,18 +365,20 @@ def test_read_tier_prunes_files_from_manifest(spark, tmp_path):
     got = sorted((r["source"], r["bucket_s"]) for r in out.collect())
     assert got == [("b", 600 * b) for b in range(10, 20)]
 
-    # manifest-level pruning actually happened: the surviving file set
-    # is a strict subset of the snapshot's files
+    # manifest-level pruning actually happened: the read opens exactly
+    # the files whose stats can hold source b in [6000, 12000), a
+    # strict subset of the snapshot's files
     snap = cat._snapshot("tier_x", None)
-    total = len(snap["files"])
-    kept = [
-        f for f in snap["files"]
-        if f["partition"].get("source") == "b"
-        and (not f.get("stats") or "bucket_s" not in f["stats"]
-             or (int(f["stats"]["bucket_s"][0]) < 600 * 20
-                 and int(f["stats"]["bucket_s"][1]) >= 600 * 10))
-    ]
-    assert 0 < len(kept) < total
+    assert len(snap["files"]) == 6
+    assert all(set(TIER_KEYS) <= set(f["stats"]) for f in snap["files"])
+    want = {
+        p for p, f in zip(cat.live_paths("tier_x"), snap["files"])
+        if f["stats"]["source"][0] <= "b" <= f["stats"]["source"][1]
+        and f["stats"]["bucket_s"][0] < 600 * 20
+        and f["stats"]["bucket_s"][1] >= 600 * 10
+    }
+    opened = {p.removeprefix("file://") for p in out.inputFiles()}
+    assert opened == want and 0 < len(want) < len(snap["files"])
 
     # empty prune is a typed empty result, not an exception
     assert read_tier(spark, cat, "tier_x", sources=["zzz"]).count() == 0

@@ -10,7 +10,9 @@ the plan properties that matter at 100 TB:
 * gap-fill join and metadata joins broadcast the small side;
 * the encode path has exactly ONE exchange (the range repartition) —
   the mapInArrow encoder adds no shuffle;
-* per-source reads of tier tables partition-prune (manifest filter).
+* per-source, per-window reads of tier tables prune files on the
+  manifest's source/bucket_s stats and push both predicates into the
+  parquet scan.
 
 Run: python tools/plan_report.py   (writes PLANS.md at the repo root)
 """
@@ -868,6 +870,25 @@ def main() -> None:
     led = ingest_ledger(get_catalog(rt_cfg.output_path))
     pending = sorted(set(list_input_files(rt_cfg)) - set(led["files"]))
     p_route = plan_of(read_rollup(spark, rt_cfg, 1800))
+    # one source, one day: pruned on the tier table's manifest stats
+    rt_src = seq.agg(F.min("source")).first()[0]
+    rt_t0 = seq.agg(F.min("event_s")).first()[0] // 1800 * 1800
+    p_one = plan_of(read_rollup(
+        spark, rt_cfg, 1800, sources=[rt_src], t_min=rt_t0,
+        t_max=rt_t0 + 86400,
+    ))
+    tier_scan = next(
+        seg for seg in p_one.split("\n\n(")
+        if "Scan parquet" in seg.split("\n", 1)[0]
+    )
+    tier_loc = [
+        ln for ln in tier_scan.splitlines()
+        if ln.strip().startswith("Location:")
+    ]
+    pushed = [
+        ln for ln in tier_scan.splitlines()
+        if ln.strip().startswith("PushedFilters:")
+    ]
     p_rt = plan_of(read_rollup(spark, rt_cfg, 1800, realtime=True))
     tail_schemas = [
         seg.split("\n")[0] for seg in p_rt.split("ReadSchema")[1:]
@@ -879,13 +900,24 @@ def main() -> None:
     ]
     sections.append((
         "Tier-routed + real-time rollup read",
-        p_rt,
+        "\n".join([
+            "--- routed one-source, one-day read ---", p_one,
+            "--- realtime read ---", p_rt,
+        ]),
         [
             ("routed read scans the 10m tier table (coarsest divisor "
              "of 30m), not raw input",
              "tier_10m" in p_route and rt_in not in p_route),
             ("routed read is one partial+final re-aggregation",
              p_route.count("HashAggregate") >= 2),
+            ("routed one-source read: the tier scan lists one file "
+             "(one sorted file per tier commit)",
+             len(tier_loc) == 1 and "tier_10m" in tier_loc[0]
+             and "entries]" not in tier_loc[0]),
+            ("routed one-source read: PushedFilters carries the source "
+             "and bucket_s predicates",
+             len(pushed) == 1 and "source" in pushed[0]
+             and "bucket_s" in pushed[0]),
             ("realtime tail: the scan lists exactly the one pending "
              "file (ledger set arithmetic, no join on input_file)",
              len(pending) == 1 and bool(in_locs)
