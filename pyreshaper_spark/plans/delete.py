@@ -23,15 +23,15 @@ the corpus:
 * **tiers** — a victim at event time t invalidates exactly one bucket
   per tier width. Affected buckets at EVERY tier are re-aggregated
   from the remaining raw rows of those buckets only (never from a
-  finer tier, whose live rows may be retention-pruned). The commit is
-  a :meth:`IcebergLite.replace_rows` keyed on the victim (source,
-  bucket_s) pairs: tier files are sorted on those columns with
-  manifest stats on both, so only files whose ranges can hold a victim
-  bucket are rewritten and every other file is carried by reference.
-  With per-source metadata replicated onto tier rows
-  (``meta_once=False``) every row of an affected source changes, so
-  the key is the source instead. Gap-filled tables are rebuilt per
-  affected source and committed keyed on the source.
+  finer tier, whose live rows may be retention-pruned). Tier and
+  gap-filled tables are committed through
+  :meth:`IcebergLite.replace_rows` keyed on the affected sources: each
+  source's rows are rebuilt from its live rows outside the victim
+  buckets plus the repaired buckets (a gap-filled row, and a tier row
+  carrying the replicated per-source metadata, depends on the whole
+  source). Tier files are sorted on (source, bucket_s) with manifest
+  stats on both, so files whose ``source`` range holds no affected
+  source are carried by reference.
 * **meta_source / metrics** — O(sources) / O(chunks) rebuilds.
 
 At a 10^12-row deployment the raw-side reads here prune to the
@@ -46,6 +46,7 @@ a bucket already aged out cannot be resurrected by a delete.
 
 from __future__ import annotations
 
+import bisect
 import dataclasses
 from collections.abc import Sequence
 
@@ -69,7 +70,7 @@ from pyreshaper_spark.plans.pipeline import (
     write_lineage,
 )
 from pyreshaper_spark.sources.catalog import get_catalog
-from pyreshaper_spark.sources.iceberglite import IcebergLite, stats_overlap
+from pyreshaper_spark.sources.iceberglite import IcebergLite
 from pyreshaper_spark.sources.readers import (
     list_input_files,
     read_input,
@@ -288,15 +289,19 @@ def _repair_run(
     ``current``. ``ledger`` replaces the ``series_enc`` ingest ledger
     (None carries it unchanged)."""
     remaining = current
-    # victim positions are a compliance batch: collected once, they
-    # give the affected sources and every tier's victim buckets
-    positions = victims.select("source", "event_s").distinct().collect()
-    affected_sources = sorted({r["source"] for r in positions})
+    affected_sources = sorted(
+        r[0] for r in victims.select("source").distinct().collect()
+    )
     report["affected_sources"] = affected_sources
 
     def of_sources(st: dict) -> bool:
-        """Stats filter: the file may hold an affected source."""
-        return any(stats_overlap(st, "source", s, s) for s in affected_sources)
+        """Stats filter: the file's ``source`` range may hold an
+        affected source (a bisect over the sorted source list)."""
+        if "source" not in st:
+            return True
+        lo, hi = st["source"]
+        i = bisect.bisect_left(affected_sources, lo)
+        return i < len(affected_sources) and affected_sources[i] <= hi
 
     # ---- series_enc: re-encode exactly the affected chunks ------------
     chunk_keys = victims.select("source", "salt").distinct()
@@ -346,10 +351,16 @@ def _repair_run(
     report["snapshot_ids"]["meta_source"] = cat.overwrite("meta_source", meta)
 
     # ---- tier cascade repair -------------------------------------------
-    src_keys = F.broadcast(
-        spark.createDataFrame([(s,) for s in affected_sources], "source string")
+    # every tier and filled commit replaces the affected sources' rows
+    commit = dict(
+        keys=F.broadcast(spark.createDataFrame(
+            [(s,) for s in affected_sources], "source string"
+        )),
+        key_cols=("source",),
+        stats_filter=of_sources,
+        sort_by=TIER_KEYS,
+        stats_cols=TIER_KEYS,
     )
-    layout = dict(sort_by=TIER_KEYS, stats_cols=TIER_KEYS)
     mc = None
     if not cfg.meta_once:
         mc = cat.read(spark, "meta_source", allow_empty=True).select(
@@ -371,29 +382,10 @@ def _repair_run(
     for tier in cfg.tiers:
         tname = f"tier_{tier.name}"
         w = tier.width_s
-        bad_keys = sorted({(s, e - e % w) for s, e in positions})
-        bad = F.broadcast(spark.createDataFrame(
-            bad_keys, "source string, bucket_s long"
-        ))
+        bad = victims.select("source", _bucket(w)).distinct()
         fixed = victim_bucket_fix(rem_src, bad, w)
-        # the retention filter below applies only to what gets
-        # WRITTEN; the filled tables build from the pre-filter rows
-        written = fixed
-        if tier.retention_buckets is not None:
-            # never resurrect aged-out buckets: re-filter against the
-            # live table's high-water mark (an empty live table has none,
-            # and nothing can be resurrected)
-            hw = cat.read(
-                spark, tname, allow_empty=True
-            ).agg(F.max("bucket_s")).collect()[0][0]
-            if hw is not None:
-                written = fixed.filter(
-                    F.col("bucket_s") > hw - tier.retention_buckets * w
-                )
-        # the affected sources' live rows outside the victim buckets: the
-        # filled tables rebuild from them, and so do tier rows that
-        # carry the sources' replicated metadata
-        rest = (
+        # the affected sources' live rows outside the victim buckets
+        untouched = (
             cat.read(
                 spark, tname, stats_filter=of_sources,
                 # a retention-pruned tier may hold ZERO live rows for an
@@ -402,38 +394,36 @@ def _repair_run(
             )
             .filter(F.col("source").isin(affected_sources))
             .select(*fixed.columns)
-            .join(bad, list(TIER_KEYS), "left_anti")
+            .join(F.broadcast(bad), list(TIER_KEYS), "left_anti")
         )
-        if mc is None:  # only the victim buckets' rows change
-            sid, _, _ = cat.replace_rows(
-                spark, tname, keys=bad, key_cols=TIER_KEYS,
-                replacement=written,
-                stats_filter=lambda st, keys=bad_keys: any(
-                    stats_overlap(st, "source", s, s)
-                    and stats_overlap(st, "bucket_s", b, b)
-                    for s, b in keys
-                ),
-                **layout,
-            )
-        else:  # the new metadata changes every row of those sources
-            sid, _, _ = cat.replace_rows(
-                spark, tname, keys=src_keys, key_cols=("source",),
-                replacement=rest.unionByName(written).join(
-                    F.broadcast(mc), "source"
-                ),
-                stats_filter=of_sources, **layout,
-            )
-        report["snapshot_ids"][tname] = sid
+        # the retention filter below applies only to what gets
+        # WRITTEN; the filled tables build from the pre-filter union
+        repaired = untouched.unionByName(fixed)
+        written = repaired
+        if tier.retention_buckets is not None:
+            # never resurrect aged-out buckets: re-filter against the
+            # live table's high-water mark (an empty live table has none,
+            # and nothing can be resurrected)
+            hw = cat.read(
+                spark, tname, allow_empty=True
+            ).agg(F.max("bucket_s")).collect()[0][0]
+            if hw is not None:
+                written = repaired.filter(
+                    F.col("bucket_s") > hw - tier.retention_buckets * w
+                )
+        if mc is not None:
+            written = written.join(F.broadcast(mc), "source")
+        report["snapshot_ids"][tname], _, _ = cat.replace_rows(
+            spark, tname, replacement=written, **commit
+        )
 
         fname = f"{tname}_filled"
         if cat.exists(fname):
             # pipeline ordering: filled tables are built from the
-            # pre-retention tier, every row of a source, so an affected
-            # source is rebuilt whole
+            # pre-retention tier (prune runs after the cascade)
             report["snapshot_ids"][fname], _, _ = cat.replace_rows(
-                spark, fname, keys=src_keys, key_cols=("source",),
-                replacement=gapfill_locf(rest.unionByName(fixed), w),
-                stats_filter=of_sources, **layout,
+                spark, fname, replacement=gapfill_locf(repaired, w),
+                **commit
             )
 
     # ---- optional fidelity gate -----------------------------------------

@@ -723,9 +723,11 @@ def maintain(
     overwritten each cycle but their snapshot LOG grows without bound.
     Compaction bin-packs multi-file tables, carrying forward the
     manifest column stats reads prune on; tier tables are rewritten
-    sorted on :data:`TIER_KEYS`, so they stay range-clustered and a
-    table written hive-partitioned by an older version converges to the
-    current layout. ``expire_keep`` trims
+    sorted on :data:`TIER_KEYS`, so they stay range-clustered.
+    Compaction groups files by hive partition, so a tier table an older
+    version wrote hive-partitioned (one file per source) is rewritten
+    here only with ``min_files=1``; otherwise the next tier commit of
+    an append cycle moves it to the current layout. ``expire_keep`` trims
     snapshot history and reclaims unreferenced data files. Expiry
     keeps the ``expire_keep`` newest snapshots and the current one;
     no other snapshot is pinned.

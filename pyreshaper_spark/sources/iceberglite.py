@@ -908,9 +908,7 @@ class IcebergLite:
         keys: DataFrame,
         key_cols: tuple[str, ...],
         replacement: DataFrame | None = None,
-        partition_filter: Callable[[dict[str, str]], bool] | None = None,
         stats_filter: Callable[[dict[str, list]], bool] | None = None,
-        partition_by: tuple[str, ...] = (),
         stats_cols: tuple[str, ...] = (),
         options: dict | None = None,
         ledger: dict | None = None,
@@ -922,10 +920,11 @@ class IcebergLite:
         rows (if any) are added; everything lands in ONE atomic commit.
 
         File skipping is the point at scale: only files that COULD hold
-        a matching row (per ``partition_filter`` / ``stats_filter``
-        against the manifest) are read and rewritten — every other file
-        is carried into the new snapshot by reference, so the rewrite
-        cost is O(affected files), not O(table). Prior snapshots still
+        a matching row (per ``stats_filter`` against the manifest
+        stats; a file without stats is always a candidate) are read and
+        rewritten — every other file is carried into the new snapshot by
+        reference, so the rewrite cost is O(affected files), not
+        O(table). The rewrite is unpartitioned. Prior snapshots still
         reference the old files (time travel across the delete works
         until :meth:`expire_snapshots`).
 
@@ -939,9 +938,6 @@ class IcebergLite:
         cand, untouched = [], []
         for f in snap["files"]:
             skip = (
-                partition_filter is not None
-                and not partition_filter(f["partition"])
-            ) or (
                 stats_filter is not None
                 and f.get("stats")
                 and not stats_filter(f["stats"])
@@ -966,7 +962,7 @@ class IcebergLite:
             df = df.unionByName(p)
         if sort_by:
             df = df.orderBy(*sort_by)
-        new = self._write_data(name, df, partition_by, stats_cols, options)
+        new = self._write_data(name, df, (), stats_cols, options)
         sid = self._commit(
             name, untouched + new, "replace", df.schema.json(),
             deletes=self._applicable_deletes(snap.get("deletes"), untouched),

@@ -7,7 +7,11 @@ import os
 
 import pytest
 
-from pyreshaper_spark.sources.iceberglite import IcebergLite, SnapshotNotFound
+from pyreshaper_spark.sources.iceberglite import (
+    IcebergLite,
+    SnapshotNotFound,
+    stats_overlap,
+)
 
 
 @pytest.fixture()
@@ -151,22 +155,25 @@ def test_expire_snapshots_reclaims_dead_files(spark, cat):
 
 
 def test_replace_rows_copy_on_write(spark, cat):
-    """Row-level delete + upsert in one commit; files that cannot match
-    (per partition filter) are carried by reference."""
-    cat.append(
-        "t",
-        _df(spark, [("a", 1, 10), ("a", 2, 20), ("b", 1, 5), ("c", 9, 1)]),
-        partition_by=("source",),
-    )
-    before = {f["path"] for f in cat._snapshot("t", None)["files"]}
+    """Row-level delete + upsert in one commit; files whose manifest
+    stats cannot hold a key are carried by reference."""
+    keyed = ("source", "bucket_s")
+    for rows in ([("a", 1, 10), ("a", 2, 20)], [("b", 1, 5)], [("c", 9, 1)]):
+        cat.append("t", _df(spark, rows).coalesce(1), stats_cols=keyed)
+    before = {
+        f["stats"]["source"][0]: f["path"]
+        for f in cat._snapshot("t", None)["files"]
+    }
+    assert sorted(before) == ["a", "b", "c"]  # one file per source
     keys = spark.createDataFrame(
         [("a", 2)], "source string, bucket_s long"
     )
-    repl = _df(spark, [("a", 2, 99), ("a", 3, 7)])
+    repl = _df(spark, [("a", 2, 99), ("a", 3, 7)]).coalesce(1)
     sid, rewritten, untouched = cat.replace_rows(
-        spark, "t", keys, ("source", "bucket_s"), repl,
-        partition_filter=lambda p: p.get("source") == "a",
-        partition_by=("source",),
+        spark, "t", keys, keyed, repl,
+        stats_filter=lambda st: stats_overlap(st, "source", "a", "a")
+        and stats_overlap(st, "bucket_s", 2, 2),
+        stats_cols=keyed,
     )
     got = sorted(
         map(tuple, cat.read(spark, "t").select("source", "bucket_s", "cnt").collect())
@@ -174,18 +181,24 @@ def test_replace_rows_copy_on_write(spark, cat):
     assert got == [
         ("a", 1, 10), ("a", 2, 99), ("a", 3, 7), ("b", 1, 5), ("c", 9, 1)
     ]
-    assert untouched == 2  # b and c files untouched
-    after = {f["path"] for f in cat._snapshot("t", None)["files"]}
-    assert {p for p in before if "source=b" in p or "source=c" in p} <= after
-    assert not any(p in after for p in before if "source=a" in p)
+    assert (rewritten, untouched) == (1, 2)  # b and c files untouched
+    after = {f["path"]: f for f in cat._snapshot("t", None)["files"]}
+    assert {before["b"], before["c"]} <= set(after)
+    assert before["a"] not in after
+    # the rewrite records stats on the key columns
+    new = [f["stats"] for p, f in after.items() if p not in before.values()]
+    assert new and all(st["source"] == ["a", "a"] for st in new)
+    assert min(st["bucket_s"][0] for st in new) == 1
+    assert max(st["bucket_s"][1] for st in new) == 3
     # pure delete: no replacement, drop everything matching
     allb = spark.createDataFrame([("b",)], "source string")
-    cat.replace_rows(
+    _, rewritten, untouched = cat.replace_rows(
         spark, "t", allb, ("source",), None,
-        partition_filter=lambda p: p.get("source") == "b",
-        partition_by=("source",),
+        stats_filter=lambda st: stats_overlap(st, "source", "b", "b"),
     )
+    assert (rewritten, untouched) == (1, 3)  # only b's file
     assert cat.read(spark, "t").filter("source = 'b'").count() == 0
+    assert before["c"] in {f["path"] for f in cat._snapshot("t", None)["files"]}
     # time travel across the replace still sees the original rows
     assert (
         cat.read(spark, "t", snapshot_id=1)

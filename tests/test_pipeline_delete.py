@@ -1,7 +1,7 @@
 """Targeted document deletion (plans.delete.delete_docs): every table
 of a completed run must equal a from-scratch run on the filtered input,
-while tier files whose (source, bucket_s) stats miss every victim
-bucket are carried by reference."""
+while tier files whose ``source`` stats hold no affected source are
+carried by reference."""
 
 from __future__ import annotations
 
@@ -37,11 +37,9 @@ def _rows(df, drop=()):
     )
 
 
-@pytest.fixture(scope="module")
-def deleted_state(spark, tmp_path_factory):
-    """Run pipeline on full input, delete victims, plus a reference
-    pipeline run on the pre-filtered input."""
-    root = tmp_path_factory.mktemp("del")
+def _delete_and_reference(spark, root, **kw) -> dict:
+    """Run the pipeline on full input, delete victims, plus a reference
+    pipeline run on the pre-filtered input, both with config ``kw``."""
     seq = sequences_df(spark, SF)
     full_p = str(root / "seq_full")
     seq.write.parquet(full_p)
@@ -65,11 +63,7 @@ def deleted_state(spark, tmp_path_factory):
     filt_p = str(root / "seq_filtered")
     seq.filter(~F.col("doc_id").isin(victims)).write.parquet(filt_p)
 
-    # meta_once: tier rows carry no replicated per-source metadata, so
-    # the tier repair is keyed on the victim (source, bucket_s) pairs
-    cfg = _cfg(
-        full_p, str(root / "out"), verify_fidelity=True, meta_once=True
-    )
+    cfg = _cfg(full_p, str(root / "out"), verify_fidelity=True, **kw)
     run_pipeline(spark, cfg, str(root / "ck.json"))
     cat = IcebergLite(cfg.output_path)
     # several range-clustered tier_1m files, so a repair can carry some
@@ -83,18 +77,21 @@ def deleted_state(spark, tmp_path_factory):
         for t in ("tier_1m", "series_enc")
     }
     report = delete_docs(spark, cfg, str(root / "ck.json"), victims)
-    victim_buckets = {
-        (r["source"], r["event_s"] - r["event_s"] % 60)
-        for r in seq.filter(F.col("doc_id").isin(victims)).collect()
-    }
 
-    ref_cfg = _cfg(filt_p, str(root / "ref_out"), meta_once=True)
+    ref_cfg = _cfg(filt_p, str(root / "ref_out"), **kw)
     run_pipeline(spark, ref_cfg, str(root / "ref_ck.json"))
     return {
         "cfg": cfg, "ref_cfg": ref_cfg, "report": report,
         "victims": victims, "gone_src": gone_src,
-        "files_before": files_before, "victim_buckets_1m": victim_buckets,
+        "files_before": files_before,
     }
+
+
+@pytest.fixture(scope="module")
+def deleted_state(spark, tmp_path_factory):
+    """The default config: tier rows carry replicated per-source
+    metadata (``meta_once=False``)."""
+    return _delete_and_reference(spark, tmp_path_factory.mktemp("del"))
 
 
 TABLES = (
@@ -119,12 +116,12 @@ def test_series_decode_equals_fresh_run(spark, deleted_state):
     assert _rows(got) == _rows(want)
 
 
-def test_victims_are_gone_everywhere(spark, deleted_state):
-    cat = IcebergLite(deleted_state["cfg"].output_path)
-    victims = set(deleted_state["victims"])
+def assert_victims_gone(spark, state):
+    cat = IcebergLite(state["cfg"].output_path)
+    victims = set(state["victims"])
     dec = decode_series_table(cat.read(spark, "series_enc"))
     assert dec.filter(F.col("doc_id").isin(list(victims))).count() == 0
-    gone = deleted_state["gone_src"]
+    gone = state["gone_src"]
     for t in TABLES:
         assert (
             cat.read(spark, t).filter(F.col("source") == gone).count() == 0
@@ -137,29 +134,51 @@ def test_victims_are_gone_everywhere(spark, deleted_state):
             assert f["stats"]["source"] != [gone, gone], (t, f["path"])
 
 
+def test_victims_are_gone_everywhere(spark, deleted_state):
+    assert_victims_gone(spark, deleted_state)
+
+
 def test_untouched_files_carried_by_reference(spark, deleted_state):
-    """Copy-on-write: tier files whose (source, bucket_s) stats miss
-    every victim bucket survive as the SAME manifest entries; every
-    file that can hold a victim bucket is rewritten."""
+    """Copy-on-write: tier files whose ``source`` stats hold no affected
+    source survive as the SAME manifest entries; every file that can
+    hold one is rewritten."""
     cat = IcebergLite(deleted_state["cfg"].output_path)
+    affected = deleted_state["report"]["affected_sources"]
     before = deleted_state["files_before"]["tier_1m"]
     after = {
         f["path"]: f for f in cat._snapshot("tier_1m", None)["files"]
     }
 
-    def can_hold_victim(st):
-        (slo, shi), (blo, bhi) = st["source"], st["bucket_s"]
-        return any(
-            slo <= s <= shi and blo <= b <= bhi
-            for s, b in deleted_state["victim_buckets_1m"]
-        )
+    def can_hold_affected(st):
+        lo, hi = st["source"]
+        return any(lo <= s <= hi for s in affected)
 
-    carried = {p for p, f in before.items() if not can_hold_victim(f["stats"])}
+    carried = {
+        p for p, f in before.items() if not can_hold_affected(f["stats"])
+    }
     rewritten = set(before) - carried
     assert carried and rewritten
     assert all(after.get(p) == before[p] for p in carried)
     assert not rewritten & set(after)
     assert deleted_state["report"]["series_files_untouched"] >= 0
+
+
+def test_meta_once_delete_equals_fresh_run(spark, tmp_path):
+    """With ``meta_once=True`` tier rows carry no per-source metadata;
+    the repair must still converge to a from-scratch run, and drop the
+    emptied source's files."""
+    state = _delete_and_reference(spark, tmp_path, meta_once=True)
+    cat = IcebergLite(state["cfg"].output_path)
+    ref = IcebergLite(state["ref_cfg"].output_path)
+    for t in TABLES:
+        assert _rows(cat.read(spark, t)) == _rows(ref.read(spark, t)), t
+    assert not any(
+        c.startswith("src_") for c in cat.read(spark, "tier_1m").columns
+    )
+    assert _rows(decode_series_table(cat.read(spark, "series_enc"))) == _rows(
+        decode_series_table(ref.read(spark, "series_enc"))
+    )
+    assert_victims_gone(spark, state)
 
 
 def test_metrics_reflect_live_chunks(spark, deleted_state):
