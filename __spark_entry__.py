@@ -128,48 +128,6 @@ def _cc200(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _static_parquet(spark: SparkSession, sf_dir: str, key: str, writer) -> str:
-    """Memoized static-input parquet for the streaming oracle queries:
-    several entries feed the SAME projection of the sequences/token
-    relation through availableNow — write it once per (session,
-    sf_dir) instead of once per query (checkpoint dirs stay per-query
-    and fresh). ``writer(path)`` materializes on first use."""
-    import os
-    import tempfile
-
-    k = (spark.sparkContext.applicationId, "static", sf_dir, key)
-
-    def _fill():
-        base = tempfile.mkdtemp(prefix=f"stream_in_{key}_")
-        writer(os.path.join(base, "src"))
-        return base
-
-    return os.path.join(_memo_fill(k, _fill), "src")
-
-
-def _seq3_sorted_path(spark: SparkSession, sf_dir: str) -> str:
-    """(source, event_s, n_tok) sorted single-file input — one in-order
-    availableNow batch (the bucket-close operators' documented
-    contract)."""
-    return _static_parquet(
-        spark, sf_dir, "seq3",
-        lambda p: (
-            _seq(spark, sf_dir)
-            .select("source", "event_s", "n_tok")
-            .orderBy("event_s")
-            .coalesce(1)
-            .write.parquet(p)
-        ),
-    )
-
-
-def _seq_full_path(spark: SparkSession, sf_dir: str) -> str:
-    """The full sequences relation as a static stream source."""
-    return _static_parquet(
-        spark, sf_dir, "seqfull",
-        lambda p: _seq(spark, sf_dir).write.parquet(p),
-    )
-
 
 def _seq(spark: SparkSession, sf_dir: str, variant: str = "base") -> DataFrame:
     _utc(spark)
@@ -717,8 +675,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["cusum_1h"] = _q_cusum
 
-    # fixed-target Page CUSUM (the streamable control-chart form;
-    # streaming_cusum is its run-to-completion twin)
+    # fixed-target Page CUSUM (the streamable control-chart form)
     def _q_cusum_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyreshaper_spark.operators.gapfill import cusum_fixed
 
@@ -1898,108 +1855,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["interval_label_1h"] = _q_interval
 
-    def _q_streaming_label(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Stream-static interval labeling run to completion
-        (availableNow): facts stream in and are labeled against the
-        STATIC hot-hours windows — stateless stream-static equi-join,
-        so the final table must equal the batch interval join, which
-        IS the oracle (same SQL as interval_label_1h)."""
-        import os
-        import tempfile
-
-        from pyreshaper_spark.operators.gapfill import uptime_islands
-        from pyreshaper_spark.sources.iceberglite import IcebergLite
-        from pyreshaper_spark.streaming.label import (
-            LABEL_TABLE,
-            start_label_stream,
-        )
-
-        hot = _tiers(spark, sf_dir)[3600].filter(F.col("sum_n_tok") > 60)
-        wins = uptime_islands(hot, 3600).select(
-            "source",
-            F.col("up_start").alias("start_s"),
-            F.col("up_end").alias("end_s"),
-        )
-        base = tempfile.mkdtemp(prefix="stream_label_")
-        seq_path = os.path.join(base, "seq")
-        _seq(spark, sf_dir).select(
-            "doc_id", "tokens", "n_tok", "source", "event_s"
-        ).write.parquet(seq_path)
-        sq = start_label_stream(
-            spark, seq_path, wins, os.path.join(base, "out"),
-            os.path.join(base, "ck"),
-        )
-        sq.awaitTermination(300)
-        t = IcebergLite(os.path.join(base, "out")).read(
-            spark, LABEL_TABLE, allow_empty=True
-        )
-        return t.select(
-            "doc_id", "source",
-            F.col("event_s").cast("long").alias("event_s"),
-            F.col("start_s").cast("long").alias("start_s"),
-            F.col("end_s").cast("long").alias("end_s"),
-        )
-
-    q["streaming_label"] = _q_streaming_label
-
-    def _q_streaming_ss_join(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        """Watermarked stream-stream inner join: hash-even doc events
-        paired with same-source odd-doc events within +10h. Run to
-        completion over the static fixture ≡ the batch time join."""
-        import os
-        import tempfile
-
-        from pyreshaper_spark.functions.xhash import h32
-        from pyreshaper_spark.streaming.joinss import streaming_time_join
-
-        base = tempfile.mkdtemp(prefix="stream_ssj_")
-        # split bit from the cross-engine doc hash — independent of the
-        # fixture's doc→source assignment (doc parity is NOT: each
-        # source holds a single parity)
-        seq = _seq(spark, sf_dir).select(
-            "source", "event_s", "n_tok",
-            F.pmod(h32(F.col("doc_id")), F.lit(2)).alias("sbit"),
-        )
-        for name, par in (("l", 0), ("r", 1)):
-            (
-                seq.filter(F.col("sbit") == par)
-                .select("source", "event_s", "n_tok")
-                .coalesce(1)
-                .write.parquet(os.path.join(base, name))
-            )
-        rows: list = []
-
-        def sink(batch_df, _epoch):
-            rows.extend(batch_df.collect())
-
-        schema = "source string, event_s long, n_tok long"
-        left = spark.readStream.schema(schema).parquet(
-            os.path.join(base, "l")
-        )
-        right = spark.readStream.schema(schema).parquet(
-            os.path.join(base, "r")
-        )
-        sq = (
-            streaming_time_join(left, right, tol_s=36000)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option(
-                "checkpointLocation", os.path.join(base, "ck")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination(300)
-        return spark.createDataFrame(
-            rows,
-            "source string, l_event_s long, l_n_tok long, "
-            "r_event_s long, r_n_tok long",
-        )
-
-    q["streaming_ss_join"] = _q_streaming_ss_join
-
     # -- M4 downsample (cascaded 1m→10m→1h; first/last/min/max POINTS) -
     def _q_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Spark side CASCADES the M4 corners through finer tiers while
@@ -2486,599 +2341,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["hod_anomaly_1h"] = _q_hod_anom
 
-    # -- streaming tier-0 (availableNow over the static fixture) ------
-    def _q_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Structured Streaming ingest run to completion (availableNow)
-        over the fixture; with static input its tier table must equal
-        the batch tier-0 — which IS the DuckDB oracle used here."""
-        import os
-        import tempfile
-
-        from pyreshaper_spark.sources.iceberglite import IcebergLite
-        from pyreshaper_spark.streaming.ingest import start_tier0_stream
-
-        base = tempfile.mkdtemp(prefix="stream_q_")
-        seq_path = _seq_full_path(spark, sf_dir)
-        sq = start_tier0_stream(
-            spark, seq_path, os.path.join(base, "out"),
-            os.path.join(base, "ck"), width_s=60,
-        )
-        sq.awaitTermination(300)
-        t = IcebergLite(os.path.join(base, "out")).read(
-            spark, "tier_stream", allow_empty=True
-        )
-        return t.select(
-            "source", "bucket_s",
-            F.col("cnt").cast("long").alias("cnt"),
-            F.col("sum_n_tok").cast("long").alias("sum_n_tok"),
-            F.col("min_n_tok").cast("long").alias("min_n_tok"),
-            F.col("max_n_tok").cast("long").alias("max_n_tok"),
-        )
-
-    q["streaming_tier0"] = _q_streaming
-
-    # -- streaming HOPPING windows (Spark-native sliding window) ------
-    def _q_streaming_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Structured Streaming hopping-window aggregate (window with
-        slide < width) run to completion over the static fixture; the
-        merged table must equal the batch raw-level hopping rollup —
-        the DuckDB oracle (thirteenth streaming surface)."""
-        import os
-        import tempfile
-
-        from pyreshaper_spark.sources.iceberglite import IcebergLite
-        from pyreshaper_spark.streaming.ingest import start_tier0_stream
-
-        base = tempfile.mkdtemp(prefix="stream_hop_")
-        seq_path = _seq_full_path(spark, sf_dir)
-        sq = start_tier0_stream(
-            spark, seq_path, os.path.join(base, "out"),
-            os.path.join(base, "ck"), width_s=3600, slide_s=600,
-            table="hop_stream",
-        )
-        sq.awaitTermination(300)
-        t = IcebergLite(os.path.join(base, "out")).read(
-            spark, "hop_stream", allow_empty=True
-        )
-        return t.select(
-            "source",
-            F.col("bucket_s").cast("long").alias("win_start_s"),
-            F.col("cnt").cast("long").alias("cnt"),
-            F.col("sum_n_tok").cast("long").alias("sum_n_tok"),
-            F.col("min_n_tok").cast("long").alias("min_n_tok"),
-            F.col("max_n_tok").cast("long").alias("max_n_tok"),
-        )
-
-    q["streaming_hopping"] = _q_streaming_hopping
-
-    def _q_streaming_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Exactly-once raw append sink run to completion
-        (availableNow): the landed IcebergLite table must equal the
-        static input row-for-row (token arrays included) — the oracle
-        is the sequences relation itself. An epoch replay is exercised
-        in pytest; here the whole landed table is value-hashed."""
-        import os
-        import tempfile
-
-        from pyreshaper_spark.sources.iceberglite import IcebergLite
-        from pyreshaper_spark.streaming.sink import start_raw_append_stream
-
-        base = tempfile.mkdtemp(prefix="stream_raw_")
-        seq_path = os.path.join(base, "seq")
-        _seq(spark, sf_dir).select(
-            "doc_id", "tokens", "n_tok", "source", "event_s"
-        ).write.parquet(seq_path)
-        sq = start_raw_append_stream(
-            spark, seq_path, os.path.join(base, "out"),
-            os.path.join(base, "ck"),
-        )
-        sq.awaitTermination(300)
-        t = IcebergLite(os.path.join(base, "out")).read(
-            spark, "sequences_raw", allow_empty=True
-        )
-        # tokens excluded: the fixture tokenizer (xxhash64) is
-        # engine-specific; token byte-exactness through the sink is
-        # asserted in pytest (test_raw_append_stream_exactly_once)
-        return t.select(
-            "doc_id", "source",
-            F.col("n_tok").cast("long").alias("n_tok"),
-            F.col("event_s").cast("long").alias("event_s"),
-        )
-
-    q["streaming_raw_append"] = _q_streaming_raw
-
-    def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Streaming exact dedup run to completion (availableNow): the
-        surviving key SET equals batch DISTINCT over the content hash
-        (which doc survives is arrival-order-dependent, so only the key
-        column is exposed to the hash compare). Tokens here are the
-        md5-derived cross-engine stream (vocab.py pattern) so DuckDB
-        can recompute the same keys; the operator is unchanged."""
-        import os
-        import tempfile
-
-        from pyreshaper_spark.sources.iceberglite import IcebergLite
-        from pyreshaper_spark.streaming.dedup import (
-            DEDUP_TABLE,
-            start_dedup_stream,
-        )
-
-        seq2 = (
-            _seq(spark, sf_dir)
-            .drop("tokens")
-            .join(_md_tokens(spark, sf_dir), "doc_id")
-            .select("doc_id", "tokens", "n_tok", "source", "event_s")
-        )
-        base = tempfile.mkdtemp(prefix="stream_dd_")
-        seq_path = os.path.join(base, "seq")
-        seq2.write.parquet(seq_path)
-        sq = start_dedup_stream(
-            spark, seq_path, os.path.join(base, "out"),
-            os.path.join(base, "ck"),
-        )
-        sq.awaitTermination(300)
-        t = IcebergLite(os.path.join(base, "out")).read(
-            spark, DEDUP_TABLE, allow_empty=True
-        )
-        return t.select("content_key")
-
-    q["streaming_dedup"] = _q_streaming_dedup
-
-    # -- stateful streaming ops, run to completion over static input --
-    # (availableNow) so their emitted rows get FULL value-hash oracles:
-    # lastseen's final upsert table ≡ a batch groupBy; rate/sessions
-    # emit exactly the CLOSED buckets/sessions, i.e. the batch operator
-    # minus each key's final (still-open) bucket/session.
-    def _q_streaming_lastseen(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-        import tempfile
-
-        from pyreshaper_spark.streaming.lastseen import streaming_lastseen
-
-        base = tempfile.mkdtemp(prefix="stream_ls_")
-        src = os.path.join(base, "src")
-        _seq(spark, sf_dir).select("source", "event_s").write.parquet(src)
-        table: dict[str, tuple] = {}
-
-        def upsert(batch_df, _epoch):
-            for r in batch_df.collect():
-                table[r["source"]] = (r["n_rows"], r["first_s"], r["last_s"])
-
-        stream = spark.readStream.schema(
-            "source string, event_s long"
-        ).parquet(src)
-        sq = (
-            streaming_lastseen(stream)
-            .writeStream.outputMode("update")
-            .foreachBatch(upsert)
-            .option("checkpointLocation", os.path.join(base, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination(300)
-        return spark.createDataFrame(
-            [(s, *v) for s, v in sorted(table.items())],
-            "source string, n_rows long, first_s long, last_s long",
-        )
-
-    q["streaming_lastseen"] = _q_streaming_lastseen
-
-    def _q_streaming_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """DQ rule suite as a continuously-updated counter (complete
-        mode, availableNow): the final counters ≡ the batch suite on
-        the same relation minus its unique rules — full value oracle."""
-        import os
-        import tempfile
-
-        from pyreshaper_spark.operators.checks import documents_rules
-        from pyreshaper_spark.streaming.dq import (
-            dq_verdicts,
-            streaming_dq,
-            streaming_rules,
-        )
-
-        rules = streaming_rules(documents_rules())
-        base = tempfile.mkdtemp(prefix="stream_dq_")
-        src = os.path.join(base, "src")
-        _docs(spark, sf_dir).write.parquet(src)
-        last: dict[str, list] = {}
-
-        def capture(batch_df, _epoch):
-            rows = batch_df.collect()
-            if rows:
-                last["row"] = rows
-
-        stream = spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string, "
-            "n_chars bigint"
-        ).parquet(src)
-        sq = (
-            streaming_dq(stream, rules)
-            .writeStream.outputMode("complete")
-            .foreachBatch(capture)
-            .option("checkpointLocation", os.path.join(base, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination(300)
-        wide = spark.createDataFrame(last["row"])
-        return dq_verdicts(wide, rules)
-
-    q["streaming_dq"] = _q_streaming_dq
-
-    def _q_streaming_dq_by(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Keyed DQ monitor (update mode, one counter row per source):
-        availableNow final counters ≡ the batch keyed suite minus its
-        unique rules — full value oracle."""
-        import os
-        import tempfile
-
-        from pyreshaper_spark.operators.checks import documents_rules
-        from pyreshaper_spark.streaming.dq import (
-            dq_verdicts,
-            streaming_dq_by,
-            streaming_rules,
-        )
-
-        rules = streaming_rules(documents_rules())
-        base = tempfile.mkdtemp(prefix="stream_dqb_")
-        src = os.path.join(base, "src")
-        _docs(spark, sf_dir).write.parquet(src)
-        table: dict[str, tuple] = {}
-
-        def upsert(batch_df, _epoch):
-            for r in batch_df.collect():
-                table[r["source"]] = tuple(r)
-
-        stream = spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string, "
-            "n_chars bigint"
-        ).parquet(src)
-        sq = (
-            streaming_dq_by(stream, rules)
-            .writeStream.outputMode("update")
-            .foreachBatch(upsert)
-            .option("checkpointLocation", os.path.join(base, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination(300)
-        cols = ["source", "_n"] + [f"_v{i}" for i in range(len(rules))]
-        wide = spark.createDataFrame(
-            [table[s] for s in sorted(table)],
-            ", ".join(f"{c} {'string' if c == 'source' else 'long'}"
-                      for c in cols),
-        )
-        return dq_verdicts(wide, rules, keys=("source",))
-
-    q["streaming_dq_by_source"] = _q_streaming_dq_by
-
-    def _q_streaming_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Hysteresis alerts emitted as buckets close: one in-order
-        availableNow batch ≡ batch alert_hysteresis minus each
-        source's final (still-open) bucket — full value oracle."""
-        import os
-        import tempfile
-
-        from pyreshaper_spark.streaming.alert import streaming_alert
-
-        base = tempfile.mkdtemp(prefix="stream_al_")
-        src = _seq3_sorted_path(spark, sf_dir)
-        rows: list = []
-
-        def sink(batch_df, _epoch):
-            rows.extend(batch_df.collect())
-
-        stream = spark.readStream.schema(
-            "source string, event_s long, n_tok long"
-        ).parquet(src)
-        sq = (
-            streaming_alert(stream, 600, hi=70, lo=40)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(base, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination(300)
-        return spark.createDataFrame(
-            rows,
-            "source string, bucket_s long, value long, alert long, "
-            "event string, late_rows long",
-        )
-
-    q["streaming_alert"] = _q_streaming_alert
-
-    def _q_streaming_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Bottom-k streaming sample: the final per-source samples of
-        an availableNow run ≡ the batch sample_k_per_source rows
-        (bottom-k is arrival-order independent) — full value oracle."""
-        import os
-        import tempfile
-
-        from pyreshaper_spark.streaming.sample import streaming_sample
-
-        base = tempfile.mkdtemp(prefix="stream_sm_")
-        src = os.path.join(base, "src")
-        _docs(spark, sf_dir).select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            "source",
-            F.col("n_chars").cast("long").alias("n_chars"),
-        ).write.parquet(src)
-        table: dict[str, list] = {}
-
-        def upsert(batch_df, _epoch):
-            rows = batch_df.collect()
-            by_src: dict[str, list] = {}
-            for r in rows:
-                by_src.setdefault(r["source"], []).append(
-                    (r["doc_id"], r["n_chars"], r["rk"])
-                )
-            table.update(by_src)
-
-        stream = spark.readStream.schema(
-            "doc_id string, source string, n_chars long"
-        ).parquet(src)
-        sq = (
-            streaming_sample(stream, k=15)
-            .writeStream.outputMode("update")
-            .foreachBatch(upsert)
-            .option("checkpointLocation", os.path.join(base, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination(300)
-        return spark.createDataFrame(
-            [
-                (doc_id, s, n_chars, rk)
-                for s, rows in sorted(table.items())
-                for (doc_id, n_chars, rk) in rows
-            ],
-            "doc_id string, source string, n_chars long, rk long",
-        )
-
-    q["streaming_sample"] = _q_streaming_sample
-
-    def _q_streaming_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Streaming tier-0 ingest run to completion, then the scheduled
-        cascade refresh up to 1h — the materialized coarse tier must
-        equal the batch 1h rollup (the oracle): proves stream + refresh
-        composition end-to-end, not just tier 0."""
-        import os
-        import tempfile
-
-        from pyreshaper_spark.sources.iceberglite import IcebergLite
-        from pyreshaper_spark.streaming.ingest import (
-            refresh_cascade,
-            start_tier0_stream,
-        )
-
-        base = tempfile.mkdtemp(prefix="stream_casc_")
-        seq_path = _seq_full_path(spark, sf_dir)
-        sq = start_tier0_stream(
-            spark, seq_path, os.path.join(base, "out"),
-            os.path.join(base, "ck"), width_s=60,
-        )
-        sq.awaitTermination(300)
-        refresh_cascade(spark, os.path.join(base, "out"), [600, 3600])
-        t = IcebergLite(os.path.join(base, "out")).read(
-            spark, "tier_stream_3600", allow_empty=True
-        )
-        return t.select(
-            "source", "bucket_s",
-            F.col("cnt").cast("long").alias("cnt"),
-            F.col("sum_n_tok").cast("long").alias("sum_n_tok"),
-            F.col("min_n_tok").cast("long").alias("min_n_tok"),
-            F.col("max_n_tok").cast("long").alias("max_n_tok"),
-        )
-
-    q["streaming_cascade_1h"] = _q_streaming_cascade
-
-    def _q_streaming_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-        import tempfile
-
-        from pyreshaper_spark.streaming.rate import streaming_rate
-
-        base = tempfile.mkdtemp(prefix="stream_rt_")
-        # one sorted file → one in-order availableNow batch (the
-        # operator's documented contract; late/multi-batch behavior is
-        # state-machine unit-tested); input shared across the
-        # bucket-close streaming queries (_seq3_sorted_path)
-        src = _seq3_sorted_path(spark, sf_dir)
-        rows: list = []
-
-        def sink(batch_df, _epoch):
-            rows.extend(batch_df.collect())
-
-        stream = spark.readStream.schema(
-            "source string, event_s long, n_tok long"
-        ).parquet(src)
-        sq = (
-            streaming_rate(stream, 600)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(base, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination(300)
-        return spark.createDataFrame(
-            rows,
-            "source string, bucket_s long, value long, increase long, "
-            "reset boolean, late_rows long",
-        )
-
-    q["streaming_rate"] = _q_streaming_rate
-
-    def _q_streaming_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-        import tempfile
-
-        from pyreshaper_spark.streaming.quota import streaming_quota
-
-        base = tempfile.mkdtemp(prefix="stream_qt_")
-        src = _seq3_sorted_path(spark, sf_dir)
-        rows: list = []
-
-        def sink(batch_df, _epoch):
-            rows.extend(batch_df.collect())
-
-        stream = spark.readStream.schema(
-            "source string, event_s long, n_tok long"
-        ).parquet(src)
-        sq = (
-            streaming_quota(stream, 600, 700)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(base, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination(300)
-        return spark.createDataFrame(
-            rows, "source string, cross_bucket_s long, cum_at_cross long"
-        )
-
-    q["streaming_quota"] = _q_streaming_quota
-
-    def _q_streaming_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-        import tempfile
-
-        from pyreshaper_spark.streaming.anomaly import streaming_anomaly
-
-        base = tempfile.mkdtemp(prefix="stream_an_")
-        src = _seq3_sorted_path(spark, sf_dir)
-        rows: list = []
-
-        def sink(batch_df, _epoch):
-            rows.extend(batch_df.collect())
-
-        stream = spark.readStream.schema(
-            "source string, event_s long, n_tok long"
-        ).parquet(src)
-        sq = (
-            streaming_anomaly(stream, 600)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(base, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination(300)
-        return spark.createDataFrame(
-            rows,
-            "source string, bucket_s long, sum_n_tok long, "
-            "roll_n long, is_anomaly boolean",
-        )
-
-    q["streaming_anomaly"] = _q_streaming_anomaly
-
-    def _q_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-        import tempfile
-
-        from pyreshaper_spark.streaming.cusum import streaming_cusum
-
-        base = tempfile.mkdtemp(prefix="stream_cu_")
-        src = _seq3_sorted_path(spark, sf_dir)
-        rows: list = []
-
-        def sink(batch_df, _epoch):
-            rows.extend(batch_df.collect())
-
-        stream = spark.readStream.schema(
-            "source string, event_s long, n_tok long"
-        ).parquet(src)
-        sq = (
-            streaming_cusum(stream, 600, mu=55, h=120)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(base, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination(300)
-        return spark.createDataFrame(
-            rows,
-            "source string, bucket_s long, sum_n_tok long, "
-            "cusum long, flag boolean",
-        )
-
-    q["streaming_cusum"] = _q_streaming_cusum
-
-    def _q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-        import tempfile
-
-        from pyreshaper_spark.operators.vocab import token_stream
-        from pyreshaper_spark.streaming.topk import streaming_topk
-
-        base = tempfile.mkdtemp(prefix="stream_tk_")
-        src = os.path.join(base, "src")
-        (
-            token_stream(_docs(spark, sf_dir))
-            .orderBy("event_s", "token")
-            .coalesce(1)
-            .write.parquet(src)
-        )
-        rows: list = []
-
-        def sink(batch_df, _epoch):
-            rows.extend(batch_df.collect())
-
-        stream = spark.readStream.schema(
-            "source string, event_s long, token long"
-        ).parquet(src)
-        sq = (
-            streaming_topk(stream, 3600, k=3)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(base, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination(300)
-        return spark.createDataFrame(
-            rows,
-            "source string, bucket_s long, token long, cnt long, "
-            "rank long",
-        )
-
-    q["streaming_topk"] = _q_streaming_topk
-
-    def _q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-        import tempfile
-
-        from pyreshaper_spark.streaming.sessions import streaming_sessionize
-
-        base = tempfile.mkdtemp(prefix="stream_ss_")
-        src = os.path.join(base, "src")
-        _events(spark, sf_dir).select(
-            "user_id", "ts", "event_id"
-        ).write.parquet(src)
-        out = os.path.join(base, "out")
-        stream = spark.readStream.schema(
-            "user_id long, ts timestamp, event_id long"
-        ).parquet(src)
-        sq = (
-            streaming_sessionize(stream)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", os.path.join(base, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination(300)
-        return spark.read.parquet(out).select(
-            "user_id", "session_idx", "n_events", "first_ep", "last_ep"
-        )
-
-    q["streaming_sessions"] = _q_streaming_sessions
-
     # -- validation + metrics accounting (previously pytest-only) -----
     def _q_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyreshaper_spark.operators.validate import validate_report
@@ -3185,49 +2447,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             return inner
         q[name] = _wrap_md5(q[name], cols)
 
-    # Streaming oracle faces run their availableNow query to
-    # completion INSIDE the callable, so the state-store partition
-    # count (fixed by spark.sql.shuffle.partitions at first
-    # checkpoint) can be dropped to 2 for just that window: the faces
-    # carry ~500 rows and 8 state instances per stateful operator is
-    # pure setup overhead (measured 2.6 s → 2.0 s per face; ~18 faces
-    # ≈ 11 s of sweep wall). Results are partition-count invariant
-    # (the SHUFFLE_PARTITIONS=1 sweep leg proves it); production
-    # streams keep the session default — this wraps only the oracle
-    # faces.
-    # refcounted (concurrent sweeps run faces from a thread pool: the
-    # LAST face out restores the value captured by the FIRST one in,
-    # so overlapping enters can't restore "2" as the session default)
-    _ls_lock = _threading.Lock()
-    _ls_state = {"depth": 0, "old": None}
-
-    def _lowstate(f):
-        def inner(s, d):
-            key = "spark.sql.shuffle.partitions"
-            with _ls_lock:
-                if _ls_state["depth"] == 0:
-                    _ls_state["old"] = s.conf.get(key)
-                    s.conf.set(key, "2")
-                _ls_state["depth"] += 1
-            try:
-                return f(s, d)
-            finally:
-                with _ls_lock:
-                    _ls_state["depth"] -= 1
-                    if _ls_state["depth"] == 0:
-                        s.conf.set(key, _ls_state["old"])
-
-        return inner
-
-    for k in list(q):
-        if k.startswith("streaming_"):
-            q[k] = _lowstate(q[k])
-
     # Order: (0) faces whose output changed this round (green before,
     # but against the old output), (1) keys NO board has ever sampled —
-    # streaming faces lead (the likeliest residual-risk class: 18
-    # availableNow micro-batch surfaces, none driver-verified), then
-    # value-oracled faces, then the rows-only sketch faces last —
+    # value-oracled faces first, the rows-only sketch faces last —
     # (2) previously-verified-green keys.
     def _prio(k: str) -> tuple[int, int]:
         if k in _CHANGED_R5:
@@ -3235,8 +2457,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if k in _EVER_RED:
             return (0, 100 + _EVER_RED.index(k))
         if k not in _DRIVER_SAMPLED:
-            if k.startswith("streaming_"):
-                return (1, 0)
             return (1, 2 if k in _NO_ORACLE else 1)
         return (2, 0)
 
@@ -3529,7 +2749,7 @@ SELECT source, count(*) AS n_docs FROM sequences GROUP BY 1
     from pyreshaper_spark.operators.gapfill import uptime_islands_sql
     from pyreshaper_spark.operators.rangejoin import interval_join_sql
 
-    _INTERVAL_LABEL_SQL = (
+    o["interval_label_1h"] = (
         f"WITH {seq_cte('base')},\n"
         f"hot AS (SELECT source, bucket_s "
         f"FROM ({_TIER_AGG.format(w=3600)}) WHERE sum_n_tok > 60),\n"
@@ -3539,21 +2759,6 @@ SELECT source, count(*) AS n_docs FROM sequences GROUP BY 1
             "sequences", "wins", ("doc_id", "source", "event_s")
         )
     )
-    o["interval_label_1h"] = _INTERVAL_LABEL_SQL
-    # streaming stream-static labeling over static input ≡ the batch
-    # interval join — the identical relation is the oracle
-    o["streaming_label"] = _INTERVAL_LABEL_SQL
-    from pyreshaper_spark.streaming.joinss import time_join_sql
-
-    from pyreshaper_spark.functions.xhash import h32_sql as _h32_sql
-
-    o["streaming_ss_join"] = f"""
-WITH {seq_cte('base')},
-l AS (SELECT source, event_s, n_tok FROM sequences
-     WHERE {_h32_sql('doc_id')} % 2 = 0),
-r AS (SELECT source, event_s, n_tok FROM sequences
-     WHERE {_h32_sql('doc_id')} % 2 = 1)
-""" + time_join_sql("l", "r", 36000)
     o["tier_1h_retention"] = (
         f"WITH {seq_cte('base')},\n"
         f"tier AS ({_TIER_AGG.format(w=3600)})\n"
@@ -3895,9 +3100,6 @@ WITH documents_inj AS (
 
     o["sample_30pct"] = SMP.hash_sample_sql(3000)
     o["sample_k_per_source"] = SMP.sample_k_per_source_sql(15)
-    # bottom-k is arrival-order independent: the streaming run's final
-    # table IS the batch sample
-    o["streaming_sample"] = SMP.sample_k_per_source_sql(15)
     o["doc_len_deciles"] = SMP.doc_len_deciles_sql()
     o["quality_pctl"] = SMP.quality_pctl_sql()
     o["stratified_sample"] = SMP.stratified_sample_sql(
@@ -4078,16 +3280,6 @@ FROM filled
     o["token_movers_1d"] = (
         f"WITH {token_cte()}\n" + token_movers_sql(86400, k=5, min_count=2)
     )
-    # streaming top-k emits CLOSED buckets only: batch token_topk minus
-    # each source's final (still-open) bucket
-    o["streaming_topk"] = f"""
-WITH {token_cte()},
-ranked AS ({token_topk_sql(3600, 3)}),
-last AS (SELECT source, max(bucket_s) AS mb FROM ranked GROUP BY 1)
-SELECT r.source, r.bucket_s, r.token, r.cnt, r.rank
-FROM ranked r JOIN last ON r.source = last.source
-WHERE r.bucket_s < last.mb
-"""
     from pyreshaper_spark.operators.vocab import token_hapax_sql
 
     o["hapax_1h"] = f"WITH {token_cte()}\n" + token_hapax_sql(3600)
@@ -4376,181 +3568,6 @@ FROM filled
         f"FROM ({_TIER_AGG.format(w=600)}))\n"
         + rolling_agg_sql("tier", k=6)
     )
-    # streaming dedup availableNow over static input: surviving key set
-    # ≡ batch DISTINCT content hash over the md5-derived token arrays
-    # (cross-engine identical list rendering: '[1, 2, 3]')
-    from pyreshaper_spark.fixtures import VOCAB_SIZE
-    from pyreshaper_spark.functions.xhash import h32_sql
-
-    o["streaming_dedup"] = f"""
-SELECT DISTINCT md5(CAST(
-  list_transform(regexp_split_to_array(lower(text), '\\s+'),
-                 w -> {h32_sql('w')} % {VOCAB_SIZE})
-  AS VARCHAR)) AS content_key
-FROM documents
-"""
-    # streaming availableNow over static input ≡ the batch tier-0
-    o["streaming_tier0"] = (
-        f"WITH {seq_cte('base')}\n"
-        + _TIER_AGG.format(w=60).replace(
-            "count(*)", "CAST(count(*) AS BIGINT)"
-        )
-    )
-    # streaming hopping windows == raw-level batch hopping rollup
-    # (every raw event fans out to width/slide overlapping windows)
-    o["streaming_hopping"] = f"""
-WITH {seq_cte('base')}
-SELECT source,
-       CAST(win_start_s AS BIGINT)  AS win_start_s,
-       CAST(count(*) AS BIGINT)     AS cnt,
-       CAST(sum(n_tok) AS BIGINT)   AS sum_n_tok,
-       CAST(min(n_tok) AS BIGINT)   AS min_n_tok,
-       CAST(max(n_tok) AS BIGINT)   AS max_n_tok
-FROM (
-  SELECT source, n_tok,
-         (event_s - ((event_s % 600) + 600) % 600) - j * 600 AS win_start_s
-  FROM sequences CROSS JOIN generate_series(0, 5) AS g(j)
-)
-GROUP BY 1, 2
-"""
-    # the exactly-once raw sink lands the static input verbatim
-    o["streaming_raw_append"] = f"""
-WITH {seq_cte('base')}
-SELECT doc_id, source, CAST(n_tok AS BIGINT) AS n_tok,
-       CAST(event_s AS BIGINT) AS event_s
-FROM sequences
-"""
-    # lastseen's final upsert table ≡ one batch groupBy over the input
-    o["streaming_lastseen"] = f"""
-WITH {seq_cte('base')}
-SELECT source, count(*) AS n_rows,
-       CAST(min(event_s) AS BIGINT) AS first_s,
-       CAST(max(event_s) AS BIGINT) AS last_s
-FROM sequences GROUP BY 1
-"""
-    o["streaming_cascade_1h"] = (
-        f"WITH {seq_cte('base')}\n"
-        + _TIER_AGG.format(w=3600).replace(
-            "count(*)", "CAST(count(*) AS BIGINT)"
-        )
-    )
-    from pyreshaper_spark.operators.checks import (
-        check_suite_sql,
-        documents_rules,
-    )
-    from pyreshaper_spark.streaming.dq import streaming_rules
-
-    o["streaming_dq"] = "WITH " + check_suite_sql(
-        "documents", streaming_rules(documents_rules())
-    )
-    from pyreshaper_spark.operators.checks import check_suite_by_sql
-
-    o["streaming_dq_by_source"] = "WITH " + check_suite_by_sql(
-        "documents", streaming_rules(documents_rules())
-    )
-    from pyreshaper_spark.operators.gapfill import alert_hysteresis_sql
-
-    o["streaming_alert"] = (
-        f"WITH {seq_cte('base')},\n"
-        f"tier AS ({_TIER_AGG.format(w=600)}),"
-        + alert_hysteresis_sql("tier", 70, 40, final_cte="hyst")
-        + """,
-last AS (SELECT source, max(bucket_s) AS mb FROM tier GROUP BY 1)
-SELECT h.source, h.bucket_s, h.value, h.alert, h.event,
-       CAST(0 AS BIGINT) AS late_rows
-FROM hyst h JOIN last l ON l.source = h.source
-WHERE h.bucket_s < l.mb
-"""
-    )
-    # rate emits exactly the CLOSED buckets: batch counter_rate over
-    # tier-0(10m) minus each source's final (still-open) bucket; one
-    # in-order batch → late_rows = 0
-    o["streaming_rate"] = f"""
-WITH {seq_cte('base')},
-t10 AS (SELECT source, bucket_s, sum_n_tok FROM ({_TIER_AGG.format(w=600)})),
-cr AS (
-  SELECT source, bucket_s,
-         CAST(sum_n_tok AS BIGINT) AS value,
-         CAST(CASE WHEN lag(sum_n_tok) OVER w IS NULL THEN NULL
-                   WHEN sum_n_tok < lag(sum_n_tok) OVER w THEN sum_n_tok
-                   ELSE sum_n_tok - lag(sum_n_tok) OVER w END AS BIGINT)
-           AS increase,
-         (lag(sum_n_tok) OVER w IS NOT NULL
-          AND sum_n_tok < lag(sum_n_tok) OVER w) AS reset
-  FROM t10 WINDOW w AS (PARTITION BY source ORDER BY bucket_s)
-),
-last AS (SELECT source, max(bucket_s) AS mb FROM t10 GROUP BY 1)
-SELECT cr.source, cr.bucket_s, cr.value, cr.increase, cr.reset,
-       CAST(0 AS BIGINT) AS late_rows
-FROM cr JOIN last ON cr.source = last.source
-WHERE cr.bucket_s < last.mb
-"""
-    # quota emits the first crossing among CLOSED buckets: batch
-    # quota_cross over tier-0 minus crossings in each source's final
-    # (still-open) bucket
-    o["streaming_quota"] = f"""
-WITH {seq_cte('base')},
-t10 AS (SELECT source, bucket_s, sum_n_tok FROM ({_TIER_AGG.format(w=600)})),
-qc AS ({quota_cross_sql('t10', 700)}),
-last AS (SELECT source, max(bucket_s) AS mb FROM t10 GROUP BY 1)
-SELECT qc.source, qc.cross_bucket_s, qc.cum_at_cross
-FROM qc JOIN last ON qc.source = last.source
-WHERE qc.cross_bucket_s < last.mb
-"""
-    # anomaly emits one row per CLOSED bucket: batch anomaly_zflag
-    # over tier-0 minus each source's final (still-open) bucket
-    o["streaming_anomaly"] = f"""
-WITH {seq_cte('base')},
-t10 AS (SELECT source, bucket_s, sum_n_tok FROM ({_TIER_AGG.format(w=600)})),
-an AS ({anomaly_zflag_sql('t10')}),
-last AS (SELECT source, max(bucket_s) AS mb FROM t10 GROUP BY 1)
-SELECT an.source, an.bucket_s, an.sum_n_tok, an.roll_n, an.is_anomaly
-FROM an JOIN last ON an.source = last.source
-WHERE an.bucket_s < last.mb
-"""
-    from pyreshaper_spark.operators.gapfill import (
-        cusum_fixed_sql as _cf_sql,
-    )
-
-    o["streaming_cusum"] = f"""
-WITH {seq_cte('base')},
-t10 AS (SELECT source, bucket_s, sum_n_tok FROM ({_TIER_AGG.format(w=600)})),
-cu AS ({_cf_sql('t10', mu=55, h=120)}),
-last AS (SELECT source, max(bucket_s) AS mb FROM t10 GROUP BY 1)
-SELECT cu.source, cu.bucket_s, cu.value AS sum_n_tok, cu.cusum, cu.flag
-FROM cu JOIN last ON cu.source = last.source
-WHERE cu.bucket_s < last.mb
-"""
-    # sessions emits exactly the CLOSED sessions: batch sessionization
-    # minus each user's final (still-open) session
-    from pyreshaper_spark.operators.events import SESSION_GAP_S
-
-    gap = SESSION_GAP_S
-    o["streaming_sessions"] = f"""
-WITH e AS (
-  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ep FROM events
-),
-marked AS (
-  SELECT *,
-    CASE WHEN lag(ep) OVER w IS NULL
-              OR ep - lag(ep) OVER w > {gap} THEN 1 ELSE 0 END AS new_sess
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ep, event_id)
-),
-sess AS (
-  SELECT *, CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ep, event_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-  FROM marked
-),
-s AS (
-  SELECT user_id, session_idx, count(*) AS n_events,
-         min(ep) AS first_ep, max(ep) AS last_ep
-  FROM sess GROUP BY 1, 2
-)
-SELECT s.user_id, s.session_idx, s.n_events, s.first_ep, s.last_ep
-FROM s JOIN (SELECT user_id, max(session_idx) AS mx FROM s GROUP BY 1) m
-  ON s.user_id = m.user_id
-WHERE s.session_idx < m.mx
-"""
     # Driver-hashable output faces, mirroring queries() exactly:
     # DuckDB's `SELECT * REPLACE` rewrites the named columns in place
     # (same names, same positions) so both engines ship identical

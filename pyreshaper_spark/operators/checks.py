@@ -161,7 +161,7 @@ def _validate_rules(rules: list[Rule]) -> None:
 
 def suite_aggs(rules: list[Rule]) -> list[Column]:
     """The suite compiled to aggregate columns (_n, _v0.._vk) — shared
-    by the batch scan and the streaming monitor."""
+    by the whole-table and the per-key scan."""
     aggs = [F.count(F.lit(1)).cast("long").alias("_n")]
     for i, r in enumerate(rules):
         if r.distinct_col is not None:

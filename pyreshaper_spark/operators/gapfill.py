@@ -1073,9 +1073,8 @@ def cusum_fixed(
     """Page's one-sided CUSUM against a FIXED reference level ``mu``
     (the textbook control-chart form — :func:`cusum_detect` centers on
     the realized series mean instead, which needs the whole series).
-    The fixed target is what a STREAMING monitor can actually compute:
-    ``streaming.cusum.streaming_cusum`` is the run-to-completion twin
-    of this operator and its oracle.
+    The fixed target is what an incremental monitor can compute: each
+    bucket's flag depends only on the buckets before it.
 
     Same telescoping as :func:`cusum_detect`, no scaling needed since
     ``mu`` is an integer: with C_t = Σ_{j≤t}(x_j − mu) and C_0 = 0,

@@ -14,7 +14,7 @@ Each check returns the offending-row count (0 == pass) or raises
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 EXPECTED_COLUMNS = {"doc_id", "tokens", "n_tok", "source"}
@@ -29,24 +29,6 @@ def check_schema(seq: DataFrame) -> None:
     missing = EXPECTED_COLUMNS - set(seq.columns)
     if missing:
         raise ValidationError(f"sequences table missing columns: {sorted(missing)}")
-
-
-def count_nulls(seq: DataFrame) -> int:
-    """doc_id/tokens/source must be non-null; n_tok must equal size(tokens)."""
-    return seq.filter(
-        F.col("doc_id").isNull()
-        | F.col("tokens").isNull()
-        | F.col("source").isNull()
-        | (F.col("n_tok") != F.size("tokens"))
-    ).count()
-
-
-def count_duplicate_doc_ids(seq: DataFrame) -> int:
-    """doc_id is the record identity — duplicates are the analog of
-    overlapping slice files (a fatal error in the reference)."""
-    return (
-        seq.groupBy("doc_id").count().filter(F.col("count") > 1).count()
-    )
 
 
 def count_monotonicity_violations(tier: DataFrame) -> int:

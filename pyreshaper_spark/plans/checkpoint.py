@@ -1,11 +1,13 @@
 """Driver checkpoint — the `.s2s` Specifier + write-mode analog.
 
-A small JSON file recording, per run: the pinned input snapshot id,
-which pipeline steps committed, and which (source, salt) series chunks
-finished encoding. Saved with write-tmp-then-``os.replace`` (atomic)
-and ALWAYS after the corresponding data commit (write-ahead ordering,
-SURVEY.md §3.2) — so a crash between data commit and checkpoint save
-re-runs an idempotent step, never skips one.
+A small JSON file recording, per run: which pipeline steps committed,
+the attempt counter, the pinned salt count and the in-flight append
+cycle's pins. What has been ingested is not recorded here but in the
+ledger of the ``series_enc`` snapshot. Saved with
+write-tmp-then-``os.replace`` (atomic) and ALWAYS after the
+corresponding data commit (write-ahead ordering, SURVEY.md §3.2) — so
+a crash between data commit and checkpoint save re-runs an idempotent
+step, never skips one.
 
 Reference analog: `Specifier.write` → `.s2s` pickle plus the
 skip-existing / overwrite output checks [U: specification.py ::
@@ -21,12 +23,8 @@ from dataclasses import asdict, dataclass, field
 
 @dataclass
 class Checkpoint:
-    #: pinned IcebergLite snapshot id of the input table (0 = raw parquet)
-    input_snapshot: int = 0
     #: committed pipeline steps, e.g. "tier:60", "series", "encode"
     steps_done: list[str] = field(default_factory=list)
-    #: finished (source, salt) encode chunks
-    chunks_done: list[list] = field(default_factory=list)
     #: monotonically increasing attempt counter (lineage run id)
     attempt: int = 0
     #: nsalt resolved on the first encode run (0 = not yet resolved).
@@ -46,15 +44,6 @@ class Checkpoint:
     def mark_step(self, step: str) -> None:
         if step not in self.steps_done:
             self.steps_done.append(step)
-
-    def chunk_set(self) -> set[tuple[str, int]]:
-        return {(s, int(x)) for s, x in self.chunks_done}
-
-    def mark_chunks(self, chunks: list[tuple[str, int]]) -> None:
-        seen = self.chunk_set()
-        for s, x in chunks:
-            if (s, int(x)) not in seen:
-                self.chunks_done.append([s, int(x)])
 
     # -- persistence -----------------------------------------------------
     @classmethod

@@ -234,8 +234,6 @@ def _run_pipeline(
         # no-op (r1 advice).
         prior = Checkpoint.load(checkpoint_path)
         ckpt = Checkpoint(
-            input_snapshot=prior.input_snapshot,
-            chunks_done=prior.chunks_done,
             attempt=prior.attempt,
             nsalt=prior.nsalt,
             cycle=prior.cycle,  # in-flight cycle pins survive the replay
@@ -434,15 +432,6 @@ def _run_pipeline(
         snapshot_ids["metrics"] = write_lineage(
             spark, cat, ckpt.attempt, "encode"
         )
-        chunks = [
-            (r["source"], r["salt"])
-            for r in cat.read(spark, "series_enc", allow_empty=True)
-            .select("source", "salt")
-            .distinct()
-            .collect()
-        ]
-        with lock:
-            ckpt.mark_chunks(chunks)
 
     ENC_GROUP = f"pyreshaper-encode-{ckpt.attempt}"
     IDS_GROUP = f"pyreshaper-validate-ids-{ckpt.attempt}"
@@ -567,14 +556,9 @@ def _run_pipeline(
                     # let later cycles pin and merge it incrementally.
                     df = rollup_tier0(read(all_files), tier.width_s)
                 else:
-                    df = base.unionByName(df).groupBy(
-                        "source", "bucket_s"
-                    ).agg(
-                        F.sum("cnt").alias("cnt"),
-                        F.sum("sum_n_tok").alias("sum_n_tok"),
-                        F.min("min_n_tok").alias("min_n_tok"),
-                        F.max("max_n_tok").alias("max_n_tok"),
-                    )
+                    # buckets on both sides are already aligned to the
+                    # tier width, so the cascade is the pure merge
+                    df = rollup_cascade(base.unionByName(df), tier.width_s)
             elif prev_table is None:
                 # fresh run: tier 0 is the cached head's projection —
                 # the scan+aggregate already happened in the validate

@@ -1,10 +1,9 @@
 """Catalog binding: every table root is an IcebergLite warehouse.
 
-The write/read/maintenance paths in ``plans/``, ``streaming/`` and
-``jobs/`` resolve their catalog here, so the table format has one
-construction point. A root is a plain filesystem path; a URI root
-(``scheme://...``) is rejected instead of being treated as a relative
-directory name.
+The write/read/maintenance paths in ``plans/`` and ``jobs/`` resolve
+their catalog here, so the table format has one construction point. A
+root is a plain filesystem path; a URI root (``scheme://...``) is
+rejected instead of being treated as a relative directory name.
 """
 
 from __future__ import annotations

@@ -37,7 +37,7 @@ tables are sorted on (source, bucket_s) with stats on both columns,
 ``series_enc`` is clustered on source with stats on it, so a one-source,
 one-window query opens only the files whose ranges can hold it
 (:func:`stats_overlap`). Hive ``key=val`` partition directories are
-still supported for the streaming and curation tables: their entries
+still supported for the curation and index tables: their entries
 carry the partition tuple (parsed from the path) and
 `read(..., partition_filter=...)` prunes on it.
 
@@ -279,20 +279,6 @@ class IcebergLite:
             files.append(entry)
         return files
 
-    def create_table(self, name: str, schema_json: str) -> int:
-        """Idempotent CREATE TABLE: commit a zero-file snapshot that
-        records the table schema, so the table exists (and an empty
-        read can be typed via ``read(allow_empty=True)``) before any
-        data lands — Iceberg's create-before-stream contract for
-        streaming sinks. No-op when the table is already READABLE
-        (``current > 0``, matching :meth:`exists`; the current id is
-        returned unchanged and the schema argument is ignored — schema
-        evolution goes through ``add_column``)."""
-        log = self._read_log(name)
-        if log["current"]:
-            return log["current"]
-        return self._commit(name, [], "create", schema_json)
-
     def append(
         self,
         name: str,
@@ -345,9 +331,9 @@ class IcebergLite:
     ) -> int:
         """Idempotent append: commit ``df`` tagged with ``key`` unless a
         snapshot carrying that key already exists — Iceberg's
-        commit-dedup for exactly-once streaming sinks (the key is
-        typically ``<sink-id>:<epoch-id>``; a replayed foreachBatch
-        epoch finds its own earlier commit and no-ops). The key check
+        commit-dedup for exactly-once writers (the key is typically
+        ``<writer-id>:<batch-id>``; a replayed batch finds its own
+        earlier commit and no-ops). The key check
         happens BEFORE any data is written, so a duplicate costs one
         manifest read, zero parquet writes."""
         for s in self._read_log(name)["snapshots"]:
@@ -356,14 +342,14 @@ class IcebergLite:
         new = self._write_data(name, df, partition_by, stats_cols, options)
         parent = self._snapshot(name, None)
         if not self._has_rows(name, new):
-            # empty epoch: no rows → no snapshot, no key recorded (a
+            # empty batch: no rows → no snapshot, no key recorded (a
             # replay is vacuously idempotent). Emptiness comes from the
             # WRITTEN files (zero files for a partitioned write; footer
             # num_rows otherwise — early-exit, driver-local), so idle
-            # micro-batches don't grow the snapshot log and the
-            # foreachBatch sink needs no per-batch isEmpty() pre-scan
-            # re-running the batch source. The empty part file, if any,
-            # is unreferenced — remove_orphan_files sweeps it.
+            # batches don't grow the snapshot log and the caller needs
+            # no isEmpty() pre-scan re-running its source. The empty
+            # part file, if any, is unreferenced — remove_orphan_files
+            # sweeps it.
             return parent["id"]
         return self._commit(
             name, parent["files"] + new, "append", df.schema.json(),
@@ -983,9 +969,9 @@ class IcebergLite:
     ) -> int | None:
         """Bin-pack small-file compaction — Iceberg's
         ``rewrite_data_files``. Long-running append cycles (the
-        streaming ingest and the file-incremental pipeline both commit
-        per cycle) accrete many small parquet files per partition; at
-        100 TB that multiplies scan-planning and open() cost. This
+        file-incremental pipeline commits per cycle) accrete many small
+        parquet files per partition; at 100 TB that multiplies
+        scan-planning and open() cost. This
         rewrites every partition holding ≥ ``min_files`` files into
         ~``target_file_bytes`` files and commits a ``rewrite`` snapshot
         referencing the new files plus the untouched ones.

@@ -1,13 +1,11 @@
-"""CCF moments vs a brute-force reference, seasonal decomposition vs a
-hand-rolled centered-MA reference, and stream-stream time-join batch
-parity."""
+"""CCF moments vs a brute-force reference, and seasonal decomposition
+vs a hand-rolled centered-MA reference."""
 
 from __future__ import annotations
 
 import random
 from collections import defaultdict
 
-from pyspark.sql import functions as F
 
 
 def _tier(spark, rows):
@@ -141,30 +139,3 @@ def test_seasonal_decompose_pure_seasonal_signal(spark):
         comp = int(r["sum_det"]) / (r["n_obs"] * 2 * 4)
         assert comp == pat[r["phase"]] - mean
 
-
-def test_streaming_time_join_batch_parity(spark):
-    from pyreshaper_spark.streaming.joinss import streaming_time_join
-
-    rng = random.Random(2)
-    mk = lambda: [
-        (rng.choice("ab"), rng.randint(0, 5000), rng.randint(1, 9))
-        for _ in range(60)
-    ]
-    lrows, rrows = mk(), mk()
-    schema = "source string, event_s long, n_tok long"
-    ldf = spark.createDataFrame(lrows, schema)
-    rdf = spark.createDataFrame(rrows, schema)
-    out = streaming_time_join(ldf, rdf, tol_s=300).collect()
-    want = sorted(
-        (ls, le, ln, re, rn)
-        for (ls, le, ln) in lrows
-        for (rs, re, rn) in rrows
-        if ls == rs and le <= re <= le + 300
-    )
-    got = sorted(
-        (r["source"], r["l_event_s"], r["l_n_tok"],
-         r["r_event_s"], r["r_n_tok"])
-        for r in out
-    )
-    assert got == want
-    assert len(got) > 0

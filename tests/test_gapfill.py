@@ -167,6 +167,27 @@ def test_cusum_equals_naive_recursion(spark):
             assert got[(s, b)] == (s_num, n, s_num > n * 100), (s, b)
 
 
+def test_cusum_fixed_batch_matches_recursion(spark):
+    from pyspark.sql import Row
+
+    from pyreshaper_spark.operators.gapfill import cusum_fixed
+
+    W = 600
+    vals = [100, 150, 30, 200, 90, 300, 10, 10, 10, 500]
+    tier = spark.createDataFrame(
+        [Row(source="a", bucket_s=i * W, sum_n_tok=v)
+         for i, v in enumerate(vals)]
+    )
+    out = {
+        r.bucket_s: (r.cusum, r.flag)
+        for r in cusum_fixed(tier, mu=100, h=150).collect()
+    }
+    s = 0
+    for i, v in enumerate(vals):
+        s = max(0, s + v - 100)
+        assert out[i * W] == (s, s > 150), i
+
+
 def test_interarrival_tie_and_bucket_attribution(spark):
     from pyreshaper_spark.operators.gapfill import interarrival
 

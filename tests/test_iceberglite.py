@@ -542,21 +542,11 @@ def test_partition_value_text_survives_directory_roundtrip(spark, cat):
     assert {r["source"] for r in got.collect()} == {"00", "07", "1.50"}
 
 
-def test_create_table_idempotent_and_staged_interplay(spark, cat):
-    """create_table commits a typed zero-file head; it is a no-op on a
-    READABLE table (matching exists()). A log written by an older
-    version may hold a staged snapshot above ``current`` (current == 0
-    on a staged-only table): create still commits the readable head,
-    under a fresh id that never collides with the staged one."""
+def test_append_after_staged_only_log(spark, cat):
+    """A log written by an older version may hold a staged snapshot
+    above ``current`` (current == 0 on a staged-only table): the next
+    commit takes a fresh id that never collides with the staged one."""
     df = _df(spark, [("a", 0, 1)])
-    sid = cat.create_table("t", df.schema.json())
-    assert sid == 1 and cat.exists("t")
-    empty = cat.read(spark, "t", allow_empty=True)
-    assert empty.count() == 0 and set(empty.columns) == set(df.columns)
-    # idempotent: second create returns the current head, commits nothing
-    assert cat.create_table("t", df.schema.json()) == sid
-    assert len(cat.snapshots("t")) == 1
-
     # staged-only log: the appended snapshot is recorded without
     # advancing current, as stage=True commits of older versions did
     s_staged = cat.append("t2", df)
@@ -565,9 +555,44 @@ def test_create_table_idempotent_and_staged_interplay(spark, cat):
     log["snapshots"][0]["staged"] = True
     cat._write_log("t2", log)
     assert not cat.exists("t2")
-    c2 = cat.create_table("t2", df.schema.json())
+    c2 = cat.append("t2", _df(spark, [("b", 60, 2)]))
     assert c2 == s_staged + 1
     assert cat.exists("t2")
-    assert cat.read(spark, "t2", allow_empty=True).count() == 0
+    assert [r["source"] for r in cat.read(spark, "t2").collect()] == ["b"]
     # the staged snapshot stays readable by id and its data is intact
-    assert cat.read(spark, "t2", snapshot_id=s_staged).count() == 1
+    old = cat.read(spark, "t2", snapshot_id=s_staged)
+    assert [r["source"] for r in old.collect()] == ["a"]
+
+
+def test_append_once_commit_dedup(spark, tmp_path):
+    """A replayed commit key no-ops before writing any data."""
+    cat = IcebergLite(str(tmp_path / "wh"))
+    df = spark.createDataFrame([("d1", 1)], "doc_id string, v long")
+    s1 = cat.append_once("t", df, key="sink:0")
+    s2 = cat.append_once("t", df, key="sink:0")  # replay
+    assert s1 == s2
+    assert cat.read(spark, "t").count() == 1
+    s3 = cat.append_once("t", df, key="sink:1")  # a NEW epoch appends
+    assert s3 > s1
+    assert cat.read(spark, "t").count() == 2
+
+
+def test_append_once_empty_epoch_commits_nothing(spark, tmp_path):
+    """An empty micro-batch must not grow the snapshot log (no empty
+    snapshot, no commit key) — detected from the written file list, so
+    the foreachBatch sink needs no per-batch isEmpty() pre-scan."""
+    cat = IcebergLite(str(tmp_path / "wh"))
+    df = spark.createDataFrame([("d1", 1)], "doc_id string, v long")
+    s1 = cat.append_once("t", df, key="sink:0")
+    empty = df.filter("v < 0")
+    s2 = cat.append_once("t", empty, key="sink:1")
+    assert s2 == s1  # head unchanged — no new snapshot
+    log_snaps = [
+        s["id"] for s in cat._read_log("t")["snapshots"]
+    ]
+    assert log_snaps == [s1]
+    # the skipped epoch's key is NOT burned: a later non-empty retry
+    # of the same epoch id still lands
+    s3 = cat.append_once("t", df, key="sink:1")
+    assert s3 > s1
+    assert cat.read(spark, "t").count() == 2

@@ -12,9 +12,13 @@ from pyspark.sql import functions as F
 
 from pyreshaper_spark.config import RunConfig, TierSpec
 from pyreshaper_spark.fixtures import sequences_df
-from pyreshaper_spark.plans.checkpoint import Checkpoint
-from pyreshaper_spark.plans.pipeline import diagnostics, run_pipeline
+from pyreshaper_spark.plans.pipeline import (
+    diagnostics,
+    ingest_ledger,
+    run_pipeline,
+)
 from pyreshaper_spark.sources.iceberglite import IcebergLite
+from pyreshaper_spark.sources.readers import list_input_files
 
 SF = "/root/testdata/sf0.001"
 TIERS = (TierSpec("1m", 60), TierSpec("10m", 600), TierSpec("1h", 3600))
@@ -77,9 +81,13 @@ def test_full_run_then_resume_is_identical(spark, seq_path, tmp_path):
     dup = m.groupBy("source", "salt").count().filter(F.col("count") > 1).count()
     assert dup == 0
 
-    # checkpoint recorded every chunk
-    ckpt = Checkpoint.load(ck)
-    assert len(ckpt.chunk_set()) == m.count()
+    # the ledger holds exactly the listed input, and lineage has one
+    # row per live (source, salt) chunk of series_enc
+    assert ingest_ledger(r_cat)["files"] == list_input_files(cfg)
+    chunks = r_cat.read(spark, "series_enc").select("source", "salt").distinct()
+    assert sorted(m.select("source", "salt").collect()) == sorted(
+        chunks.collect()
+    )
 
     d = diagnostics(spark, cfg).collect()[0]
     assert d["points"] == spark.read.parquet(seq_path).count()

@@ -1,69 +1,9 @@
-"""streaming_topk state machine + token_movers brute force."""
+"""token_movers against a brute-force reference."""
 
 from __future__ import annotations
 
 import random
 from collections import Counter
-
-import pandas as pd
-
-from pyreshaper_spark.streaming.topk import topk_fn
-
-W = 3600
-
-
-class _FakeState:
-    def __init__(self):
-        self._v, self.exists = None, False
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v, self.exists = v, True
-
-
-def _run(batches, k=3, state=None):
-    state = state or _FakeState()
-    out = []
-    for pdf in batches:
-        got = list(topk_fn(W, k)(("s",), iter([pdf]), state))
-        if got:
-            out.extend(pd.concat(got).to_dict("records"))
-    return out, state
-
-
-def _pdf(rows):
-    return pd.DataFrame(rows, columns=["source", "event_s", "token"])
-
-
-def test_topk_emits_on_close_with_exact_order():
-    rows = (
-        [("s", 10, 7)] * 3 + [("s", 20, 5)] * 3 + [("s", 30, 9)] * 1
-        + [("s", W + 1, 1)]  # closes bucket 0
-    )
-    out, st = _run([_pdf(rows)], k=2)
-    # count ties (7 and 5 both x3) break by token ascending
-    assert [(r["bucket_s"], r["token"], r["cnt"], r["rank"])
-            for r in out] == [(0, 5, 3, 1), (0, 7, 3, 2)]
-    toks, cnts, ob, late = st.get
-    assert ob == W and late == 0 and dict(zip(toks, cnts)) == {1: 1}
-
-
-def test_topk_counts_accumulate_across_batches():
-    out, st = _run([_pdf([("s", 10, 4)] * 2), _pdf([("s", 20, 4)] * 2)])
-    assert out == []  # bucket still open
-    out2, _ = _run([_pdf([("s", W + 5, 4)])], state=st)
-    assert [(r["token"], r["cnt"]) for r in out2] == [(4, 4)]
-
-
-def test_topk_late_rows_dropped_and_counted():
-    out, st = _run([_pdf([("s", W + 5, 1)]), _pdf([("s", 10, 2)] * 3)])
-    assert out == []
-    toks, cnts, ob, late = st.get
-    assert ob == W and late == 3
-    assert 2 not in dict(zip(toks, cnts))
 
 
 def test_token_movers_brute_force(spark):
