@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -28,11 +29,19 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
+#: run-to-run ids in plan text, normalized before any truncation so
+#: PLANS.md changes only when a plan does
+_PLAN_IDS = re.compile(r"(#|plan_id=|RDD\[)\d+")
+#: written file names (fixed length, so they do not move a truncation);
+#: normalized only in PLANS.md, because checks match pending file names
+_PART_FILE = re.compile(r"part-\d+-[0-9a-f-]{36}")
+
+
 def plan_of(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain(mode)
-    return buf.getvalue()
+    return _PLAN_IDS.sub(r"\1x", buf.getvalue())
 
 
 def main() -> None:
@@ -739,8 +748,8 @@ def main() -> None:
              "source-only exchange (the other exchanges are the two "
              "input tier aggs)",
              "Join" not in p_asof_n and "Window" in p_asof_n
-             and len(__import__("re").findall(
-                 r"hashpartitioning\(source#\d+, \d+\)", p_asof_n)) == 1),
+             and len(re.findall(
+                 r"hashpartitioning\(source#x, \d+\)", p_asof_n)) == 1),
             ("interarrival: tokens pruned from the raw scan",
              "tokens" not in p_ia.split("ReadSchema")[1].split("\n")[0]
              if "ReadSchema" in p_ia else False),
@@ -1695,7 +1704,10 @@ def main() -> None:
         for desc, ok in checks:
             all_ok &= ok
             out.append(f"- [{'x' if ok else ' '}] {desc}\n")
-        out.append("\n```\n" + plan.strip()[:4000] + "\n```\n")
+        out.append(
+            "\n```\n" + _PART_FILE.sub("part-x", plan.strip()[:4000])
+            + "\n```\n"
+        )
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.writelines(out)
     print("PLANS.md written; all checks pass:", all_ok)
