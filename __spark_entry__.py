@@ -182,7 +182,7 @@ def entry(spark: SparkSession) -> DataFrame:
     enc_points) per source."""
     sf = "/root/testdata/sf0.001"
     tier1h = _norm_tier(_tiers(spark, sf)[3600])
-    series = transpose_to_series(_seq(spark, sf), nsalt=4, num_partitions=8)
+    series = transpose_to_series(_seq(spark, sf), nsalt=4)
     comp = (
         encode_series_table(series)
         .groupBy("source")
@@ -260,7 +260,7 @@ def _q_series_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     simply the per-source input counts — equality proves the whole
     reorganize+codec path is lossless (BASELINE.json:15)."""
     seq = _seq(spark, sf_dir)
-    series = transpose_to_series(seq, nsalt=4, num_partitions=8)
+    series = transpose_to_series(seq, nsalt=4)
     decoded = decode_series_table(encode_series_table(series))
     j = seq.alias("a").join(decoded.alias("b"), "doc_id")
     ok = j.filter(
@@ -519,7 +519,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         seq = _seq(spark, sf_dir, variant="skew")
         nsalt = max(4, suggest_nsalt(seq, target_chunk_rows=2000))
-        series = transpose_to_series(seq, nsalt=nsalt, num_partitions=8)
+        series = transpose_to_series(seq, nsalt=nsalt)
         decoded = decode_series_table(encode_series_table(series))
         j = seq.alias("a").join(decoded.alias("b"), "doc_id")
         ok = j.filter(
@@ -2386,7 +2386,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         per-doc token counts reproduce the per-source input totals)."""
         seq = _seq(spark, sf_dir)
         enc = encode_series_table(
-            transpose_to_series(seq, nsalt=4, num_partitions=8, pack=True)
+            transpose_to_series(seq, nsalt=4, pack=True)
         )
         per_chunk = enc.select(
             "source",

@@ -143,7 +143,7 @@ def run_bench(sf_dir: str, cpus: int, repeat: int = 1) -> dict:
             enc.unpersist()
         t0 = time.perf_counter()
         series = transpose_to_series(
-            seq, nsalt=8, num_partitions=max(cpus, 8), pack=True
+            seq, nsalt=8, pack=True
         )
         enc = encode_series_table(series).persist()
         enc.agg(F.sum("n").alias("n")).collect()

@@ -37,7 +37,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--output", required=True, help="IcebergLite warehouse root")
     ap.add_argument("--tiers", nargs="+", type=parse_tier, default=None)
     ap.add_argument("--nsalt", type=int, default=8)
-    ap.add_argument("--partitions", type=int, default=32)
     ap.add_argument("--write-mode", default="skip",
                     choices=["skip", "overwrite", "append"])
     ap.add_argument("--source-limit", type=int, default=None,
@@ -52,7 +51,6 @@ def main(argv: list[str] | None = None) -> None:
         input_path=args.input,
         output_path=args.output,
         nsalt=args.nsalt,
-        num_series_partitions=args.partitions,
         write_mode=args.write_mode,
         source_limit=args.source_limit,
         verify_fidelity=args.verify_fidelity,

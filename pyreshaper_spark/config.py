@@ -9,7 +9,9 @@ frozen dataclass serialized to JSON; validation mirrors the reference's
 two-phase (types, then values) check. The netcdf format's analog is
 ``input_format``: a parquet directory or an IcebergLite table. A spec
 JSON with a key that is not a field fails to load with a ``TypeError``
-naming that key.
+naming that key; the fix is to drop the key. A removed field is such a
+key: the encode shuffle's partition count, for one, is no longer a
+setting, because AQE sizes it from the data (``operators.transpose``).
 """
 
 from __future__ import annotations
@@ -69,7 +71,6 @@ class RunConfig:
         default_factory=lambda: tuple(TierSpec(n, w) for n, w in DEFAULT_TIERS)
     )
     nsalt: int = 8
-    num_series_partitions: int = 32
     write_mode: str = "skip"
     meta_once: bool = False
     #: cap on the number of source series processed (the reference's
@@ -91,7 +92,6 @@ class RunConfig:
             ("output_path", self.output_path, str),
             ("input_format", self.input_format, str),
             ("nsalt", self.nsalt, int),
-            ("num_series_partitions", self.num_series_partitions, int),
             ("write_mode", self.write_mode, str),
             ("meta_once", self.meta_once, bool),
             ("overlap", self.overlap, bool),
@@ -114,8 +114,6 @@ class RunConfig:
             raise ValueError(f"write_mode must be one of {_ALLOWED_WRITE_MODES}")
         if self.nsalt < 0:
             raise ValueError("nsalt must be >= 1, or 0 for size-aware auto")
-        if self.num_series_partitions < 1:
-            raise ValueError("num_series_partitions must be >= 1")
         if self.source_limit is not None and self.source_limit < 1:
             raise ValueError("source_limit must be >= 1 or None")
         if not self.tiers:

@@ -17,7 +17,10 @@ Execution shape (measured — see git history): the encoder consumes the
 series layout produced by ``transpose_to_series`` (hash-partitioned on
 the group key, sorted within partitions) and runs as **one
 ``mapInArrow`` pass over contiguous group runs** — no ``groupBy``
-re-shuffle, no Arrow→pandas object conversion. Tokens cross the
+re-shuffle, no Arrow→pandas object conversion. It runs one Python task
+per shuffle partition, and AQE sizes that count from the data (at most
+``spark.sql.shuffle.partitions``), because each task pays a fixed
+Python start-up cost whatever its rows. Tokens cross the
 JVM↔Python boundary once, as flat Arrow buffers read zero-copy into
 numpy. An earlier ``applyInPandas`` version spent more time converting
 list columns to pandas objects than encoding; the Arrow path encodes

@@ -10,7 +10,7 @@ Here the "variable" is ``source`` and the transpose is a single
 hash-partitioned shuffle:
 
     salt = pmod(xxhash64(doc_id), NSALT)          # skew splitter
-    repartition(P, source, salt)                  # series co-location
+    repartition(source, salt)                     # series co-location
     sortWithinPartitions(source, salt, event_s, doc_id)  # time order
 
 After this, every (source, salt) series chunk is contiguous and
@@ -27,13 +27,19 @@ Why this scales:
   stage, so range partitioning executes the pack over the corpus
   TWICE (measured 1.45 s → 1.08 s on the sf0.1 encode leg from this
   change alone; at 100 TB the sampling pass is a full extra read).
+* The partition count follows the data, not a setting: the shuffle
+  hashes into ``spark.sql.shuffle.partitions`` buckets and AQE
+  coalesces adjacent buckets up to its advisory size. Coalescing only
+  merges whole hash partitions and the sort runs after it, so a
+  (source, salt) group is never split. Each partition is one Python
+  task of the encoder's ``mapInArrow``, and a Python task has a fixed
+  start-up cost far above a small append's work, so a small input
+  runs a few tasks, not a fixed count of mostly empty ones.
 * Row balance comes from the SALT, not the partitioner: nsalt is
   sized so the hottest source splits into ~equal (source, salt)
-  groups (``suggest_nsalt``), giving groups ≫ partitions and bounded
-  balls-in-bins load for hash placement — the WeightBalanced analog.
-  ``strategy="range"`` remains for callers with few/unsalted,
-  wildly-unequal groups, where sampled boundaries are worth the extra
-  pass.
+  groups (``suggest_nsalt``): no group is much larger than
+  ``target_chunk_rows``, and with many groups per hash bucket the
+  buckets hold near-equal rows — the WeightBalanced analog.
 * The salt splits a hot source across NSALT partitions —
   ``applyInPandas`` groups are NOT covered by AQE skew handling, so
   salting is mandatory, not optional [BASELINE.json:14].
@@ -95,9 +101,7 @@ def suggest_nsalt(
 def transpose_to_series(
     seq: DataFrame,
     nsalt: int = 8,
-    num_partitions: int = 32,
     pack: bool = False,
-    strategy: str = "hash",
 ) -> DataFrame:
     """Reorganize row-per-doc slices into per-(source, salt) series layout.
 
@@ -111,24 +115,17 @@ def transpose_to_series(
     encoder consumes either form. Use for the encode path; keep
     ``pack=False`` where downstream wants the tokens array itself.
 
-    ``strategy``: "hash" (default — one pass; salted groups are already
-    size-equalized, see module docstring) or "range" (sampled
-    boundaries: an extra pass over the input INCLUDING the pack stage,
-    for callers with few/unequal unsalted groups). Either way rows with
-    an identical (source, salt) land in ONE partition, so every series
-    chunk is whole and contiguous after the within-partition sort — the
+    Rows with an identical (source, salt) land in ONE partition however
+    AQE sizes the shuffle (see module docstring), so every series chunk
+    is whole and contiguous after the within-partition sort — the
     encoder runs as a single mapInArrow pass with NO second shuffle.
     """
-    if strategy not in ("hash", "range"):
-        raise ValueError("strategy must be 'hash' or 'range'")
     if pack:
         from pyreshaper_spark.operators.encode import pack_series_payload
 
         seq = pack_series_payload(seq)
-    salted = with_salt(seq, nsalt)
-    parted = (
-        salted.repartition(num_partitions, "source", "salt")
-        if strategy == "hash"
-        else salted.repartitionByRange(num_partitions, "source", "salt")
+    return (
+        with_salt(seq, nsalt)
+        .repartition("source", "salt")
+        .sortWithinPartitions("source", "salt", "event_s", "doc_id")
     )
-    return parted.sortWithinPartitions("source", "salt", "event_s", "doc_id")

@@ -69,6 +69,7 @@ from pyreshaper_spark.plans.pipeline import (
     read_ingested,
     write_lineage,
 )
+from pyreshaper_spark.session import local_frame
 from pyreshaper_spark.sources.catalog import get_catalog
 from pyreshaper_spark.sources.iceberglite import IcebergLite
 from pyreshaper_spark.sources.readers import (
@@ -102,12 +103,12 @@ def _resolve_ids(
     spark: SparkSession, doc_ids: Sequence[str] | DataFrame
 ) -> DataFrame:
     if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select(F.col("doc_id").cast("string").alias("doc_id"))
-    else:
-        ids = spark.createDataFrame(
-            [(str(d),) for d in doc_ids], "doc_id string"
-        )
-    return ids.distinct()
+        return doc_ids.select(
+            F.col("doc_id").cast("string").alias("doc_id")
+        ).distinct()
+    return local_frame(
+        spark, "doc_id string", [(d,) for d in sorted(set(map(str, doc_ids)))]
+    )
 
 
 def _load_run(
@@ -311,9 +312,7 @@ def _repair_run(
         .drop("salt")
     )
     encoded = encode_series_table(
-        transpose_to_series(
-            rem_chunks, nsalt, cfg.num_series_partitions, pack=True
-        )
+        transpose_to_series(rem_chunks, nsalt, pack=True)
     )
     sid, rewritten, kept = cat.replace_rows(
         spark,
@@ -353,8 +352,8 @@ def _repair_run(
     # ---- tier cascade repair -------------------------------------------
     # every tier and filled commit replaces the affected sources' rows
     commit = dict(
-        keys=F.broadcast(spark.createDataFrame(
-            [(s,) for s in affected_sources], "source string"
+        keys=F.broadcast(local_frame(
+            spark, "source string", [(s,) for s in affected_sources]
         )),
         key_cols=("source",),
         stats_filter=of_sources,

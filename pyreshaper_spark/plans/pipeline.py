@@ -95,6 +95,7 @@ from pyreshaper_spark.operators.validate import (
     check_schema,
 )
 from pyreshaper_spark.plans.checkpoint import Checkpoint
+from pyreshaper_spark.session import local_frame
 from pyreshaper_spark.sources.catalog import get_catalog
 from pyreshaper_spark.sources.iceberglite import IcebergLite
 from pyreshaper_spark.sources.readers import (
@@ -418,9 +419,9 @@ def _run_pipeline(
         if resume and not todo:
             _validation_gate()  # nothing left to encode (a replay)
         else:
-            encoded = encode_series_table(transpose_to_series(
-                rows, nsalt, cfg.num_series_partitions, pack=True,
-            ))
+            encoded = encode_series_table(
+                transpose_to_series(rows, nsalt, pack=True)
+            )
             # append ONLY when resuming past a committed table (its
             # chunks stay live); a fresh/overwrite run replaces the
             # table — appending here would duplicate every chunk
@@ -640,8 +641,9 @@ def _run_pipeline(
             if keep is not None:
                 ingested = ingested.filter(F.col("source").isin(keep))
             bad = fidelity_bad_rows(spark, cat, ingested)
-            report = spark.createDataFrame(
-                [(int(bad), int(ckpt.attempt))], "bad_rows long, attempt long"
+            report = local_frame(
+                spark, "bad_rows long, attempt long",
+                [(int(bad), int(ckpt.attempt))],
             )
             snapshot_ids["fidelity"] = cat.overwrite("fidelity", report)
             if bad:

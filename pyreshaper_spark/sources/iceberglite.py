@@ -56,6 +56,9 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from pyreshaper_spark.session import local_frame
 
 
 class SnapshotNotFound(KeyError):
@@ -455,10 +458,8 @@ class IcebergLite:
         if not files:
             schema_json = snap.get("schema")
             if allow_empty and schema_json is not None:
-                from pyspark.sql.types import StructType
-
-                return spark.createDataFrame(
-                    [], StructType.fromJson(json.loads(schema_json))
+                return local_frame(
+                    spark, StructType.fromJson(json.loads(schema_json))
                 )
             raise SnapshotNotFound(
                 f"{name}@{snap.get('id')}: no files (empty snapshot or "
@@ -519,8 +520,6 @@ class IcebergLite:
             # survive the round-trip.
             sj = schema_by_id.get(self._file_seq(sdir))
             if sj is not None:
-                from pyspark.sql.types import StructType
-
                 reader = reader.schema(StructType.fromJson(json.loads(sj)))
             df = reader.parquet(*paths)
             if file_col is not None:
@@ -752,10 +751,8 @@ class IcebergLite:
                 raise SnapshotNotFound(
                     f"{name}: empty table with no recorded schema"
                 )
-            from pyspark.sql.types import StructType
-
-            return spark.createDataFrame(
-                [], StructType.fromJson(json.loads(schema_json))
+            return local_frame(
+                spark, StructType.fromJson(json.loads(schema_json))
             ).withColumn("_change_type", tag)
         # added files read under the TO snapshot's deletes (a delete in
         # the range may cover a file also added in the range — those

@@ -35,6 +35,7 @@ from pyspark.sql.types import StructType
 
 from pyreshaper_spark.config import RunConfig
 from pyreshaper_spark.operators.event_time import ensure_event_time
+from pyreshaper_spark.session import local_frame
 from pyreshaper_spark.sources.catalog import get_catalog
 
 _COLS = ["doc_id", "tokens", "n_tok", "source", "event_s"]
@@ -141,7 +142,7 @@ def read_input(
             .parquet(*map(_local_path, files))
         )
     else:
-        df = spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
+        df = local_frame(spark, StructType.fromJson(json.loads(schema)))
     if "input_file" not in df.columns:
         # captured at scan time (pre-shuffle) — the reference's
         # per-variable input-file accounting

@@ -66,7 +66,7 @@ def test_register_views(spark, tmp_path):
     sequences_df(spark, "/root/testdata/sf0.001").write.parquet(seq_path)
     cfg = RunConfig(
         input_path=seq_path, output_path=str(tmp_path / "wh"),
-        tiers=(TierSpec("1m", 60),), nsalt=2, num_series_partitions=4,
+        tiers=(TierSpec("1m", 60),), nsalt=2,
         source_limit=2,
     )
     run_pipeline(spark, cfg, str(tmp_path / "ck.json"))

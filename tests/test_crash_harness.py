@@ -94,7 +94,7 @@ def world(spark, tmp_path_factory):
     land(inp, "b.parquet", [f"b{k}" for k in range(6)], 40)
     cfg = RunConfig(
         input_path=inp, output_path=str(base / "wh"), tiers=TIERS,
-        nsalt=2, num_series_partitions=2, write_mode="append",
+        nsalt=2, write_mode="append",
     )
     run_pipeline(spark, cfg, str(base / "ck.json"))
     land(inp, "c.parquet", [f"c{k}" for k in range(5)], 90)

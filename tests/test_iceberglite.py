@@ -596,3 +596,35 @@ def test_append_once_empty_epoch_commits_nothing(spark, tmp_path):
     s3 = cat.append_once("t", df, key="sink:1")
     assert s3 > s1
     assert cat.read(spark, "t").count() == 2
+
+
+def _physical(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_key_frames_and_pruned_reads_run_no_python(spark, cat):
+    """The delete's key frames and a fully pruned ``allow_empty`` read
+    are JVM local relations: an RDD of pickled rows (``Scan
+    ExistingRDD``) would launch Python worker tasks in every job that
+    reads it."""
+    from pyreshaper_spark.plans.delete import _resolve_ids
+    from pyreshaper_spark.session import local_frame
+
+    ids = _resolve_ids(spark, ["d2", "d1", "d2", 7])
+    keys = local_frame(spark, "source string", [("a",), ("b",)])
+    for df in (ids, keys):
+        p = _physical(df)
+        assert "LocalTableScan" in p and "ExistingRDD" not in p, p
+    assert sorted(r["doc_id"] for r in ids.collect()) == ["7", "d1", "d2"]
+    assert ids.schema.simpleString() == "struct<doc_id:string>"
+
+    cat.append("t", spark.createDataFrame(
+        [("a", [1, 2], b"\x01", 5)],
+        "source string, tokens array<int>, payload binary, n long",
+    ))
+    empty = cat.read(spark, "t", path_filter=lambda p: False,
+                     allow_empty=True)
+    p = _physical(empty)
+    assert "LocalTableScan" in p and "ExistingRDD" not in p, p
+    assert empty.collect() == []
+    assert empty.schema == cat.read(spark, "t").schema

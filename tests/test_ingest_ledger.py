@@ -57,7 +57,7 @@ def land(inp: str, name: str, ids: list[str], t0: int = 0) -> str:
 def _cfg(tmp_path, **kw) -> RunConfig:
     base = dict(
         input_path=str(tmp_path / "in"), output_path=str(tmp_path / "wh"),
-        tiers=TIERS, nsalt=1, num_series_partitions=2,
+        tiers=TIERS, nsalt=1,
     )
     base.update(kw)
     return RunConfig(**base)

@@ -25,7 +25,7 @@ def seq_path(spark, tmp_path_factory):
 def test_source_limit_caps_series(spark, seq_path, tmp_path):
     cfg = RunConfig(
         input_path=seq_path, output_path=str(tmp_path / "out"),
-        tiers=TIERS, nsalt=2, num_series_partitions=4, source_limit=3,
+        tiers=TIERS, nsalt=2, source_limit=3,
     )
     run_pipeline(spark, cfg, str(tmp_path / "ck.json"))
     cat = IcebergLite(cfg.output_path)
@@ -48,7 +48,7 @@ def test_source_limit_caps_series(spark, seq_path, tmp_path):
 def test_verify_fidelity_step_passes(spark, seq_path, tmp_path):
     cfg = RunConfig(
         input_path=seq_path, output_path=str(tmp_path / "out"),
-        tiers=TIERS, nsalt=2, num_series_partitions=4,
+        tiers=TIERS, nsalt=2,
         verify_fidelity=True, source_limit=4,
     )
     res = run_pipeline(spark, cfg, str(tmp_path / "ck.json"))
@@ -61,7 +61,7 @@ def test_run_multi_sequential_specs(spark, seq_path, tmp_path):
     cfgs = [
         RunConfig(
             input_path=seq_path, output_path=str(tmp_path / f"out{i}"),
-            tiers=TIERS, nsalt=2, num_series_partitions=4, source_limit=2,
+            tiers=TIERS, nsalt=2, source_limit=2,
         )
         for i in range(2)
     ]
@@ -91,7 +91,7 @@ def test_make_config_cli_round_trip(tmp_path):
 def test_write_mode_overwrite_redoes_steps(spark, seq_path, tmp_path):
     cfg = RunConfig(
         input_path=seq_path, output_path=str(tmp_path / "out"),
-        tiers=TIERS, nsalt=2, num_series_partitions=4, source_limit=2,
+        tiers=TIERS, nsalt=2, source_limit=2,
     )
     ck = str(tmp_path / "ck.json")
     first = run_pipeline(spark, cfg, ck)
@@ -111,7 +111,7 @@ def test_meta_replication_on_tiers(spark, seq_path, tmp_path):
     row via broadcast join — the reference's metadata write loop."""
     cfg = RunConfig(
         input_path=seq_path, output_path=str(tmp_path / "out"),
-        tiers=TIERS, nsalt=2, num_series_partitions=4, source_limit=2,
+        tiers=TIERS, nsalt=2, source_limit=2,
     )
     run_pipeline(spark, cfg, str(tmp_path / "ck.json"))
     cat = IcebergLite(cfg.output_path)
@@ -142,7 +142,7 @@ def test_auto_nsalt(spark, seq_path, tmp_path):
     # pipeline accepts nsalt=0 (auto)
     cfg = RunConfig(
         input_path=seq_path, output_path=str(tmp_path / "out"),
-        tiers=TIERS, nsalt=0, num_series_partitions=4, source_limit=2,
+        tiers=TIERS, nsalt=0, source_limit=2,
     )
     res = run_pipeline(spark, cfg, str(tmp_path / "ck.json"))
     assert "encode" in res.steps_run
@@ -162,7 +162,7 @@ def test_write_mode_append_encodes_new_files(spark, tmp_path):
     seq.filter(part == 0).write.parquet(p)
     cfg = RunConfig(
         input_path=p, output_path=str(tmp_path / "out"),
-        tiers=TIERS, nsalt=2, num_series_partitions=4,
+        tiers=TIERS, nsalt=2,
         write_mode="append",
     )
     ck = str(tmp_path / "ck.json")
@@ -209,7 +209,7 @@ def test_append_cycle_crash_replay_is_exact(spark, tmp_path):
     seq.filter(part == 0).write.parquet(p)
     cfg = RunConfig(
         input_path=p, output_path=str(tmp_path / "out"),
-        tiers=TIERS, nsalt=2, num_series_partitions=4,
+        tiers=TIERS, nsalt=2,
         write_mode="append",
     )
     ck = str(tmp_path / "ck.json")
@@ -265,7 +265,7 @@ def test_overlap_mode_equals_sequential(spark, seq_path, tmp_path):
     committed table must be identical to the sequential run's."""
     seq_cfg = RunConfig(
         input_path=seq_path, output_path=str(tmp_path / "seq_out"),
-        tiers=TIERS, nsalt=2, num_series_partitions=4,
+        tiers=TIERS, nsalt=2,
     )
     ovl_cfg = seq_cfg.with_(output_path=str(tmp_path / "ovl_out"), overlap=True)
     r1 = run_pipeline(spark, seq_cfg, str(tmp_path / "ck1.json"))
@@ -293,7 +293,7 @@ def test_overlap_resume_after_partial_sequential_run(spark, seq_path, tmp_path):
     second thread) complete, and the result equals a clean run."""
     cfg = RunConfig(
         input_path=seq_path, output_path=str(tmp_path / "out"),
-        tiers=TIERS, nsalt=2, num_series_partitions=4, overlap=True,
+        tiers=TIERS, nsalt=2, overlap=True,
     )
     ck = str(tmp_path / "ck.json")
     # overlap is ignored when stop_after is set (sequential semantics)
@@ -328,7 +328,7 @@ def test_maintenance_compacts_append_cycles(spark, tmp_path):
     seq.filter(part == 0).write.parquet(p)
     cfg = RunConfig(
         input_path=p, output_path=str(tmp_path / "out"),
-        tiers=TIERS, nsalt=2, num_series_partitions=4,
+        tiers=TIERS, nsalt=2,
         write_mode="append",
     )
     ck = str(tmp_path / "ck.json")
@@ -463,7 +463,7 @@ def test_append_retention_on_fine_tier_keeps_coarse_history(spark, tmp_path):
     )
     cfg = RunConfig(
         input_path=p, output_path=str(tmp_path / "out"),
-        tiers=tiers, nsalt=2, num_series_partitions=4,
+        tiers=tiers, nsalt=2,
         write_mode="append",
     )
     ck = str(tmp_path / "ck.json")
@@ -496,7 +496,7 @@ def test_append_new_tier_backfills_full_history(spark, tmp_path):
     seq.filter(part == 0).write.parquet(p)
     base_kw = dict(
         input_path=p, output_path=str(tmp_path / "out"),
-        nsalt=2, num_series_partitions=4, write_mode="append",
+        nsalt=2, write_mode="append",
     )
     cfg1 = RunConfig(tiers=(TierSpec("1m", 60),), **base_kw)
     ck = str(tmp_path / "ck.json")
@@ -574,7 +574,7 @@ def test_maintain_job_cli_refresh(spark, tmp_path):
 
     cfg = RunConfig(
         input_path=f"{in_root}::seq", output_path=str(tmp_path / "out"),
-        tiers=TIERS, nsalt=2, num_series_partitions=4,
+        tiers=TIERS, nsalt=2,
         input_format="iceberglite",
     )
     cfg_p = str(tmp_path / "run.json")

@@ -80,7 +80,7 @@ def test_random_tier_ladders_match_direct_aggregation(
     out = str(tmp_path / "out")
     cfg = RunConfig(
         input_path=inp, output_path=out, tiers=tuple(tiers), nsalt=2,
-        num_series_partitions=4, overlap=bool(seed % 2),
+        overlap=bool(seed % 2),
     )
     run_pipeline(spark, cfg, str(tmp_path / "ckpt.json"))
     cat = IcebergLite(out)
@@ -138,7 +138,6 @@ def test_pre_epoch_input_end_to_end(spark, tmp_path):
     tiers = (TierSpec("1m", 60), TierSpec("10m", 600), TierSpec("1h", 3600))
     cfg = RunConfig(
         input_path=inp, output_path=out, tiers=tiers, nsalt=2,
-        num_series_partitions=4,
     )
     run_pipeline(spark, cfg, str(tmp_path / "ckpt.json"))
     cat = IcebergLite(out)

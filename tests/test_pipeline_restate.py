@@ -22,7 +22,6 @@ TIERS = (TierSpec("1m", 60), TierSpec("10m", 600), TierSpec("1h", 3600))
 def _cfg(inp, out, **kw):
     base = dict(
         input_path=inp, output_path=out, tiers=TIERS, nsalt=2,
-        num_series_partitions=4,
     )
     base.update(kw)
     return RunConfig(**base)

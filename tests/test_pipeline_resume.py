@@ -34,7 +34,6 @@ def seq_path(spark, tmp_path_factory):
 def _cfg(seq_path, out) -> RunConfig:
     return RunConfig(
         input_path=seq_path, output_path=str(out), tiers=TIERS, nsalt=4,
-        num_series_partitions=8,
     )
 
 

@@ -50,7 +50,7 @@ def test_read_rollup_routing_realtime_filters(spark, tmp_path):
     seq.filter(part == 0).write.parquet(p)
     cfg = RunConfig(
         input_path=p, output_path=str(tmp_path / "out"),
-        tiers=TIERS, nsalt=2, num_series_partitions=4,
+        tiers=TIERS, nsalt=2,
         write_mode="append",
     )
     ck = str(tmp_path / "ck.json")

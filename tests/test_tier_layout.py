@@ -55,7 +55,7 @@ def _cfg(root, name="", **kw) -> RunConfig:
     base = dict(
         input_path=str(root / f"in{name}"),
         output_path=str(root / f"wh{name}"),
-        tiers=TIERS, nsalt=2, num_series_partitions=2,
+        tiers=TIERS, nsalt=2,
     )
     base.update(kw)
     return RunConfig(**base)

@@ -20,7 +20,7 @@ NSALT = 4
 
 @pytest.fixture(scope="module")
 def series(spark, seq):
-    return transpose_to_series(seq, nsalt=NSALT, num_partitions=8).cache()
+    return transpose_to_series(seq, nsalt=NSALT).cache()
 
 
 @pytest.fixture(scope="module")
@@ -105,7 +105,7 @@ def test_lineage_columns_populated(encoded):
 def test_skewed_source_splits_across_salts(spark):
     """F3: hot source must spread over all NSALT chunks, none dominating."""
     sk = sequences_df(spark, SF_SMOKE, variant="skew")
-    series = transpose_to_series(sk, nsalt=NSALT, num_partitions=8)
+    series = transpose_to_series(sk, nsalt=NSALT)
     enc = encode_series_table(series)
     hot = enc.filter(F.col("source") == "srcHOT").select("salt", "n").collect()
     assert len(hot) == NSALT
@@ -116,7 +116,7 @@ def test_skewed_source_splits_across_salts(spark):
 def test_packed_path_roundtrip_exact(spark, seq):
     """pack=True (u16 binary through the shuffle) must be byte-exact
     with the list<int> path after decode."""
-    series = transpose_to_series(seq, nsalt=NSALT, num_partitions=8, pack=True)
+    series = transpose_to_series(seq, nsalt=NSALT, pack=True)
     assert "tok_bin" in series.columns and "tokens" not in series.columns
     dec = decode_series_table(encode_series_table(series))
     j = seq.alias("a").join(dec.alias("b"), "doc_id", "full_outer")
@@ -145,13 +145,55 @@ def test_chunk_cap_splits_large_groups(spark):
             "id as event_s",
         )
     )
-    series = transpose_to_series(seq, nsalt=1, num_partitions=2, pack=True)
+    series = transpose_to_series(seq, nsalt=1, pack=True)
     enc = encode_series_table(series).cache()
     assert enc.count() >= 2  # split into chunks
     assert enc.agg(F.max("n")).collect()[0][0] <= MAX_POINTS_PER_CHUNK
     dec = decode_series_table(enc)
     assert dec.count() == n
     assert dec.agg(F.sum("event_s")).collect()[0][0] == n * (n - 1) // 2
+
+
+def test_groups_stay_whole_when_aqe_sizes_the_shuffle(spark, seq):
+    """The transpose sets no partition count: AQE sizes the shuffle.
+    With many small hash partitions and a tiny advisory size, every
+    (source, salt) group must still be one chunk in one partition and
+    decode byte-exactly."""
+    conf = {
+        "spark.sql.shuffle.partitions": "16",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    }
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        series = transpose_to_series(seq, nsalt=NSALT, pack=True)
+        enc = encode_series_table(series).cache()
+        groups = (
+            with_salt(seq, NSALT).select("source", "salt").distinct().count()
+        )
+        assert enc.count() == groups
+        assert enc.select("source", "salt").distinct().count() == groups
+        assert enc.select("partition_id").distinct().count() > 1
+        dec = decode_series_table(enc)
+        j = seq.alias("a").join(dec.alias("b"), "doc_id", "full_outer")
+        bad = j.filter(
+            F.col("a.tokens").isNull()
+            | F.col("b.tokens").isNull()
+            | (F.col("a.tokens") != F.col("b.tokens"))
+            | (F.col("a.n_tok") != F.col("b.n_tok"))
+            | (F.col("a.event_s") != F.col("b.event_s"))
+            | (F.col("a.source") != F.col("b.source"))
+        )
+        assert bad.count() == 0
+        enc.unpersist()
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _wide_input(spark, n=40):
@@ -182,7 +224,7 @@ def test_wide_vocab_tokens_roundtrip(spark, pack):
     seq = _wide_input(spark)
     dec = decode_series_table(
         encode_series_table(
-            transpose_to_series(seq, nsalt=2, num_partitions=2, pack=pack)
+            transpose_to_series(seq, nsalt=2, pack=pack)
         )
     )
     j = seq.alias("a").join(dec.alias("b"), "doc_id", "full_outer")
@@ -203,7 +245,7 @@ def test_mixed_width_batches_roundtrip(spark):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
     try:
         seq = _wide_input(spark)
-        series = transpose_to_series(seq, nsalt=1, num_partitions=1, pack=True)
+        series = transpose_to_series(seq, nsalt=1, pack=True)
         enc = encode_series_table(series).cache()
         flags = {r["tok_payload"][0] for r in enc.collect()}
         assert flags & {2, 3}, f"expected a 32-bit payload flag, got {flags}"
@@ -224,7 +266,7 @@ def test_small_vocab_stays_u16(spark, seq):
     """Fixture-scale ids must keep the half-width payload (flag 0/1) —
     the wide path is pay-for-what-you-use."""
     enc = encode_series_table(
-        transpose_to_series(seq, nsalt=2, num_partitions=4, pack=True)
+        transpose_to_series(seq, nsalt=2, pack=True)
     )
     flags = {r["tok_payload"][0] for r in enc.select("tok_payload").collect()}
     assert flags <= {0, 1}, flags
@@ -236,7 +278,7 @@ def test_negative_token_rejected(spark):
     )
     for pack in (True, False):
         enc = encode_series_table(
-            transpose_to_series(seq, nsalt=1, num_partitions=1, pack=pack)
+            transpose_to_series(seq, nsalt=1, pack=pack)
         )
         with pytest.raises(Exception, match="negative token id"):
             enc.count()

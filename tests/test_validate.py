@@ -61,14 +61,14 @@ def test_defer_mode_prunes_tokens_and_encoder_enforces(seq):
     # on both the packed and the unpacked path
     for pack in (True, False):
         enc = encode_series_table(
-            transpose_to_series(broken, nsalt=2, num_partitions=4, pack=pack)
+            transpose_to_series(broken, nsalt=2, pack=pack)
         )
         with pytest.raises(Exception, match="n_tok == size"):
             enc.count()
     # clean input encodes fine under the same paths
     assert (
         encode_series_table(
-            transpose_to_series(seq, nsalt=2, num_partitions=4, pack=True)
+            transpose_to_series(seq, nsalt=2, pack=True)
         ).count()
         > 0
     )
@@ -144,7 +144,7 @@ def test_pipeline_rejects_bad_input_before_any_commit(
     ).write.parquet(inp)
     out = str(tmp_path / f"out_{overlap}")
     cfg = RunConfig(input_path=inp, output_path=out, nsalt=2,
-                    num_series_partitions=4, overlap=overlap)
+                    overlap=overlap)
     with pytest.raises(V.ValidationError, match="null/n_tok"):
         run_pipeline(spark, cfg, str(tmp_path / f"ckpt_{overlap}.json"))
     from pyreshaper_spark.sources.iceberglite import IcebergLite

@@ -8,8 +8,10 @@ the plan properties that matter at 100 TB:
   enters the aggregate shuffle);
 * partial + final hash aggregation (map-side combine) present;
 * gap-fill join and metadata joins broadcast the small side;
-* the encode path has exactly ONE exchange (the range repartition) —
-  the mapInArrow encoder adds no shuffle;
+* the encode path has exactly ONE exchange (the hash repartition on
+  the group key) — the mapInArrow encoder adds no shuffle;
+* the delete's victim ids are a JVM local relation, not an RDD of
+  pickled rows (no Python task per job that reads them);
 * per-source, per-window reads of tier tables prune files on the
   manifest's source/bucket_s stats and push both predicates into the
   parquet scan.
@@ -132,7 +134,7 @@ def main() -> None:
     ))
 
     # 3. encode path — exactly one exchange
-    series = transpose_to_series(seq, nsalt=4, num_partitions=8, pack=True)
+    series = transpose_to_series(seq, nsalt=4, pack=True)
     enc = encode_series_table(series)
     p = plan_of(enc)
     # formatted mode lists each node twice (tree + detail section)
@@ -141,7 +143,7 @@ def main() -> None:
         "Salted transpose + Gorilla encode (packed)",
         p,
         [
-            ("exactly one exchange (range repartition, no groupBy "
+            ("exactly one exchange (hash repartition, no groupBy "
              f"re-shuffle) — found {n_exchange}", n_exchange == 1),
             ("single hash partitioning on the group key (no range "
              "SAMPLING pass — that would execute the pack stage twice)",
@@ -649,12 +651,12 @@ def main() -> None:
     from pyreshaper_spark.operators.encode import decode_series_table
     from pyreshaper_spark.operators.similarity import cosine_near_dups
     from pyreshaper_spark.operators.transpose import with_salt
-    from pyreshaper_spark.plans.delete import victim_bucket_fix
+    from pyreshaper_spark.plans.delete import _resolve_ids, victim_bucket_fix
 
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     p_capemb = plan_of(cosine_near_dups(emb, num=2, den=5, max_bucket=40))
 
-    ids = spark.createDataFrame([("d1",), ("d2",)], "doc_id string")
+    ids = _resolve_ids(spark, ["d1", "d2"])
     victims = (
         with_salt(seq.join(F.broadcast(ids), "doc_id", "left_semi"), 4)
         .select("doc_id", "source", "salt", "event_s")
@@ -669,7 +671,7 @@ def main() -> None:
     # restate's victim-chunk decode: chunks named by series_enc metadata
     # doc_ids, decode bounded to those chunks via broadcast semi-joins
     enc_tbl = encode_series_table(
-        transpose_to_series(seq, nsalt=4, num_partitions=8, pack=True)
+        transpose_to_series(seq, nsalt=4, pack=True)
     )
     old_chunks = (
         enc_tbl.select("source", "salt", F.explode("doc_ids").alias("doc_id"))
@@ -704,6 +706,9 @@ def main() -> None:
              if "ReadSchema" in p_fix else False),
             ("tier fix: partial+final hash agg over the pruned rows",
              p_fix.count("HashAggregate") >= 2),
+            ("victim ids: a LocalTableScan, no Scan ExistingRDD (no "
+             "Python task per job that broadcasts them)",
+             "LocalTableScan" in p_fix and "ExistingRDD" not in p_fix),
             ("victim-chunk decode: chunk probe is broadcast semi-join; "
              "no cartesian anywhere",
              p_dec.count("LeftSemi") >= 2 and "BroadcastHashJoin" in p_dec
@@ -870,7 +875,7 @@ def main() -> None:
     rt_cfg = RunConfig(
         input_path=rt_in, output_path=os.path.join(rt_root, "out"),
         tiers=(TierSpec("1m", 60), TierSpec("10m", 600)),
-        nsalt=1, num_series_partitions=4, write_mode="append",
+        nsalt=1, write_mode="append",
     )
     run_pipeline(spark, rt_cfg, os.path.join(rt_root, "ck.json"))
     seq.limit(50).withColumn(

@@ -78,17 +78,15 @@ def run_once(
     label = f"execs_{execs}"
     out = os.path.join(workdir, f"out_{label}")
     cfgp = os.path.join(workdir, f"cfg_{label}.json")
-    # spill-aware partition sizing (SURVEY §"Optimize for scale"):
-    # series partitions sized so each sort/encode task holds ~300 MB,
-    # independent of executor count — the knob a real deployment sets
-    # from data volume, not cluster size
+    # the encode's partition count is AQE's: the shuffle hashes into
+    # spark.sql.shuffle.partitions (set below) and coalesces to the
+    # advisory size
     # overlap=True: tier-chain commits run concurrently with the encode
     # stage (two driver threads, disjoint tables) — the size-independent
     # driver-commit latency of the 9 small steps hides behind encode
     # executor work instead of adding serial, non-scaling wall time
     RunConfig(
-        input_path=seq_path, output_path=out, num_series_partitions=128,
-        overlap=True,
+        input_path=seq_path, output_path=out, overlap=True,
     ).write(cfgp)
     ckpt = os.path.join(workdir, f"ckpt_{label}.json")
     master = f"local-cluster[{execs},{CORES_PER_EXEC},{mem_mb}]"
