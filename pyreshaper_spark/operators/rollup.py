@@ -48,7 +48,8 @@ def floor_to(col: F.Column, width: int) -> F.Column:
     over the full int64 range. The DuckDB oracle twin is
     :func:`floor_sql` — DuckDB's integer ``//`` and ``%`` truncate
     toward zero (measured: ``(-7)//2 = -3``), so the oracle spells the
-    same pmod subtraction explicitly instead of using ``//``.
+    same pmod subtraction explicitly instead of using ``//``. The
+    driver-side twin for Python ints is :func:`floor_py`.
     """
     c = col.cast("long")
     return c - F.pmod(c, F.lit(width))
@@ -67,6 +68,14 @@ def floor_sql(expr: str, width: int) -> str:
     if not isinstance(width, int) or width <= 0:
         raise ValueError(f"width must be a positive int, got {width!r}")
     return f"(({expr}) - (((({expr}) % {width}) + {width}) % {width}))"
+
+
+def floor_py(x: int, width: int) -> int:
+    """Driver-side twin of :func:`floor_to` for Python ints (the
+    delete's victim buckets): Python's ``%`` is already the
+    non-negative remainder for a positive width, so ``x - x % w`` is
+    the same exact floor over the full int64 range."""
+    return x - x % width
 
 
 def bucket_col(width_s: int, src: str = "event_s") -> F.Column:

@@ -112,8 +112,10 @@ def transpose_to_series(
     ``pack=True`` converts ``tokens`` to a u16 binary column BEFORE the
     shuffle (operators.encode.pack_series_payload): half the shuffled
     bytes and no list<int> serialization through the exchange — the
-    encoder consumes either form. Use for the encode path; keep
-    ``pack=False`` where downstream wants the tokens array itself.
+    encoder consumes either form. Use for the bulk encode; keep
+    ``pack=False`` where downstream wants the tokens array itself, and
+    for a re-encode bounded by a few chunks (the delete's), where the
+    pack stage's Python tasks cost more than the bytes they save.
 
     Rows with an identical (source, salt) land in ONE partition however
     AQE sizes the shuffle (see module docstring), so every series chunk

@@ -11,20 +11,29 @@ metadata, and lineage metrics — without recomputing any of them from
 scratch.
 
 Work is proportional to what the victims actually touched, never to
-the corpus:
+the corpus, and each fact is computed once. The victim positions
+``(source, salt, event_s)`` are collected to the driver in one job (a
+compliance batch, not a corpus); the chunk keys, affected sources and
+every tier's victim buckets are built from that list as Arrow-backed
+local relations (:func:`session.local_frame`).
 
 * **series_enc** — only the (source, salt) chunks that contained a
   victim are re-encoded (from the remaining raw rows of exactly those
   chunks: salt = ``pmod(xxhash64(doc_id), nsalt)`` is derivable from
-  the victim list alone, using the checkpoint-pinned nsalt). The table
-  commit is a single-snapshot copy-on-write
+  the victim list alone, using the checkpoint-pinned nsalt), in one
+  Python stage: the encoder takes ``tokens`` itself, so the bulk
+  encode's pre-shuffle pack stage is not worth its task here. The
+  table commit is a single-snapshot copy-on-write
   :meth:`IcebergLite.replace_rows`: files that cannot hold an affected
   chunk (manifest ``source`` stats) are carried by reference.
 * **tiers** — a victim at event time t invalidates exactly one bucket
-  per tier width. Affected buckets at EVERY tier are re-aggregated
-  from the remaining raw rows of those buckets only (never from a
-  finer tier, whose live rows may be retention-pruned). Tier and
-  gap-filled tables are committed through
+  per tier width. The affected sources' remaining raw rows are scanned
+  ONCE into the pipeline's fused head (:func:`rollup.head_aggregate`
+  at tier 0's width, persisted), and every tier's victim buckets
+  re-aggregate from the head rows inside them — exact by
+  associativity, since every width is a multiple of tier 0's. Never
+  from a finer committed tier, whose live rows may be
+  retention-pruned. Tier and gap-filled tables are committed through
   :meth:`IcebergLite.replace_rows` keyed on the affected sources: each
   source's rows are rebuilt from its live rows outside the victim
   buckets plus the repaired buckets (a gap-filled row, and a tier row
@@ -32,12 +41,16 @@ the corpus:
   source). Tier files are sorted on (source, bucket_s) with manifest
   stats on both, so files whose ``source`` range holds no affected
   source are carried by reference.
-* **meta_source / metrics** — O(sources) / O(chunks) rebuilds.
+* **meta_source / metrics** — the affected sources' meta rows come
+  from the same head (:func:`rollup.meta_from_head`); metrics is an
+  O(chunks) rebuild.
 
-At a 10^12-row deployment the raw-side reads here prune to the
-affected buckets' row groups (the victim bucket list is a broadcast
-semi-join key set) and the tier reads to the files whose stats cover
-an affected source; nothing rescans the historical corpus.
+At a 10^12-row deployment the repair reads the affected sources' raw
+rows (the pushed ``source IN (...)`` filter prunes row groups) once for
+the head and once for the victim chunks, without ``tokens`` in the
+head scan, and the tier reads prune to the files whose stats cover an
+affected source. The victim lookup is still a narrow scan of every
+listed input file.
 
 Retention interplay: repair never *adds* history — repaired buckets
 are re-filtered against the live table's retention high-water mark, so
@@ -56,7 +69,12 @@ from pyspark.sql import functions as F
 from pyreshaper_spark.config import RunConfig
 from pyreshaper_spark.operators.encode import encode_series_table
 from pyreshaper_spark.operators.gapfill import gapfill_locf
-from pyreshaper_spark.operators.rollup import floor_to, rollup_tier0
+from pyreshaper_spark.operators.rollup import (
+    floor_py,
+    head_aggregate,
+    meta_from_head,
+    rollup_cascade,
+)
 from pyreshaper_spark.operators.transpose import (
     transpose_to_series,
     with_salt,
@@ -78,24 +96,48 @@ from pyreshaper_spark.sources.readers import (
     split_table_path,
 )
 
+#: a victim position: the (source, salt) chunk and the event time
+Position = tuple[str, int, int]
 
-def _bucket(width_s: int) -> F.Column:
-    return floor_to(F.col("event_s"), width_s).alias("bucket_s")
+
+def _victim_keys(
+    spark: SparkSession, positions: Sequence[Position], widths: Sequence[int]
+) -> tuple[list[str], DataFrame, list[DataFrame]]:
+    """The affected sources (sorted), the victim chunk keys
+    ``(source, salt)`` and, per width, the victim buckets
+    ``(source, bucket_s)`` — all from the driver-side position list."""
+    sources = sorted({s for s, _, _ in positions})
+    chunks = local_frame(
+        spark, "source string, salt int", sorted({p[:2] for p in positions})
+    )
+    buckets = [
+        local_frame(
+            spark, "source string, bucket_s long",
+            sorted({(s, floor_py(e, w)) for s, _, e in positions}),
+        )
+        for w in widths
+    ]
+    return sources, chunks, buckets
 
 
-def victim_bucket_fix(
-    rem_src: DataFrame, bad: DataFrame, width_s: int
+def _reencode(current: DataFrame, chunks: DataFrame, nsalt: int) -> DataFrame:
+    """The encoded ``series_enc`` rows of the victim chunks, rebuilt from
+    the rows of ``current`` that hash into them."""
+    rows = (
+        with_salt(current, nsalt)
+        .join(F.broadcast(chunks), ["source", "salt"], "left_semi")
+        .drop("salt")
+    )
+    return encode_series_table(transpose_to_series(rows, nsalt))
+
+
+def _fix_buckets(
+    head: DataFrame, buckets: DataFrame, width_s: int
 ) -> DataFrame:
-    """Recompute exactly the victim buckets of one tier from remaining
-    raw rows: broadcast semi-join on (source, bucket) prunes the scan to
-    the affected buckets, then rollup_tier0 re-aggregates at this tier's
-    width. The repair walk uses this for EVERY tier (plan-gated in
-    tools/plan_report.py §15)."""
-    return rollup_tier0(
-        rem_src.withColumn("bucket_s", _bucket(width_s))
-        .join(F.broadcast(bad), ["source", "bucket_s"], "left_semi")
-        .drop("bucket_s"),
-        width_s,
+    """One tier's victim buckets, re-aggregated at ``width_s`` from the
+    head rows inside them."""
+    return rollup_cascade(head, width_s).join(
+        F.broadcast(buckets), list(TIER_KEYS), "left_semi"
     )
 
 
@@ -140,7 +182,8 @@ def delete_docs(
 
     ``doc_ids`` may be a Python sequence or a one-column ``doc_id``
     DataFrame. The victim list is assumed driver-manageable (a
-    compliance batch, not a corpus) — it is broadcast into every probe.
+    compliance batch, not a corpus) — it is broadcast into every probe,
+    and the victims' positions are collected to the driver once.
 
     The repair reads only the ingest ledger's files, and the
     ``series_enc`` commit carries the ledger unchanged, so a file whose
@@ -164,22 +207,18 @@ def delete_docs(
         if set(listed) - set(led["files"])
         else ingested
     )
-    victims = (
-        with_salt(
+    positions = [
+        tuple(r)
+        for r in with_salt(
             seq.join(F.broadcast(ids), "doc_id", "left_semi"), nsalt
         )
-        .select("doc_id", "source", "salt", "event_s")
-        .cache()
-    )
-    n_victims = victims.count()
-    report: dict = {"deleted_rows": n_victims, "snapshot_ids": {}}
-    if n_victims == 0:
-        victims.unpersist()
-        return report
-
-    remaining = ingested.join(F.broadcast(ids), "doc_id", "left_anti")
-    _repair_run(spark, cfg, cat, ckpt, nsalt, victims, remaining, report)
-    victims.unpersist()
+        .select("source", "salt", "event_s")
+        .collect()
+    ]
+    report: dict = {"deleted_rows": len(positions), "snapshot_ids": {}}
+    if positions:
+        remaining = ingested.join(F.broadcast(ids), "doc_id", "left_anti")
+        _repair_run(spark, cfg, cat, ckpt, nsalt, positions, remaining, report)
     return report
 
 
@@ -251,23 +290,20 @@ def restate_docs(
     new_rows = seq.join(F.broadcast(ids), "doc_id", "left_semi").select(
         "doc_id", "source", "event_s"
     )
-    victims = (
-        with_salt(old_rows.unionByName(new_rows), nsalt)
+    # one position per (doc, placement): a doc that did not move is
+    # both old and new at the same place
+    victims = {
+        tuple(r)
+        for r in with_salt(old_rows.unionByName(new_rows), nsalt)
         .select("doc_id", "source", "salt", "event_s")
-        .distinct()
-        .cache()
-    )
-    n_victims = victims.count()
-    report: dict = {"restated_positions": n_victims, "snapshot_ids": {}}
-    if n_victims == 0:
-        victims.unpersist()
-        return report
-
-    _repair_run(
-        spark, cfg, cat, ckpt, nsalt, victims, seq, report,
-        ledger={"files": listed, "schema": led["schema"]},
-    )
-    victims.unpersist()
+        .collect()
+    }
+    report: dict = {"restated_positions": len(victims), "snapshot_ids": {}}
+    if victims:
+        _repair_run(
+            spark, cfg, cat, ckpt, nsalt, [v[1:] for v in victims], seq,
+            report, ledger={"files": listed, "schema": led["schema"]},
+        )
     return report
 
 
@@ -277,21 +313,19 @@ def _repair_run(
     cat: IcebergLite,
     ckpt: Checkpoint,
     nsalt: int,
-    victims: DataFrame,
+    positions: Sequence[Position],
     current: DataFrame,
     report: dict,
     ledger: dict | None = None,
 ) -> None:
-    """Shared incremental repair: given victim positions (doc_id,
-    source, salt, event_s — every placement whose chunk/buckets are
-    stale) and ``current`` (the full post-change input relation),
-    re-encode exactly the victim chunks and re-aggregate exactly the
-    victim buckets so every table equals a from-scratch run on
-    ``current``. ``ledger`` replaces the ``series_enc`` ingest ledger
-    (None carries it unchanged)."""
-    remaining = current
-    affected_sources = sorted(
-        r[0] for r in victims.select("source").distinct().collect()
+    """Shared incremental repair: given victim ``positions`` (every
+    placement whose chunk/buckets are stale) and ``current`` (the full
+    post-change input relation), re-encode exactly the victim chunks and
+    re-aggregate exactly the victim buckets so every table equals a
+    from-scratch run on ``current``. ``ledger`` replaces the
+    ``series_enc`` ingest ledger (None carries it unchanged)."""
+    affected_sources, chunk_keys, victim_buckets = _victim_keys(
+        spark, positions, [t.width_s for t in cfg.tiers]
     )
     report["affected_sources"] = affected_sources
 
@@ -305,21 +339,12 @@ def _repair_run(
         return i < len(affected_sources) and affected_sources[i] <= hi
 
     # ---- series_enc: re-encode exactly the affected chunks ------------
-    chunk_keys = victims.select("source", "salt").distinct()
-    rem_chunks = (
-        with_salt(remaining, nsalt)
-        .join(F.broadcast(chunk_keys), ["source", "salt"], "left_semi")
-        .drop("salt")
-    )
-    encoded = encode_series_table(
-        transpose_to_series(rem_chunks, nsalt, pack=True)
-    )
     sid, rewritten, kept = cat.replace_rows(
         spark,
         "series_enc",
         keys=F.broadcast(chunk_keys),
         key_cols=("source", "salt"),
-        replacement=encoded,
+        replacement=_reencode(current, chunk_keys, nsalt),
         stats_filter=of_sources,
         stats_cols=("source",),
         options={"parquet.block.size": 32 * 1024 * 1024},
@@ -334,100 +359,100 @@ def _repair_run(
         spark, cat, ckpt.attempt, "delete"
     )
 
-    # ---- meta_source: recompute affected sources' rows ----------------
-    meta_new = remaining.filter(F.col("source").isin(affected_sources)).groupBy(
-        "source"
-    ).agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tok").alias("total_tok"),
-        F.min("event_s").alias("first_event_s"),
-        F.max("event_s").alias("last_event_s"),
-    )
-    meta_keep = cat.read(spark, "meta_source", allow_empty=True).filter(
-        ~F.col("source").isin(affected_sources)
-    )
-    meta = meta_keep.unionByName(meta_new)
-    report["snapshot_ids"]["meta_source"] = cat.overwrite("meta_source", meta)
-
-    # ---- tier cascade repair -------------------------------------------
-    # every tier and filled commit replaces the affected sources' rows
-    commit = dict(
-        keys=F.broadcast(local_frame(
-            spark, "source string", [(s,) for s in affected_sources]
-        )),
-        key_cols=("source",),
-        stats_filter=of_sources,
-        sort_by=TIER_KEYS,
-        stats_cols=TIER_KEYS,
-    )
-    mc = None
-    if not cfg.meta_once:
-        mc = cat.read(spark, "meta_source", allow_empty=True).select(
-            "source",
-            F.col("n_docs").alias("src_n_docs"),
-            F.col("total_tok").alias("src_total_tok"),
+    # ONE scan of the affected sources' remaining raw rows feeds the
+    # meta rows and every tier's victim buckets; released on every exit
+    head = head_aggregate(
+        current.filter(F.col("source").isin(affected_sources)),
+        cfg.tiers[0].width_s,
+    ).persist()
+    try:
+        # ---- meta_source: recompute affected sources' rows ------------
+        meta = (
+            cat.read(spark, "meta_source", allow_empty=True)
+            .filter(~F.col("source").isin(affected_sources))
+            .unionByName(meta_from_head(head))
+        )
+        report["snapshot_ids"]["meta_source"] = cat.overwrite(
+            "meta_source", meta
         )
 
-    # Fix EVERY tier's affected buckets directly from the remaining raw
-    # rows of those buckets (rollup_tier0 at that tier's width — exact
-    # at any width by aggregate associativity). Deliberately NOT a
-    # cascade from the repaired finer tier: if a finer tier has a
-    # retention policy, its live rows are pruned, and a coarse victim
-    # bucket whose fine buckets aged out would repair from partial data
-    # — the same divergence class the pipeline's append path guards
-    # against. Cost stays bounded by the victim buckets (the broadcast
-    # bucket semi-join prunes the raw scan).
-    rem_src = remaining.filter(F.col("source").isin(affected_sources))
-    for tier in cfg.tiers:
-        tname = f"tier_{tier.name}"
-        w = tier.width_s
-        bad = victims.select("source", _bucket(w)).distinct()
-        fixed = victim_bucket_fix(rem_src, bad, w)
-        # the affected sources' live rows outside the victim buckets
-        untouched = (
-            cat.read(
-                spark, tname, stats_filter=of_sources,
-                # a retention-pruned tier may hold ZERO live rows for an
-                # affected source — an empty repair base, not an error
-                allow_empty=True,
+        # ---- tier cascade repair ---------------------------------------
+        # every tier and filled commit replaces the affected sources' rows
+        commit = dict(
+            keys=F.broadcast(local_frame(
+                spark, "source string", [(s,) for s in affected_sources]
+            )),
+            key_cols=("source",),
+            stats_filter=of_sources,
+            sort_by=TIER_KEYS,
+            stats_cols=TIER_KEYS,
+        )
+        mc = None
+        if not cfg.meta_once:
+            mc = cat.read(spark, "meta_source", allow_empty=True).select(
+                "source",
+                F.col("n_docs").alias("src_n_docs"),
+                F.col("total_tok").alias("src_total_tok"),
             )
-            .filter(F.col("source").isin(affected_sources))
-            .select(*fixed.columns)
-            .join(F.broadcast(bad), list(TIER_KEYS), "left_anti")
-        )
-        # the retention filter below applies only to what gets
-        # WRITTEN; the filled tables build from the pre-filter union
-        repaired = untouched.unionByName(fixed)
-        written = repaired
-        if tier.retention_buckets is not None:
-            # never resurrect aged-out buckets: re-filter against the
-            # live table's high-water mark (an empty live table has none,
-            # and nothing can be resurrected)
-            hw = cat.read(
-                spark, tname, allow_empty=True
-            ).agg(F.max("bucket_s")).collect()[0][0]
-            if hw is not None:
-                written = repaired.filter(
-                    F.col("bucket_s") > hw - tier.retention_buckets * w
+
+        # Fix EVERY tier's victim buckets from the head, i.e. from the
+        # remaining raw rows. Deliberately NOT a cascade from the
+        # repaired finer tier: if a finer tier has a retention policy,
+        # its live rows are pruned, and a coarse victim bucket whose fine
+        # buckets aged out would repair from partial data — the same
+        # divergence class the pipeline's append path guards against.
+        for tier, bad in zip(cfg.tiers, victim_buckets):
+            tname = f"tier_{tier.name}"
+            w = tier.width_s
+            fixed = _fix_buckets(head, bad, w)
+            # the affected sources' live rows outside the victim buckets
+            untouched = (
+                cat.read(
+                    spark, tname, stats_filter=of_sources,
+                    # a retention-pruned tier may hold ZERO live rows for
+                    # an affected source — an empty repair base, not an
+                    # error
+                    allow_empty=True,
                 )
-        if mc is not None:
-            written = written.join(F.broadcast(mc), "source")
-        report["snapshot_ids"][tname], _, _ = cat.replace_rows(
-            spark, tname, replacement=written, **commit
-        )
-
-        fname = f"{tname}_filled"
-        if cat.exists(fname):
-            # pipeline ordering: filled tables are built from the
-            # pre-retention tier (prune runs after the cascade)
-            report["snapshot_ids"][fname], _, _ = cat.replace_rows(
-                spark, fname, replacement=gapfill_locf(repaired, w),
-                **commit
+                .filter(F.col("source").isin(affected_sources))
+                .select(*fixed.columns)
+                .join(F.broadcast(bad), list(TIER_KEYS), "left_anti")
             )
+            # the retention filter below applies only to what gets
+            # WRITTEN; the filled tables build from the pre-filter union
+            repaired = untouched.unionByName(fixed)
+            written = repaired
+            if tier.retention_buckets is not None:
+                # never resurrect aged-out buckets: re-filter against
+                # the live table's high-water mark (an empty live table
+                # has none, and nothing can be resurrected)
+                hw = cat.read(
+                    spark, tname, allow_empty=True
+                ).agg(F.max("bucket_s")).collect()[0][0]
+                if hw is not None:
+                    written = repaired.filter(
+                        F.col("bucket_s") > hw - tier.retention_buckets * w
+                    )
+            if mc is not None:
+                written = written.join(F.broadcast(mc), "source")
+            report["snapshot_ids"][tname], _, _ = cat.replace_rows(
+                spark, tname, replacement=written, **commit
+            )
+
+            fname = f"{tname}_filled"
+            if cat.exists(fname):
+                # pipeline ordering: filled tables are built from the
+                # pre-retention tier (prune runs after the cascade)
+                report["snapshot_ids"][fname], _, _ = cat.replace_rows(
+                    spark, fname, replacement=gapfill_locf(repaired, w),
+                    **commit
+                )
+    finally:
+        head.unpersist()
 
     # ---- optional fidelity gate -----------------------------------------
     if cfg.verify_fidelity:
-        bad_rows = fidelity_bad_rows(spark, cat, remaining)
+        bad_rows = fidelity_bad_rows(spark, cat, current)
         if bad_rows:
             raise RuntimeError(
                 f"repair fidelity violated: {bad_rows} rows differ"

@@ -24,6 +24,7 @@ from pyreshaper_spark.operators.rollup import (
     bucket_col,
     bucket_trend_sql,
     bucket_trend,
+    floor_py,
     floor_sql,
     floor_to,
     rollup_cascade,
@@ -68,6 +69,41 @@ def test_floor_sql_matches_python_floor():
         assert b == (x // 600) * 600, x
     # and the hazard this guards against is real: bare // truncates
     assert con.sql("SELECT (-7) // 600").fetchone()[0] == 0
+
+
+def test_bucket_floor_twins_agree(spark):
+    """Spark floor_to, DuckDB floor_sql and the driver-side floor_py
+    give the same bucket for negative, zero, width-boundary and large
+    int64 event times, at every tier width."""
+    events = EVENTS + [
+        -3600, -3601, 3599, 3600, 86399, 86400, -86401,
+        2**63 - 1, -(2**63) + 86400,
+    ]
+    widths = [60, 600, 3600, 86400]
+    df = spark.createDataFrame([(e,) for e in events], "x long")
+    got_spark = {
+        (r["x"], w): r[f"b{w}"]
+        for r in df.select(
+            "x", *(floor_to(F.col("x"), w).alias(f"b{w}") for w in widths)
+        ).collect()
+        for w in widths
+    }
+    con = duckdb.connect()
+    vals = ", ".join(f"({e}::BIGINT)" for e in events)
+    cols = ", ".join(floor_sql("x", w) for w in widths)
+    got_sql = {
+        (r[0], w): b
+        for r in con.sql(
+            f"SELECT x, {cols} FROM (VALUES {vals}) t(x)"
+        ).fetchall()
+        for w, b in zip(widths, r[1:])
+    }
+    for e in events:
+        for w in widths:
+            want = (e // w) * w
+            assert floor_py(e, w) == want, (e, w)
+            assert got_spark[(e, w)] == want, (e, w)
+            assert got_sql[(e, w)] == want, (e, w)
 
 
 def test_tier0_negative_domain_matches_oracle(adversarial):

@@ -263,3 +263,32 @@ def test_delete_with_retention_on_fine_tier_repairs_coarse_from_raw(
     cat, ref = IcebergLite(cfg.output_path), IcebergLite(ref_cfg.output_path)
     for t in ("tier_1m", "tier_10m", "tier_10m_filled"):
         assert _rows(cat.read(spark, t)) == _rows(ref.read(spark, t)), t
+
+
+@pytest.mark.parametrize("op", ["delete", "restate"])
+def test_failed_repair_releases_its_cache(spark, tmp_path, monkeypatch, op):
+    """A repair that raises mid-walk (here: the tier_1h commit) leaves
+    nothing cached in the session."""
+    from pyreshaper_spark.plans.delete import restate_docs
+
+    seq = sequences_df(spark, SF).limit(200)
+    p = str(tmp_path / "seq")
+    seq.write.parquet(p)
+    cfg = _cfg(p, str(tmp_path / "out"))
+    ck = str(tmp_path / "ck.json")
+    run_pipeline(spark, cfg, ck)
+    victims = [r["doc_id"] for r in seq.limit(3).collect()]
+
+    replace_rows = IcebergLite.replace_rows
+
+    def failing(self, spark, table, *args, **kw):
+        if table == "tier_1h":
+            raise OSError("injected commit failure")
+        return replace_rows(self, spark, table, *args, **kw)
+
+    monkeypatch.setattr(IcebergLite, "replace_rows", failing)
+    spark.catalog.clearCache()
+    repair = delete_docs if op == "delete" else restate_docs
+    with pytest.raises(OSError, match="injected"):
+        repair(spark, cfg, ck, victims)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

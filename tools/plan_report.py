@@ -10,8 +10,9 @@ the plan properties that matter at 100 TB:
 * gap-fill join and metadata joins broadcast the small side;
 * the encode path has exactly ONE exchange (the hash repartition on
   the group key) — the mapInArrow encoder adds no shuffle;
-* the delete's victim ids are a JVM local relation, not an RDD of
-  pickled rows (no Python task per job that reads them);
+* the delete's victim ids and keys are JVM local relations, not RDDs
+  of pickled rows (no Python task per job that reads them), and its
+  tier fix reads one cached head instead of rescanning the input;
 * per-source, per-window reads of tier tables prune files on the
   manifest's source/bucket_s stats and push both predicates into the
   parquet scan.
@@ -33,10 +34,12 @@ sys.path.insert(0, REPO)
 
 #: run-to-run ids in plan text, normalized before any truncation so
 #: PLANS.md changes only when a plan does
-_PLAN_IDS = re.compile(r"(#|plan_id=|RDD\[)\d+")
+_PLAN_IDS = re.compile(r"(#|plan_id=|RDD\[|lambda [a-z]+_)\d+")
 #: written file names (fixed length, so they do not move a truncation);
 #: normalized only in PLANS.md, because checks match pending file names
 _PART_FILE = re.compile(r"part-\d+-[0-9a-f-]{36}")
+#: plan nodes that run Python workers
+_PYTHON_NODE = re.compile(r"MapInArrow|MapInPandas|EvalPython")
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -651,22 +654,41 @@ def main() -> None:
     from pyreshaper_spark.operators.encode import decode_series_table
     from pyreshaper_spark.operators.similarity import cosine_near_dups
     from pyreshaper_spark.operators.transpose import with_salt
-    from pyreshaper_spark.plans.delete import _resolve_ids, victim_bucket_fix
+    from pyreshaper_spark.operators.rollup import head_aggregate
+    from pyreshaper_spark.plans.delete import (
+        _fix_buckets,
+        _reencode,
+        _resolve_ids,
+        _victim_keys,
+    )
 
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     p_capemb = plan_of(cosine_near_dups(emb, num=2, den=5, max_bucket=40))
 
-    ids = _resolve_ids(spark, ["d1", "d2"])
-    victims = (
-        with_salt(seq.join(F.broadcast(ids), "doc_id", "left_semi"), 4)
-        .select("doc_id", "source", "salt", "event_s")
+    ids = _resolve_ids(
+        spark, [r[0] for r in seq.select("doc_id").limit(2).collect()]
     )
-    bad = victims.select(
-        "source",
-        ((F.col("event_s") / 600).cast("long") * 600).alias("bucket_s"),
-    ).distinct()
+    victims = seq.join(F.broadcast(ids), "doc_id", "left_semi")
+    positions = [
+        tuple(r)
+        for r in with_salt(victims, 4)
+        .select("source", "salt", "event_s")
+        .collect()
+    ]
+    sources, chunk_keys, (bad,) = _victim_keys(spark, positions, [600])
+    p_keys = plan_of(chunk_keys) + plan_of(bad)
     rem = seq.join(F.broadcast(ids), "doc_id", "left_anti")
-    p_fix = plan_of(victim_bucket_fix(rem, bad, 600))
+    rem_head = head_aggregate(
+        rem.filter(F.col("source").isin(sources)), 60
+    ).persist()
+    p_head = plan_of(rem_head)
+    rs_head = (
+        p_head.split("ReadSchema")[1].split("\n")[0]
+        if "ReadSchema" in p_head else ""
+    )
+    p_fix = plan_of(_fix_buckets(rem_head, bad, 600))
+    p_reenc = plan_of(_reencode(rem, chunk_keys, 4))
+    rem_head.unpersist()
 
     # restate's victim-chunk decode: chunks named by series_enc metadata
     # doc_ids, decode bounded to those chunks via broadcast semi-joins
@@ -689,26 +711,35 @@ def main() -> None:
     sections.append((
         "Repair path (delete/restate) + embedding-LSH bucket cap",
         "\n".join([
-            "--- cosine_near_dups(max_bucket=40) ---", p_capemb[:2400],
-            "--- victim_bucket_fix(10m tier) ---", p_fix[:2000],
-            "--- restate victim-chunk decode ---", p_dec[:2000],
+            "--- victim keys: chunk keys + 10m victim buckets ---",
+            p_keys[:440],
+            "--- repair head (affected sources' remaining rows) ---",
+            p_head[:760],
+            "--- tier fix (10m victim buckets from the head) ---",
+            p_fix[:900],
+            "--- victim-chunk re-encode ---", p_reenc[:880],
+            "--- restate victim-chunk decode ---", p_dec[:560],
+            "--- cosine_near_dups(max_bucket=40) ---", p_capemb[:260],
         ]),
         [
             ("emb bucket cap is a pre-join window count on the band key",
              "Window" in p_capemb and "bucket_n" in p_capemb),
             ("emb capped path: equi-joins only, no cartesian",
              no_cartesian(p_capemb)),
-            ("tier fix: victim-bucket probe is a BROADCAST semi-join "
-             "(scan side prunable, never shuffled by the victim list)",
-             "BroadcastHashJoin" in p_fix and "LeftSemi" in p_fix),
-            ("tier fix: tokens pruned from the raw scan",
-             "tokens" not in p_fix.split("ReadSchema")[1].split("\n")[0]
-             if "ReadSchema" in p_fix else False),
-            ("tier fix: partial+final hash agg over the pruned rows",
-             p_fix.count("HashAggregate") >= 2),
-            ("victim ids: a LocalTableScan, no Scan ExistingRDD (no "
-             "Python task per job that broadcasts them)",
-             "LocalTableScan" in p_fix and "ExistingRDD" not in p_fix),
+            ("victim keys: LocalTableScan, no Exchange over them, no "
+             "Scan ExistingRDD (no shuffle, no Python task)",
+             p_keys.count("LocalTableScan") >= 2
+             and "Exchange" not in p_keys and "ExistingRDD" not in p_keys),
+            ("tier fix: reads the persisted head (InMemoryTableScan) and "
+             "never scans the input a second time (its one parquet scan "
+             "is the cached head's)",
+             "InMemoryTableScan" in p_fix
+             and p_fix.count("Scan parquet") // 2 == 1),
+            ("repair head: tokens pruned from the raw scan ReadSchema",
+             bool(rs_head) and "tokens" not in rs_head),
+            ("victim-chunk re-encode: exactly one Python map node (no "
+             "pre-shuffle pack stage)",
+             len(_PYTHON_NODE.findall(p_reenc)) // 2 == 1),
             ("victim-chunk decode: chunk probe is broadcast semi-join; "
              "no cartesian anywhere",
              p_dec.count("LeftSemi") >= 2 and "BroadcastHashJoin" in p_dec
