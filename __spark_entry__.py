@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyreshaper_spark.fixtures import seq_cte, sequences_df  # noqa: E402
-from pyreshaper_spark.operators import dedup, multimodal, similarity, text  # noqa: E402
+from pyreshaper_spark.operators import dedup, similarity, text  # noqa: E402
 from pyreshaper_spark.operators.encode import (  # noqa: E402
     decode_series_table,
     encode_series_table,
@@ -46,7 +46,7 @@ def _utc(spark: SparkSession) -> None:
 # applicationId so a restarted session never serves stale cached plans.
 # Compute-once under concurrency: tools/oracle_check.py runs faces from
 # a thread pool, so each key holds a lock — two faces sharing a
-# training chain wait for one fill instead of both computing it.
+# cached relation wait for one fill instead of both computing it.
 import threading as _threading
 
 _MEMO: dict = {}
@@ -73,37 +73,6 @@ def _cached(spark: SparkSession, key: tuple, make) -> DataFrame:
     return _memo_fill(k, lambda: make().cache())
 
 
-def _cached_tuple(spark: SparkSession, key: tuple, make) -> tuple:
-    """Memoized tuple of DataFrames (trained models: assignments +
-    codebooks/centroids), each .cache()d — the train-once face of the
-    `trained=` kwargs on the k-means/PQ consumers, so one training
-    chain feeds every query that shares its parameters."""
-    k = (spark.sparkContext.applicationId, *key)
-    return _memo_fill(k, lambda: tuple(df.cache() for df in make()))
-
-
-def _lloyd8(spark: SparkSession, sf_dir: str) -> tuple:
-    """Shared Lloyd training (k=8, n_iter=2) for every k-means face."""
-    from pyreshaper_spark.operators import kmeans as KM
-
-    return _cached_tuple(
-        spark,
-        ("lloyd8", sf_dir),
-        lambda: KM.lloyd(_emb(spark, sf_dir), k=8, n_iter=2),
-    )
-
-
-def _pq16(spark: SparkSession, sf_dir: str) -> tuple:
-    """Shared PQ training (ks=16, n_iter=2) for every flat-PQ face."""
-    from pyreshaper_spark.operators import kmeans as KM
-
-    return _cached_tuple(
-        spark,
-        ("pq16", sf_dir),
-        lambda: KM.pq_train(_emb(spark, sf_dir), ks=16, n_iter=2),
-    )
-
-
 def _pairs200(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared MinHash-verified near-dup pair list (max_df=200) — six
     dedup-decision faces consume the same pair graph."""
@@ -126,7 +95,6 @@ def _cc200(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("cc200", sf_dir),
         lambda: connected_components(_pairs200(spark, sf_dir)),
     )
-
 
 
 def _seq(spark: SparkSession, sf_dir: str, variant: str = "base") -> DataFrame:
@@ -329,8 +297,7 @@ def _bigintify_sql(sql: str, *cols: str) -> str:
 def _md5_arr(col: str):
     """Spark face for token-ARRAY outputs: md5 of the comma-joined
     element string, so the driver's pandas canonicalizer (which cannot
-    hash lists) sees a plain string. Pairs with :func:`_md5_arr_sql`;
-    the `mm_frame_sample` idiom."""
+    hash lists) sees a plain string. Pairs with :func:`_md5_arr_sql`."""
     return F.md5(
         F.concat_ws(",", F.expr(f"transform({col}, x -> cast(x as string))"))
     )
@@ -341,25 +308,6 @@ def _md5_arr_sql(col: str) -> str:
     Spark's concat_ws('' on empty array) — DuckDB's array_to_string
     returns NULL for []."""
     return f"md5(coalesce(array_to_string({col}, ','), ''))"
-
-
-def _md_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, tokens) with md5-derived token ids — the cross-engine
-    token stream (vocab.py pattern) for oracles over token ARRAYS."""
-    from pyreshaper_spark.fixtures import VOCAB_SIZE
-    from pyreshaper_spark.functions.xhash import h32, words_col
-
-    return _cached(
-        spark,
-        ("md_tokens", sf_dir),
-        lambda: _docs(spark, sf_dir).select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            F.transform(
-                words_col(),
-                lambda w: F.pmod(h32(w), F.lit(VOCAB_SIZE)).cast("int"),
-            ).alias("tokens"),
-        ),
-    )
 
 
 def _md_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -390,37 +338,32 @@ _PII_INJECT = " contact bob.smith@example.com or 12345678901 at 10.0.42.7"
 
 #: Names the round-2 driver correctness sweep already verified green.
 _R02_CHECKED = frozenset({
-    "ann_ivf_kmeans", "ann_ivf_probe", "ann_lsh_pairs", "ann_topk_cosine",
-    "ann_topk_dot", "asof_10m_1h", "contamination_3g", "dedup_components",
-    "dedup_exact", "dedup_minhash_bucketcap", "dedup_minhash_capped",
-    "dedup_minhash_lsh", "dedup_ngram_capped", "dedup_ngram_jaccard",
-    "dedup_simhash", "dedup_survivors", "emb_near_dup", "events_cohorts",
-    "events_funnel", "events_in_sessions", "events_props",
-    "events_rollup_5m", "events_sessions", "events_type_pivot",
-    "fingerprint", "gapfill_10m", "interp_10m", "kmeans_assign", "lang_id",
-    "locf_10m", "mm_frame_sample", "mm_meta", "pack_assign_2k", "pii_scan",
-    "quality_score", "semdedup_pairs", "seqdup_crossdoc", "seqdup_intradoc",
-    "series_fidelity", "series_fidelity_skew", "source_counts",
-    "text_stats", "tier_10m", "tier_1d", "tier_1h", "tier_1h_retention",
-    "tier_1h_skew", "tier_1h_with_meta", "tier_1m", "topk_buckets",
+    "ann_ivf_probe", "ann_lsh_pairs", "ann_topk_cosine", "ann_topk_dot",
+    "asof_10m_1h", "dedup_components", "dedup_exact",
+    "dedup_minhash_bucketcap", "dedup_minhash_capped", "dedup_minhash_lsh",
+    "dedup_ngram_capped", "dedup_ngram_jaccard", "dedup_simhash",
+    "dedup_survivors", "emb_near_dup", "events_cohorts", "events_funnel",
+    "events_in_sessions", "events_props", "events_rollup_5m",
+    "events_sessions", "events_type_pivot", "fingerprint", "gapfill_10m",
+    "interp_10m", "lang_id", "locf_10m", "pii_scan", "quality_score",
+    "series_fidelity", "series_fidelity_skew", "source_counts", "text_stats",
+    "tier_10m", "tier_1d", "tier_1h", "tier_1h_retention", "tier_1h_skew",
+    "tier_1h_with_meta", "tier_1m", "topk_buckets",
 })
 
-#: Names the round-4 driver correctness board verified (48 hash-green
-#: + 2 rows-only sketch faces — no red rows).
+#: Names the round-4 driver correctness board verified (hash-green or
+#: rows-only sketch faces — no red rows).
 _R04_CHECKED = frozenset({
-    "ann_ivfpq_topk", "ann_pq_refined", "ann_pq_topk", "benford_n_tok",
-    "changepoint_1d", "doc_chunks_128", "doc_len_deciles", "dq_media",
-    "drift_tvd_1d", "emb_centroid_drift_1d", "emb_norm_stats",
-    "emb_outliers", "emb_src_centroid_d2", "eta_threshold_1d",
-    "events_ab_test", "events_sessions", "filter_verdict", "gaps_10m",
-    "hist_1h", "hopping_1h_10m", "kmeans_assign", "ks_drift_1d",
-    "mix_quality_budget", "mix_sources", "mix_temp_sqrt",
-    "mix_token_budget", "mk_trend_1d", "pack_windows_512", "pettitt_1d",
-    "pq_distortion", "quality_pctl", "rate_10m", "rolling_10m_6",
-    "rolling_median_10m", "rolling_slope_10m", "sample_30pct",
-    "sample_k_per_source", "smk_trend", "split_assign",
-    "stratified_sample", "theilsen_1d", "tier_1h_cube", "tier_1h_ndv",
-    "tier_1h_ndv_approx", "tier_1h_ohlc", "tier_1h_pct",
+    "benford_n_tok", "changepoint_1d", "doc_len_deciles", "drift_tvd_1d",
+    "emb_centroid_drift_1d", "emb_norm_stats", "emb_outliers",
+    "emb_src_centroid_d2", "eta_threshold_1d", "events_ab_test",
+    "events_sessions", "filter_verdict", "gaps_10m", "hist_1h",
+    "hopping_1h_10m", "ks_drift_1d", "mix_quality_budget", "mix_sources",
+    "mix_temp_sqrt", "mix_token_budget", "mk_trend_1d", "pettitt_1d",
+    "quality_pctl", "rate_10m", "rolling_10m_6", "rolling_median_10m",
+    "rolling_slope_10m", "sample_30pct", "sample_k_per_source", "smk_trend",
+    "split_assign", "stratified_sample", "theilsen_1d", "tier_1h_cube",
+    "tier_1h_ndv", "tier_1h_ndv_approx", "tier_1h_ohlc", "tier_1h_pct",
     "tier_1h_pct_approx", "trend_1d", "twa_1h", "uptime_islands_10m",
 })
 
@@ -428,22 +371,18 @@ _R04_CHECKED = frozenset({
 #: NOT here have never been driver-verified and sort ahead of the rest
 #: so the round-5 sweep reaches first-time surface first.
 _DRIVER_SAMPLED = _R02_CHECKED | _R04_CHECKED | frozenset({
-    "alert_hyst_10m", "ann_hard_negatives", "ann_binq_topk",
-    "ann_mmr_topk", "asof_fwd_tol", "asof_nearest_tol", "cusum_1h",
-    "cusum_fixed_10m", "datacard_by_source", "dedup_cluster_sizes",
-    "dedup_containment", "dedup_minhash_incr", "dedup_rate_by_source",
-    "dedup_survivors_quality", "dedup_winnow", "doc_chunks_128",
-    "dup_rate_1d", "emb_centroid_drift_1d", "emb_cluster_sample",
+    "alert_hyst_10m", "ann_hard_negatives", "ann_binq_topk", "ann_mmr_topk",
+    "asof_fwd_tol", "asof_nearest_tol", "cusum_1h", "cusum_fixed_10m",
+    "datacard_by_source", "dedup_cluster_sizes", "dedup_containment",
+    "dedup_minhash_incr", "dedup_rate_by_source", "dedup_survivors_quality",
+    "dedup_winnow", "dup_rate_1d", "emb_centroid_drift_1d",
     "emb_near_dup_bucketcap", "emb_norm_stats", "emb_outliers",
-    "emb_pc1_proj", "emb_src_centroid_d2", "events_attribution",
-    "events_conversion_lag", "events_dau_wau", "events_engagement_hist",
-    "events_funnel_1h", "events_paths3", "events_rfm",
-    "events_transitions", "fertility_by_source", "hybrid_topk_rrf",
-    "interarrival_1h", "ivf_balance", "lang_confusion",
-    "levelshift_1h", "minhash_topk", "ngram_novelty_1d",
-    "pack_stats_2k", "pack_windows_512", "pii_rate_1d", "pii_redact",
-    "pq_codes", "pq_distortion", "split_leakage_free", "tier_1h_policy",
-    "tier_1mo", "tier_1w",
+    "emb_src_centroid_d2", "events_attribution", "events_conversion_lag",
+    "events_dau_wau", "events_engagement_hist", "events_funnel_1h",
+    "events_paths3", "events_rfm", "events_transitions", "fertility_by_source",
+    "hybrid_topk_rrf", "interarrival_1h", "lang_confusion", "levelshift_1h",
+    "minhash_topk", "pii_rate_1d", "pii_redact", "split_leakage_free",
+    "tier_1h_policy", "tier_1mo", "tier_1w",
 })
 
 #: Keys that appeared RED on any driver board (r1–r3). The r4 board
@@ -459,22 +398,22 @@ _EVER_RED: tuple[str, ...] = ()
 _CHANGED_R5 = ("dedup_exact",)
 
 #: NEVER-SAMPLED rows-only sketch faces (no SQL oracle by design —
-#: Datasketches HLL cascade / BPE segmentation outputs are
-#: engine-specific; pytest holds the accuracy bound). They sort LAST
-#: within the never-sampled class: the board's value-hash check adds
-#: nothing over the rows-only check they already get. (The other two
-#: rows-only faces, tier_1h_pct_approx/tier_1h_ndv_approx, were
-#: r4-board-sampled and take the previously-verified class instead.)
-_NO_ORACLE = frozenset({"bpe_segment", "tier_1h_ndv_sketch"})
+#: the Datasketches HLL cascade output is engine-specific; pytest
+#: holds the accuracy bound). They sort LAST within the never-sampled
+#: class: the board's value-hash check adds nothing over the rows-only
+#: check they already get. (The other two rows-only faces,
+#: tier_1h_pct_approx/tier_1h_ndv_approx, were r4-board-sampled and
+#: take the previously-verified class instead.)
+_NO_ORACLE = frozenset({"tier_1h_ndv_sketch"})
 
 #: Query faces whose operators carry decimal(38,0) sums internally
 #: (exact integer math — overflow-safe at 100 TB) but whose OUTPUT
 #: must ship as BIGINT: the driver's hash compares DuckDB's
 #: DECIMAL(38,0)→float64 fetch against Spark's exact Decimal objects
-#: and mismatches on identical values (round-2 `kmeans_assign`,
-#: round-3's five embedding queries). Applied uniformly at the end of
-#: queries()/oracle_sql(); values are fixture-bounded « 2^63 and the
-#: dtype lint in tests/test_oracle_types.py enforces the discipline.
+#: and mismatches on identical values (round-3's five embedding
+#: queries). Applied uniformly at the end of queries()/oracle_sql();
+#: values are fixture-bounded « 2^63 and the dtype lint in
+#: tests/test_oracle_types.py enforces the discipline.
 _FACE_BIGINT: dict[str, tuple[str, ...]] = {
     "drift_tvd_1d": ("tvd_num", "tvd_den"),
     "ks_drift_1d": ("ks_num", "ks_den"),
@@ -494,8 +433,8 @@ _FACE_BIGINT: dict[str, tuple[str, ...]] = {
 }
 
 #: Query faces with token-ARRAY output columns: pandas cannot hash
-#: lists, so the face ships md5 digests in place of the arrays (the
-#: `mm_frame_sample` idiom); the operator API keeps the real arrays.
+#: lists, so the face ships md5 digests in place of the arrays
+#: (:func:`_md5_arr`); the operator API keeps the real arrays.
 _FACE_MD5ARR: dict[str, tuple[str, ...]] = {
     "tok_remap": ("new_tokens",),
 }
@@ -785,23 +724,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _docs_days(s, d)
     )
 
-    # -- span-level novelty trend (k-gram debut-day share) ------------
-    def _q_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyreshaper_spark.fixtures import VOCAB_SIZE
-        from pyreshaper_spark.functions.xhash import h32, words_col
-        from pyreshaper_spark.operators.subdup import ngram_novelty
-
-        dd = _docs_days(spark, sf_dir).select(
-            "source",
-            "day_s",
-            F.transform(
-                words_col(),
-                lambda w: F.pmod(h32(w), F.lit(VOCAB_SIZE)).cast("int"),
-            ).alias("tokens"),
-        )
-        return ngram_novelty(dd, k=5)
-
-    q["ngram_novelty_1d"] = _q_novelty
     q["lang_id"] = lambda s, d: text.lang_id(_docs(s, d))
     q["fingerprint"] = lambda s, d: text.fingerprint(_docs(s, d))
     q["pii_scan"] = lambda s, d: text.pii_scan(_docs(s, d))
@@ -976,103 +898,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["pii_redact"] = _q_pii_redact
 
-    # -- eval-contamination check (n-gram overlap across hash splits) -
-    def _q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyreshaper_spark.operators.contamination import (
-            split_contamination,
-        )
-
-        return split_contamination(
-            _docs(spark, sf_dir), n=3, val_bp=1000, test_bp=1000
-        )
-
-    q["contamination_3g"] = _q_contamination
-
-    # -- benchmark decontamination (external eval set, any-hit fatal) -
-    # The eval set is carved from the corpus deterministically (~2% by
-    # cross-engine h32) so the oracle can reproduce it; n=4 gives both
-    # verdict classes mass on the fixture (5 dropped / 490 kept at
-    # sf0.01).
-    def _q_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyreshaper_spark.functions.xhash import h32
-        from pyreshaper_spark.operators.contamination import (
-            benchmark_decontaminate,
-        )
-
-        docs = _docs(spark, sf_dir)
-        mark = F.pmod(h32(F.col("doc_id").cast("string")), F.lit(50))
-        return benchmark_decontaminate(
-            docs.filter(mark >= 1), docs.filter(mark < 1), n=4
-        )
-
-    q["decontam_benchmark"] = _q_decontam
-
-    # -- sequence-level duplication (token k-gram granularity) --------
-    def _q_seqdup_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyreshaper_spark.operators.subdup import crossdoc_dup_stats
-
-        return crossdoc_dup_stats(_md_tokens(spark, sf_dir), k=5)
-
-    q["seqdup_crossdoc"] = _q_seqdup_cross
-
-    def _q_seqdup_intra(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyreshaper_spark.operators.subdup import intradoc_repetition
-
-        return intradoc_repetition(_md_tokens(spark, sf_dir), k=5)
-
-    q["seqdup_intradoc"] = _q_seqdup_intra
-
-    # -- sequence packing (context-window layout, 2048-token windows) -
-    def _q_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyreshaper_spark.operators.packing import pack_assign
-
-        return pack_assign(_seq(spark, sf_dir), 2048)
-
-    q["pack_assign_2k"] = _q_pack
-
-    def _q_pack_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Per-(source, window) packing summary — the context-window
-        feed-rate/waste report over the pack_assign layout."""
-        from pyreshaper_spark.operators.packing import pack_stats
-
-        return pack_stats(_seq(spark, sf_dir), 2048)
-
-    q["pack_stats_2k"] = _q_pack_stats
-
-    # materialized packed windows: the actual training-example arrays
-    # (md5 token stream — the sequences table's xxhash64 ids are
-    # Spark-only, so array equality needs the cross-engine stream)
-    def _q_pack_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyreshaper_spark.operators.packing import pack_materialize
-
-        win = pack_materialize(
-            _md_seq(spark, sf_dir).withColumn(
-                "n_tok", F.size("tokens").cast("long")
-            ),
-            512,
-        )
-        # driver face: md5 the window's token array (pandas cannot
-        # hash lists); the operator API keeps the real array
-        return win.select(
-            "source", "pack_id", "n_pieces",
-            _md5_arr("window_tokens").alias("window_md5"),
-            "fill",
-        )
-
-    q["pack_windows_512"] = _q_pack_windows
-
-    # -- RAG / training-window chunking (overlapping token windows) ---
-    def _q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyreshaper_spark.operators.packing import doc_chunks
-
-        ch = doc_chunks(_md_seq(spark, sf_dir), chunk=128, stride=64)
-        return ch.select(
-            "doc_id", "source", "chunk_id",
-            _md5_arr("chunk_tokens").alias("chunk_md5"),
-            "chunk_len",
-        )
-
-    q["doc_chunks_128"] = _q_doc_chunks
     # -- similarity search --------------------------------------------
     q["ann_topk_dot"] = lambda s, d: similarity.topk_dot(_emb(s, d))
     # embedding-ingest health: per-label exact norm² stats
@@ -1137,78 +962,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     q["emb_centroid_drift_1d"] = _q_centroid_drift
-
-    def _q_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Power-iterated dominant-direction projection (exact
-        fixed-point; see operators/pca.py)."""
-        from pyreshaper_spark.operators.pca import pc1_projection
-
-        return pc1_projection(_emb(spark, sf_dir), n_iter=3)
-
-    q["emb_pc1_proj"] = _q_pc1
-    # trained coarse quantizer (exact-integer Lloyd) + IVF probe
-    from pyreshaper_spark.operators import kmeans as KM
-
-    q["ivf_balance"] = lambda s, d: KM.ivf_balance(
-        _emb(s, d), k=8, n_iter=2, trained=_lloyd8(s, d)
-    )
-    q["pq_distortion"] = lambda s, d: _bigintify(
-        KM.pq_distortion(_emb(s, d), ks=16, n_iter=2, trained=_pq16(s, d)),
-        "sum_d2",
-    )
-    q["kmeans_assign"] = lambda s, d: KM.kmeans_assign(
-        _emb(s, d), k=8, n_iter=2, trained=_lloyd8(s, d)
-    )
-    q["ann_ivf_kmeans"] = lambda s, d: KM.ivf_kmeans_topk(
-        _emb(s, d), k=8, n_iter=2, n_queries=10, topk=5, nprobe=2,
-        trained=_lloyd8(s, d),
-    )
-    # cluster-balanced diversity sample (≤k vectors per trained cluster)
-    q["emb_cluster_sample"] = lambda s, d: KM.cluster_sample(
-        _emb(s, d), k=8, n_iter=2, per_cluster=5, trained=_lloyd8(s, d)
-    )
-    # SemDeDup: cluster-then-verify semantic near-dup (within-cluster
-    # exact cosine threshold; same 2/5 threshold as emb_near_dup)
-    q["semdedup_pairs"] = lambda s, d: KM.semdedup_pairs(
-        _emb(s, d), k=8, n_iter=2, num=2, den=5, trained=_lloyd8(s, d)
-    )
-    # product quantization: the stored PQ index (M codes per vector)
-    # and the ADC top-k search over it (FAISS IndexPQ shape)
-    q["pq_codes"] = lambda s, d: KM.pq_codes(
-        _emb(s, d), ks=16, n_iter=2, trained=_pq16(s, d)
-    )
-    q["ann_pq_topk"] = lambda s, d: KM.pq_topk(
-        _emb(s, d), ks=16, n_iter=2, n_queries=10, topk=5,
-        trained=_pq16(s, d),
-    )
-    q["ann_pq_refined"] = lambda s, d: KM.pq_topk_refined(
-        _emb(s, d), ks=16, n_iter=2, n_queries=10, topk=5, refine=4,
-        trained=_pq16(s, d),
-    )
-    # IVFADC (FAISS IndexIVFPQ): PQ over coarse-list residuals, probed
-    # per query with a per-(query, list) broadcast LUT; the coarse
-    # stage reuses the shared Lloyd training (identical params)
-    q["ann_ivfpq_topk"] = lambda s, d: KM.ivfpq_topk(
-        _emb(s, d), k_coarse=8, ks=16, n_iter=2, n_queries=10,
-        topk=5, nprobe=2, coarse=_lloyd8(s, d),
-    )
-    # -- multimodal ---------------------------------------------------
-    q["mm_meta"] = lambda s, d: multimodal.media_meta(_docs(s, d))
-    # DQ suite generalized to the multimodal/binary-payload table
-    q["dq_media"] = lambda s, d: multimodal.dq_media(_docs(s, d))
-    # frame sampling over fixed-size planes is pure codegen (binary
-    # substring) — md5 emitted so the frames themselves hash-compare.
-    # Small planes (w 4..16, h 3..9) so fixture payloads hold several
-    # frames; real video planes just change the two columns.
-    def _q_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-        m = multimodal.media_table(_docs(spark, sf_dir)).withColumn(
-            "width", (F.pmod("doc_id", F.lit(13)) + 4).cast("int")
-        ).withColumn(
-            "height", (F.pmod("doc_id", F.lit(7)) + 3).cast("int")
-        )
-        return multimodal.sample_frames_planar(m, every_k=4)
-
-    q["mm_frame_sample"] = _q_frames
 
     # -- deterministic sampling / splitting / mixing ------------------
     from pyreshaper_spark.operators import sampling as SMP
@@ -2048,23 +1801,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return log_hist_quantile(hist, q_num=9, q_den=10)
 
     q["lhist_q90_1h"] = _q_lhistq
-
-    # -- BPE tokenizer training ----------------------------------------
-    from pyreshaper_spark.operators import bpe as BPE
-
-    q["bpe_word_counts"] = lambda s, d: BPE.word_counts(
-        _docs(s, d), max_words=200
-    )
-
-    def _q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Full train+apply path (rows-only: merge induction is
-        driver-side — not SQL-expressible; exactness is pytest-covered
-        against a hand-computed Sennrich example + naive recount)."""
-        docs = _docs(spark, sf_dir)
-        merges = BPE.train_bpe(BPE.word_counts(docs, max_words=500), 50)
-        return BPE.bpe_segment(docs, merges).select("doc_id", "n_pieces")
-
-    q["bpe_segment"] = _q_bpe_segment
 
     # -- exact binary-weight EWMA over the 10m tier -------------------
     def _q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2952,54 +2688,9 @@ WITH documents_inj AS (
         "text || CASE WHEN (" + _h32s("CAST(doc_id AS VARCHAR)")
         + f") % 10 < 3 THEN '{_PII_INJECT}' ELSE '' END"
     )
-    from pyreshaper_spark.operators.contamination import (
-        split_contamination_sql,
-    )
 
-    from pyreshaper_spark.operators.contamination import (
-        benchmark_decontaminate_sql,
-    )
-
-    _dmark = f"({_h32s('CAST(doc_id AS VARCHAR)')} % 50)"
-    o["decontam_benchmark"] = benchmark_decontaminate_sql(
-        bench_pred=f"{_dmark} < 1", corpus_pred=f"{_dmark} >= 1", n=4
-    )
-    o["contamination_3g"] = split_contamination_sql(
-        n=3, val_bp=1000, test_bp=1000
-    )
     from pyreshaper_spark.fixtures import VOCAB_SIZE as _V
-    from pyreshaper_spark.operators.subdup import (
-        crossdoc_dup_sql,
-        intradoc_repetition_sql,
-    )
 
-    o["seqdup_crossdoc"] = crossdoc_dup_sql(5, _V)
-    o["seqdup_intradoc"] = intradoc_repetition_sql(5, _V)
-    from pyreshaper_spark.operators.packing import pack_assign_sql
-
-    from pyreshaper_spark.operators.packing import pack_materialize_sql
-    from pyreshaper_spark.fixtures import VOCAB_SIZE as _Vp
-    from pyreshaper_spark.operators.vocab import seqs_cte as _seqs_cte_p
-
-    o["pack_windows_512"] = (
-        f"WITH {_seqs_cte_p(_Vp)},\n"
-        "seqn AS (SELECT doc_id, source, tokens, "
-        "CAST(len(tokens) AS BIGINT) AS n_tok FROM seqs)\n"
-        "SELECT source, pack_id, n_pieces,\n"
-        f"       {_md5_arr_sql('window_tokens')} AS window_md5,\n"
-        "       fill\n"
-        f"FROM (\n{pack_materialize_sql(512, 'seqn')}\n) _pm"
-    )
-    o["pack_assign_2k"] = (
-        f"WITH {seq_cte('base')}" + pack_assign_sql(2048)
-    )
-    o["pack_stats_2k"] = (
-        f"WITH {seq_cte('base')}, pk AS ({pack_assign_sql(2048)})\n"
-        "SELECT source, pack_id,\n"
-        "       CAST(count(*) AS BIGINT)   AS n_docs_start,\n"
-        "       CAST(sum(n_tok) AS BIGINT) AS toks_started\n"
-        "FROM pk GROUP BY 1, 2"
-    )
     o["ann_topk_dot"] = similarity.topk_dot_sql()
     o["emb_norm_stats"] = _bigintify_sql(
         similarity.emb_norm_stats_sql(), "sum_norm2"
@@ -3021,45 +2712,7 @@ WITH documents_inj AS (
     o["emb_outliers"] = _bigintify_sql(
         similarity.emb_outliers_sql(), "d2_num"
     )
-    from pyreshaper_spark.operators.kmeans import (
-        ivf_kmeans_topk_sql,
-        kmeans_assign_sql,
-    )
 
-    o["kmeans_assign"] = kmeans_assign_sql(k=8, n_iter=2)
-    from pyreshaper_spark.operators.kmeans import cluster_sample_sql
-
-    o["emb_cluster_sample"] = cluster_sample_sql(
-        k=8, n_iter=2, per_cluster=5
-    )
-    o["ann_ivf_kmeans"] = ivf_kmeans_topk_sql(
-        k=8, n_iter=2, n_queries=10, topk=5, nprobe=2
-    )
-    from pyreshaper_spark.operators.kmeans import semdedup_pairs_sql
-
-    o["semdedup_pairs"] = semdedup_pairs_sql(k=8, n_iter=2, num=2, den=5)
-    from pyreshaper_spark.operators.kmeans import pq_codes_sql, pq_topk_sql
-
-    o["pq_codes"] = pq_codes_sql(ks=16, n_iter=2)
-    from pyreshaper_spark.operators.kmeans import pq_distortion_sql
-
-    o["pq_distortion"] = _bigintify_sql(
-        pq_distortion_sql(ks=16, n_iter=2), "sum_d2"
-    )
-    from pyreshaper_spark.operators.kmeans import ivf_balance_sql
-
-    o["ivf_balance"] = ivf_balance_sql(k=8, n_iter=2)
-    o["ann_pq_topk"] = pq_topk_sql(ks=16, n_iter=2, n_queries=10, topk=5)
-    from pyreshaper_spark.operators.kmeans import pq_topk_refined_sql
-
-    o["ann_pq_refined"] = pq_topk_refined_sql(
-        ks=16, n_iter=2, n_queries=10, topk=5, refine=4
-    )
-    from pyreshaper_spark.operators.kmeans import ivfpq_topk_sql
-
-    o["ann_ivfpq_topk"] = ivfpq_topk_sql(
-        k_coarse=8, ks=16, n_iter=2, n_queries=10, topk=5, nprobe=2
-    )
     o["ann_ivf_probe"] = similarity.ivf_probe_topk_sql()
     o["ann_lsh_pairs"] = similarity.lsh_bucket_pairs_sql()
     o["emb_near_dup"] = similarity.cosine_near_dups_sql(num=2, den=5)
@@ -3070,7 +2723,6 @@ WITH documents_inj AS (
         similarity.source_centroid_d2_sql(), "d2_num"
     )
     from pyreshaper_spark.config import EPOCH0, HORIZON_S
-    from pyreshaper_spark.operators.pca import pc1_projection_sql
     from pyreshaper_spark.operators.rollup import floor_sql
 
     _day_expr = floor_sql(
@@ -3084,17 +2736,6 @@ WITH documents_inj AS (
     from pyreshaper_spark.operators.dedup import dup_rate_by_day_sql
 
     o["dup_rate_1d"] = dup_rate_by_day_sql(_day_expr)
-    from pyreshaper_spark.operators.subdup import ngram_novelty_sql
-
-    o["ngram_novelty_1d"] = ngram_novelty_sql(5, _V, _day_expr)
-    o["emb_pc1_proj"] = pc1_projection_sql(n_iter=3)
-    o["mm_meta"] = multimodal.media_meta_sql()
-    o["dq_media"] = multimodal.dq_media_sql()
-    o["mm_frame_sample"] = multimodal.sample_frames_planar_sql(
-        every_k=4,
-        width_sql="(doc_id % 13) + 4",
-        height_sql="(doc_id % 7) + 3",
-    )
 
     from pyreshaper_spark.operators import sampling as SMP
 
@@ -3314,18 +2955,7 @@ FROM filled
     from pyreshaper_spark.operators.vocab import vocab_remap_sql
 
     o["tok_remap"] = f"WITH {seqs_cte(_V)}," + vocab_remap_sql()
-    from pyreshaper_spark.operators.packing import doc_chunks_sql
 
-    o["doc_chunks_128"] = (
-        f"WITH {seqs_cte(_V)}\n"
-        "SELECT doc_id, source, chunk_id,\n"
-        f"       {_md5_arr_sql('chunk_tokens')} AS chunk_md5,\n"
-        "       chunk_len\n"
-        f"FROM (\n{doc_chunks_sql(chunk=128, stride=64)}\n) _ch"
-    )
-    from pyreshaper_spark.operators.bpe import word_counts_sql
-
-    o["bpe_word_counts"] = word_counts_sql(max_words=200)
     from pyreshaper_spark.operators.gapfill import counter_rate_sql
     from pyreshaper_spark.operators.vocab import token_zipf_sql
 
@@ -3441,13 +3071,11 @@ FROM filled
         f"lhist AS ({log_hist_sql(3600)})\n"
         + log_hist_quantile_sql("lhist", q_num=9, q_den=10)
     )
-    # bpe_segment: rows-only (driver-side merge induction — the apply
-    # is pytest-verified; see operators/bpe.py)
-    from pyreshaper_spark.operators.rollup import bucket_trend_sql
-
-    from pyreshaper_spark.operators.rollup import eta_threshold_sql
-
-    from pyreshaper_spark.operators.rollup import hopping_rollup_sql
+    from pyreshaper_spark.operators.rollup import (
+        bucket_trend_sql,
+        eta_threshold_sql,
+        hopping_rollup_sql,
+    )
 
     o["hopping_1h_10m"] = (
         f"WITH {seq_cte('base')},\n"

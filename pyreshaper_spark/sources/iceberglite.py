@@ -37,9 +37,8 @@ tables are sorted on (source, bucket_s) with stats on both columns,
 ``series_enc`` is clustered on source with stats on it, so a one-source,
 one-window query opens only the files whose ranges can hold it
 (:func:`stats_overlap`). Hive ``key=val`` partition directories are
-still supported for the curation and index tables: their entries
-carry the partition tuple (parsed from the path) and
-`read(..., partition_filter=...)` prunes on it.
+still supported for tables written with ``partition_by``: their entries
+carry the partition tuple (parsed from the path).
 
 Reference analog: the snapshot log is the `.s2s` Specifier + the
 write-mode existence checks [U: specification.py :: Specifier.write;
@@ -405,7 +404,6 @@ class IcebergLite:
         spark: SparkSession,
         name: str,
         snapshot_id: int | None = None,
-        partition_filter: Callable[[dict[str, str]], bool] | None = None,
         stats_filter: Callable[[dict[str, list]], bool] | None = None,
         allow_empty: bool = False,
         apply_deletes: bool = True,
@@ -414,12 +412,10 @@ class IcebergLite:
     ) -> DataFrame:
         """Read a snapshot (time travel via ``snapshot_id``).
 
-        ``partition_filter`` prunes files from the manifest BEFORE any
-        parquet is opened (planning-time partition pruning). Files are
-        grouped per commit dir and each group is read with its own
-        ``basePath`` so hive partition columns are recovered, then
-        unioned by name — commit count is small, file count is what
-        scales, so the union stays cheap.
+        Files are grouped per commit dir and each group is read with
+        its own ``basePath`` so hive partition columns are recovered,
+        then unioned by name — commit count is small, file count is
+        what scales, so the union stays cheap.
 
         ``allow_empty``: when the snapshot has no (surviving) files,
         return an EMPTY DataFrame typed from the recorded snapshot
@@ -446,8 +442,6 @@ class IcebergLite:
             files = [
                 f for f in files if path_filter(os.path.join(data, f["path"]))
             ]
-        if partition_filter is not None:
-            files = [f for f in files if partition_filter(f["partition"])]
         if stats_filter is not None:
             # keep files with NO stats (cannot prove they don't match)
             files = [

@@ -1,10 +1,14 @@
 """Catalog binding: a plain path binds IcebergLite, a URI root is
 rejected, and every catalog method the program calls — plus every name
 perfbench hooks — resolves on the bound classes (a static guard, so a
-removed method cannot keep a caller)."""
+removed method cannot keep a caller). A second static guard does the
+same for every ``pyreshaper_spark`` import in the program."""
 
 from __future__ import annotations
 
+import ast
+import importlib
+import importlib.util
 import os
 import re
 
@@ -74,3 +78,62 @@ def test_consumed_catalog_surface_resolves():
         (sqlmod, "read_tier"),
     ]:
         assert callable(getattr(owner, name, None)), (owner, name)
+
+
+def _imports(path):
+    """(lineno, module, names) for every import in one source file:
+    module-level and function-local ``import`` and
+    ``from ... import`` statements (relative ones resolved against the
+    file's package) and ``__import__("...", fromlist=[...])`` calls."""
+    rel = os.path.relpath(path, _ROOT)
+    pkg = os.path.dirname(rel).replace(os.sep, ".")
+    for node in ast.walk(ast.parse(open(path, encoding="utf-8").read())):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                yield node.lineno, a.name, ()
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parent = pkg.rsplit(".", node.level - 1)[0]
+                base = f"{parent}.{base}" if base else parent
+            yield node.lineno, base, tuple(a.name for a in node.names)
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == "__import__"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+        ):
+            names = ()
+            for kw in node.keywords:
+                if kw.arg == "fromlist" and isinstance(kw.value, ast.List):
+                    names = tuple(e.value for e in kw.value.elts)
+            yield node.lineno, node.args[0].value, names
+
+
+def _find_spec(name):
+    try:
+        return importlib.util.find_spec(name)
+    except ModuleNotFoundError:  # a parent package is missing
+        return None
+
+
+def test_every_package_import_resolves():
+    """Every ``pyreshaper_spark`` import in the program names a module
+    that exists and, for ``from`` imports, an attribute or submodule of
+    it. Faces and jobs import their operators inside functions, so a
+    dangling import would otherwise fail only when that function runs."""
+    dangling = []
+    for path in _sources():
+        for lineno, mod, names in _imports(path):
+            if mod.split(".")[0] != "pyreshaper_spark":
+                continue
+            where = f"{os.path.relpath(path, _ROOT)}:{lineno}"
+            if _find_spec(mod) is None:
+                dangling.append((where, mod))
+                continue
+            m = importlib.import_module(mod)
+            for name in names:
+                if not hasattr(m, name) and _find_spec(f"{mod}.{name}") is None:
+                    dangling.append((where, f"{mod}.{name}"))
+    assert not dangling, f"imports that do not resolve: {dangling}"

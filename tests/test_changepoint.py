@@ -238,31 +238,6 @@ def test_containment_catches_embedded_doc(spark):
     assert {(r.doc_a, r.doc_b) for r in jac} == set()
 
 
-def test_ngram_novelty_debut_day(spark):
-    from pyreshaper_spark.operators.subdup import ngram_novelty
-
-    toks = list(range(1, 7))  # 6 tokens -> 2 5-grams
-    rows = [
-        Row(doc_id="a", source="s", day_s=0, tokens=toks),
-        Row(doc_id="b", source="s", day_s=0, tokens=toks),   # same-day rep
-        Row(doc_id="c", source="s", day_s=86400, tokens=toks),  # old news
-        Row(doc_id="d", source="t", day_s=86400,
-            tokens=[9, 9, 9, 9, 9]),                          # fresh 5-gram
-    ]
-    out = {
-        (r.source, r.day_s): (r.n_pos, r.n_new, r.novel_ppm)
-        for r in ngram_novelty(
-            spark.createDataFrame(rows), k=5
-        ).collect()
-    }
-    # day 0: 4 positions, all debut-day (same-day repeats count novel)
-    assert out[("s", 0)] == (4, 4, 10**6)
-    # day 1, source s: same 2 k-grams again -> nothing novel
-    assert out[("s", 86400)] == (2, 0, 0)
-    # day 1, source t: its 5-gram debuts that day
-    assert out[("t", 86400)] == (1, 1, 10**6)
-
-
 def test_containment_threshold_binds(spark):
     words = [f"w{i}" for i in range(20)]
     half_in = " ".join(words[:6] + [f"q{i}" for i in range(6)])

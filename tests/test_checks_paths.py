@@ -334,35 +334,6 @@ def test_rollup_diff_minmax_only_change(spark):
     assert rollup_diff(a, a).count() == 0
 
 
-def test_dq_media_clean_and_injected(spark):
-    """The declarative suite generalizes to the binary-payload table:
-    clean synthesized media passes every rule; a corrupted row trips
-    exactly the modality-consistency and payload rules."""
-    from pyreshaper_spark.operators.checks import check_suite
-    from pyreshaper_spark.operators.multimodal import (
-        dq_media,
-        media_rules,
-        media_table,
-    )
-
-    rows = {r["rule"]: r for r in dq_media(_docs(spark)).collect()}
-    assert len(rows) == 8
-    assert all(r["passed"] for r in rows.values())
-
-    media = media_table(_docs(spark))
-    bad = spark.createDataFrame(
-        [(990001, "audio", bytearray(b""), 5, 200, 0)], media.schema
-    )
-    got = {
-        r["rule"]: r["violations"]
-        for r in check_suite(media.unionByName(bad), media_rules()).collect()
-    }
-    assert got["payload_nonempty"] == 1
-    assert got["width_bounds"] == 1 and got["height_bounds"] == 1
-    assert got["audio_rate_consistent"] == 1
-    assert got["doc_id_unique"] == 0
-
-
 def test_check_suite_by_source_attribution(spark):
     """The keyed suite pins violations to the offending feed, and its
     cond-rule counts decompose the global suite exactly."""

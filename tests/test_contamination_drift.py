@@ -2,60 +2,11 @@ from __future__ import annotations
 
 from fractions import Fraction
 
-from pyspark.sql import functions as F
 
-from pyreshaper_spark.operators.contamination import split_contamination
 from pyreshaper_spark.operators.drift import (
     histogram_drift_tvd,
     tvd_finish,
 )
-
-
-def _splits(spark, doc_ids, val_bp=1000, test_bp=1000):
-    from pyreshaper_spark.operators.sampling import split_assign
-
-    df = spark.createDataFrame([(d,) for d in doc_ids], "doc_id string")
-    return {
-        r["doc_id"]: r["split"]
-        for r in split_assign(df, val_bp, test_bp).collect()
-    }
-
-
-def test_contamination_hand_case(spark):
-    # find one eval doc and one train doc under the default split
-    ids = [f"d{i:03d}" for i in range(60)]
-    sp = _splits(spark, ids)
-    ev = next(d for d in ids if sp[d] != "train")
-    tr = next(d for d in ids if sp[d] == "train")
-    tr2 = next(d for d in ids if sp[d] == "train" and d != tr)
-    docs = spark.createDataFrame(
-        [
-            # eval doc: 4 words -> 2 trigrams, one shared with train
-            (ev, "s0", "alpha beta gamma delta"),
-            # train doc shares the trigram "alpha beta gamma"
-            (tr, "s0", "zzz alpha beta gamma yyy"),
-            # unrelated train doc
-            (tr2, "s0", "one two three four five"),
-        ],
-        "doc_id string, source string, text string",
-    )
-    out = {
-        r["doc_id"]: (r["n_sh"], r["n_hit"], r["contaminated"])
-        for r in split_contamination(docs, n=3, num=1, den=2).collect()
-    }
-    # eval doc has 2 trigrams, 1 hit -> 1/2 >= 1/2 -> contaminated
-    assert out == {ev: (2, 1, True)}
-
-
-def test_contamination_no_eval_docs_without_shingles(spark):
-    ids = [f"d{i:03d}" for i in range(40)]
-    sp = _splits(spark, ids)
-    ev = next(d for d in ids if sp[d] != "train")
-    docs = spark.createDataFrame(
-        [(ev, "s0", "too short")],  # 2 words < n=3: no shingles
-        "doc_id string, source string, text string",
-    )
-    assert split_contamination(docs, n=3).count() == 0
 
 
 def _tvd_ref(cur: dict[int, int], prev: dict[int, int]) -> Fraction:
@@ -163,79 +114,3 @@ def test_drift_disjoint_distributions_is_one(spark):
     )
     r = histogram_drift_tvd(hist, 86400).collect()[0]
     assert Fraction(int(r["tvd_num"]), int(r["tvd_den"])) == 1
-
-
-def test_benchmark_decontaminate_semantics(spark):
-    """Any shared n-gram with the benchmark is fatal; short docs have
-    nothing to leak; untouched docs keep."""
-    from pyreshaper_spark.operators.contamination import (
-        benchmark_decontaminate,
-    )
-
-    bench = spark.createDataFrame(
-        [("b1", "s", "the quick brown fox jumps over")],
-        "doc_id string, source string, text string",
-    )
-    docs = spark.createDataFrame(
-        [
-            # contains 'quick brown fox jumps' → dropped
-            ("d1", "s", "a very quick brown fox jumps today"),
-            # shares only a 3-gram ('quick brown fox' broken at 4) → kept
-            ("d2", "s", "quick brown fox sleeps all day long"),
-            ("d3", "s", "completely unrelated text about spark plans"),
-            ("d4", "s", "too short"),  # < n words: n_sh = 0, kept
-        ],
-        "doc_id string, source string, text string",
-    )
-    got = {
-        r["doc_id"]: (r["n_sh"], r["n_hit"], r["keep"])
-        for r in benchmark_decontaminate(docs, bench, n=4).collect()
-    }
-    assert got["d1"][2] is False and got["d1"][1] >= 1
-    assert got["d2"] == (4, 0, True)
-    assert got["d3"][2] is True
-    assert got["d4"] == (0, 0, True)
-    assert set(got) == {"d1", "d2", "d3", "d4"}
-
-
-def test_benchmark_decontaminate_sql_predicate_is_verbatim(spark):
-    """The DuckDB twin applies each side's predicate as written: a
-    predicate whose string literal contains ``doc_id`` selects exactly
-    the rows it names, and the verdicts equal the Spark operator's."""
-    import duckdb
-
-    from pyreshaper_spark.operators.contamination import (
-        benchmark_decontaminate,
-        benchmark_decontaminate_sql,
-    )
-
-    rows = [
-        ("b1", "bench", "the quick brown fox jumps over"),
-        ("d1", "doc_id", "a very quick brown fox jumps today"),
-        ("d2", "doc_id", "quick brown fox sleeps all day long"),
-        ("d3", "doc_id", "too short"),
-        ("x1", "other", "the quick brown fox jumps over"),
-    ]
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE documents (doc_id VARCHAR, source VARCHAR, text VARCHAR)"
-    )
-    con.executemany("INSERT INTO documents VALUES (?, ?, ?)", rows)
-    res = con.sql(benchmark_decontaminate_sql(
-        bench_pred="source = 'bench'", corpus_pred="source = 'doc_id'", n=4
-    ))
-    got = {r[0]: tuple(r[1:]) for r in res.fetchall()}
-    con.close()
-
-    docs = spark.createDataFrame(rows, "doc_id string, source string, text string")
-    want = {
-        r["doc_id"]: (r["source"], r["n_sh"], r["n_hit"], r["keep"])
-        for r in benchmark_decontaminate(
-            docs.filter(F.col("source") == "doc_id"),
-            docs.filter(F.col("source") == "bench"),
-            n=4,
-        ).collect()
-    }
-    assert got == want
-    assert set(got) == {"d1", "d2", "d3"}
-    assert got["d1"][3] is False and got["d2"][3] is True

@@ -220,61 +220,6 @@ def test_vocab_remap_is_order_preserving_bijection(spark, seq):
 # doc_chunks
 # --------------------------------------------------------------------------
 
-def test_doc_chunks_brute_force(spark):
-    from pyreshaper_spark.operators.packing import doc_chunks
-
-    data = [
-        ("d0", "s0", list(range(10))),
-        ("d1", "s0", list(range(3))),
-        ("d2", "s1", [42]),
-        ("d3", "s1", []),
-    ]
-    seq = spark.createDataFrame(
-        data, "doc_id string, source string, tokens array<int>"
-    )
-    out = sorted(
-        ((r["doc_id"], r["chunk_id"], tuple(r["chunk_tokens"]),
-          r["chunk_len"])
-         for r in doc_chunks(seq, chunk=4, stride=3).collect())
-    )
-    expect = []
-    for doc_id, _, toks in data:
-        for i, off in enumerate(range(0, len(toks), 3)):
-            c = tuple(toks[off:off + 4])
-            expect.append((doc_id, i, c, len(c)))
-    assert out == sorted(expect)
-    # d3 (empty) emits nothing; tail chunks may be short but never empty
-    assert all(r[3] >= 1 for r in out)
-
-
-def test_doc_chunks_coverage_and_overlap(spark, seq):
-    """Every token position is covered by >=1 chunk; with
-    stride < chunk consecutive chunks overlap by chunk - stride."""
-    from pyreshaper_spark.operators.packing import doc_chunks
-    from pyspark.sql import functions as F
-
-    base = seq.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "source", "tokens"
-    ).limit(20)
-    out = doc_chunks(base, chunk=8, stride=5)
-    # reconstruct: positions covered = union of [off, off+len)
-    per_doc = {}
-    for r in out.collect():
-        per_doc.setdefault(r["doc_id"], []).append(
-            (r["chunk_id"], r["chunk_tokens"])
-        )
-    for r in base.collect():
-        toks = r["tokens"]
-        if not toks:
-            continue
-        chunks = dict(per_doc[r["doc_id"]])
-        covered = set()
-        for cid, ct in chunks.items():
-            off = cid * 5
-            assert ct == toks[off:off + 8]
-            covered.update(range(off, off + len(ct)))
-        assert covered == set(range(len(toks)))
-
 
 # --------------------------------------------------------------------------
 # mmr_topk
@@ -613,50 +558,3 @@ def test_emb_outliers_brute_force(spark):
 # pack_materialize
 # --------------------------------------------------------------------------
 
-def test_pack_materialize_reconstructs_stream(spark):
-    """Concatenating each source's windows in pack order must equal
-    the concatenated doc stream in (h32, doc_id) order — the exact
-    contract of the example builder — and every window but the last
-    is exactly full."""
-    import hashlib
-
-    from pyreshaper_spark.operators.packing import pack_materialize
-
-    def h(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-
-    rows = []
-    for i in range(12):
-        rows.append(
-            (str(i), "sA" if i % 2 else "sB",
-             list(range(i * 100, i * 100 + 7 + i)))
-        )
-    rows.append(("99", "sA", []))  # zero-token doc: no stream position
-    seq = spark.createDataFrame(
-        rows, "doc_id string, source string, tokens array<int>"
-    ).withColumn("n_tok", F.size("tokens").cast("long"))
-
-    L = 10
-    out = pack_materialize(seq, L).collect()
-    by_src: dict[str, dict[int, list[int]]] = {}
-    for r in out:
-        by_src.setdefault(r["source"], {})[r["pack_id"]] = list(
-            r["window_tokens"]
-        )
-        assert r["fill"] == len(r["window_tokens"])
-        assert r["n_pieces"] >= 1
-
-    for src in ("sA", "sB"):
-        docs = sorted(
-            (r for r in rows if r[1] == src and r[2]),
-            key=lambda r: (h(r[0]), r[0]),
-        )
-        stream = [t for _, _, toks in docs for t in toks]
-        wins = by_src[src]
-        assert sorted(wins) == list(range(len(wins)))
-        rebuilt = [t for w in sorted(wins) for t in wins[w]]
-        assert rebuilt == stream
-        # every window but the last is exactly full
-        for w in sorted(wins)[:-1]:
-            assert len(wins[w]) == L
-        assert 1 <= len(wins[max(wins)]) <= L

@@ -49,10 +49,8 @@ def test_overwrite_partitions(spark, cat):
     assert got == {"a": 1, "b": 99}
 
 
-def test_manifest_partition_pruning(spark, cat):
+def test_manifest_records_partition_tuples(spark, cat):
     cat.overwrite("t", _df(spark, [("a", 0, 1), ("b", 0, 2)]), ("source",))
-    only_b = cat.read(spark, "t", partition_filter=lambda p: p.get("source") == "b")
-    assert [r["cnt"] for r in only_b.collect()] == [2]
     assert {
         tuple(sorted(f["partition"].items()))
         for f in cat._snapshot("t", None)["files"]
@@ -119,11 +117,8 @@ def test_compact_binpacks_and_preserves_rows(spark, cat):
     assert snap["op"] == "rewrite"
     assert len(snap["files"]) < n_before
     assert _rows(spark, cat, "t") == before
-    # partition pruning still works post-compaction
-    only_a = cat.read(
-        spark, "t", partition_filter=lambda pt: pt.get("source") == "a"
-    )
-    assert {r["source"] for r in only_a.collect()} == {"a"}
+    # the rewrite keeps the partition layout: every file records its key
+    assert {f["partition"]["source"] for f in snap["files"]} == {"a", "b"}
     # time travel across the rewrite
     assert _rows(spark, cat, "t", snapshot_id=5) == before
     # idempotent: a second compact finds single-file partitions → no-op
@@ -402,10 +397,9 @@ def test_expire_snapshots_older_than_composes_with_keep_last(spark, cat):
 def test_partition_spec_evolution(spark, cat):
     """Iceberg partition evolution: commits written under DIFFERENT
     partition specs coexist in one table. Each commit group reads with
-    its own basePath (hive columns recovered per spec); a
-    partition_filter is evolution-safe when it keeps files that cannot
-    prove non-match (files from the pre-partitioned spec carry no
-    key), mirroring stats_filter's keep-on-unknown contract."""
+    its own basePath (hive columns recovered per spec), and the
+    manifest records each file's partition under its own spec (files
+    from the pre-partitioned spec carry no key)."""
     rows1 = [("a", 0, 1), ("b", 60, 2)]
     rows2 = [("a", 120, 3), ("c", 180, 4)]
     cat.append("t", _df(spark, rows1))  # spec v1: unpartitioned
@@ -415,17 +409,9 @@ def test_partition_spec_evolution(spark, cat):
         for r in cat.read(spark, "t").collect()
     }
     assert got == set(rows1) | set(rows2)
-    # evolution-safe pruning: drop only files PROVEN to be other sources
-    pruned = cat.read(
-        spark, "t",
-        partition_filter=lambda p: p.get("source") in (None, "a"),
-    )
     srcs = {f["partition"].get("source")
             for f in cat._snapshot("t", None)["files"]}
     assert srcs == {None, "a", "c"}  # manifest carries both specs
-    got = {(r["source"], r["cnt"]) for r in pruned.collect()}
-    # spec-v2 'c' file pruned at planning time; v1 files kept (no key)
-    assert got == {("a", 1), ("b", 2), ("a", 3)}
 
 
 # -- metadata / inspection tables ------------------------------------------

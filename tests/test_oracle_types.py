@@ -85,12 +85,11 @@ def test_every_oracle_has_a_query_face():
 
 def test_rows_only_faces_are_exactly_the_sketch_faces():
     """A face without an oracle is checked on row count alone. Only the
-    four sketch/segmentation faces, whose outputs are engine-specific,
-    may be rows-only; a face that loses its oracle must fail here
-    instead of silently turning rows-only."""
+    three sketch faces, whose outputs are engine-specific, may be
+    rows-only; a face that loses its oracle must fail here instead of
+    silently turning rows-only."""
     qs, os_ = set(ent.queries()), set(ent.oracle_sql())
     assert qs - os_ == {
-        "bpe_segment",
         "tier_1h_ndv_sketch",
         "tier_1h_pct_approx",
         "tier_1h_ndv_approx",

@@ -1,16 +1,11 @@
-"""Unit tests for pc1 power iteration and centroid drift."""
+"""Unit tests for centroid drift, the daily dup rate, the
+calendar-aligned hopping rollup and the RFM, DAU/WAU and
+conversion-lag event panels."""
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
-from pyreshaper_spark.operators.pca import (
-    SCALE,
-    pc1_direction,
-    pc1_projection,
-)
 from pyreshaper_spark.operators.similarity import centroid_drift
 
 
@@ -24,45 +19,6 @@ def _emb(spark, mat, labels=None):
             for i in range(n)
         ]
     )
-
-
-def test_pc1_direction_matches_numpy(spark):
-    # anisotropic cloud: dominant direction is a known unit vector
-    rng = np.random.RandomState(7)
-    d = 64
-    u = np.zeros(d)
-    u[0], u[3], u[10] = 0.8, 0.5, 0.33
-    u /= np.linalg.norm(u)
-    mat = (
-        rng.randn(120, 1) * 0.9 * u[None, :]
-        + rng.randn(120, d) * 0.05
-    )
-    emb = _emb(spark, mat)
-    v = np.zeros(d)
-    for r in pc1_direction(emb, n_iter=4).collect():
-        v[r.dim] = r.v
-    v = v / np.linalg.norm(v)
-    # un-centered top singular direction of the quantized matrix
-    q = np.round(mat * 10_000)
-    _, _, vt = np.linalg.svd(q, full_matrices=False)
-    ref = vt[0] / np.linalg.norm(vt[0])
-    cos = abs(float(np.dot(v, ref)))
-    assert cos > 0.999, cos
-
-
-def test_pc1_projection_values_are_exact_dots(spark):
-    rng = np.random.RandomState(3)
-    mat = rng.randn(30, 64) * 0.3
-    emb = _emb(spark, mat)
-    vrows = {r.dim: r.v for r in pc1_direction(emb, n_iter=3).collect()}
-    v = np.array([vrows[i] for i in range(64)], dtype=object)
-    q = np.round(mat * 10_000).astype(np.int64)
-    got = {r.vec_id: r.proj for r in pc1_projection(emb, n_iter=3).collect()}
-    for i in range(30):
-        expect = int(sum(int(a) * int(b) for a, b in zip(q[i], v)))
-        assert got[i] == expect
-    # direction is at fixed-point scale
-    assert max(abs(int(x)) for x in v) == SCALE
 
 
 def test_centroid_drift_two_days_exact(spark):
@@ -275,46 +231,3 @@ def test_events_conversion_lag(spark):
     assert 3 not in out  # no purchase
 
 
-def test_pq_distortion_properties(spark):
-    from pyreshaper_spark.operators.kmeans import PQ_M, pq_distortion
-
-    rng = np.random.RandomState(5)
-    emb = _emb(spark, rng.randn(40, 64) * 0.2)
-    rows = pq_distortion(emb, ks=8, n_iter=2).collect()
-    assert len(rows) == PQ_M
-    for r in rows:
-        assert r.n == 40
-        assert int(r.sum_d2) >= 0
-        assert r.max_d2 * r.n >= int(r.sum_d2)  # max bounds the mean
-    # more codewords -> distortion can only improve (on this fixture)
-    loose = {r.m: int(r.sum_d2) for r in rows}
-    tight = {
-        r.m: int(r.sum_d2)
-        for r in pq_distortion(emb, ks=32, n_iter=2).collect()
-    }
-    assert sum(tight.values()) <= sum(loose.values())
-
-
-def test_report_job_cli(spark, capsys):
-    import json
-    import sys
-
-    sys.path.insert(0, "/root/repo/jobs")
-    import report_job
-
-    rc = report_job.main(["--docs", "/root/testdata/sf0.001/documents.parquet"])
-    assert rc == 0
-    lines = [
-        json.loads(ln)
-        for ln in capsys.readouterr().out.strip().splitlines()
-    ]
-    assert len(lines) == 20  # fixture sources
-    srcs = [r["source"] for r in lines]
-    assert srcs == sorted(srcs)
-    for r in lines:
-        assert set(r) >= {
-            "source", "n_docs", "sum_words", "p50_words", "dup_ppm",
-            "ok_ppm", "pii_ppm", "top_lang", "sum_tok",
-            "chars_per_tok_ppm",
-        }
-        assert r["n_docs"] > 0 and r["sum_tok"] > 0

@@ -1,5 +1,5 @@
-"""Training-data pipeline operators: dedup, similarity, text analysis,
-multimodal plumbing. Semantics tests here; exact oracle parity is
+"""Training-data pipeline operators: dedup, similarity and text
+analysis. Semantics tests here; exact oracle parity is
 covered by tools/oracle_check.py over __spark_entry__ entries."""
 
 from __future__ import annotations
@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from pyreshaper_spark.operators import dedup, multimodal, similarity, text
+from pyreshaper_spark.operators import dedup, similarity, text
 from tests.conftest import SF_SMOKE, rows_set
 
 
@@ -234,25 +234,6 @@ def test_cosine_near_dup_recall_near_threshold(spark):
     assert hit >= 0.6, f"near-threshold LSH recall {hit}"
 
 
-# ---- multimodal ---------------------------------------------------------
-
-def test_media_table_and_features(docs):
-    media = multimodal.media_table(docs)
-    feats = multimodal.extract_features(media)
-    n = docs.count()
-    assert media.count() == n and feats.count() == n
-    row = feats.first()
-    assert row["n_bytes"] > 0 and len(row["feat"]) == 8
-    # deterministic fake decode: byte_sum equals sum of utf-8 bytes
-    doc = docs.filter(F.col("doc_id") == row["doc_id"]).first()
-    assert row["byte_sum"] == sum(doc["text"].encode())
-
-
-def test_real_decode_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_media(b"abc", "image", fake=False)
-
-
 def test_ivf_probe_recall_vs_bruteforce(spark, emb):
     """IVF probe (hamming ≤ 1 lists + exact rerank) recovers a solid
     fraction of true MIPS top-5 — and every returned pair is exact."""
@@ -263,80 +244,6 @@ def test_ivf_probe_recall_vs_bruteforce(spark, emb):
     assert len(p) > 0
     recall = len(p & b) / len(b)
     assert recall >= 0.2  # synthetic gaussian vectors: probe is approximate
-
-
-def test_decoder_registry_swaps(spark, docs):
-    """A custom decoder registered (or passed directly) flows through
-    the mapInPandas closure and changes the extracted features."""
-    media = multimodal.media_table(docs.limit(20))
-
-    def halved(payload, media_type):
-        import numpy as np
-
-        return (np.frombuffer(payload, dtype=np.uint8) // 2).astype(np.uint8)
-
-    multimodal.register_decoder("halved", halved)
-    default = {r["doc_id"]: r["byte_sum"]
-               for r in multimodal.extract_features(media).collect()}
-    swapped = {r["doc_id"]: r["byte_sum"]
-               for r in multimodal.extract_features(media, "halved").collect()}
-    direct = {r["doc_id"]: r["byte_sum"]
-              for r in multimodal.extract_features(media, halved).collect()}
-    assert swapped == direct
-    for k, v in swapped.items():
-        assert v <= default[k] // 2 + 20_000  # halved bytes sum ~half
-        assert v < default[k]
-
-
-def test_frame_sampling_decoder_path_matches_codegen_path(spark):
-    """The mapInPandas decoder path (real-codec plug point) must agree
-    frame-for-frame with the pure-codegen substring path on the fake
-    planar data."""
-    import hashlib
-
-    from pyspark.sql import functions as SF
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    m = multimodal.media_table(docs).withColumn(
-        "width", (SF.pmod("doc_id", SF.lit(13)) + 4).cast("int")
-    ).withColumn(
-        "height", (SF.pmod("doc_id", SF.lit(7)) + 3).cast("int")
-    )
-    jvm = {
-        (r["doc_id"], r["frame_idx"]): r["frame_md5"]
-        for r in multimodal.sample_frames_planar(m, every_k=4).collect()
-    }
-    py = {
-        (r["doc_id"], r["frame_idx"]): hashlib.md5(bytes(r["frame"])).hexdigest()
-        for r in multimodal.sample_frames(m, every_k=4).collect()
-    }
-    assert jvm and py == jvm
-
-
-def test_resize_media_nearest_neighbor(spark):
-    import numpy as np
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").limit(30)
-    m = multimodal.media_table(docs)
-    out = {r["doc_id"]: r for r in multimodal.resize_media(m, 8, 6).collect()}
-    src = {r["doc_id"]: r for r in m.collect()}
-    assert out  # image + video rows survive, audio dropped
-    for did, r in out.items():
-        s = src[did]
-        assert s["media_type"] != "audio"
-        w, h = s["width"], s["height"]
-        arr = np.frombuffer(bytes(s["payload"]), dtype=np.uint8)
-        plane = w * h
-        if arr.size < plane:
-            arr = np.pad(arr, (0, plane - arr.size))
-        img = arr[:plane].reshape(h, w)
-        ys = (np.arange(6) * h) // 6
-        xs = (np.arange(8) * w) // 8
-        want = img[ys[:, None], xs[None, :]]
-        got = np.frombuffer(bytes(r["resized"]), dtype=np.uint8).reshape(6, 8)
-        assert (got == want).all()
-        assert r["px_sum"] == int(want.sum())
-    assert all(s["media_type"] == "audio" for d, s in src.items() if d not in out)
 
 
 def test_read_tier_prunes_files_from_manifest(spark, tmp_path):

@@ -1,51 +1,6 @@
 from __future__ import annotations
 
-from pyreshaper_spark.operators.subdup import (
-    crossdoc_dup_stats,
-    intradoc_repetition,
-)
 from pyreshaper_spark.operators.text import pii_scan
-
-
-def _seq_from_tokens(spark, rows):
-    return spark.createDataFrame(rows, "doc_id string, tokens array<int>")
-
-
-def test_crossdoc_dup_counts(spark):
-    # k=3. d1 and d2 share the 3-gram (1,2,3); d3 is disjoint.
-    rows = [
-        ("d1", [1, 2, 3, 4]),     # kgrams: (1,2,3), (2,3,4)
-        ("d2", [9, 1, 2, 3]),     # kgrams: (9,1,2), (1,2,3)
-        ("d3", [7, 7, 7, 7]),     # kgrams: (7,7,7), (7,7,7)
-    ]
-    out = {
-        r["doc_id"]: (r["n_kg"], r["n_dup"], r["dup_heavy"])
-        for r in crossdoc_dup_stats(
-            _seq_from_tokens(spark, rows), k=3, num=1, den=2
-        ).collect()
-    }
-    # shared (1,2,3) appears in 2 docs -> 1 dup position each for d1/d2;
-    # d3's repeated (7,7,7) is single-doc -> not cross-doc dup
-    assert out == {
-        "d1": (2, 1, True),
-        "d2": (2, 1, True),
-        "d3": (2, 0, False),
-    }
-
-
-def test_intradoc_repetition_counts(spark):
-    rows = [
-        ("d1", [1, 2, 3, 4]),        # 2 kgrams, both distinct
-        ("d3", [7, 7, 7, 7, 7]),     # 3 kgrams, all identical
-        ("d4", [1, 2]),              # shorter than k: no kgrams
-    ]
-    out = {
-        r["doc_id"]: (r["n_kg"], r["n_distinct"], r["n_repeat"])
-        for r in intradoc_repetition(
-            _seq_from_tokens(spark, rows), k=3
-        ).collect()
-    }
-    assert out == {"d1": (2, 2, 0), "d3": (3, 1, 2)}  # d4 absent
 
 
 def test_pii_scan_crafted(spark):

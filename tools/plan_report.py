@@ -214,42 +214,6 @@ def main() -> None:
         ],
     ))
 
-    # 5a2. PQ / IVF-PQ ADC search — the stored-code index must be
-    # probed only through broadcast hash equi-joins against the tiny
-    # LUT (never a shuffle of the index against the queries); the
-    # Lloyd/centroid constant sides are the documented k-row broadcast
-    # nested loops, so the assert here is "no SHUFFLE join", the
-    # scale-killer for an N·M-row index.
-    from pyreshaper_spark.operators.kmeans import ivfpq_topk, pq_topk
-
-    p_pq = plan_of(pq_topk(emb, ks=16, n_iter=1))
-    p_ivfpq = plan_of(ivfpq_topk(emb, k_coarse=8, ks=16, n_iter=1))
-    sections.append((
-        "PQ + IVF-PQ (ADC over broadcast LUTs, shuffle-free index probe)",
-        "\n".join([
-            "--- pq_topk ---", p_pq[:2200],
-            "--- ivfpq_topk ---", p_ivfpq[:2600],
-        ]),
-        [
-            ("pq: no CartesianProduct", "CartesianProduct" not in p_pq),
-            ("pq: no shuffle join against the index (no SortMergeJoin / "
-             "ShuffledHashJoin)",
-             "SortMergeJoin" not in p_pq and "ShuffledHashJoin" not in p_pq),
-            ("pq: LUT probes are broadcast hash equi-joins",
-             p_pq.count("BroadcastHashJoin") >= 4),
-            ("ivfpq: no CartesianProduct",
-             "CartesianProduct" not in p_ivfpq),
-            ("ivfpq: no shuffle join against the index",
-             "SortMergeJoin" not in p_ivfpq
-             and "ShuffledHashJoin" not in p_ivfpq),
-            ("ivfpq: broadcast hash equi-joins present (residual build, "
-             "LUT probe)",
-             p_ivfpq.count("BroadcastHashJoin") >= 3),
-            ("ivfpq: ADC sum is a partial+final hash aggregate",
-             p_ivfpq.count("HashAggregate") >= 2),
-        ],
-    ))
-
     # 5b. incremental ingest-batch dedup — the probe must be an
     # equi-join on (band, band_key): the historical corpus is touched
     # only through its 4-rows-per-doc index, never via a cross join
@@ -440,13 +404,12 @@ def main() -> None:
         ],
     ))
 
-    # 10. connected components round, contamination probe, TVD drift
+    # 10. connected components round, TVD drift
     from pyreshaper_spark.operators.cluster import (
         _canon,
         _large_star,
         _small_star,
     )
-    from pyreshaper_spark.operators.contamination import split_contamination
     from pyreshaper_spark.operators.drift import histogram_drift_tvd
 
     edges = _canon(
@@ -454,41 +417,27 @@ def main() -> None:
             F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
         )
     )
-    from pyreshaper_spark.operators.packing import pack_assign
-
     p_star = plan_of(_small_star(_large_star(edges)))
-    p_cont = plan_of(split_contamination(docs))
     p_drift = plan_of(
         histogram_drift_tvd(bucket_histogram(seq, 86400, 50), 86400)
     )
-    p_pack = plan_of(pack_assign(seq, 2048))
     sections.append((
-        "CC star round, contamination probe, TVD drift, packing",
+        "CC star round, TVD drift",
         "\n".join([
             "--- small_star(large_star(edges)) one round ---",
             p_star[:2200],
-            "--- split_contamination ---", p_cont[:2000],
             "--- histogram_drift_tvd ---", p_drift[:2000],
-            "--- pack_assign ---", p_pack[:1200],
         ]),
         [
             ("cc round: no cartesian / nested-loop join — min-label "
              "contraction is agg + equi-join only", no_cartesian(p_star)),
             ("cc round: per-center min is a partial+final hash agg",
              p_star.count("HashAggregate") >= 2),
-            ("contamination: train set probed via LEFT-SEMI equi-join",
-             "LeftSemi" in p_cont and no_cartesian(p_cont)),
             ("drift: no window — two hash aggs + keyed joins only",
              "Window" not in p_drift and no_cartesian(p_drift)),
             ("drift: tokens pruned from scan",
              "tokens" not in p_drift.split("ReadSchema")[1].split("\n")[0]
              if "ReadSchema" in p_drift else False),
-            ("packing: single per-source window, token payload pruned "
-             "from scan",
-             p_pack.count("Window") // 2 == 1
-             and ("tokens" not in p_pack.split("ReadSchema")[1]
-                  .split("\n")[0]
-                  if "ReadSchema" in p_pack else False)),
         ],
     ))
 
@@ -521,21 +470,16 @@ def main() -> None:
         ],
     ))
 
-    from pyreshaper_spark.operators.kmeans import ivf_kmeans_topk, lloyd
     from pyreshaper_spark.operators.vocab import bigram_pmi, doc_rarity
 
     md_seq = seq.select("doc_id", "source", "tokens")
     p_pmi = plan_of(bigram_pmi(md_seq, min_count=2))
     p_rare = plan_of(doc_rarity(md_seq, max_df=2))
-    p_km = plan_of(lloyd(emb, k=8, n_iter=1)[0])
-    p_ivfkm = plan_of(ivf_kmeans_topk(emb, k=8, n_iter=1))
     sections.append((
-        "Bigram PMI, doc rarity, k-means assign, IVF-kmeans probe",
+        "Bigram PMI, doc rarity",
         "\n".join([
             "--- bigram_pmi ---", p_pmi[:2200],
             "--- doc_rarity ---", p_rare[:1400],
-            "--- kmeans assign (1 iter) ---", p_km[:1800],
-            "--- ivf_kmeans_topk ---", p_ivfkm[:1800],
         ]),
         [
             ("pmi: unigram/total sides broadcast (≥3 broadcast "
@@ -544,25 +488,10 @@ def main() -> None:
              and p_pmi.count("HashAggregate") >= 2),
             ("rarity: df table broadcast, no cartesian",
              "BroadcastHashJoin" in p_rare and no_cartesian(p_rare)),
-            ("kmeans assign: centroid side is a BROADCAST nested loop "
-             "(k-row constant side — the intended N×k scoring), argmin "
-             "collapsed by partial+final hash agg, no shuffle "
-             "cartesian",
-             "BroadcastNestedLoopJoin" in p_km
-             and "CartesianProduct" not in p_km
-             and p_km.count("HashAggregate") >= 2),
-            ("ivf-kmeans: probe is an EQUI-join on the list id "
-             "(broadcast hash join on cluster)",
-             "BroadcastHashJoin" in p_ivfkm
-             and "cluster" in p_ivfkm),
         ],
     ))
 
     from pyreshaper_spark.operators.correlate import autocorr_moments
-    from pyreshaper_spark.operators.multimodal import (
-        media_table,
-        sample_frames_planar,
-    )
     from pyreshaper_spark.operators.rollup import (
         bucket_histogram,
         histogram_quantile,
@@ -572,14 +501,11 @@ def main() -> None:
     p_hq = plan_of(
         histogram_quantile(bucket_histogram(seq, 3600, 50), 50, 9, 10)
     )
-    docs_mm = spark.read.parquet(f"{sf}/documents.parquet")
-    p_fs = plan_of(sample_frames_planar(media_table(docs_mm), every_k=4))
     sections.append((
-        "ACF, histogram quantile, frame sampling",
+        "ACF, histogram quantile",
         "\n".join([
             "--- autocorr_moments(1h tier, 2 lags) ---", p_acf[:2000],
             "--- histogram_quantile(hist_1h, p90) ---", p_hq[:2000],
-            "--- sample_frames_planar ---", p_fs[:1200],
         ]),
         [
             ("acf: ONE equi-join serves every lag (no join per lag, "
@@ -593,9 +519,6 @@ def main() -> None:
             ("hist quantile: windows + argmin agg only — no join, no "
              "cartesian",
              "Join" not in p_hq and no_cartesian(p_hq)),
-            ("frame sampling: pure codegen — no Python evals "
-             "(ArrowEvalPython/BatchEvalPython absent), single generate",
-             "EvalPython" not in p_fs and "Generate" in p_fs),
         ],
     ))
 
@@ -802,7 +725,7 @@ def main() -> None:
                  __import__(
                      "pyreshaper_spark.operators.sampling",
                      fromlist=["sample_k_per_source"],
-                 ).sample_k_per_source(docs_mm, 15)
+                 ).sample_k_per_source(docs, 15)
              )),
         ],
     ))
@@ -1132,7 +1055,7 @@ def main() -> None:
     p_ts = plan_of(theilsen(t1h_c, 86400, 3600))
     p_oov = plan_of(oov_rate(toks, 3600, 200))
     p_motif = plan_of(sax_motifs(t1h_c, m=4))
-    p_mtk = plan_of(minhash_topk(docs_mm, k=5))
+    p_mtk = plan_of(minhash_topk(docs, k=5))
     sections.append((
         "Theil–Sen, OOV rate, SAX motifs, minhash top-k",
         "\n".join([
@@ -1230,7 +1153,6 @@ def main() -> None:
     # temporal dedup/PII panels
     from pyreshaper_spark.operators.forecast import holt_backtest
     from pyreshaper_spark.operators.gapfill import rolling_slope
-    from pyreshaper_spark.operators.pca import pc1_projection
     from pyreshaper_spark.operators.rollup import eta_threshold
     from pyreshaper_spark.operators.seriessim import day_profile_knn
     from pyreshaper_spark.operators.similarity import centroid_drift
@@ -1246,20 +1168,18 @@ def main() -> None:
     p_knn = plan_of(day_profile_knn(t1h_c, k=3))
     p_slope = plan_of(rolling_slope(t10, k=6, value_col="cnt"))
     p_holt = plan_of(holt_backtest(t10, k=6, value_col="cnt"))
-    p_pc1 = plan_of(pc1_projection(emb_df, n_iter=2))
     p_cdr = plan_of(centroid_drift(dd, emb_df))
     p_eta = plan_of(eta_threshold(t1h_c, 86400, 3600, 10_000))
     from pyreshaper_spark.operators.vocab import token_stream
 
     p_vj = plan_of(vocab_jaccard(token_stream(docs_df)))
     sections.append((
-        "Period-similarity kNN, rolling slope / Holt, PC1 power "
-        "iteration, centroid drift, ETA, vocab Jaccard",
+        "Period-similarity kNN, rolling slope / Holt, centroid drift, "
+        "ETA, vocab Jaccard",
         "\n".join([
             "--- day_profile_knn(k=3) ---", p_knn[:1600],
             "--- rolling_slope(k=6) ---", p_slope[:900],
             "--- holt_backtest(k=6) ---", p_holt[:900],
-            "--- pc1_projection(2 iter) ---", p_pc1[:1600],
             "--- centroid_drift ---", p_cdr[:1200],
             "--- eta_threshold(1d/1h) ---", p_eta[:900],
             "--- vocab_jaccard ---", p_vj[:1200],
@@ -1275,14 +1195,6 @@ def main() -> None:
             ("holt: ONE source-keyed sort window, no join",
              "Join" not in p_holt
              and p_holt.count("hashpartitioning(source") <= 2),
-            ("pc1: every direction join is a BROADCAST of the 64-row "
-             "iterate (the only nested loops are the 1-row max-abs "
-             "scalar crosses, one per iteration); per-vector dot "
-             "collapses in partial+final hash aggs; no shuffle join",
-             "CartesianProduct" not in p_pc1
-             and "SortMergeJoin" not in p_pc1
-             and p_pc1.count("BroadcastHashJoin") >= 3
-             and p_pc1.count("HashAggregate") >= 4),
             ("centroid drift: per-dim sums collapse FIRST (partial+"
              "final agg), day pairing is an equi-join with BROADCAST "
              "totals — no cartesian",
@@ -1301,15 +1213,14 @@ def main() -> None:
         ],
     ))
 
-    # 22. data card, hopping windows, DAU/WAU, conversion lag, PQ
-    # distortion — the one-scan / constant-fan-out shapes
+    # 22. data card, hopping windows, DAU/WAU, conversion lag — the
+    # one-scan / constant-fan-out shapes
     from pyreshaper_spark.operators.events import (
         events_conversion_lag,
         events_dau_wau,
         events_engagement_hist,
         events_transitions,
     )
-    from pyreshaper_spark.operators.kmeans import pq_distortion
     from pyreshaper_spark.operators.rollup import hopping_rollup
     from pyreshaper_spark.operators.text import datacard_by_source
 
@@ -1320,16 +1231,13 @@ def main() -> None:
     p_cl = plan_of(events_conversion_lag(ev_df))
     p_eh = plan_of(events_engagement_hist(ev_df))
     p_tr = plan_of(events_transitions(ev_df))
-    p_pqd = plan_of(pq_distortion(emb_df, ks=8, n_iter=1))
     sections.append((
-        "Data card, hopping windows, DAU/WAU, conversion lag, "
-        "PQ distortion",
+        "Data card, hopping windows, DAU/WAU, conversion lag",
         "\n".join([
             "--- datacard_by_source ---", p_card[:1600],
             "--- hopping_rollup(1h/10m) ---", p_hop[:900],
             "--- events_dau_wau ---", p_dw[:1200],
             "--- events_conversion_lag ---", p_cl[:900],
-            "--- pq_distortion ---", p_pqd[:900],
         ]),
         [
             ("data card: ONE parquet scan feeds the whole panel "
@@ -1361,11 +1269,6 @@ def main() -> None:
              "partial+final hash agg — no join",
              p_tr.count("Window") // 2 == 1 and "Join" not in p_tr
              and p_tr.count("HashAggregate") >= 2),
-            ("pq distortion: codebook rides BROADCAST joins; no "
-             "shuffle join, no cartesian",
-             "SortMergeJoin" not in p_pqd
-             and "CartesianProduct" not in p_pqd
-             and p_pqd.count("BroadcastHashJoin") >= 1),
         ],
     ))
 
@@ -1376,25 +1279,11 @@ def main() -> None:
         pettitt,
     )
     from pyreshaper_spark.operators.dedup import containment_pairs
-    from pyreshaper_spark.operators.subdup import ngram_novelty
 
     p_amoc = plan_of(amoc_changepoint(t1h_c, 86400, 3600))
     p_mk = plan_of(mann_kendall(t1h_c, 86400, 3600))
     p_ctn = plan_of(containment_pairs(docs, max_df=200))
     p_pet = plan_of(pettitt(t1h_c, 86400, 3600))
-    nov_in = docs.select(
-        "source",
-        F.lit(0).cast("long").alias("day_s"),
-        F.split(F.lower(F.col("text")), r"\s+").cast(
-            "array<string>"
-        ).alias("w"),
-    ).select(
-        "source", "day_s",
-        F.transform(
-            F.col("w"), lambda x: F.abs(F.hash(x)) % 1000
-        ).cast("array<int>").alias("tokens"),
-    )
-    p_nov = plan_of(ngram_novelty(nov_in, k=5))
     sections.append((
         "AMOC changepoint, Mann-Kendall trend, containment dedup",
         "\n".join([
@@ -1402,7 +1291,6 @@ def main() -> None:
             "--- mann_kendall(1d over 1h) ---", p_mk[:1400],
             "--- containment_pairs(max_df=200) ---", p_ctn[:1200],
             "--- pettitt(1d over 1h) ---", p_pet[:1400],
-            "--- ngram_novelty(k=5) ---", p_nov[:1200],
         ]),
         [
             ("amoc: candidates from ONE (source, day) sort (prefix-sum "
@@ -1426,10 +1314,6 @@ def main() -> None:
              "keyed, no cartesian",
              "Generate" in p_pet and no_cartesian(p_pet)
              and "Window" in p_pet),
-            ("novelty: debut-day lookup is a plain equi-join on the "
-             "k-gram hash (one row per distinct k-gram build side); "
-             "partial+final aggs, no cartesian",
-             no_cartesian(p_nov) and p_nov.count("HashAggregate") >= 4),
         ],
     ))
 
@@ -1507,10 +1391,8 @@ def main() -> None:
         F.col("doc_id").cast("string").alias("doc_id"), "source", "tokens"
     )
     p_vr = plan_of(vocab_remap(seq_v))
-    from pyreshaper_spark.operators.packing import doc_chunks
     from pyreshaper_spark.operators.similarity import mmr_topk
 
-    p_dc = plan_of(doc_chunks(seq_v, chunk=128, stride=64))
     p_mmr = plan_of(mmr_topk(emb, n_queries=5, k=3))
     from pyreshaper_spark.operators.cluster import survivor_flags_pref
     from pyreshaper_spark.operators.text import pii_redact
@@ -1529,22 +1411,14 @@ def main() -> None:
 
     p_mt = plan_of(mix_temperature_sqrt(docs, budget=200))
     p_eo = plan_of(emb_outliers(emb))
-    from pyreshaper_spark.operators.packing import pack_materialize
-
-    p_pm = plan_of(
-        pack_materialize(
-            seq_v.withColumn("n_tok", F.size("tokens").cast("long")), 512
-        )
-    )
     sections.append((
         "Leakage-free split, hard negatives, RRF fusion, vocab remap, "
-        "chunking, MMR, survivor policy, redaction",
+        "MMR, survivor policy, redaction",
         "\n".join([
             "--- leakage_free_split ---", p_lf[:1400],
             "--- hard_negatives ---", p_hn[:1200],
             "--- rrf_fuse(minhash_topk, topk_cosine) ---", p_rrf[:1400],
             "--- vocab_remap ---", p_vr[:1600],
-            "--- doc_chunks(128/64) ---", p_dc[:900],
             "--- mmr_topk(k=3) ---", p_mmr[:1400],
             "--- survivor_flags_pref ---", p_sp[:1000],
             "--- pii_redact ---", p_px[:700],
@@ -1552,7 +1426,6 @@ def main() -> None:
             "--- bucket_fano(10m tier) ---", p_fa[:700],
             "--- mix_temperature_sqrt ---", p_mt[:1000],
             "--- emb_outliers ---", p_eo[:1000],
-            "--- pack_materialize(512) ---", p_pm[:1000],
         ]),
         [
             ("leakage-free split: component join + stateless hash "
@@ -1577,10 +1450,6 @@ def main() -> None:
              "posexplode is map-side Generate",
              "BroadcastHashJoin" in p_vr and "Generate" in p_vr
              and no_cartesian(p_vr)),
-            ("doc chunking: pure map-side — Generate (offset explode) "
-             "+ slice, ZERO exchanges, no join",
-             "Generate" in p_dc and "Exchange" not in p_dc
-             and "Join" not in p_dc),
             ("MMR greedy rounds: selected-set joins stay equi (the "
              "only nested loop is the shared broadcast query cross); "
              "each round's argmax is a WindowGroupLimit rank-1",
@@ -1616,10 +1485,6 @@ def main() -> None:
              "cartesian",
              p_eo.count("BroadcastHashJoin") >= 2
              and "WindowGroupLimit" in p_eo and no_cartesian(p_eo)),
-            ("pack materialize: layout window + map-side Generate + "
-             "one (source, pack) regroup — NO joins",
-             "Join" not in p_pm and "Generate" in p_pm
-             and "Window" in p_pm),
         ],
     ))
 
