@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyreshaper_spark.fixtures import seq_cte, sequences_df  # noqa: E402
-from pyreshaper_spark.operators import dedup, similarity, text  # noqa: E402
+from pyreshaper_spark.operators import text  # noqa: E402
 from pyreshaper_spark.operators.encode import (  # noqa: E402
     decode_series_table,
     encode_series_table,
@@ -71,30 +71,6 @@ def _memo_fill(k, make_value):
 def _cached(spark: SparkSession, key: tuple, make) -> DataFrame:
     k = (spark.sparkContext.applicationId, *key)
     return _memo_fill(k, lambda: make().cache())
-
-
-def _pairs200(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared MinHash-verified near-dup pair list (max_df=200) — six
-    dedup-decision faces consume the same pair graph."""
-    from pyreshaper_spark.operators import dedup
-
-    return _cached(
-        spark,
-        ("pairs200", sf_dir),
-        lambda: dedup.verified_near_dups(_docs(spark, sf_dir), max_df=200),
-    )
-
-
-def _cc200(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared connected-components labelling over :func:`_pairs200` —
-    the iterative star-contraction runs once per (session, sf_dir)."""
-    from pyreshaper_spark.operators.cluster import connected_components
-
-    return _cached(
-        spark,
-        ("cc200", sf_dir),
-        lambda: connected_components(_pairs200(spark, sf_dir)),
-    )
 
 
 def _seq(spark: SparkSession, sf_dir: str, variant: str = "base") -> DataFrame:
@@ -264,15 +240,6 @@ def _docs_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    return _cached(
-        spark,
-        ("emb", sf_dir),
-        lambda: spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-    )
-
-
 def _bigintify(df: DataFrame, *cols: str) -> DataFrame:
     """Driver-canonicalizable output face: CAST named decimal(38,0)
     columns to BIGINT in place (column order preserved). The operator
@@ -338,16 +305,12 @@ _PII_INJECT = " contact bob.smith@example.com or 12345678901 at 10.0.42.7"
 
 #: Names the round-2 driver correctness sweep already verified green.
 _R02_CHECKED = frozenset({
-    "ann_ivf_probe", "ann_lsh_pairs", "ann_topk_cosine", "ann_topk_dot",
-    "asof_10m_1h", "dedup_components", "dedup_exact",
-    "dedup_minhash_bucketcap", "dedup_minhash_capped", "dedup_minhash_lsh",
-    "dedup_ngram_capped", "dedup_ngram_jaccard", "dedup_simhash",
-    "dedup_survivors", "emb_near_dup", "events_cohorts", "events_funnel",
-    "events_in_sessions", "events_props", "events_rollup_5m",
-    "events_sessions", "events_type_pivot", "fingerprint", "gapfill_10m",
-    "interp_10m", "lang_id", "locf_10m", "pii_scan", "quality_score",
-    "series_fidelity", "series_fidelity_skew", "source_counts", "text_stats",
-    "tier_10m", "tier_1d", "tier_1h", "tier_1h_retention", "tier_1h_skew",
+    "asof_10m_1h", "events_cohorts", "events_funnel", "events_in_sessions",
+    "events_props", "events_rollup_5m", "events_sessions",
+    "events_type_pivot", "fingerprint", "gapfill_10m", "interp_10m",
+    "lang_id", "locf_10m", "pii_scan", "quality_score", "series_fidelity",
+    "series_fidelity_skew", "source_counts", "text_stats", "tier_10m",
+    "tier_1d", "tier_1h", "tier_1h_retention", "tier_1h_skew",
     "tier_1h_with_meta", "tier_1m", "topk_buckets",
 })
 
@@ -355,47 +318,29 @@ _R02_CHECKED = frozenset({
 #: rows-only sketch faces — no red rows).
 _R04_CHECKED = frozenset({
     "benford_n_tok", "changepoint_1d", "doc_len_deciles", "drift_tvd_1d",
-    "emb_centroid_drift_1d", "emb_norm_stats", "emb_outliers",
-    "emb_src_centroid_d2", "eta_threshold_1d", "events_ab_test",
-    "events_sessions", "filter_verdict", "gaps_10m", "hist_1h",
-    "hopping_1h_10m", "ks_drift_1d", "mix_quality_budget", "mix_sources",
-    "mix_temp_sqrt", "mix_token_budget", "mk_trend_1d", "pettitt_1d",
-    "quality_pctl", "rate_10m", "rolling_10m_6", "rolling_median_10m",
-    "rolling_slope_10m", "sample_30pct", "sample_k_per_source", "smk_trend",
-    "split_assign", "stratified_sample", "theilsen_1d", "tier_1h_cube",
-    "tier_1h_ndv", "tier_1h_ndv_approx", "tier_1h_ohlc", "tier_1h_pct",
-    "tier_1h_pct_approx", "trend_1d", "twa_1h", "uptime_islands_10m",
+    "eta_threshold_1d", "events_ab_test", "events_sessions", "filter_verdict",
+    "gaps_10m", "hist_1h", "hopping_1h_10m", "ks_drift_1d",
+    "mix_quality_budget", "mix_sources", "mix_temp_sqrt", "mix_token_budget",
+    "mk_trend_1d", "pettitt_1d", "quality_pctl", "rate_10m", "rolling_10m_6",
+    "rolling_median_10m", "rolling_slope_10m", "sample_30pct",
+    "sample_k_per_source", "smk_trend", "split_assign", "stratified_sample",
+    "theilsen_1d", "tier_1h_cube", "tier_1h_ndv", "tier_1h_ndv_approx",
+    "tier_1h_ohlc", "tier_1h_pct", "tier_1h_pct_approx", "trend_1d", "twa_1h",
+    "uptime_islands_10m",
 })
 
 #: Every key any driver correctness board (r1–r4) ever sampled; keys
 #: NOT here have never been driver-verified and sort ahead of the rest
 #: so the round-5 sweep reaches first-time surface first.
 _DRIVER_SAMPLED = _R02_CHECKED | _R04_CHECKED | frozenset({
-    "alert_hyst_10m", "ann_hard_negatives", "ann_binq_topk", "ann_mmr_topk",
-    "asof_fwd_tol", "asof_nearest_tol", "cusum_1h", "cusum_fixed_10m",
-    "datacard_by_source", "dedup_cluster_sizes", "dedup_containment",
-    "dedup_minhash_incr", "dedup_rate_by_source", "dedup_survivors_quality",
-    "dedup_winnow", "dup_rate_1d", "emb_centroid_drift_1d",
-    "emb_near_dup_bucketcap", "emb_norm_stats", "emb_outliers",
-    "emb_src_centroid_d2", "events_attribution", "events_conversion_lag",
-    "events_dau_wau", "events_engagement_hist", "events_funnel_1h",
-    "events_paths3", "events_rfm", "events_transitions", "fertility_by_source",
-    "hybrid_topk_rrf", "interarrival_1h", "lang_confusion", "levelshift_1h",
-    "minhash_topk", "pii_rate_1d", "pii_redact", "split_leakage_free",
-    "tier_1h_policy", "tier_1mo", "tier_1w",
+    "alert_hyst_10m", "asof_fwd_tol", "asof_nearest_tol", "cusum_1h",
+    "cusum_fixed_10m", "datacard_by_source", "events_attribution",
+    "events_conversion_lag", "events_dau_wau", "events_engagement_hist",
+    "events_funnel_1h", "events_paths3", "events_rfm", "events_transitions",
+    "fertility_by_source", "interarrival_1h", "lang_confusion",
+    "levelshift_1h", "pii_rate_1d", "pii_redact", "tier_1h_policy",
+    "tier_1mo", "tier_1w",
 })
-
-#: Keys that appeared RED on any driver board (r1–r3). The r4 board
-#: re-sampled every one of them green — the class is retired; the
-#: slot is now used for faces whose OUTPUT CHANGED this round (they
-#: were sampled green before, but against the old output, so they
-#: must re-sample ahead of already-verified surface).
-_EVER_RED: tuple[str, ...] = ()
-
-#: Faces whose output changed in round 5: `dedup_exact` gained the
-#: injected-duplicate variant (it was vacuously green at 0 rows
-#: through r4; the oracle now has 4 dup groups with real mass).
-_CHANGED_R5 = ("dedup_exact",)
 
 #: NEVER-SAMPLED rows-only sketch faces (no SQL oracle by design —
 #: the Datasketches HLL cascade output is engine-specific; pytest
@@ -720,166 +665,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["datacard_by_source"] = lambda s, d: text.datacard_by_source(
         _docs(s, d)
     )
-    q["dup_rate_1d"] = lambda s, d: dedup.dup_rate_by_day(
-        _docs_days(s, d)
-    )
 
     q["lang_id"] = lambda s, d: text.lang_id(_docs(s, d))
     q["fingerprint"] = lambda s, d: text.fingerprint(_docs(s, d))
     q["pii_scan"] = lambda s, d: text.pii_scan(_docs(s, d))
     q["lang_confusion"] = lambda s, d: text.lang_confusion(_docs(s, d))
-    # -- deduplication ------------------------------------------------
-    # The fixture corpus has no natural exact duplicates (the face was
-    # vacuously green at 0 rows through r4), so — the pii_redact
-    # injected-variant idiom — ~20% of docs (cross-engine h32 of
-    # doc_id) get one of 4 canonical boilerplate payloads, giving the
-    # oracle 4 dup groups with real mass while the operator API stays
-    # corpus-agnostic.
-    def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyreshaper_spark.functions.xhash import h32
-
-        docs = _docs(spark, sf_dir)
-        marker = F.pmod(h32(F.col("doc_id").cast("string")), F.lit(20))
-        injected = docs.withColumn(
-            "text",
-            F.when(
-                marker < 4,
-                F.concat(
-                    F.lit("duplicated boilerplate payload #"),
-                    marker.cast("string"),
-                ),
-            ).otherwise(F.col("text")),
-        )
-        return dedup.exact_dup_groups(injected)
-
-    q["dedup_exact"] = _q_dedup_exact
-    q["dedup_minhash_lsh"] = lambda s, d: dedup.verified_near_dups(_docs(s, d))
-    # lexical similarity search: top-k most-similar docs by exact
-    # Jaccard over the LSH candidate set (cached: the RRF fusion face
-    # consumes the same ranking)
-    def _mh_topk5(s: SparkSession, d: str) -> DataFrame:
-        return _cached(
-            s, ("mh_topk5", d), lambda: dedup.minhash_topk(_docs(s, d), k=5)
-        )
-
-    q["minhash_topk"] = _mh_topk5
-    # hot-shingle guard variant: words in >40% of docs excluded — the
-    # boundedness knob a web-scale dedup must have
-    q["dedup_minhash_capped"] = lambda s, d: dedup.verified_near_dups(
-        _docs(s, d), max_df=200
-    )
-    # band-bucket width cap: the OTHER boundedness knob (per-bucket pair
-    # fan-out ≤ cap² even on pathological boilerplate clusters)
-    q["dedup_minhash_bucketcap"] = lambda s, d: dedup.verified_near_dups(
-        _docs(s, d), max_bucket=50
-    )
-    # incremental ingest-batch dedup against a committed signature
-    # index: signatures computed ONLY for the "new" 30% split, probed
-    # against the index of the other 70% ∪ themselves — O(new batch)
-    # per ingest, old×old never revisited. Must equal the from-scratch
-    # pair list restricted to new-involving pairs (the oracle runs the
-    # same split from scratch).
-    def _q_dedup_incr(s, d):
-        from pyreshaper_spark.functions.xhash import h32
-
-        docs = _docs(s, d)
-        is_new = F.pmod(h32(F.col("doc_id").cast("string")), F.lit(10)) < 3
-        index = dedup.signature_index(docs.filter(~is_new))
-        return dedup.incremental_candidates(docs.filter(is_new), index)
-
-    q["dedup_minhash_incr"] = _q_dedup_incr
-    q["dedup_simhash"] = lambda s, d: dedup.simhash_pairs(_docs(s, d))
-    q["dedup_ngram_jaccard"] = lambda s, d: dedup.ngram_jaccard_pairs(
-        _docs(s, d)
-    )
-    # hot-shingle guard variant (same boundedness knob as the MinHash
-    # capped query): shingles in >200 docs dropped before the self-join
-    q["dedup_ngram_capped"] = lambda s, d: dedup.ngram_jaccard_pairs(
-        _docs(s, d), max_df=200
-    )
-    # asymmetric containment near-dup — catches the short-doc-embedded-
-    # in-long-doc pairs Jaccard's union denominator dilutes away
-    q["dedup_containment"] = lambda s, d: dedup.containment_pairs(
-        _docs(s, d), cont_num=6, cont_den=10
-    )
-    # MOSS winnowing: ~2/(w+1)-sampled fingerprint overlap
-    q["dedup_winnow"] = lambda s, d: dedup.winnow_pairs(
-        _docs(s, d), k=3, w=4, cont_num=5, cont_den=10
-    )
-
-    # -- dedup decision: pair graph -> clusters -> one survivor each --
-    def _q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyreshaper_spark.operators.cluster import components_with_size
-
-        return components_with_size(
-            _pairs200(spark, sf_dir), components=_cc200(spark, sf_dir)
-        )
-
-    q["dedup_components"] = _q_dedup_components
-
-    def _q_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Near-dup cluster-size histogram — the dedup-health dashboard
-        number (how much of the corpus sits in giant boilerplate
-        clusters)."""
-        from pyreshaper_spark.operators.cluster import components_with_size
-
-        comp = components_with_size(
-            _pairs200(spark, sf_dir), components=_cc200(spark, sf_dir)
-        )
-        return (
-            comp.groupBy("csize")
-            .agg(F.count("*").cast("long").alias("n_docs"))
-            .select(F.col("csize").cast("long").alias("csize"), "n_docs")
-        )
-
-    q["dedup_cluster_sizes"] = _q_cluster_sizes
-
-    def _q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyreshaper_spark.operators.cluster import survivor_flags
-
-        docs = _docs(spark, sf_dir)
-        return survivor_flags(
-            docs, _pairs200(spark, sf_dir), components=_cc200(spark, sf_dir)
-        )
-
-    q["dedup_survivors"] = _q_dedup_survivors
-
-    def _q_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Near-dup rate per ingestion source — which source ships
-        duplicated content (exact integer counts; % is driver-side)."""
-        from pyreshaper_spark.operators.cluster import dedup_rate_by_source
-
-        docs = _docs(spark, sf_dir)
-        return dedup_rate_by_source(
-            docs, _pairs200(spark, sf_dir), components=_cc200(spark, sf_dir)
-        )
-
-    q["dedup_rate_by_source"] = _q_dedup_rate
-
-    # -- leakage-free split: near-dup cluster members share a split ---
-    def _q_split_leakfree(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyreshaper_spark.operators.cluster import leakage_free_split
-
-        docs = _docs(spark, sf_dir)
-        return leakage_free_split(
-            docs, _pairs200(spark, sf_dir), val_bp=1000, test_bp=1000,
-            components=_cc200(spark, sf_dir),
-        )
-
-    q["split_leakage_free"] = _q_split_leakfree
-
-    # -- quality-aware survivor policy (keep the longest copy) --------
-    def _q_survivors_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyreshaper_spark.operators.cluster import survivor_flags_pref
-
-        docs = _docs(spark, sf_dir)
-        return survivor_flags_pref(
-            docs, _pairs200(spark, sf_dir), "n_chars",
-            components=_cc200(spark, sf_dir),
-        )
-
-    q["dedup_survivors_quality"] = _q_survivors_quality
-
     # -- span-level PII redaction over a deterministically PII-injected
     #    text variant (the raw corpus is PII-free — redaction must be
     #    shown to FIRE, not only to pass vacuously)
@@ -897,71 +687,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     q["pii_redact"] = _q_pii_redact
-
-    # -- similarity search --------------------------------------------
-    q["ann_topk_dot"] = lambda s, d: similarity.topk_dot(_emb(s, d))
-    # embedding-ingest health: per-label exact norm² stats
-    q["emb_norm_stats"] = lambda s, d: _bigintify(
-        similarity.emb_norm_stats(_emb(s, d)), "sum_norm2"
-    )
-    # binary-sketch ANN: Hamming-over-sign-codes shortlist + exact rerank
-    q["ann_binq_topk"] = lambda s, d: similarity.binq_topk(_emb(s, d))
-    q["ann_topk_cosine"] = lambda s, d: similarity.topk_cosine(_emb(s, d))
-    # contrastive-training hard negatives: nearest DIFFERENT-label
-    q["ann_hard_negatives"] = lambda s, d: similarity.hard_negatives(
-        _emb(s, d)
-    )
-
-    # hybrid retrieval: RRF fusion of the lexical (MinHash Jaccard)
-    # and semantic (exact cosine) rankings, vec_id = doc_id linkage
-    def _q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-        lex = _mh_topk5(spark, sf_dir).filter(
-            F.col("doc_id").cast("long") < 10
-        )
-        sem = similarity.topk_cosine(_emb(spark, sf_dir))
-        return similarity.rrf_fuse(lex, sem, k=5)
-
-    q["hybrid_topk_rrf"] = _q_hybrid_rrf
-    # diversified retrieval: integer-weighted MMR greedy selection
-    q["ann_mmr_topk"] = lambda s, d: similarity.mmr_topk(
-        _emb(s, d), n_queries=5, k=3
-    )
-    # mislabel/OOD candidates: furthest from own-label centroid
-    q["emb_outliers"] = lambda s, d: _bigintify(
-        similarity.emb_outliers(_emb(s, d)), "d2_num"
-    )
-    q["ann_ivf_probe"] = lambda s, d: similarity.ivf_probe_topk(_emb(s, d))
-    q["ann_lsh_pairs"] = lambda s, d: similarity.lsh_bucket_pairs(_emb(s, d))
-    # max pairwise cosine in the synthetic embeddings is ~0.48; 2/5
-    # keeps the predicate selective while actually emitting matches
-    q["emb_near_dup"] = lambda s, d: similarity.cosine_near_dups(
-        _emb(s, d), num=2, den=5
-    )
-    # bucket-width cap variant: (band, band_bits) buckets wider than the
-    # cap dropped BEFORE the self-join — bounds pair fan-out ≤ cap² even
-    # on a boilerplate-dense semantic cluster (mirrors
-    # dedup_minhash_bucketcap)
-    q["emb_near_dup_bucketcap"] = lambda s, d: similarity.cosine_near_dups(
-        _emb(s, d), num=2, den=5, max_bucket=40
-    )
-    # embedding-space source separation: pairwise centroid distance
-    # (exact fixed-point — the vector twin of src_token_tvd)
-    q["emb_src_centroid_d2"] = lambda s, d: _bigintify(
-        similarity.source_centroid_d2(_docs(s, d), _emb(s, d)), "d2_num"
-    )
-
-    def _q_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Day-over-day embedding-centroid movement per source (exact
-        cross-multiplied numerator; fixture Lehmer event day)."""
-        docs_days = _docs_days(spark, sf_dir).select(
-            F.col("doc_id").alias("vec_id"), "source", "day_s"
-        )
-        return _bigintify(
-            similarity.centroid_drift(docs_days, _emb(spark, sf_dir)),
-            "d2_num",
-        )
-
-    q["emb_centroid_drift_1d"] = _q_centroid_drift
 
     # -- deterministic sampling / splitting / mixing ------------------
     from pyreshaper_spark.operators import sampling as SMP
@@ -2183,15 +1908,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             return inner
         q[name] = _wrap_md5(q[name], cols)
 
-    # Order: (0) faces whose output changed this round (green before,
-    # but against the old output), (1) keys NO board has ever sampled —
-    # value-oracled faces first, the rows-only sketch faces last —
-    # (2) previously-verified-green keys.
+    # Order: (1) keys NO board has ever sampled — value-oracled faces
+    # first, the rows-only sketch faces last — (2) previously-verified-
+    # green keys.
     def _prio(k: str) -> tuple[int, int]:
-        if k in _CHANGED_R5:
-            return (0, _CHANGED_R5.index(k))
-        if k in _EVER_RED:
-            return (0, 100 + _EVER_RED.index(k))
         if k not in _DRIVER_SAMPLED:
             return (1, 2 if k in _NO_ORACLE else 1)
         return (2, 0)
@@ -2621,121 +2341,22 @@ FROM tier t JOIN meta m USING (source)
     o["fingerprint"] = text.fingerprint_sql()
     o["pii_scan"] = text.pii_scan_sql()
     o["lang_confusion"] = text.lang_confusion_sql()
-    # injected-duplicate variant twin (see the queries() face): same
-    # h32 marker, same 4 canonical payloads, then the stock group-by.
-    from pyreshaper_spark.functions.xhash import h32_sql as _h32e
-
-    _mark = f"({_h32e('CAST(doc_id AS VARCHAR)')} % 20)"
-    # CTE named documents_inj, NOT documents: shadowing the base view
-    # would need a schema-qualified FROM (main.documents), which breaks
-    # if the harness registers the tables as TEMP views instead.
-    o["dedup_exact"] = (
-        f"""
-WITH documents_inj AS (
-  SELECT * REPLACE (
-    CASE WHEN {_mark} < 4
-         THEN 'duplicated boilerplate payload #' || CAST({_mark} AS VARCHAR)
-         ELSE text END AS text)
-  FROM documents
-)
-"""
-        + dedup.EXACT_DUP_SQL.replace("FROM documents", "FROM documents_inj")
-    )
-    o["dedup_minhash_lsh"] = dedup.minhash_lsh_sql()
-    o["minhash_topk"] = (
-        f"WITH pairs AS ({dedup.minhash_lsh_sql(0, 1)})\n"
-        + dedup.minhash_topk_sql(5)
-    )
-    o["dedup_minhash_capped"] = dedup.minhash_lsh_sql(max_df=200)
-    o["dedup_minhash_bucketcap"] = dedup.minhash_lsh_sql(max_bucket=50)
     from pyreshaper_spark.functions.xhash import h32_sql as _h32s
 
-    o["dedup_minhash_incr"] = dedup.incremental_minhash_sql(
-        f"({_h32s('CAST(doc_id AS VARCHAR)')} % 10) < 3"
-    )
-    o["dedup_simhash"] = dedup.simhash_sql()
-    o["dedup_ngram_jaccard"] = dedup.ngram_jaccard_sql()
-    o["dedup_ngram_capped"] = dedup.ngram_jaccard_sql(max_df=200)
-    o["dedup_containment"] = dedup.containment_sql(cont_num=6, cont_den=10)
-    o["dedup_winnow"] = dedup.winnow_sql(k=3, w=4, cont_num=5, cont_den=10)
-    from pyreshaper_spark.operators.cluster import (
-        components_sql,
-        survivor_flags_sql,
-    )
-
-    _PAIRS_SQL = dedup.minhash_lsh_sql(max_df=200)
-    o["dedup_components"] = components_sql(_PAIRS_SQL)
-    o["dedup_cluster_sizes"] = (
-        "SELECT csize, count(*) AS n_docs FROM (\n"
-        + components_sql(_PAIRS_SQL)
-        + "\n) GROUP BY 1"
-    )
-    o["dedup_survivors"] = survivor_flags_sql(_PAIRS_SQL)
-    from pyreshaper_spark.operators.cluster import dedup_rate_by_source_sql
-
-    o["dedup_rate_by_source"] = dedup_rate_by_source_sql(_PAIRS_SQL)
-    from pyreshaper_spark.operators.cluster import leakage_free_split_sql
-
-    o["split_leakage_free"] = leakage_free_split_sql(
-        _PAIRS_SQL, val_bp=1000, test_bp=1000
-    )
-    from pyreshaper_spark.operators.cluster import survivor_flags_pref_sql
-
-    o["dedup_survivors_quality"] = survivor_flags_pref_sql(
-        _PAIRS_SQL, "d.n_chars"
-    )
     o["pii_redact"] = text.pii_redact_sql(
         "text || CASE WHEN (" + _h32s("CAST(doc_id AS VARCHAR)")
         + f") % 10 < 3 THEN '{_PII_INJECT}' ELSE '' END"
     )
 
-    from pyreshaper_spark.fixtures import VOCAB_SIZE as _V
-
-    o["ann_topk_dot"] = similarity.topk_dot_sql()
-    o["emb_norm_stats"] = _bigintify_sql(
-        similarity.emb_norm_stats_sql(), "sum_norm2"
-    )
-    o["ann_binq_topk"] = similarity.binq_topk_sql()
-    o["ann_topk_cosine"] = similarity.topk_cosine_sql()
-    o["ann_hard_negatives"] = similarity.hard_negatives_sql()
-    # wrap the standalone lexical oracle so the fused ranking can never
-    # drift from the one o["minhash_topk"] verifies
-    _LEX_TOPK_SQL = (
-        "SELECT * FROM (\n"
-        + o["minhash_topk"]
-        + "\n) WHERE CAST(doc_id AS BIGINT) < 10"
-    )
-    o["hybrid_topk_rrf"] = "WITH " + similarity.rrf_fuse_sql(
-        _LEX_TOPK_SQL, similarity.topk_cosine_sql(), k=5
-    )
-    o["ann_mmr_topk"] = similarity.mmr_topk_sql(n_queries=5, k=3)
-    o["emb_outliers"] = _bigintify_sql(
-        similarity.emb_outliers_sql(), "d2_num"
-    )
-
-    o["ann_ivf_probe"] = similarity.ivf_probe_topk_sql()
-    o["ann_lsh_pairs"] = similarity.lsh_bucket_pairs_sql()
-    o["emb_near_dup"] = similarity.cosine_near_dups_sql(num=2, den=5)
-    o["emb_near_dup_bucketcap"] = similarity.cosine_near_dups_sql(
-        num=2, den=5, max_bucket=40
-    )
-    o["emb_src_centroid_d2"] = _bigintify_sql(
-        similarity.source_centroid_d2_sql(), "d2_num"
-    )
     from pyreshaper_spark.config import EPOCH0, HORIZON_S
+    from pyreshaper_spark.fixtures import VOCAB_SIZE as _V
     from pyreshaper_spark.operators.rollup import floor_sql
 
     _day_expr = floor_sql(
         f"{EPOCH0} + (doc_id * 48271 + 11) % {HORIZON_S}", 86400
     )
-    o["emb_centroid_drift_1d"] = _bigintify_sql(
-        similarity.centroid_drift_sql(_day_expr), "d2_num"
-    )
     o["pii_rate_1d"] = text.pii_rate_sql(_day_expr)
     o["datacard_by_source"] = text.datacard_by_source_sql()
-    from pyreshaper_spark.operators.dedup import dup_rate_by_day_sql
-
-    o["dup_rate_1d"] = dup_rate_by_day_sql(_day_expr)
 
     from pyreshaper_spark.operators import sampling as SMP
 

@@ -1,16 +1,18 @@
 """Cross-engine deterministic hashing primitives.
 
-Every dedup/similarity/text operator that must pass the DuckDB oracle
-derives its randomness from ``md5`` — the ONE hash both engines compute
-identically — reduced to integers:
+Every hashing operator that must pass the DuckDB oracle (text,
+sampling, funnel, vocab) derives its randomness from ``md5`` — the ONE
+hash both engines compute identically — reduced to integers:
 
     Spark : conv(substring(md5(cast(x as binary)), 1, 8), 16, 10)::long
     DuckDB: CAST('0x' || substr(md5(x), 1, 8) AS BIGINT)
 
 giving a uniform 32-bit word hash (verified byte-identical across
-engines). MinHash permutations are the classic universal family
-``(a*h + b) mod P`` with P = 2^31-1 and fixed odd constants, all in
-int64-safe range. No RNG anywhere — reruns and oracles are exact.
+engines). Hash permutations (the rows of ``vocab.token_cms``) are the
+classic universal family ``(a*h + b) mod P`` with P = 2^31-1 and fixed
+odd constants, all in int64-safe range; :func:`perm` and
+:func:`perm_sql` are its only renderings. No RNG anywhere — reruns and
+oracles are exact.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ from pyspark.sql import functions as F
 #: Mersenne prime 2^31 - 1 — the universal-hash modulus.
 P31 = 2_147_483_647
 
-#: (a, b) constants for the MinHash permutation family. Fixed, odd,
+#: (a, b) constants for the universal permutation family. Fixed, odd,
 #: small enough that a*h + b < 2^63 for h < 2^32.
 MINHASH_PERMS: tuple[tuple[int, int], ...] = tuple(
     (2 * i + 3, 104_729 * (i + 1) + 7) for i in range(16)
@@ -41,12 +43,13 @@ def h32_sql(expr: str) -> str:
 
 
 def perm(i: int, h: Column) -> Column:
-    """MinHash permutation i applied to a hash column (Spark side)."""
+    """Permutation i applied to a hash column (Spark side)."""
     a, b = MINHASH_PERMS[i]
     return F.pmod(h * F.lit(a) + F.lit(b), F.lit(P31))
 
 
 def perm_sql(i: int, hexpr: str) -> str:
+    """The DuckDB rendering of :func:`perm`."""
     a, b = MINHASH_PERMS[i]
     return f"(({hexpr}) * {a} + {b}) % {P31}"
 

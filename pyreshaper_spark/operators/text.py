@@ -444,8 +444,7 @@ def datacard_by_source(docs: DataFrame) -> DataFrame:
     Every figure is exact integer math on the same expressions the
     standalone operators use (quality gate ≡ :func:`quality_score`,
     PII flag ≡ :func:`pii_scan`, language vote ≡ :func:`lang_id`,
-    duplicate identity ≡ the md5-derived content hash of
-    :func:`~pyreshaper_spark.operators.dedup.dup_rate_by_day`); the
+    duplicate identity ≡ the md5 of the full text); the
     median is the exact lower-median order statistic (rank
     ``(n+1) div 2`` on the (n_words, doc_id) total order).
 

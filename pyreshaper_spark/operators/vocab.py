@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from pyreshaper_spark.config import EPOCH0, HORIZON_S
 from pyreshaper_spark.fixtures import VOCAB_SIZE
-from pyreshaper_spark.functions.xhash import h32, h32_sql, perm, words_col
+from pyreshaper_spark.functions.xhash import h32, h32_sql, perm, perm_sql, words_col
 
 from .rollup import bucket_col, floor_sql, floor_to
 
@@ -1053,17 +1053,13 @@ def cms_estimate(
 
 def token_cms_sql(depth: int = 4, width: int = 64) -> str:
     """DuckDB twin of :func:`token_cms` over the `tok` CTE."""
-    from pyreshaper_spark.functions.xhash import MINHASH_PERMS, P31
-
     h = h32_sql("CAST(token AS VARCHAR)")
-    arms = []
-    for i in range(depth):
-        a, b = MINHASH_PERMS[i]
-        arms.append(
-            f"SELECT source, {i} AS cms_row, "
-            f"((({h}) * {a} + {b}) % {P31}) % {width} AS cms_bucket "
-            f"FROM tok"
-        )
+    arms = [
+        f"SELECT source, {i} AS cms_row, "
+        f"({perm_sql(i, h)}) % {width} AS cms_bucket "
+        f"FROM tok"
+        for i in range(depth)
+    ]
     cells = "\nUNION ALL\n".join(arms)
     return f"""
 SELECT source, cms_row, cms_bucket, count(*) AS cnt

@@ -1,7 +1,7 @@
 """Unit tests for the offline changepoint/trend module: AMOC exact
 between-variance argmax vs a Fraction brute force, Mann–Kendall S and
-tie-corrected variance vs a pairwise reference, and the containment
-dedup's short-doc-inside-long-doc behaviour that Jaccard misses."""
+tie-corrected variance vs a pairwise reference, and Pettitt's
+changepoint vs a brute-force reference."""
 
 from __future__ import annotations
 
@@ -14,10 +14,6 @@ from pyreshaper_spark.operators.changepoint import (
     amoc_changepoint,
     mann_kendall,
     pettitt,
-)
-from pyreshaper_spark.operators.dedup import (
-    containment_pairs,
-    ngram_jaccard_pairs,
 )
 
 DAY = 86400
@@ -211,39 +207,3 @@ def test_pettitt_fuzz_vs_reference(spark):
         assert (r.cp_t, r.cp_x, r.u_stat) == (t, x, u), (
             r.source, r.bucket_s
         )
-
-
-# ------------------------------------------------- containment dedup
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(
-        [Row(doc_id=i, text=t, source="s") for i, t in rows]
-    )
-
-
-def test_containment_catches_embedded_doc(spark):
-    words = [f"w{i}" for i in range(60)]
-    long_doc = " ".join(words)
-    short_doc = " ".join(words[20:28])  # 8 words fully inside long_doc
-    filler = " ".join(f"z{i}" for i in range(40))
-    docs = _docs(spark, [(1, long_doc), (2, short_doc), (3, filler)])
-    cont = containment_pairs(docs, n=3, cont_num=8, cont_den=10).collect()
-    assert {(r.doc_a, r.doc_b) for r in cont} == {(1, 2)}
-    r = cont[0]
-    # short doc: 6 trigrams, all contained
-    assert (r.inter, min(r.na, r.nb), r.cont_ppb) == (6, 6, 10**9)
-    # Jaccard at the usual 3/10 misses it: 6 / (58 + 6 - 6) ≈ 0.10
-    jac = ngram_jaccard_pairs(docs, n=3).collect()
-    assert {(r.doc_a, r.doc_b) for r in jac} == set()
-
-
-def test_containment_threshold_binds(spark):
-    words = [f"w{i}" for i in range(20)]
-    half_in = " ".join(words[:6] + [f"q{i}" for i in range(6)])
-    base = " ".join(words)
-    docs = _docs(spark, [(1, base), (2, half_in)])
-    # overlap trigrams = 4 of half_in's 10 -> containment 0.4
-    hits = containment_pairs(docs, n=3, cont_num=4, cont_den=10).collect()
-    assert {(r.doc_a, r.doc_b) for r in hits} == {(1, 2)}
-    assert containment_pairs(docs, n=3, cont_num=5, cont_den=10).count() == 0

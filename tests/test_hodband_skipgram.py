@@ -74,31 +74,6 @@ def test_tok_skipgram_brute_force(spark):
     assert got == want
 
 
-def test_emb_norm_stats_numpy(spark):
-    import numpy as np
-
-    from pyreshaper_spark.operators.similarity import QUANT, emb_norm_stats
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    rows = emb.collect()
-    want = {}
-    for r in rows:
-        q = np.round(np.array(r["embedding"], dtype=np.float64) * QUANT)
-        n2 = int((q * q).sum())
-        n, s, lo, hi = want.get(r["label"], (0, 0, None, None))
-        want[r["label"]] = (
-            n + 1, s + n2,
-            n2 if lo is None else min(lo, n2),
-            n2 if hi is None else max(hi, n2),
-        )
-    got = {
-        r["label"]: (r["n_vecs"], int(r["sum_norm2"]),
-                     r["min_norm2"], r["max_norm2"])
-        for r in emb_norm_stats(emb).collect()
-    }
-    assert got == want
-
-
 def test_hod_anomaly_against_band(spark):
     from pyreshaper_spark.operators.rollup import hod_anomaly, hod_band
 

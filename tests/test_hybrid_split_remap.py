@@ -1,165 +1,12 @@
-"""Session-11 operators: leakage-free split, hard-negative mining,
-RRF hybrid fusion, vocabulary remap — property tests against small
-hand-built fixtures and brute-force references."""
+"""Vocabulary remap, PII redaction, multi-touch attribution, the
+bucket Fano factor and temperature source mixing — property tests
+against small hand-built fixtures and brute-force references."""
 
 from __future__ import annotations
 
 from collections import Counter
 
 from pyspark.sql import functions as F
-
-
-# --------------------------------------------------------------------------
-# leakage_free_split
-# --------------------------------------------------------------------------
-
-def _docs_pairs(spark):
-    docs = spark.createDataFrame(
-        [(i, f"src{i % 3}") for i in range(40)], "doc_id long, source string"
-    )
-    # components: {0,1,2,3}, {10,11}, {20,21,22}; rest singletons
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (10, 11), (20, 21), (21, 22)],
-        "doc_a long, doc_b long",
-    )
-    return docs, pairs
-
-
-def test_leakage_free_split_component_coherence(spark):
-    from pyreshaper_spark.operators.cluster import leakage_free_split
-
-    docs, pairs = _docs_pairs(spark)
-    out = leakage_free_split(docs, pairs, val_bp=3000, test_bp=3000)
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert len(rows) == 40
-    # every clustered member carries its component min as group_key and
-    # the SAME split as the representative
-    for comp in ([0, 1, 2, 3], [10, 11], [20, 21, 22]):
-        keys = {rows[d]["group_key"] for d in comp}
-        splits = {rows[d]["split"] for d in comp}
-        assert keys == {min(comp)}
-        assert len(splits) == 1
-    # unclustered docs key on themselves
-    assert rows[7]["group_key"] == 7
-    assert set(r["split"] for r in rows.values()) <= {"train", "val", "test"}
-
-
-def test_leakage_free_split_no_cross_split_pair(spark):
-    """The defining property: no near-dup PAIR straddles two splits."""
-    from pyreshaper_spark.operators.cluster import leakage_free_split
-
-    docs, pairs = _docs_pairs(spark)
-    out = leakage_free_split(docs, pairs, val_bp=3000, test_bp=3000)
-    j = (
-        pairs.join(
-            out.select(F.col("doc_id").alias("doc_a"),
-                       F.col("split").alias("split_a")), "doc_a")
-        .join(out.select(F.col("doc_id").alias("doc_b"),
-                         F.col("split").alias("split_b")), "doc_b")
-    )
-    assert j.filter(F.col("split_a") != F.col("split_b")).count() == 0
-
-
-def test_leakage_free_split_matches_doc_split_when_unclustered(spark):
-    """With NO pairs, the split degenerates to split_assign's doc-hash
-    ranges (same hash, same basis points)."""
-    from pyreshaper_spark.operators.cluster import leakage_free_split
-    from pyreshaper_spark.operators.sampling import split_assign
-
-    docs, _ = _docs_pairs(spark)
-    empty = docs.sparkSession.createDataFrame(
-        [], "doc_a long, doc_b long"
-    )
-    a = {
-        (r["doc_id"], r["split"])
-        for r in leakage_free_split(docs, empty, 1000, 1000).collect()
-    }
-    b = {
-        (r["doc_id"], r["split"])
-        for r in split_assign(docs, 1000, 1000).collect()
-    }
-    assert a == b
-
-
-# --------------------------------------------------------------------------
-# hard_negatives
-# --------------------------------------------------------------------------
-
-def test_hard_negatives_brute_force(spark):
-    from pyreshaper_spark.operators.similarity import QUANT, hard_negatives
-
-    vecs = []
-    for i in range(30):
-        v = [((i * 7 + d * 13) % 19) / 10.0 - 0.9 for d in range(4)]
-        vecs.append((i, v, i % 3))
-    emb = spark.createDataFrame(
-        vecs, "vec_id long, embedding array<float>, label int"
-    )
-    out = hard_negatives(emb, n_queries=5, k=3).collect()
-
-    # brute force on the same fixed-point grid
-    q = {i: [round(float(x) * QUANT) for x in v] for i, v, _ in vecs}
-    lab = {i: l for i, _, l in vecs}
-    for qid in range(5):
-        cands = [
-            (sum(a * b for a, b in zip(q[qid], q[n])), n)
-            for n in q
-            if n != qid and lab[n] != lab[qid]
-        ]
-        cands.sort(key=lambda t: (-t[0], t[1]))
-        expect = [(n, dot, r + 1) for r, (dot, n) in enumerate(cands[:3])]
-        got = sorted(
-            [(r["neighbor_id"], r["dot"], r["rank"])
-             for r in out if r["query_id"] == qid],
-            key=lambda t: t[2],
-        )
-        assert got == expect, (qid, got, expect)
-    # label constraint: no neighbor shares the query's label
-    for r in out:
-        assert lab[r["neighbor_id"]] != r["query_label"]
-
-
-# --------------------------------------------------------------------------
-# rrf_fuse
-# --------------------------------------------------------------------------
-
-def test_rrf_fuse_hand_computed(spark):
-    from pyreshaper_spark.operators.similarity import RRF_SCALE, rrf_fuse
-
-    lex = spark.createDataFrame(
-        [(1, 100, 1), (1, 101, 2), (2, 200, 1)],
-        "doc_id long, neighbor long, rank long",
-    )
-    sem = spark.createDataFrame(
-        [(1, 101, 1), (1, 102, 2), (3, 300, 1)],
-        "query_id long, neighbor_id long, rank long",
-    )
-    out = {
-        (r["query_id"], r["neighbor_id"]): (r["rrf"], r["rank"])
-        for r in rrf_fuse(lex, sem, k=5, c=60).collect()
-    }
-    c = 60
-    both = RRF_SCALE // (c + 2) + RRF_SCALE // (c + 1)
-    assert out[(1, 101)] == (both, 1)  # in both lists -> fused to top
-    assert out[(1, 100)] == (RRF_SCALE // (c + 1), 2)
-    assert out[(1, 102)] == (RRF_SCALE // (c + 2), 3)
-    # one-sided queries survive the full outer join
-    assert out[(2, 200)] == (RRF_SCALE // (c + 1), 1)
-    assert out[(3, 300)] == (RRF_SCALE // (c + 1), 1)
-
-
-def test_rrf_fuse_k_cut(spark):
-    from pyreshaper_spark.operators.similarity import rrf_fuse
-
-    lex = spark.createDataFrame(
-        [(1, n, n) for n in range(1, 8)],
-        "doc_id long, neighbor long, rank long",
-    )
-    sem = spark.createDataFrame(
-        [], "query_id long, neighbor_id long, rank long"
-    )
-    out = rrf_fuse(lex, sem, k=3).collect()
-    assert sorted(r["neighbor_id"] for r in out) == [1, 2, 3]
 
 
 # --------------------------------------------------------------------------
@@ -217,89 +64,6 @@ def test_vocab_remap_is_order_preserving_bijection(spark, seq):
 
 
 # --------------------------------------------------------------------------
-# doc_chunks
-# --------------------------------------------------------------------------
-
-
-# --------------------------------------------------------------------------
-# mmr_topk
-# --------------------------------------------------------------------------
-
-def _mmr_reference(vecs, n_queries, k, a, b):
-    """Greedy MMR brute force on the integer grid."""
-    out = []
-    for qid in range(n_queries):
-        sel = []
-        cand = {i: v for i, v in vecs.items() if i != qid}
-        for rank in range(1, k + 1):
-            best = None
-            for nid, nv in cand.items():
-                rel = sum(x * y for x, y in zip(vecs[qid], nv))
-                ms = max(
-                    (sum(x * y for x, y in zip(nv, vecs[s])) for s in sel),
-                    default=0,
-                )
-                score = a * rel - b * ms
-                key = (-score, nid)
-                if best is None or key < best[0]:
-                    best = (key, nid, rel, ms, score)
-            _, nid, rel, ms, score = best
-            out.append((qid, nid, rel, ms, score, rank))
-            sel.append(nid)
-            del cand[nid]
-    return sorted(out)
-
-
-def test_mmr_topk_brute_force(spark):
-    from pyreshaper_spark.operators.similarity import QUANT, mmr_topk
-
-    rows = []
-    for i in range(25):
-        v = [((i * 11 + d * 5) % 17) / 8.0 - 1.0 for d in range(4)]
-        rows.append((i, v, 0))
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    vecs = {
-        i: [round(float(x) * QUANT) for x in v] for i, v, _ in rows
-    }
-    got = sorted(
-        (r["query_id"], r["neighbor_id"], r["rel"], r["maxsim"],
-         r["score"], r["mmr_rank"])
-        for r in mmr_topk(emb, n_queries=4, k=3, a=7, b=3).collect()
-    )
-    assert got == _mmr_reference(vecs, 4, 3, 7, 3)
-
-
-def test_mmr_diversifies_vs_plain_topk(spark):
-    """A query whose two nearest neighbors are near-copies: plain
-    top-2 returns both; MMR's second pick skips the redundant copy."""
-    from pyreshaper_spark.operators.similarity import mmr_topk, topk_dot
-
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0, 0.0, 0.0], 0),   # query
-            (1, [0.9, 0.1, 0.0, 0.0], 0),   # top hit
-            (2, [0.9, 0.1, 0.0, 0.0], 0),   # exact copy of 1
-            (3, [0.5, 0.0, 0.8, 0.0], 0),   # diverse, lower rel
-        ],
-        "vec_id long, embedding array<float>, label int",
-    )
-    plain = {
-        (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in topk_dot(emb, n_queries=1, k=2).collect()
-    }
-    assert plain[(0, 1)] == 1 and plain[(0, 2)] == 2
-    # b large enough that the copy's redundancy outweighs its rel:
-    # score(2) = rel - 2|v1|^2 = 9e7-16.4e7; score(3) = 5e7-2*4.5e7
-    mmr = {
-        (r["query_id"], r["mmr_rank"]): r["neighbor_id"]
-        for r in mmr_topk(emb, n_queries=1, k=2, a=1, b=2).collect()
-    }
-    assert mmr[(0, 1)] == 1 and mmr[(0, 2)] == 3
-
-
-# --------------------------------------------------------------------------
 # pii_redact
 # --------------------------------------------------------------------------
 
@@ -348,43 +112,8 @@ def test_pii_redact_sequential_no_double_count(spark):
 
 
 # --------------------------------------------------------------------------
-# survivor_flags_pref
+# vocab_remap (empty docs)
 # --------------------------------------------------------------------------
-
-def test_survivor_flags_pref_keeps_best(spark):
-    from pyreshaper_spark.operators.cluster import (
-        survivor_flags,
-        survivor_flags_pref,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "s0", 10), (2, "s0", 99), (3, "s0", 99),  # comp {1,2,3}
-            (10, "s1", 5), (11, "s1", 4),                 # comp {10,11}
-            (20, "s1", 7),                                # unclustered
-        ],
-        "doc_id long, source string, n_chars long",
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
-    )
-    kept = {
-        r["doc_id"]: r["kept"]
-        for r in survivor_flags_pref(docs, pairs, "n_chars").collect()
-    }
-    # longest wins; 2 vs 3 tie on pref -> min doc_id
-    assert kept == {1: False, 2: True, 3: False,
-                    10: True, 11: False, 20: True}
-    # min-id policy would instead keep 1 — the policies genuinely differ
-    kept_min = {
-        r["doc_id"]: r["kept"]
-        for r in survivor_flags(docs, pairs).collect()
-    }
-    assert kept_min[1] and not kept_min[2]
-    # invariant both share: exactly one survivor per component
-    for comp in ([1, 2, 3], [10, 11]):
-        assert sum(kept[d] for d in comp) == 1
-
 
 def test_vocab_remap_keeps_zero_token_docs(spark):
     """The 'rewrite ALL token arrays' contract: an empty-token doc
@@ -509,52 +238,3 @@ def test_mix_temperature_upweights_small_sources(spark):
     a = sorted(map(tuple, out.collect()))
     b = sorted(map(tuple, mix_temperature_sqrt(docs, budget=100).collect()))
     assert a == b
-
-
-# --------------------------------------------------------------------------
-# emb_outliers
-# --------------------------------------------------------------------------
-
-def test_emb_outliers_brute_force(spark):
-    from pyreshaper_spark.operators.similarity import QUANT, emb_outliers
-
-    rows = []
-    for i in range(24):
-        v = [((i * 3 + d * 7) % 11) / 10.0 for d in range(4)]
-        rows.append((i, v, i % 2))
-    # an injected far-away point must rank 1 in its label
-    rows.append((99, [9.0, -9.0, 9.0, -9.0], 0))
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    out = emb_outliers(emb, k=3).collect()
-
-    q = {i: [round(float(x) * QUANT) for x in v] for i, v, _ in rows}
-    by_label: dict[int, list[int]] = {}
-    for i, _, l in rows:
-        by_label.setdefault(l, []).append(i)
-    for lab, ids in by_label.items():
-        n = len(ids)
-        S = [sum(q[i][d] for i in ids) for d in range(4)]
-        scored = sorted(
-            (
-                (-sum((n * q[i][d] - S[d]) ** 2 for d in range(4)), i)
-                for i in ids
-            ),
-        )
-        expect = [(i, -neg, r + 1) for r, (neg, i) in enumerate(scored[:3])]
-        got = sorted(
-            [(r["vec_id"], int(r["d2_num"]), r["rank"])
-             for r in out if r["label"] == lab],
-            key=lambda t: t[2],
-        )
-        assert got == expect, (lab, got, expect)
-    assert [r["vec_id"] for r in out if r["label"] == 0][0] == 99 or any(
-        r["vec_id"] == 99 and r["rank"] == 1 for r in out
-    )
-
-
-# --------------------------------------------------------------------------
-# pack_materialize
-# --------------------------------------------------------------------------
-

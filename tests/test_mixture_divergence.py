@@ -1,18 +1,12 @@
 """Cross-source mixture divergence: token-distribution TVD
-(operators/vocab.py::source_token_tvd), embedding-centroid separation
-(operators/similarity.py::source_centroid_d2) and near-dup rate per
-source (operators/cluster.py::dedup_rate_by_source) — each verified
-against a brute-force python/numpy reference on hand-built fixtures."""
+(operators/vocab.py::source_token_tvd), verified against a brute-force
+python reference on hand-built fixtures."""
 
 from __future__ import annotations
 
 from collections import Counter
 from fractions import Fraction
 
-from pyspark.sql import functions as F
-
-from pyreshaper_spark.operators.cluster import dedup_rate_by_source
-from pyreshaper_spark.operators.similarity import QUANT, source_centroid_d2
 from pyreshaper_spark.operators.vocab import source_token_tvd
 
 
@@ -64,62 +58,6 @@ def test_tvd_matches_brute_force_fractions(spark):
     assert Fraction(got[("a", "c")][0], 2 * 6 * 3) == 1
 
 
-def test_centroid_d2_matches_numpy(spark):
-    import numpy as np
-
-    docs = spark.createDataFrame(
-        [(i, f"s{i % 3}") for i in range(12)], "doc_id long, source string"
-    )
-    rng = np.random.RandomState(7)
-    vecs = rng.randn(12, 4).astype("float32")
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(12)],
-        "vec_id long, embedding array<float>",
-    )
-    got = {
-        (r["src_a"], r["src_b"]): (int(r["d2_num"]), r["n_a"], r["n_b"])
-        for r in source_centroid_d2(docs, emb).collect()
-    }
-    q = np.rint(vecs.astype("float64") * QUANT).astype(object)
-    sums = {f"s{k}": q[[i for i in range(12) if i % 3 == k]].sum(axis=0)
-            for k in range(3)}
-    ns = {f"s{k}": 4 for k in range(3)}
-    for (a, b), (num, na, nb) in got.items():
-        diff = sums[a] * ns[b] - sums[b] * ns[a]
-        assert num == int(sum(d * d for d in diff)), (a, b)
-        assert (na, nb) == (ns[a], ns[b])
-    assert len(got) == 3
-
-
-def test_centroid_d2_zero_for_identical_sources(spark):
-    docs = spark.createDataFrame(
-        [(0, "x"), (1, "y")], "doc_id long, source string"
-    )
-    emb = spark.createDataFrame(
-        [(0, [0.5, -0.25]), (1, [0.5, -0.25])],
-        "vec_id long, embedding array<float>",
-    )
-    rows = source_centroid_d2(docs, emb).collect()
-    assert len(rows) == 1 and int(rows[0]["d2_num"]) == 0
-
-
-def test_dedup_rate_counts_component_losers(spark):
-    docs = spark.createDataFrame(
-        [(i, "a" if i < 4 else "b") for i in range(7)],
-        "doc_id long, source string",
-    )
-    # clusters: {0,1,2} (a), {4,5} (b); docs 3 (a) and 6 (b) untouched
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (4, 5)], "doc_a long, doc_b long"
-    )
-    got = {
-        r["source"]: (r["n_docs"], r["n_dupes"])
-        for r in dedup_rate_by_source(docs, pairs).collect()
-    }
-    # component survivors are the min doc ids (0 and 4)
-    assert got == {"a": (4, 2), "b": (3, 1)}
-
-
 def test_tvd_plan_broadcasts_totals_no_cartesian(spark):
     rows = [("a", 1), ("a", 2), ("b", 1), ("c", 9)]
     plan = (
@@ -130,21 +68,3 @@ def test_tvd_plan_broadcasts_totals_no_cartesian(spark):
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def test_centroid_pair_survives_unembedded_source(spark):
-    """Review finding: a source with zero embedded docs must still
-    appear in every pair — NULL d2_num (centroid undefined), never a
-    silently missing row."""
-    docs = spark.createDataFrame(
-        [(0, "x"), (1, "x"), (2, "y")], "doc_id long, source string"
-    )
-    emb = spark.createDataFrame(  # doc 2 ('y') has no embedding
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
-        "vec_id long, embedding array<float>",
-    )
-    rows = source_centroid_d2(docs, emb).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["src_a"], r["src_b"]) == ("x", "y")
-    assert r["d2_num"] is None and (r["n_a"], r["n_b"]) == (2, 0)

@@ -1,78 +1,10 @@
-"""Unit tests for centroid drift, the daily dup rate, the
+"""Unit tests for the daily PII rate, the per-source data card, the
 calendar-aligned hopping rollup and the RFM, DAU/WAU and
 conversion-lag event panels."""
 
 from __future__ import annotations
 
 from pyspark.sql import Row
-
-from pyreshaper_spark.operators.similarity import centroid_drift
-
-
-def _emb(spark, mat, labels=None):
-    n = len(mat)
-    labels = labels or ["l%d" % (i % 3) for i in range(n)]
-    return spark.createDataFrame(
-        [
-            Row(vec_id=i, embedding=[float(x) for x in mat[i]],
-                label=labels[i])
-            for i in range(n)
-        ]
-    )
-
-
-def test_centroid_drift_two_days_exact(spark):
-    # one source, two days, hand-computed centroid movement
-    emb = _emb(
-        spark,
-        [[1.0] + [0.0] * 63, [0.0, 1.0] + [0.0] * 62, [1.0] + [0.0] * 63],
-    )
-    days = spark.createDataFrame(
-        [
-            Row(vec_id=0, source="a", day_s=0),
-            Row(vec_id=1, source="a", day_s=0),
-            Row(vec_id=2, source="a", day_s=86400),
-        ]
-    )
-    out = centroid_drift(days, emb).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r.source, r.day_s, r.n_cur, r.n_prev) == ("a", 86400, 1, 2)
-    # s_prev = (10000, 10000, 0...), n_prev=2; s_cur = (20000? no:
-    # quantized 1.0 -> 10000). s_cur=(10000,0,...), n_cur=1
-    # diff_d = s_cur_d*n_prev - s_prev_d*n_cur
-    # d = (10000*2 - 10000*1, 0*2 - 10000*1) = (10000, -10000)
-    assert int(r.d2_num) == 10000**2 + 10000**2
-
-
-def test_centroid_drift_no_consecutive_days(spark):
-    emb = _emb(spark, [[1.0] + [0.0] * 63, [1.0] + [0.0] * 63])
-    days = spark.createDataFrame(
-        [
-            Row(vec_id=0, source="a", day_s=0),
-            Row(vec_id=1, source="a", day_s=2 * 86400),
-        ]
-    )
-    assert centroid_drift(days, emb).count() == 0
-
-
-def test_dup_rate_by_day(spark):
-    from pyreshaper_spark.operators.dedup import dup_rate_by_day
-
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id="1", text="alpha", day_s=0),
-            Row(doc_id="2", text="alpha", day_s=0),      # same-day dup
-            Row(doc_id="3", text="beta", day_s=0),
-            Row(doc_id="4", text="alpha", day_s=86400),  # cross-day dup
-            Row(doc_id="5", text="gamma", day_s=86400),
-        ]
-    )
-    out = {r.day_s: r for r in dup_rate_by_day(docs).collect()}
-    assert (out[0].n_docs, out[0].n_new_hashes) == (3, 2)
-    assert out[0].dup_ppm == 1_000_000 // 3
-    assert (out[86400].n_docs, out[86400].n_new_hashes) == (2, 1)
-    assert out[86400].dup_ppm == 500_000
 
 
 def test_pii_rate_aggregates(spark):
@@ -229,5 +161,3 @@ def test_events_conversion_lag(spark):
     assert out[1].lag_s == 50
     assert 2 not in out  # purchase precedes first signup
     assert 3 not in out  # no purchase
-
-

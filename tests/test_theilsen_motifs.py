@@ -1,6 +1,5 @@
 """Theil–Sen exactness vs a Fraction reference, SAX motif counts vs a
-brute-force scan, OOV rate vs a Counter reference, and minhash_topk
-ranking semantics."""
+brute-force scan, and OOV rate vs a Counter reference."""
 
 from __future__ import annotations
 
@@ -136,35 +135,3 @@ def test_oov_rate_counter_reference(spark):
         for r in oov_rate(tok, 3600, top_v).collect()
     }
     assert got == want
-
-
-def test_minhash_topk_ranking(spark):
-    from pyreshaper_spark.operators.dedup import (
-        minhash_topk,
-        verified_near_dups,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    k = 3
-    out = minhash_topk(docs, k=k).collect()
-    pairs = verified_near_dups(docs, 0, 1).collect()
-    # reference: symmetrize + rank by exact Jaccard (Fraction), then
-    # the scaled-integer key must induce the same top-k sets
-    cand = {}
-    for p in pairs:
-        if p["union_sz"] == 0:
-            continue
-        jk = (p["inter"] * 1_000_000_000) // p["union_sz"]
-        cand.setdefault(p["doc_a"], []).append((jk, p["doc_b"], p))
-        cand.setdefault(p["doc_b"], []).append((jk, p["doc_a"], p))
-    want = {}
-    for q, lst in cand.items():
-        lst.sort(key=lambda x: (-x[0], x[1]))
-        for rank, (_, c, _) in enumerate(lst[:k], start=1):
-            want[(q, c)] = rank
-    got = {(r["doc_id"], r["neighbor"]): r["rank"] for r in out}
-    assert got == want
-    # every rank run per doc is 1..n without gaps
-    per_doc = Counter(r["doc_id"] for r in out)
-    for r in out:
-        assert 1 <= r["rank"] <= min(k, per_doc[r["doc_id"]])

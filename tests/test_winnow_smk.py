@@ -1,4 +1,4 @@
-"""Winnowing fingerprints (MOSS) + seasonal Mann–Kendall unit tests."""
+"""Seasonal Mann–Kendall, day-discord and token-collocation unit tests."""
 
 from __future__ import annotations
 
@@ -8,65 +8,9 @@ from collections import Counter
 from pyspark.sql import Row
 
 from pyreshaper_spark.operators.changepoint import seasonal_mann_kendall
-from pyreshaper_spark.operators.dedup import (
-    winnow_fingerprints,
-    winnow_pairs,
-)
 
 DAY = 86400
 HOUR = 3600
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(
-        [Row(doc_id=i, text=t, source="s") for i, t in rows]
-    )
-
-
-def test_winnow_guarantee_shared_run(spark):
-    # docs sharing a run of >= w+k-1 = 6 words must share a fingerprint
-    shared = "alpha beta gamma delta epsilon zeta eta theta"
-    d1 = "x1 x2 x3 " + shared + " y1 y2"
-    d2 = "z1 " + shared + " z2 z3 z4"
-    fp = winnow_fingerprints(_docs(spark, [(1, d1), (2, d2)]), k=3, w=4)
-    by_doc = {}
-    for r in fp.collect():
-        by_doc.setdefault(r.doc_id, set()).add(r.fp)
-    assert by_doc[1] & by_doc[2], "shared 8-word run must share a print"
-
-
-def test_winnow_short_doc_one_window(spark):
-    # 4 words -> 2 trigram hashes < w -> exactly one window (whole doc)
-    fp = winnow_fingerprints(
-        _docs(spark, [(1, "a b c d"), (2, "a b")]), k=3, w=4
-    ).collect()
-    assert {r.doc_id for r in fp} == {1}      # doc 2 has < k words
-    assert len([r for r in fp if r.doc_id == 1]) == 1
-
-
-def test_winnow_sampling_rate(spark):
-    # fingerprints per doc ~ 2/(w+1) of its k-grams, never more than
-    # the window count
-    rng = random.Random(3)
-    text = " ".join(f"w{rng.randint(0, 50)}" for _ in range(400))
-    fp = winnow_fingerprints(_docs(spark, [(1, text)]), k=3, w=8)
-    n_fp = fp.count()
-    n_kg = 400 - 2
-    assert n_fp <= n_kg - 7          # window count
-    assert n_fp <= int(0.6 * n_kg)   # genuinely sampled, not ~all
-    assert n_fp >= n_kg // (8 * 4)   # but not degenerate either
-
-
-def test_winnow_pairs_near_dup(spark):
-    words = [f"w{i}" for i in range(80)]
-    base = " ".join(words)
-    near = " ".join(words[:75] + ["q1", "q2", "q3", "q4", "q5"])
-    far = " ".join(f"z{i}" for i in range(80))
-    got = winnow_pairs(
-        _docs(spark, [(1, base), (2, near), (3, far)]),
-        k=3, w=4, cont_num=5, cont_den=10,
-    ).collect()
-    assert {(r.doc_a, r.doc_b) for r in got} == {(1, 2)}
 
 
 def _tier(spark, rows):

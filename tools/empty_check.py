@@ -29,10 +29,7 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+TABLES = ("events", "documents")
 
 # Queries whose contract explicitly rejects an empty corpus with a
 # typed error (name -> substring expected in the exception).

@@ -167,98 +167,26 @@ def main() -> None:
         [("broadcast hash join chosen", "BroadcastHashJoin" in p)],
     ))
 
-    # 5. dedup / similarity scale shapes — no cartesian anywhere, verify
-    # joins bounded by candidate lists, IVF probe an equi-join on bucket
-    from pyreshaper_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        verified_near_dups,
-    )
-    from pyreshaper_spark.operators.similarity import (
-        cosine_near_dups,
-        ivf_probe_topk,
-    )
-
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
 
     def no_cartesian(p: str) -> bool:
         return "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
 
-    p_minhash = plan_of(verified_near_dups(docs))
-    p_ngram = plan_of(ngram_jaccard_pairs(docs, max_df=200))
-    p_cos = plan_of(cosine_near_dups(emb, num=2, den=5))
-    p_ivf = plan_of(ivf_probe_topk(emb))
-    sections.append((
-        "Dedup + similarity (candidate-bounded, no cross joins)",
-        "\n".join([
-            "--- verified_near_dups ---", p_minhash[:2200],
-            "--- ngram_jaccard_pairs(max_df) ---", p_ngram[:1200],
-            "--- cosine_near_dups (banded LSH) ---", p_cos[:2200],
-            "--- ivf_probe_topk (inverted-list equi-join) ---", p_ivf[:2200],
-        ]),
-        [
-            ("minhash verify: no cartesian / nested-loop join",
-             no_cartesian(p_minhash)),
-            ("minhash verify join keyed on candidate pairs (doc_a,doc_b)",
-             "doc_a" in p_minhash and "doc_b" in p_minhash),
-            ("ngram capped: no cartesian / nested-loop join",
-             no_cartesian(p_ngram)),
-            ("cosine near-dup: no cartesian / nested-loop join",
-             no_cartesian(p_cos)),
-            ("ivf probe: no cartesian / nested-loop join",
-             no_cartesian(p_ivf)),
-            ("ivf probe: hash equi-join on bucket",
-             "BroadcastHashJoin [bucket" in p_ivf
-             or "SortMergeJoin [bucket" in p_ivf
-             or ("HashJoin" in p_ivf and "bucket" in p_ivf)),
-        ],
-    ))
-
-    # 5b. incremental ingest-batch dedup — the probe must be an
-    # equi-join on (band, band_key): the historical corpus is touched
-    # only through its 4-rows-per-doc index, never via a cross join
-    from pyreshaper_spark.operators.dedup import (
-        incremental_candidates,
-        signature_index,
-    )
-
-    idx = signature_index(docs.limit(300))
-    p_incr = plan_of(incremental_candidates(docs.limit(100), idx))
-    sections.append((
-        "Incremental dedup (ingest batch vs committed index)",
-        p_incr[:2600],
-        [
-            ("no cartesian / nested-loop join", no_cartesian(p_incr)),
-            ("probe is an equi-join on the band bucket key",
-             "band_key" in p_incr
-             and ("SortMergeJoin [band" in p_incr
-                  or "BroadcastHashJoin [band" in p_incr
-                  or ("HashJoin" in p_incr and "band" in p_incr))),
-            ("canonical pair aggregate (distinct-band count)",
-             "doc_a" in p_incr and "doc_b" in p_incr),
-        ],
-    ))
-
-    # 6. bucket-capped LSH + tier analytics (round-2 additions)
+    # 6. tier analytics (round-2 additions)
     from pyreshaper_spark.operators.gapfill import rate_delta
     from pyreshaper_spark.operators.rollup import bucket_percentiles
 
-    p_cap = plan_of(verified_near_dups(docs, max_bucket=50))
     p_rate = plan_of(
         rate_delta(tier0.select("source", "bucket_s", "sum_n_tok"))
     )
     p_pct = plan_of(bucket_percentiles(seq, 3600))
     sections.append((
-        "Band-bucket cap, rate window, percentile rollup",
+        "Rate window, percentile rollup",
         "\n".join([
-            "--- verified_near_dups(max_bucket) ---", p_cap[:2200],
             "--- rate_delta ---", p_rate[:1200],
             "--- bucket_percentiles ---", p_pct[:1200],
         ]),
         [
-            ("bucket-capped minhash: no cartesian / nested-loop join",
-             no_cartesian(p_cap)),
-            ("bucket cap is a window count, pre-join", "Window" in p_cap),
             ("rate delta: single window, no extra exchange beyond its "
              "partitionBy", p_rate.count("Window") // 2 <= 1),
             ("percentile rollup: tokens pruned from scan",
@@ -404,35 +332,16 @@ def main() -> None:
         ],
     ))
 
-    # 10. connected components round, TVD drift
-    from pyreshaper_spark.operators.cluster import (
-        _canon,
-        _large_star,
-        _small_star,
-    )
+    # 10. TVD drift
     from pyreshaper_spark.operators.drift import histogram_drift_tvd
 
-    edges = _canon(
-        verified_near_dups(docs, max_df=200).select(
-            F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-        )
-    )
-    p_star = plan_of(_small_star(_large_star(edges)))
     p_drift = plan_of(
         histogram_drift_tvd(bucket_histogram(seq, 86400, 50), 86400)
     )
     sections.append((
-        "CC star round, TVD drift",
-        "\n".join([
-            "--- small_star(large_star(edges)) one round ---",
-            p_star[:2200],
-            "--- histogram_drift_tvd ---", p_drift[:2000],
-        ]),
+        "TVD drift",
+        "\n".join(["--- histogram_drift_tvd ---", p_drift[:2000]]),
         [
-            ("cc round: no cartesian / nested-loop join — min-label "
-             "contraction is agg + equi-join only", no_cartesian(p_star)),
-            ("cc round: per-center min is a partial+final hash agg",
-             p_star.count("HashAggregate") >= 2),
             ("drift: no window — two hash aggs + keyed joins only",
              "Window" not in p_drift and no_cartesian(p_drift)),
             ("drift: tokens pruned from scan",
@@ -573,9 +482,8 @@ def main() -> None:
         ],
     ))
 
-    # 15. delete/restate repair shapes + embedding-LSH bucket cap
+    # 15. delete/restate repair shapes
     from pyreshaper_spark.operators.encode import decode_series_table
-    from pyreshaper_spark.operators.similarity import cosine_near_dups
     from pyreshaper_spark.operators.transpose import with_salt
     from pyreshaper_spark.operators.rollup import head_aggregate
     from pyreshaper_spark.plans.delete import (
@@ -584,9 +492,6 @@ def main() -> None:
         _resolve_ids,
         _victim_keys,
     )
-
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    p_capemb = plan_of(cosine_near_dups(emb, num=2, den=5, max_bucket=40))
 
     ids = _resolve_ids(
         spark, [r[0] for r in seq.select("doc_id").limit(2).collect()]
@@ -632,7 +537,7 @@ def main() -> None:
         )
     )
     sections.append((
-        "Repair path (delete/restate) + embedding-LSH bucket cap",
+        "Repair path (delete/restate)",
         "\n".join([
             "--- victim keys: chunk keys + 10m victim buckets ---",
             p_keys[:440],
@@ -642,13 +547,8 @@ def main() -> None:
             p_fix[:900],
             "--- victim-chunk re-encode ---", p_reenc[:880],
             "--- restate victim-chunk decode ---", p_dec[:560],
-            "--- cosine_near_dups(max_bucket=40) ---", p_capemb[:260],
         ]),
         [
-            ("emb bucket cap is a pre-join window count on the band key",
-             "Window" in p_capemb and "bucket_n" in p_capemb),
-            ("emb capped path: equi-joins only, no cartesian",
-             no_cartesian(p_capemb)),
             ("victim keys: LocalTableScan, no Exchange over them, no "
              "Scan ExistingRDD (no shuffle, no Python task)",
              p_keys.count("LocalTableScan") >= 2
@@ -947,17 +847,10 @@ def main() -> None:
         ],
     ))
 
-    # 21. cross-source mixture divergence (token TVD + centroid d2)
-    from pyreshaper_spark.operators.similarity import source_centroid_d2
+    # 21. cross-source mixture divergence (token TVD)
     from pyreshaper_spark.operators.vocab import source_token_tvd, token_stream
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     p_tvd = plan_of(source_token_tvd(token_stream(docs)))
-    p_cd2 = plan_of(source_centroid_d2(docs, emb))
-    cd2_schemas = [
-        seg.split("\n")[0] for seg in p_cd2.split("ReadSchema")[1:]
-    ]
     sections.append((
         "Cross-source mixture divergence",
         p_tvd,
@@ -969,15 +862,6 @@ def main() -> None:
              "anywhere (the |S| x |S| grid rides a broadcast)",
              "BroadcastHashJoin" in p_tvd
              and "CartesianProduct" not in p_tvd),
-            ("centroid d2: document scan pruned to (doc_id, source) — "
-             "text never read",
-             bool(cd2_schemas)
-             and all("text" not in s for s in cd2_schemas)),
-            ("centroid d2: per-dim sums partial+final; totals broadcast; "
-             "no cartesian",
-             p_cd2.count("HashAggregate") >= 4
-             and "BroadcastHashJoin" in p_cd2
-             and "CartesianProduct" not in p_cd2),
         ],
     ))
 
@@ -1047,7 +931,6 @@ def main() -> None:
         ],
     ))
 
-    from pyreshaper_spark.operators.dedup import minhash_topk
     from pyreshaper_spark.operators.rollup import theilsen
     from pyreshaper_spark.operators.symbolic import sax_motifs
     from pyreshaper_spark.operators.vocab import oov_rate
@@ -1055,14 +938,12 @@ def main() -> None:
     p_ts = plan_of(theilsen(t1h_c, 86400, 3600))
     p_oov = plan_of(oov_rate(toks, 3600, 200))
     p_motif = plan_of(sax_motifs(t1h_c, m=4))
-    p_mtk = plan_of(minhash_topk(docs, k=5))
     sections.append((
-        "Theil–Sen, OOV rate, SAX motifs, minhash top-k",
+        "Theil–Sen, OOV rate, SAX motifs",
         "\n".join([
             "--- theilsen(1d over 1h) ---", p_ts[:1600],
             "--- oov_rate(1h, top 200) ---", p_oov[:1600],
             "--- sax_motifs(m=4) ---", p_motif[:1200],
-            "--- minhash_topk(k=5) ---", p_mtk[:1200],
         ]),
         [
             ("theilsen: pair fan-out is an EQUI self-join on (source, "
@@ -1082,9 +963,6 @@ def main() -> None:
              "(m-1 leads share it) + partial+final count agg — no "
              "self-join on the symbol stream",
              "Window" in p_motif and no_cartesian(p_motif)),
-            ("minhash topk: per-doc rank pushes WindowGroupLimit "
-             "(each map task forwards ≤k candidates per doc)",
-             "WindowGroupLimit" in p_mtk and no_cartesian(p_mtk)),
         ],
     ))
 
@@ -1135,52 +1013,31 @@ def main() -> None:
                  plan_of(__import__(
                      "pyreshaper_spark.operators.rollup",
                      fromlist=["hod_anomaly"]).hod_anomaly(t1h_c)))),
-            ("binq: full-vector dot only AFTER the shortlist — the "
-             "rerank rides broadcast joins, no shuffle join "
-             "(the Hamming pass itself reads codes only)",
-             (lambda p: p.count("BroadcastHashJoin") >= 2
-              and "SortMergeJoin" not in p)(
-                 plan_of(__import__(
-                     "pyreshaper_spark.operators.similarity",
-                     fromlist=["binq_topk"]).binq_topk(
-                         spark.read.parquet(
-                             f"{sf}/embeddings.parquet"))))),
         ],
     ))
 
     # 21. round-3 session-9 additions: period-similarity search,
-    # rolling slope / Holt, PC1 power iteration, centroid drift,
-    # temporal dedup/PII panels
+    # rolling slope / Holt, ETA, vocab Jaccard
     from pyreshaper_spark.operators.forecast import holt_backtest
     from pyreshaper_spark.operators.gapfill import rolling_slope
     from pyreshaper_spark.operators.rollup import eta_threshold
     from pyreshaper_spark.operators.seriessim import day_profile_knn
-    from pyreshaper_spark.operators.similarity import centroid_drift
     from pyreshaper_spark.operators.vocab import vocab_jaccard
 
-    emb_df = spark.read.parquet(f"{sf}/embeddings.parquet")
     docs_df = spark.read.parquet(f"{sf}/documents.parquet")
-    dd = docs_df.select(
-        F.col("doc_id").alias("vec_id"),
-        "source",
-        (F.col("doc_id") % 7 * 86400).cast("long").alias("day_s"),
-    )
     p_knn = plan_of(day_profile_knn(t1h_c, k=3))
     p_slope = plan_of(rolling_slope(t10, k=6, value_col="cnt"))
     p_holt = plan_of(holt_backtest(t10, k=6, value_col="cnt"))
-    p_cdr = plan_of(centroid_drift(dd, emb_df))
     p_eta = plan_of(eta_threshold(t1h_c, 86400, 3600, 10_000))
     from pyreshaper_spark.operators.vocab import token_stream
 
     p_vj = plan_of(vocab_jaccard(token_stream(docs_df)))
     sections.append((
-        "Period-similarity kNN, rolling slope / Holt, centroid drift, "
-        "ETA, vocab Jaccard",
+        "Period-similarity kNN, rolling slope / Holt, ETA, vocab Jaccard",
         "\n".join([
             "--- day_profile_knn(k=3) ---", p_knn[:1600],
             "--- rolling_slope(k=6) ---", p_slope[:900],
             "--- holt_backtest(k=6) ---", p_holt[:900],
-            "--- centroid_drift ---", p_cdr[:1200],
             "--- eta_threshold(1d/1h) ---", p_eta[:900],
             "--- vocab_jaccard ---", p_vj[:1200],
         ]),
@@ -1195,11 +1052,6 @@ def main() -> None:
             ("holt: ONE source-keyed sort window, no join",
              "Join" not in p_holt
              and p_holt.count("hashpartitioning(source") <= 2),
-            ("centroid drift: per-dim sums collapse FIRST (partial+"
-             "final agg), day pairing is an equi-join with BROADCAST "
-             "totals — no cartesian",
-             no_cartesian(p_cdr) and "BroadcastHashJoin" in p_cdr
-             and p_cdr.count("HashAggregate") >= 4),
             ("eta: ONE partial+final hash agg keyed (source, coarse "
              "bucket) — no window, no join",
              "Window" not in p_eta and "Join" not in p_eta
@@ -1272,24 +1124,21 @@ def main() -> None:
         ],
     ))
 
-    # 23. offline changepoint / MK trend / containment dedup
+    # 23. offline changepoint / MK trend
     from pyreshaper_spark.operators.changepoint import (
         amoc_changepoint,
         mann_kendall,
         pettitt,
     )
-    from pyreshaper_spark.operators.dedup import containment_pairs
 
     p_amoc = plan_of(amoc_changepoint(t1h_c, 86400, 3600))
     p_mk = plan_of(mann_kendall(t1h_c, 86400, 3600))
-    p_ctn = plan_of(containment_pairs(docs, max_df=200))
     p_pet = plan_of(pettitt(t1h_c, 86400, 3600))
     sections.append((
-        "AMOC changepoint, Mann-Kendall trend, containment dedup",
+        "AMOC changepoint, Mann-Kendall trend, Pettitt",
         "\n".join([
             "--- amoc_changepoint(1d over 1h) ---", p_amoc[:2000],
             "--- mann_kendall(1d over 1h) ---", p_mk[:1400],
-            "--- containment_pairs(max_df=200) ---", p_ctn[:1200],
             "--- pettitt(1d over 1h) ---", p_pet[:1400],
         ]),
         [
@@ -1306,9 +1155,6 @@ def main() -> None:
              "no window",
              no_cartesian(p_mk) and "Window" not in p_mk
              and p_mk.count("HashAggregate") >= 2),
-            ("containment: same shared-shingle equi-join shape as the "
-             "jaccard path (df-capped), no cartesian",
-             no_cartesian(p_ctn)),
             ("pettitt: pair spans explode MAP-SIDE (Generate after the "
              "equi self-join, no range join); argmax window is group-"
              "keyed, no cartesian",
@@ -1317,28 +1163,23 @@ def main() -> None:
         ],
     ))
 
-    # 24. seasonal MK, winnowing, fixed-target CUSUM
+    # 24. seasonal MK, fixed-target CUSUM
     from pyreshaper_spark.operators.changepoint import (
         seasonal_mann_kendall,
     )
-    from pyreshaper_spark.operators.dedup import winnow_pairs
     from pyreshaper_spark.operators.gapfill import cusum_fixed
-
     from pyreshaper_spark.operators.seriessim import day_discords
     from pyreshaper_spark.operators.vocab import tok_collocations
 
     p_smk = plan_of(seasonal_mann_kendall(t1h_c, 86400, 3600))
-    p_win = plan_of(winnow_pairs(docs))
     p_cf = plan_of(cusum_fixed(t1h_c, mu=55, h=120, value_col="sum_n_tok"))
     p_dd = plan_of(day_discords(t1h_c, m=3))
     seq_tok = seq.select("source", "doc_id", "tokens")
     p_col = plan_of(tok_collocations(seq_tok, window=3))
     sections.append((
-        "Seasonal Mann-Kendall, winnowing fingerprints, fixed CUSUM, "
-        "discords, collocations",
+        "Seasonal Mann-Kendall, fixed CUSUM, discords, collocations",
         "\n".join([
             "--- seasonal_mann_kendall(day period) ---", p_smk[:1600],
-            "--- winnow_pairs(k=3, w=4) ---", p_win[:1400],
             "--- cusum_fixed ---", p_cf[:1200],
             "--- day_discords(m=3) ---", p_dd[:1000],
             "--- tok_collocations(w=3) ---", p_col[:1200],
@@ -1348,11 +1189,6 @@ def main() -> None:
              "self-join (group width = cycle count), no cartesian, "
              "no window",
              no_cartesian(p_smk) and "Window" not in p_smk),
-            ("winnowing: fingerprint selection is pure map-side array "
-             "codegen (Generate only at the final distinct explode); "
-             "pair candidates via shared-fingerprint equi-join, no "
-             "cartesian",
-             no_cartesian(p_win) and "Generate" in p_win),
             ("fixed CUSUM: running sum + running min share ONE "
              "source-keyed sort — a single exchange, no join",
              p_cf.count("Exchange") // 2 <= 2 and "Join" not in p_cf
@@ -1371,34 +1207,16 @@ def main() -> None:
         ],
     ))
 
-    # 23. session-11 additions: leakage-free split, hard negatives,
-    # RRF hybrid fusion, vocabulary remap
-    from pyreshaper_spark.operators.cluster import leakage_free_split
-    from pyreshaper_spark.operators.dedup import minhash_topk
-    from pyreshaper_spark.operators.similarity import (
-        hard_negatives,
-        rrf_fuse,
-        topk_cosine,
-    )
+    # 23. vocabulary remap, redaction, attribution, Fano factor,
+    # temperature mixture
+    from pyreshaper_spark.operators.text import pii_redact
     from pyreshaper_spark.operators.vocab import vocab_remap
 
-    pairs_lf = verified_near_dups(docs, max_df=200)
-    p_lf = plan_of(leakage_free_split(docs, pairs_lf))
-    p_hn = plan_of(hard_negatives(emb))
-    lex_r = minhash_topk(docs, k=5).filter(F.col("doc_id").cast("long") < 10)
-    p_rrf = plan_of(rrf_fuse(lex_r, topk_cosine(emb), k=5))
     seq_v = seq.select(
         F.col("doc_id").cast("string").alias("doc_id"), "source", "tokens"
     )
     p_vr = plan_of(vocab_remap(seq_v))
-    from pyreshaper_spark.operators.similarity import mmr_topk
-
-    p_mmr = plan_of(mmr_topk(emb, n_queries=5, k=3))
-    from pyreshaper_spark.operators.cluster import survivor_flags_pref
-    from pyreshaper_spark.operators.text import pii_redact
-
     docs_nc = docs.select("doc_id", "source", "n_chars", "text")
-    p_sp = plan_of(survivor_flags_pref(docs_nc, pairs_lf, "n_chars"))
     p_px = plan_of(pii_redact(docs_nc))
     from pyreshaper_spark.operators.events import events_attribution
     from pyreshaper_spark.operators.rollup import bucket_fano
@@ -1407,59 +1225,24 @@ def main() -> None:
     p_at = plan_of(events_attribution(ev))
     p_fa = plan_of(bucket_fano(rollup_all_tiers(seq, [600])[600]))
     from pyreshaper_spark.operators.sampling import mix_temperature_sqrt
-    from pyreshaper_spark.operators.similarity import emb_outliers
 
     p_mt = plan_of(mix_temperature_sqrt(docs, budget=200))
-    p_eo = plan_of(emb_outliers(emb))
     sections.append((
-        "Leakage-free split, hard negatives, RRF fusion, vocab remap, "
-        "MMR, survivor policy, redaction",
+        "Vocab remap, redaction, attribution, Fano factor, temperature "
+        "mixture",
         "\n".join([
-            "--- leakage_free_split ---", p_lf[:1400],
-            "--- hard_negatives ---", p_hn[:1200],
-            "--- rrf_fuse(minhash_topk, topk_cosine) ---", p_rrf[:1400],
             "--- vocab_remap ---", p_vr[:1600],
-            "--- mmr_topk(k=3) ---", p_mmr[:1400],
-            "--- survivor_flags_pref ---", p_sp[:1000],
             "--- pii_redact ---", p_px[:700],
             "--- events_attribution ---", p_at[:1000],
             "--- bucket_fano(10m tier) ---", p_fa[:700],
             "--- mix_temperature_sqrt ---", p_mt[:1000],
-            "--- emb_outliers ---", p_eo[:1000],
         ]),
         [
-            ("leakage-free split: component join + stateless hash "
-             "projection — no cartesian, no window on top of the "
-             "contraction",
-             no_cartesian(p_lf) and "Window" not in p_lf),
-            ("hard negatives: the only nested loop is the broadcast "
-             "tiny-query cross (the documented exact-baseline shape); "
-             "rank<=k plans as WindowGroupLimit",
-             "CartesianProduct" not in p_hn
-             and p_hn.count("BroadcastNestedLoopJoin") // 2 <= 1
-             and "WindowGroupLimit" in p_hn),
-            ("RRF fusion: rank-list join is an equi full-outer; the "
-             "only nested loop is topk_cosine's own broadcast "
-             "tiny-query cross; fused rank<=k is a WindowGroupLimit",
-             "CartesianProduct" not in p_rrf
-             and p_rrf.count("BroadcastNestedLoopJoin") // 2 <= 1
-             and "FullOuter" in p_rrf
-             and "WindowGroupLimit" in p_rrf),
             ("vocab remap: the V-bounded mapping joins BROADCAST "
              "(the token stream never shuffles for the lookup); "
              "posexplode is map-side Generate",
              "BroadcastHashJoin" in p_vr and "Generate" in p_vr
              and no_cartesian(p_vr)),
-            ("MMR greedy rounds: selected-set joins stay equi (the "
-             "only nested loop is the shared broadcast query cross); "
-             "each round's argmax is a WindowGroupLimit rank-1",
-             "CartesianProduct" not in p_mmr
-             and "SortMergeJoin Cross" not in p_mmr
-             and "WindowGroupLimit" in p_mmr),
-            ("quality survivor: rank window runs ONLY on clustered "
-             "rows (no NULL-component corpus-wide partition); no "
-             "cartesian",
-             no_cartesian(p_sp) and "Window" in p_sp),
             ("pii redact: pure projection — zero exchanges, no join, "
              "text pruned into the scan",
              "Exchange" not in p_px and "Join" not in p_px
@@ -1480,11 +1263,6 @@ def main() -> None:
              "BroadcastHashJoin" in p_mt
              and p_mt.count("BroadcastNestedLoopJoin") // 2 <= 1
              and "CartesianProduct" not in p_mt),
-            ("embedding outliers: centroid + count join BROADCAST "
-             "(corpus streams once); rank<=k is WindowGroupLimit; no "
-             "cartesian",
-             p_eo.count("BroadcastHashJoin") >= 2
-             and "WindowGroupLimit" in p_eo and no_cartesian(p_eo)),
         ],
     ))
 
