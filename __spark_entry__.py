@@ -1649,8 +1649,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # merge the raw tail on the fly (rollup.realtime_merge) — the bucket
     # straddling the mark carries partial aggregates from BOTH legs, and
     # the result must equal the plain 1h rollup of the whole input
-    # (which is the oracle). The catalog-integrated face (pending-file
-    # tail from encode lineage) is sql.read_rollup, tested in pytest.
+    # (which is the oracle). The catalog-integrated face (the pending
+    # files' staged tier-0 aggregate, scanned with the tier) is
+    # sql.read_rollup, tested in pytest.
     def _q_realtime(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyreshaper_spark.config import EPOCH0
         from pyreshaper_spark.operators.rollup import (

@@ -25,7 +25,7 @@ P31 = 2_147_483_647
 
 #: (a, b) constants for the universal permutation family. Fixed, odd,
 #: small enough that a*h + b < 2^63 for h < 2^32.
-MINHASH_PERMS: tuple[tuple[int, int], ...] = tuple(
+PERMS: tuple[tuple[int, int], ...] = tuple(
     (2 * i + 3, 104_729 * (i + 1) + 7) for i in range(16)
 )
 
@@ -44,13 +44,13 @@ def h32_sql(expr: str) -> str:
 
 def perm(i: int, h: Column) -> Column:
     """Permutation i applied to a hash column (Spark side)."""
-    a, b = MINHASH_PERMS[i]
+    a, b = PERMS[i]
     return F.pmod(h * F.lit(a) + F.lit(b), F.lit(P31))
 
 
 def perm_sql(i: int, hexpr: str) -> str:
     """The DuckDB rendering of :func:`perm`."""
-    a, b = MINHASH_PERMS[i]
+    a, b = PERMS[i]
     return f"(({hexpr}) * {a} + {b}) % {P31}"
 
 

@@ -387,6 +387,10 @@ def realtime_merge(
     a partial+final hash agg over only the new rows; the merge is one
     re-aggregation of their union. Per query cost O(new data) +
     O(buckets), never a raw-history rescan.
+
+    ``sql.read_rollup(realtime=True)`` does not union: it stages the
+    tail aggregate once per pending set and scans it with the tier.
+    This union form serves the ``realtime_1h`` query face.
     """
     cols = ["source", "bucket_s", *AGG_COLS]
     fresh = rollup_tier0(tail, width_s)

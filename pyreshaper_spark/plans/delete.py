@@ -85,6 +85,7 @@ from pyreshaper_spark.plans.pipeline import (
     fidelity_bad_rows,
     ingest_ledger,
     read_ingested,
+    without_deleted,
     write_lineage,
 )
 from pyreshaper_spark.session import local_frame
@@ -185,15 +186,25 @@ def delete_docs(
     compliance batch, not a corpus) — it is broadcast into every probe,
     and the victims' positions are collected to the driver once.
 
-    The repair reads only the ingest ledger's files, and the
-    ``series_enc`` commit carries the ledger unchanged, so a file whose
-    every row was deleted stays ingested and a pending file stays
-    pending. Victims are looked up in every listed input file: a victim
-    that sits only in a pending file is counted in ``deleted_rows``, and
-    its chunk and buckets are re-derived from the ingested rows alone.
-    The input itself is never changed — the next append cycle ingests
-    that file, victim included, so compliance deletes must also remove
-    the rows from the input.
+    The input itself is never changed, so the ``series_enc`` commit
+    records the deleted ids in the ingest ledger (``"deleted"``, the
+    union over every delete batch): :func:`pipeline.read_ingested`
+    subtracts them, and a later delete's repair, the fidelity gate and
+    a restatement see the live input instead of bringing an earlier
+    batch's victims back into a shared chunk or bucket. Append cycles
+    and restatements carry the record; an overwrite run rebuilds from
+    the input and drops it.
+
+    The repair reads only the ingest ledger's files, and the ledger's
+    file list is carried unchanged, so a file whose every row was
+    deleted stays ingested and a pending file stays pending. Victims
+    are looked up in every listed input file, recorded ids included, so
+    deleting an id again (or rerunning a delete that crashed between
+    commits) repeats its repair. A victim that sits only in a pending
+    file is counted in ``deleted_rows`` but not recorded, and its chunk
+    and buckets are re-derived from the ingested rows alone — the next
+    append cycle ingests that file, victim included, so compliance
+    deletes must also remove the rows from the input.
     """
     cat, ckpt, nsalt, led = _load_run(
         "delete_docs", spark, cfg, checkpoint_path
@@ -202,23 +213,30 @@ def delete_docs(
 
     listed = list_input_files(cfg)
     ingested = read_ingested(spark, cfg, led, listed)
-    seq = (
-        read_input(spark, cfg, listed, led["schema"])
-        if set(listed) - set(led["files"])
-        else ingested
-    )
-    positions = [
+    # victims are looked up in the input as it is, recorded ids
+    # included: a rerun after a crash between the series_enc commit
+    # (which records them) and the last tier commit redoes the repair
+    seq = read_input(spark, cfg, listed, led["schema"])
+    victims = [
         tuple(r)
         for r in with_salt(
             seq.join(F.broadcast(ids), "doc_id", "left_semi"), nsalt
         )
-        .select("source", "salt", "event_s")
+        .select("doc_id", "input_file", "source", "salt", "event_s")
         .collect()
     ]
-    report: dict = {"deleted_rows": len(positions), "snapshot_ids": {}}
-    if positions:
+    report: dict = {"deleted_rows": len(victims), "snapshot_ids": {}}
+    if victims:
         remaining = ingested.join(F.broadcast(ids), "doc_id", "left_anti")
-        _repair_run(spark, cfg, cat, ckpt, nsalt, positions, remaining, report)
+        done = set(led["files"])
+        gone = {str(d) for d, f, *_ in victims if f in done}
+        ledger = {
+            **led, "deleted": sorted(set(led.get("deleted", ())) | gone)
+        }
+        _repair_run(
+            spark, cfg, cat, ckpt, nsalt, [v[2:] for v in victims],
+            remaining, report, ledger=ledger,
+        )
     return report
 
 
@@ -248,13 +266,14 @@ def restate_docs(
     belongs. Everything downstream is the shared repair walk of
     :func:`delete_docs` with ``current`` = the full corrected input.
 
-    Interplay with :func:`delete_docs`: restatement treats the CURRENT
-    INPUT as truth, so a doc previously deleted from the tables but
-    still present in the input will be re-added wherever a restated
-    doc shares its chunk or bucket. Compliance deletions must
-    therefore also remove the rows from the input table (or be
-    re-applied after a restatement touching their neighborhoods) —
-    the same rule real Iceberg deployments follow when a table is
+    Interplay with :func:`delete_docs`: restatement treats the current
+    input minus the ledger's deleted ids as truth, and the
+    ``series_enc`` commit carries that record. A doc deleted earlier
+    therefore stays out of every chunk and bucket a restatement
+    rebuilds, even when the doc itself is restated; only an overwrite
+    run, which rebuilds from the input, brings it back. Compliance
+    deletions should still remove the rows from the input table — the
+    same rule real Iceberg deployments follow when a table is
     rebuildable from upstream data.
 
     Corrections rewrite input files (a corrected parquet directory, a
@@ -272,7 +291,9 @@ def restate_docs(
     from pyreshaper_spark.operators.encode import decode_series_table
 
     listed = list_input_files(cfg)
-    seq = read_input(spark, cfg, listed, led["schema"])
+    seq = without_deleted(
+        spark, read_input(spark, cfg, listed, led["schema"]), led
+    )
     enc = cat.read(spark, "series_enc", allow_empty=True)
     old_chunks = (
         enc.select("source", "salt", F.explode("doc_ids").alias("doc_id"))
@@ -302,7 +323,7 @@ def restate_docs(
     if victims:
         _repair_run(
             spark, cfg, cat, ckpt, nsalt, [v[1:] for v in victims], seq,
-            report, ledger={"files": listed, "schema": led["schema"]},
+            report, ledger={**led, "files": listed},
         )
     return report
 

@@ -135,9 +135,11 @@ def write_tier(cat: IcebergLite, name: str, df: DataFrame) -> int:
 def ingest_ledger(cat: IcebergLite) -> dict | None:
     """The ingest ledger of the live ``series_enc`` snapshot —
     ``{"files": [input_file_name() strings], "schema": input schema
-    JSON}`` — or None before the first encode commit. The only reader
-    of the ledger: append pins, the encode done set, realtime reads,
-    the fidelity gate and delete/restate all go through it."""
+    JSON}``, plus ``"deleted": [doc_id, ...]`` once ``delete_docs`` has
+    removed ingested rows — or None before the first encode commit. The
+    only reader of the ledger: append pins, the encode done set,
+    realtime reads, the fidelity gate and delete/restate all go through
+    it."""
     if not cat.exists("series_enc"):
         return None
     led = cat.ledger("series_enc")
@@ -151,13 +153,28 @@ def ingest_ledger(cat: IcebergLite) -> dict | None:
     return led
 
 
+def without_deleted(
+    spark: SparkSession, df: DataFrame, led: dict
+) -> DataFrame:
+    """``df`` (input rows) minus the ledger's deleted ``doc_id``s."""
+    gone = led.get("deleted")
+    if not gone:
+        return df
+    ids = local_frame(spark, "doc_id string", [(d,) for d in gone])
+    return df.join(F.broadcast(ids), "doc_id", "left_anti")
+
+
 def read_ingested(
     spark: SparkSession, cfg: RunConfig, led: dict, listed: list[str]
 ) -> DataFrame:
-    """Rows of the ledger's files that are still in the input listing."""
+    """Live rows of the ledger's files that are still in the input
+    listing: the rows ``delete_docs`` removed stay in the input, and
+    the ledger's deleted ids take them out."""
     known = set(listed)
     files = [f for f in led["files"] if f in known]
-    return read_input(spark, cfg, files, led["schema"])
+    return without_deleted(
+        spark, read_input(spark, cfg, files, led["schema"]), led
+    )
 
 
 def write_lineage(
@@ -395,9 +412,9 @@ def _run_pipeline(
             live = ingest_ledger(cat)
             todo = sorted(set(scan) - set(live["files"]))
             rows = read(todo)
+            # the deleted ids carry forward with the schema
             ledger = {
-                "files": sorted(set(live["files"]) | set(todo)),
-                "schema": live["schema"],
+                **live, "files": sorted(set(live["files"]) | set(todo))
             }
         else:
             todo, rows = scan, src
@@ -553,9 +570,13 @@ def _run_pipeline(
                     # pinned base exists): a delta-only commit would
                     # silently truncate the tier to the pending files'
                     # buckets. Backfill once from the FULL raw input —
-                    # the exact from-scratch answer at any width — and
-                    # let later cycles pin and merge it incrementally.
-                    df = rollup_tier0(read(all_files), tier.width_s)
+                    # the exact from-scratch answer at any width, less
+                    # the deleted ids the input still holds — and let
+                    # later cycles pin and merge it incrementally.
+                    df = rollup_tier0(
+                        without_deleted(spark, read(all_files), led or {}),
+                        tier.width_s,
+                    )
                 else:
                     # buckets on both sides are already aligned to the
                     # tier width, so the cascade is the pure merge
@@ -719,10 +740,23 @@ def maintain(
     no other snapshot is pinned.
 
     Every table under the warehouse root (:meth:`IcebergLite.list_tables`)
-    is maintained. Returns {table: {"compacted_snapshot": id|None,
-    "expired_files": n}}.
+    is maintained, and every staged realtime tail but the current
+    pending set's is removed (``sql.stage_tail``). Returns {table:
+    {"compacted_snapshot": id|None, "expired_files": n}}.
     """
+    import shutil
+
+    from pyreshaper_spark.sql import REALTIME_DIR, pending_tail
+
     cat = get_catalog(cfg.output_path)
+    rt = os.path.join(cfg.output_path, REALTIME_DIR)
+    if os.path.isdir(rt):
+        key = pending_tail(cfg, cat)[2]
+        for d in os.listdir(rt):
+            # a "<key>.tmp-<uuid>" of the current key may be a staging
+            # write in flight
+            if key is None or not d.startswith(key):
+                shutil.rmtree(os.path.join(rt, d), ignore_errors=True)
     report: dict[str, dict] = {}
     for t in cat.list_tables():
         entry: dict = {"compacted_snapshot": None, "expired_files": 0}

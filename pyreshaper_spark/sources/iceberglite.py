@@ -409,6 +409,7 @@ class IcebergLite:
         apply_deletes: bool = True,
         path_filter: Callable[[str], bool] | None = None,
         file_col: str | None = None,
+        extra_files: list[str] = (),
     ) -> DataFrame:
         """Read a snapshot (time travel via ``snapshot_id``).
 
@@ -434,6 +435,13 @@ class IcebergLite:
         still applied. ``file_col`` names a column that receives each
         row's ``input_file_name()``, taken at the scan (it cannot be
         taken above a delete's anti-join).
+
+        ``extra_files`` (absolute parquet paths outside the table) are
+        read together with the snapshot's kept files, typed by its
+        recorded schema; a column a file lacks reads as null. For an
+        unpartitioned snapshot with no applicable deletes — every table
+        the engine writes — that is ONE file scan over both sets.
+        ``file_col`` does not apply to this read.
         """
         snap = self._snapshot(name, snapshot_id)
         files = snap["files"]
@@ -449,8 +457,8 @@ class IcebergLite:
                 for f in files
                 if not f.get("stats") or stats_filter(f["stats"])
             ]
-        if not files:
-            schema_json = snap.get("schema")
+        schema_json = snap.get("schema")
+        if not files and not extra_files:
             if allow_empty and schema_json is not None:
                 return local_frame(
                     spark, StructType.fromJson(json.loads(schema_json))
@@ -460,7 +468,24 @@ class IcebergLite:
                 "filter pruned everything)"
             )
         deletes = snap.get("deletes") if apply_deletes else None
-        return self._df_for_files(spark, name, files, deletes, file_col)
+        if not extra_files:
+            return self._df_for_files(spark, name, files, deletes, file_col)
+        reader = spark.read
+        if schema_json is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
+        if files and (
+            any(f.get("partition") for f in files)
+            or self._applicable_deletes(deletes, files)
+        ):
+            # a hive-partitioned (older layout) or merge-on-read-deleted
+            # snapshot needs its per-commit read; the extra files join it
+            return self._df_for_files(spark, name, files, deletes).unionByName(
+                reader.parquet(*extra_files), allowMissingColumns=True
+            )
+        data = self._data(name)
+        return reader.parquet(
+            *(os.path.join(data, f["path"]) for f in files), *extra_files
+        )
 
     def _df_for_files(
         self,

@@ -73,7 +73,8 @@ def file_uri(path: str) -> str:
     )
 
 
-def _local_path(uri: str) -> str:
+def local_path(uri: str) -> str:
+    """The local path of a :func:`file_uri` string."""
     return unquote(uri[len("file://"):])
 
 
@@ -110,7 +111,7 @@ def input_schema(spark: SparkSession, cfg: RunConfig, files: list[str]) -> str:
         raise FileNotFoundError(f"no input files under {cfg.input_path!r}")
     return (
         spark.read.option("basePath", cfg.input_path)
-        .parquet(*map(_local_path, files))
+        .parquet(*map(local_path, files))
         .schema.json()
     )
 
@@ -128,7 +129,7 @@ def read_input(
     """
     if cfg.input_format == "iceberglite":
         root, table, snap = split_table_path(cfg.input_path)
-        want = set(map(_local_path, files))
+        want = set(map(local_path, files))
         df = get_catalog(root).read(
             spark, table, snapshot_id=snap, allow_empty=True,
             path_filter=want.__contains__, file_col="input_file",
@@ -139,7 +140,7 @@ def read_input(
         df = (
             spark.read.schema(StructType.fromJson(json.loads(schema)))
             .option("basePath", cfg.input_path)
-            .parquet(*map(_local_path, files))
+            .parquet(*map(local_path, files))
         )
     else:
         df = local_frame(spark, StructType.fromJson(json.loads(schema)))

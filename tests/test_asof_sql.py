@@ -2,9 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from pyreshaper_spark.operators.asof import asof_join, topk_per_series
 
 

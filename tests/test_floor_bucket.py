@@ -21,7 +21,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyreshaper_spark.operators.rollup import (
-    bucket_col,
     bucket_trend_sql,
     bucket_trend,
     floor_py,

@@ -90,7 +90,6 @@ def test_ab_test_flag_matches_float_z(spark):
     degenerate edges (no conversions anywhere / everyone converts)."""
     import math
 
-    from pyreshaper_spark.functions.xhash import MINHASH_PERMS  # noqa: F401
     from pyreshaper_spark.operators.funnel import ab_test
 
     # find user ids for each variant (same md5 split as the operator)

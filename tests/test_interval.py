@@ -4,8 +4,6 @@ is covered by test_events.py::events_in_sessions."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from pyreshaper_spark.operators.rangejoin import interval_join
 
 

@@ -11,7 +11,6 @@ column, so the artifact class can never recur silently.
 from __future__ import annotations
 
 import duckdb
-import pytest
 
 import __spark_entry__ as ent
 from tests.conftest import SF_SMOKE, TABLES

@@ -265,6 +265,114 @@ def test_delete_with_retention_on_fine_tier_repairs_coarse_from_raw(
         assert _rows(cat.read(spark, t)) == _rows(ref.read(spark, t)), t
 
 
+def test_second_delete_keeps_first_batch_deleted(spark, tmp_path):
+    """Two delete batches whose victims share a (source, salt) chunk and
+    a (source, day) bucket: the second repair rebuilds those from the
+    live input, so every table equals a fresh run on the input minus
+    both batches (the input still holds the first batch)."""
+    from pyreshaper_spark.operators.transpose import with_salt
+
+    seq = sequences_df(spark, SF)
+    full_p = str(tmp_path / "seq_full")
+    seq.write.parquet(full_p)
+    # pairs of docs in one chunk and one 1d bucket (the fixture has no
+    # hour holding two docs of a source): the first doc of a pair goes
+    # in batch 1, the second in batch 2
+    tiers = (TierSpec("1m", 60), TierSpec("1h", 3600), TierSpec("1d", 86400))
+    keyed = with_salt(seq, 2).withColumn(
+        "b", F.col("event_s") - F.col("event_s") % 86400
+    )
+    pairs = (
+        keyed.groupBy("source", "salt", "b")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
+        .filter(F.size("ids") >= 2)
+        .orderBy("source", "b")
+        .limit(5)
+        .collect()
+    )
+    assert len(pairs) == 5
+    first = [r["ids"][0] for r in pairs]
+    second = [r["ids"][1] for r in pairs]
+
+    cfg = _cfg(full_p, str(tmp_path / "out"), tiers=tiers,
+               verify_fidelity=True)
+    ck = str(tmp_path / "ck.json")
+    run_pipeline(spark, cfg, ck)
+    delete_docs(spark, cfg, ck, first)
+    assert delete_docs(spark, cfg, ck, second)["deleted_rows"] == 5
+
+    filt_p = str(tmp_path / "seq_filtered")
+    seq.filter(~F.col("doc_id").isin(first + second)).write.parquet(filt_p)
+    ref_cfg = _cfg(filt_p, str(tmp_path / "ref_out"), tiers=tiers)
+    run_pipeline(spark, ref_cfg, str(tmp_path / "ref_ck.json"))
+    cat, ref = IcebergLite(cfg.output_path), IcebergLite(ref_cfg.output_path)
+    for t in ("tier_1m", "tier_1h", "tier_1d", "tier_1h_filled",
+              "tier_1d_filled", "meta_source"):
+        assert _rows(cat.read(spark, t)) == _rows(ref.read(spark, t)), t
+    assert _rows(decode_series_table(cat.read(spark, "series_enc"))) == _rows(
+        decode_series_table(ref.read(spark, "series_enc"))
+    )
+    from pyreshaper_spark.plans.pipeline import ingest_ledger
+
+    assert ingest_ledger(cat)["deleted"] == sorted(first + second)
+
+
+def test_fidelity_append_cycle_after_delete(spark, tmp_path):
+    """The fidelity gate of an append cycle after a delete compares the
+    decoded series with the live input, which excludes the victims the
+    input still holds."""
+    seq = sequences_df(spark, SF)
+    part = F.abs(F.xxhash64(F.col("doc_id").cast("string"))) % 2
+    p = str(tmp_path / "seq")
+    seq.filter(part == 0).write.parquet(p)
+    cfg = _cfg(p, str(tmp_path / "out"), write_mode="append",
+               verify_fidelity=True)
+    ck = str(tmp_path / "ck.json")
+    run_pipeline(spark, cfg, ck)
+    victims = [
+        r[0] for r in seq.filter(part == 0).select("doc_id")
+        .orderBy("doc_id").limit(10).collect()
+    ]
+    delete_docs(spark, cfg, ck, victims)
+    seq.filter(part == 1).write.mode("append").parquet(p)
+    res = run_pipeline(spark, cfg, ck)
+    assert "verify_fidelity" in res.steps_run
+    cat = IcebergLite(cfg.output_path)
+    assert cat.read(spark, "fidelity").collect()[0]["bad_rows"] == 0
+    dec = decode_series_table(cat.read(spark, "series_enc"))
+    assert dec.filter(F.col("doc_id").isin(victims)).count() == 0
+
+
+def test_tier_added_after_delete_backfills_live_input(spark, tmp_path):
+    """A tier added between append cycles backfills from the whole
+    input, which still holds the deleted docs: the backfill leaves
+    them out, as a fresh run on the filtered input would."""
+    from pyreshaper_spark.operators.rollup import rollup_tier0
+
+    seq = sequences_df(spark, SF)
+    part = F.abs(F.xxhash64(F.col("doc_id").cast("string"))) % 2
+    p = str(tmp_path / "seq")
+    seq.filter(part == 0).write.parquet(p)
+    kw = dict(write_mode="append", tiers=(TierSpec("1m", 60),))
+    cfg = _cfg(p, str(tmp_path / "out"), **kw)
+    ck = str(tmp_path / "ck.json")
+    run_pipeline(spark, cfg, ck)
+    victims = [
+        r[0] for r in seq.filter(part == 0).select("doc_id")
+        .orderBy("doc_id").limit(10).collect()
+    ]
+    delete_docs(spark, cfg, ck, victims)
+    seq.filter(part == 1).write.mode("append").parquet(p)
+    kw["tiers"] = (TierSpec("1m", 60), TierSpec("1h", 3600))
+    run_pipeline(spark, _cfg(p, cfg.output_path, **kw), ck)
+    live = seq.filter(~F.col("doc_id").isin(victims))
+    cat = IcebergLite(cfg.output_path)
+    meta = ("src_n_docs", "src_total_tok")
+    for t, w in (("tier_1m", 60), ("tier_1h", 3600)):
+        got = _rows(cat.read(spark, t), drop=meta)
+        assert got == _rows(rollup_tier0(live, w)), t
+
+
 @pytest.mark.parametrize("op", ["delete", "restate"])
 def test_failed_repair_releases_its_cache(spark, tmp_path, monkeypatch, op):
     """A repair that raises mid-walk (here: the tier_1h commit) leaves

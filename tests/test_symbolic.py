@@ -4,7 +4,6 @@ import random
 from fractions import Fraction
 
 import pytest
-from pyspark.sql import functions as F
 
 from pyreshaper_spark.operators.rollup import lttb_downsample
 from pyreshaper_spark.operators.symbolic import sax_breakpoints, sax_words

@@ -15,7 +15,9 @@ the plan properties that matter at 100 TB:
   tier fix reads one cached head instead of rescanning the input;
 * per-source, per-window reads of tier tables prune files on the
   manifest's source/bucket_s stats and push both predicates into the
-  parquet scan.
+  parquet scan;
+* a realtime read is one parquet scan over the tier file and the
+  staged aggregate of the pending files — no union, no raw-input scan.
 
 Run: python tools/plan_report.py   (writes PLANS.md at the repo root)
 """
@@ -38,6 +40,8 @@ _PLAN_IDS = re.compile(r"(#|plan_id=|RDD\[|lambda [a-z]+_)\d+")
 #: written file names (fixed length, so they do not move a truncation);
 #: normalized only in PLANS.md, because checks match pending file names
 _PART_FILE = re.compile(r"part-\d+-[0-9a-f-]{36}")
+#: staged realtime tail directories (keyed by pending-file mtimes)
+_TAIL_KEY = re.compile(r"(/_realtime/)[0-9a-f]{32}")
 #: plan nodes that run Python workers
 _PYTHON_NODE = re.compile(r"MapInArrow|MapInPandas|EvalPython")
 
@@ -715,10 +719,14 @@ def main() -> None:
     import shutil
 
     from pyreshaper_spark.config import RunConfig, TierSpec
-    from pyreshaper_spark.plans.pipeline import ingest_ledger, run_pipeline
+    from pyreshaper_spark.plans.pipeline import run_pipeline
     from pyreshaper_spark.sources.catalog import get_catalog
-    from pyreshaper_spark.sources.readers import list_input_files
-    from pyreshaper_spark.sql import read_rollup
+    from pyreshaper_spark.sql import (
+        REALTIME_DIR,
+        pending_tail,
+        read_rollup,
+        tail_aggregate,
+    )
 
     # ALWAYS rebuild (as §20): a warehouse left by older code would make
     # these checkmarks meaningless. Build, then land ONE pending file.
@@ -735,8 +743,8 @@ def main() -> None:
     seq.limit(50).withColumn(
         "doc_id", F.concat("doc_id", F.lit("-late"))
     ).coalesce(1).write.mode("append").parquet(rt_in)
-    led = ingest_ledger(get_catalog(rt_cfg.output_path))
-    pending = sorted(set(list_input_files(rt_cfg)) - set(led["files"]))
+    rt_cat = get_catalog(rt_cfg.output_path)
+    led, pending, _ = pending_tail(rt_cfg, rt_cat)
     p_route = plan_of(read_rollup(spark, rt_cfg, 1800))
     # one source, one day: pruned on the tier table's manifest stats
     rt_src = seq.agg(F.min("source")).first()[0]
@@ -757,20 +765,30 @@ def main() -> None:
         ln for ln in tier_scan.splitlines()
         if ln.strip().startswith("PushedFilters:")
     ]
+    # the query that stages the pending files' tail (first realtime
+    # read of a pending set), then the realtime read over it
+    p_stage = plan_of(tail_aggregate(spark, rt_cfg, rt_cat, led, pending))
+    stage_schemas = [
+        seg.split("\n")[0] for seg in p_stage.split("ReadSchema")[1:]
+    ]
     p_rt = plan_of(read_rollup(spark, rt_cfg, 1800, realtime=True))
-    tail_schemas = [
-        seg.split("\n")[0] for seg in p_rt.split("ReadSchema")[1:]
-    ]
-    # the input-side scans: Location lines naming the input directory
-    in_locs = [
-        ln for ln in p_rt.splitlines()
-        if ln.strip().startswith("Location:") and rt_in in ln
-    ]
+    # the formatted plan names only a scan's first file; the simple one
+    # lists them all, up to this many characters (read when planned)
+    max_meta = spark.conf.get("spark.sql.maxMetadataStringLength")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
+    try:
+        rt_locs = re.findall(r"Location: [^\]]*\]", plan_of(
+            read_rollup(spark, rt_cfg, 1800, realtime=True), "simple"
+        ))
+    finally:
+        spark.conf.set("spark.sql.maxMetadataStringLength", max_meta)
     sections.append((
         "Tier-routed + real-time rollup read",
         "\n".join([
-            "--- routed one-source, one-day read ---", p_one,
             "--- realtime read ---", p_rt,
+            "--- its scan's Location ---", *rt_locs,
+            "--- realtime tail staging (once per pending set) ---", p_stage,
+            "--- routed one-source, one-day read ---", p_one,
         ]),
         [
             ("routed read scans the 10m tier table (coarsest divisor "
@@ -786,21 +804,29 @@ def main() -> None:
              "and bucket_s predicates",
              len(pushed) == 1 and "source" in pushed[0]
              and "bucket_s" in pushed[0]),
-            ("realtime tail: the scan lists exactly the one pending "
-             "file (ledger set arithmetic, no join on input_file)",
-             len(pending) == 1 and bool(in_locs)
-             and all(os.path.basename(pending[0]) in ln
-                     and "entries]" not in ln  # "[f, ... N entries]"
-                     for ln in in_locs)
-             and "LeftAnti" not in p_rt),
+            ("tail staging scans exactly the one pending file (ledger "
+             "set arithmetic, no join on input_file)",
+             len(pending) == 1
+             and os.path.basename(pending[0]) in p_stage
+             and "entries]" not in p_stage  # "[f, ... N entries]"
+             and "LeftAnti" not in p_stage),
+            ("tail staging pruned — tokens/doc_id never read",
+             bool(stage_schemas)
+             and all("tokens" not in s and "doc_id" not in s
+                     for s in stage_schemas)),
+            ("realtime read is ONE parquet scan whose Location lists the "
+             "tier file and the staged tail",
+             p_rt.count("Location:") == 1 and len(rt_locs) == 1
+             and "(2 paths)" in rt_locs[0] and "tier_10m" in rt_locs[0]
+             and f"/{REALTIME_DIR}/" in rt_locs[0]),
+            ("realtime read: no Union, no scan of the input directory, "
+             "no second aggregation",
+             "Union" not in p_rt and rt_in not in p_rt
+             and p_rt.count("HashAggregate") == p_route.count(
+                 "HashAggregate")),
             ("no scan of series_enc anywhere in the realtime plan",
              "series_enc" not in p_rt),
-            ("tail scan pruned — tokens/doc_id never read on the "
-             "realtime path",
-             bool(tail_schemas)
-             and all("tokens" not in s and "doc_id" not in s
-                     for s in tail_schemas)),
-            ("no cartesian/nested-loop anywhere in the merged plan",
+            ("no cartesian/nested-loop anywhere in the realtime plan",
              no_cartesian(p_rt) and "NestedLoop" not in p_rt),
         ],
     ))
@@ -1384,7 +1410,9 @@ def main() -> None:
             all_ok &= ok
             out.append(f"- [{'x' if ok else ' '}] {desc}\n")
         out.append(
-            "\n```\n" + _PART_FILE.sub("part-x", plan.strip()[:4000])
+            "\n```\n" + _TAIL_KEY.sub(
+                r"\1<key>", _PART_FILE.sub("part-x", plan.strip()[:4000])
+            )
             + "\n```\n"
         )
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
