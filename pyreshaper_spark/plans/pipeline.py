@@ -26,11 +26,15 @@ The input is a parquet directory or an IcebergLite table
 
 No table is hive-partitioned. Every tier, filled-tier and retention
 commit is one unpartitioned write sorted on :data:`TIER_KEYS`, with
-manifest min/max stats on both columns (:func:`write_tier`); AQE's
-partition coalescing sets the file count, so a small table is one file
-and a large one is range-clustered files of about the advisory size.
-Reads prune files on those stats (``sql.read_tier``), and parquet
-row-group stats prune inside each file.
+manifest min/max stats on both columns (:func:`write_tier`). The file
+count follows the read below the commit: files totalling at most the
+session's ``spark.sql.files.openCostInBytes`` (4 MB by default) read as
+one partition (``session.small_read``), so a small table's commit is
+one file written with no shuffle and no range-sampling job; above it,
+AQE's partition coalescing sets the count, so a large table is
+range-clustered files of about the advisory size. Reads prune files on
+those stats (``sql.read_tier``), and parquet row-group stats prune
+inside each file.
 
 Scale notes: the tier cascade reads tier *k* back from its committed
 table (not the in-memory lineage), so a resumed run never recomputes
@@ -128,7 +132,11 @@ class PipelineResult:
 
 def write_tier(cat: IcebergLite, name: str, df: DataFrame) -> int:
     """Commit ``df`` as the whole of a tier-like table in the tier
-    layout: sorted on :data:`TIER_KEYS`, with stats on both columns."""
+    layout: sorted on :data:`TIER_KEYS`, with stats on both columns.
+
+    Over a one-partition read (``session.small_read``) the sort is local
+    and the commit one file; otherwise it is a range-partitioned global
+    sort whose AQE-coalesced partitions set the file count."""
     return cat.overwrite(name, df.orderBy(*TIER_KEYS), stats_cols=TIER_KEYS)
 
 

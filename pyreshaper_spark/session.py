@@ -7,6 +7,8 @@ handling complements explicit salting).
 
 :func:`local_frame` builds the small driver-side relations the engine
 joins against (key lists, empty typed frames) without a Python task.
+:func:`small_read` plans a read of tier-sized files as one partition,
+so nothing above it shuffles.
 """
 
 from __future__ import annotations
@@ -74,3 +76,31 @@ def local_frame(
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
+
+
+def small_read(df: DataFrame, paths: Iterable[str]) -> DataFrame:
+    """``df``, a read of the files ``paths``, planned as ONE partition
+    (``coalesce(1)``) when they total at most the session's
+    ``spark.sql.files.openCostInBytes`` — Spark's own estimate, in bytes
+    of scan, of what opening one file costs (4 MB by default), so no
+    split of a smaller relation pays for itself. The sizes are summed
+    only until they pass that limit, so a large read stats a few files.
+
+    ``SinglePartition`` satisfies every clustered and ordered
+    distribution, so no aggregate, window, join or global sort above
+    such a read plans an ``Exchange`` (one AQE stage job each) or a
+    range-sampling job; a cache of it and a union of such reads stay
+    one partition. A larger read is returned as it is: parallel scan,
+    AQE-sized shuffles. Tests and users move the boundary through the
+    Spark setting."""
+    # the setting as Spark's SQLConf parsed it, in bytes
+    limit = (
+        df.sparkSession._jsparkSession.sessionState()
+        .conf().filesOpenCostInBytes()
+    )
+    total = 0
+    for p in paths:
+        total += os.path.getsize(p)
+        if total > limit:
+            return df
+    return df.coalesce(1)

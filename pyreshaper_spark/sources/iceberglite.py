@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from pyreshaper_spark.session import local_frame
+from pyreshaper_spark.session import local_frame, small_read
 
 
 class SnapshotNotFound(KeyError):
@@ -442,8 +442,14 @@ class IcebergLite:
         unpartitioned snapshot with no applicable deletes — every table
         the engine writes — that is ONE file scan over both sets.
         ``file_col`` does not apply to this read.
+
+        A read whose files total at most the session's
+        ``spark.sql.files.openCostInBytes`` is planned as one partition
+        (:func:`session.small_read`), so the aggregate, window or sort
+        above it plans no shuffle; a larger one scans in parallel.
         """
-        snap = self._snapshot(name, snapshot_id)
+        log = self._read_log(name)
+        snap = self._snapshot(name, snapshot_id, log)
         files = snap["files"]
         if path_filter is not None:
             data = os.path.abspath(self._data(name))
@@ -469,36 +475,58 @@ class IcebergLite:
             )
         deletes = snap.get("deletes") if apply_deletes else None
         if not extra_files:
-            return self._df_for_files(spark, name, files, deletes, file_col)
+            return self._df_for_files(
+                spark, name, files, log, deletes, file_col
+            )
         reader = spark.read
         if schema_json is not None:
             reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
+        data = self._data(name)
+        paths = [os.path.join(data, f["path"]) for f in files]
         if files and (
             any(f.get("partition") for f in files)
             or self._applicable_deletes(deletes, files)
         ):
             # a hive-partitioned (older layout) or merge-on-read-deleted
             # snapshot needs its per-commit read; the extra files join it
-            return self._df_for_files(spark, name, files, deletes).unionByName(
+            df = self._scan_files(spark, name, files, log, deletes)
+            df = df.unionByName(
                 reader.parquet(*extra_files), allowMissingColumns=True
             )
-        data = self._data(name)
-        return reader.parquet(
-            *(os.path.join(data, f["path"]) for f in files), *extra_files
-        )
+        else:
+            df = reader.parquet(*paths, *extra_files)
+        return small_read(df, [*paths, *extra_files])
 
     def _df_for_files(
         self,
         spark: SparkSession,
         name: str,
         files: list[dict],
+        log: dict,
+        deletes: list[dict] | None = None,
+        file_col: str | None = None,
+    ) -> DataFrame:
+        """:meth:`_scan_files`, planned as one partition when the files
+        total at most ``spark.sql.files.openCostInBytes``
+        (:func:`session.small_read`)."""
+        df = self._scan_files(spark, name, files, log, deletes, file_col)
+        data = self._data(name)
+        return small_read(df, (os.path.join(data, f["path"]) for f in files))
+
+    def _scan_files(
+        self,
+        spark: SparkSession,
+        name: str,
+        files: list[dict],
+        log: dict,
         deletes: list[dict] | None = None,
         file_col: str | None = None,
     ) -> DataFrame:
         """DataFrame over an explicit manifest-file subset. Files are
         grouped per commit dir and each group read with its own
         ``basePath`` so hive partition columns are recovered, then
-        unioned by name.
+        unioned by name. ``log`` is the parsed snapshot log the caller
+        took ``files`` from; it supplies each commit's recorded schema.
 
         Schema evolution (add-column): commits may carry different
         column sets; the union aligns by NAME and null-fills columns a
@@ -522,10 +550,7 @@ class IcebergLite:
         keyed = (
             self._delete_keys(spark, name, deletes) if deletes else []
         )
-        schema_by_id = {
-            s["id"]: s.get("schema")
-            for s in self._read_log(name)["snapshots"]
-        }
+        schema_by_id = {s["id"]: s.get("schema") for s in log["snapshots"]}
         parts = []
         for sdir, paths in sorted(by_commit.items()):
             reader = spark.read.option("basePath", os.path.join(data, sdir))
@@ -637,7 +662,8 @@ class IcebergLite:
 
         Returns the new snapshot id.
         """
-        snap = self._snapshot(name, None)
+        log = self._read_log(name)
+        snap = self._snapshot(name, None, log)
         if not snap["files"]:
             raise SnapshotNotFound(f"{name}: empty table")
         # a delete keyed on a column the table doesn't have would commit
@@ -649,7 +675,9 @@ class IcebergLite:
                 for f in json.loads(snap["schema"]).get("fields", [])
             }
         else:
-            cols = set(self._df_for_files(spark, name, snap["files"]).columns)
+            cols = set(
+                self._df_for_files(spark, name, snap["files"], log).columns
+            )
         missing = [c for c in key_cols if c not in cols]
         if missing:
             raise ValueError(
@@ -703,9 +731,10 @@ class IcebergLite:
         The exceptAll cost is bounded by the REWRITTEN files, not the
         table. Pure compaction therefore yields an empty changelog.
         """
-        from_snap = self._snapshot(name, from_snapshot_id)
+        log = self._read_log(name)
+        from_snap = self._snapshot(name, from_snapshot_id, log)
         from_files = {f["path"] for f in from_snap["files"]}
-        to_snap = self._snapshot(name, to_snapshot_id)
+        to_snap = self._snapshot(name, to_snapshot_id, log)
         to_files = {f["path"] for f in to_snap["files"]}
         added = [f for f in to_snap["files"] if f["path"] not in from_files]
         removed = [
@@ -732,7 +761,7 @@ class IcebergLite:
             if not common:
                 continue
             prior = [x for x in to_dels if x["seq"] < d["seq"]]
-            base = self._df_for_files(spark, name, common, prior or None)
+            base = self._df_for_files(spark, name, common, log, prior or None)
             keys = spark.read.parquet(
                 *(os.path.join(self._data(name), p) for p in d["paths"])
             )
@@ -749,19 +778,21 @@ class IcebergLite:
             # from any snapshot in the log that still has files.
             if to_snap["files"]:
                 return (
-                    self._df_for_files(spark, name, to_snap["files"])
+                    self._df_for_files(spark, name, to_snap["files"], log)
                     .limit(0)
                     .withColumn("_change_type", tag)
                 )
             schema_json = to_snap.get("schema")
             if schema_json is None:
-                for s in reversed(self._read_log(name)["snapshots"]):
+                for s in reversed(log["snapshots"]):
                     if s.get("schema") or s["files"]:
                         if s.get("schema"):
                             schema_json = s["schema"]
                         else:
                             return (
-                                self._df_for_files(spark, name, s["files"])
+                                self._df_for_files(
+                                    spark, name, s["files"], log
+                                )
                                 .limit(0)
                                 .withColumn("_change_type", tag)
                             )
@@ -778,12 +809,14 @@ class IcebergLite:
         # rows net to nothing); removed files under FROM's (rows gone
         # before the range must not re-emit as deletes)
         ins = (
-            self._df_for_files(spark, name, added, to_snap.get("deletes"))
+            self._df_for_files(spark, name, added, log, to_snap.get("deletes"))
             if added
             else None
         )
         dels = (
-            self._df_for_files(spark, name, removed, from_snap.get("deletes"))
+            self._df_for_files(
+                spark, name, removed, log, from_snap.get("deletes")
+            )
             if removed
             else None
         )
@@ -936,7 +969,8 @@ class IcebergLite:
 
         Returns (snapshot_id, files_rewritten, files_untouched).
         """
-        snap = self._snapshot(name, None)
+        log = self._read_log(name)
+        snap = self._snapshot(name, None, log)
         cand, untouched = [], []
         for f in snap["files"]:
             skip = (
@@ -952,13 +986,13 @@ class IcebergLite:
             # MOR-deleted rows into its (newer-sequence) output files
             parts.append(
                 self._df_for_files(
-                    spark, name, cand, snap.get("deletes")
+                    spark, name, cand, log, snap.get("deletes")
                 ).join(keys, list(key_cols), "left_anti")
             )
         if replacement is not None:
             parts.append(replacement)
         if not parts:
-            return self._snapshot(name, None)["id"], 0, len(untouched)
+            return snap["id"], 0, len(untouched)
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -1018,7 +1052,8 @@ class IcebergLite:
         """
         import math
 
-        snap = self._snapshot(name, None)
+        log = self._read_log(name)
+        snap = self._snapshot(name, None, log)
         groups: dict[tuple, list[dict]] = {}
         for f in snap["files"]:
             groups.setdefault(tuple(sorted(f["partition"].items())), []).append(f)
@@ -1035,7 +1070,7 @@ class IcebergLite:
             os.path.getsize(os.path.join(data, f["path"])) for f in rewrite
         )
         # materialize outstanding equality deletes into the rewrite
-        df = self._df_for_files(spark, name, rewrite, snap.get("deletes"))
+        df = self._df_for_files(spark, name, rewrite, log, snap.get("deletes"))
         n = max(1, math.ceil(total / target_file_bytes))
         # partitioned tables: bound files PER partition dir; unpartitioned:
         # bound total output files

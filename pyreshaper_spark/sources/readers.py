@@ -35,7 +35,7 @@ from pyspark.sql.types import StructType
 
 from pyreshaper_spark.config import RunConfig
 from pyreshaper_spark.operators.event_time import ensure_event_time
-from pyreshaper_spark.session import local_frame
+from pyreshaper_spark.session import local_frame, small_read
 from pyreshaper_spark.sources.catalog import get_catalog
 
 _COLS = ["doc_id", "tokens", "n_tok", "source", "event_s"]
@@ -126,6 +126,9 @@ def read_input(
     ledger), so nothing is inferred; an empty file set is an empty frame
     of that schema. IcebergLite input is read through the catalog — its
     recorded schemas apply, and so do the snapshot's equality deletes.
+    Either way, files totalling at most the session's
+    ``spark.sql.files.openCostInBytes`` read as one partition
+    (:func:`session.small_read`).
     """
     if cfg.input_format == "iceberglite":
         root, table, snap = split_table_path(cfg.input_path)
@@ -137,10 +140,12 @@ def read_input(
         df = df.select(*[c for c in _COLS if c in df.columns],
                        *[c for c in df.columns if c not in _COLS])
     elif files:
-        df = (
+        paths = [local_path(f) for f in files]
+        df = small_read(
             spark.read.schema(StructType.fromJson(json.loads(schema)))
             .option("basePath", cfg.input_path)
-            .parquet(*map(local_path, files))
+            .parquet(*paths),
+            paths,
         )
     else:
         df = local_frame(spark, StructType.fromJson(json.loads(schema)))

@@ -63,10 +63,19 @@ def register_views(
     snapshot_ids: dict[str, int] | None = None,
 ) -> list[str]:
     """Register a temp view per catalog table (+ ``sequences`` for the
-    input). Returns the registered view names."""
+    input). Returns the registered view names.
+
+    ``sequences`` is every listed input file read as the pipeline reads
+    it (:func:`sources.readers.read_input`, with the ``input_file``
+    lineage column): a parquet directory with the ledger's schema (or
+    the inferred one before the first commit), an IcebergLite input
+    through its catalog with the snapshot's equality deletes applied."""
     cat = get_catalog(cfg.output_path)
     names: list[str] = []
-    spark.read.parquet(cfg.input_path).createOrReplaceTempView("sequences")
+    files = list_input_files(cfg)
+    led = ingest_ledger(cat)
+    schema = led["schema"] if led else input_schema(spark, cfg, files)
+    read_input(spark, cfg, files, schema).createOrReplaceTempView("sequences")
     names.append("sequences")
     for t in cat.list_tables():
         if not cat.exists(t):
@@ -113,9 +122,14 @@ def read_rollup(
     The first realtime read of a pending set also aggregates the
     pending files and writes the staged file; every later read of the
     same set costs a dashboard read plus one small file. With none
-    pending the result is the materialized read alone. Caveat: the materialized leg reflects any retention pruning already
-    applied, while the staged tail holds every pending bucket (pass
-    ``t_min`` inside the retention window).
+    pending the result is the materialized read alone. A scan whose
+    files total at most the session's ``spark.sql.files.openCostInBytes``
+    (4 MB by default) is one partition (``session.small_read``), so a
+    dashboard or realtime read of tier-sized files is ONE Spark job
+    with no shuffle; a larger scan runs in parallel and re-aggregates
+    through an AQE-sized shuffle. Caveat: the materialized leg reflects
+    any retention pruning already applied, while the staged tail holds
+    every pending bucket (pass ``t_min`` inside the retention window).
 
     ``t_min``/``t_max`` must be ``width_s``-aligned so tier-bucket
     pruning and output buckets agree.

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
 import os
+import re
 import sys
+from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -54,3 +56,27 @@ def ddb_rows_set(con, sql, cols):
     names = [d[0] for d in res.description]
     idx = [names.index(c) for c in cols]
     return {tuple(str(row[i]) for i in idx) for row in res.fetchall()}
+
+
+#: a shuffle in plan text (a broadcast is not one)
+SHUFFLE = re.compile(r"(?<!Broadcast)Exchange ")
+
+
+def plan_text(df) -> str:
+    """The physical plan Spark would run for ``df`` (AQE's initial plan,
+    every planned ``Exchange`` included)."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@contextmanager
+def large_reads(spark):
+    """Every file read above ``spark.sql.files.openCostInBytes`` = 1
+    byte, so no read is planned as one partition
+    (``session.small_read``); the setting is restored on exit."""
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from pyreshaper_spark.operators.asof import asof_join, topk_per_series
+from tests.conftest import SF_SMOKE
 
 
 def test_asof_join_semantics(spark):
@@ -60,7 +61,7 @@ def test_register_views(spark, tmp_path):
     from pyreshaper_spark.sql import register_views
 
     seq_path = str(tmp_path / "seq")
-    sequences_df(spark, "/root/testdata/sf0.001").write.parquet(seq_path)
+    sequences_df(spark, SF_SMOKE).write.parquet(seq_path)
     cfg = RunConfig(
         input_path=seq_path, output_path=str(tmp_path / "wh"),
         tiers=(TierSpec("1m", 60),), nsalt=2,
@@ -73,6 +74,47 @@ def test_register_views(spark, tmp_path):
         "SELECT count(*) c FROM tier_1m JOIN meta_source USING (source)"
     ).collect()[0]["c"]
     assert n > 0
+    assert spark.sql("SELECT count(*) FROM sequences").first()[0] == (
+        spark.read.parquet(seq_path).count()
+    )
+
+
+def test_register_views_iceberglite_input(spark, tmp_path):
+    """An IcebergLite input (``<root>::<table>``) is no directory: the
+    ``sequences`` view reads it through the catalog, equality deletes
+    applied."""
+    from pyreshaper_spark.config import RunConfig, TierSpec
+    from pyreshaper_spark.fixtures import sequences_df
+    from pyreshaper_spark.plans.pipeline import run_pipeline
+    from pyreshaper_spark.sources.iceberglite import IcebergLite
+    from pyreshaper_spark.sql import register_views
+
+    seq = sequences_df(spark, SF_SMOKE)
+    cat_in = IcebergLite(str(tmp_path / "in_cat"))
+    cat_in.append("seq", seq)
+    gone = [r[0] for r in seq.select("doc_id").orderBy("doc_id").limit(3)
+            .collect()]
+    cat_in.delete_rows_mor(
+        spark, "seq",
+        spark.createDataFrame([(d,) for d in gone], "doc_id string"),
+        ("doc_id",),
+    )
+    cfg = RunConfig(
+        input_path=f"{cat_in.root}::seq", input_format="iceberglite",
+        output_path=str(tmp_path / "wh"), tiers=(TierSpec("1m", 60),),
+        nsalt=2,
+    )
+    # before the first commit the view takes the table's schema
+    assert "sequences" in register_views(spark, cfg)
+    run_pipeline(spark, cfg, str(tmp_path / "ck.json"))
+    assert "sequences" in register_views(spark, cfg)
+    got = {r[0] for r in spark.sql("SELECT doc_id FROM sequences").collect()}
+    want = {r[0] for r in seq.select("doc_id").collect()} - set(gone)
+    assert got == want
+    n = spark.sql(
+        "SELECT sum(cnt) FROM tier_1m"
+    ).first()[0]
+    assert n == len(want)
 
 
 def test_asof_forward_and_tolerance(spark):

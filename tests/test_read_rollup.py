@@ -24,6 +24,7 @@ from pyreshaper_spark.plans.pipeline import maintain, run_pipeline
 from pyreshaper_spark.sources.iceberglite import IcebergLite
 from pyreshaper_spark.sources.readers import list_input_files, local_path
 from pyreshaper_spark.sql import REALTIME_DIR, read_rollup
+from tests.conftest import SHUFFLE, large_reads, plan_text
 
 SF = "/root/testdata/sf0.001"
 TIERS = (TierSpec("1m", 60), TierSpec("10m", 600))
@@ -336,3 +337,44 @@ def test_staged_tail_iceberglite_equality_delete(spark, tmp_path):
     got = read_rollup(spark, cfg, 600, realtime=True)
     assert _got(got) == _duck(cat_in.live_paths("seq"), 600, gone=gone)
     assert len(_staged(cfg)) == 2 and key in _staged(cfg)
+
+
+def test_small_reads_plan_no_shuffle(spark, tmp_path):
+    """Tier-sized files read as one partition, so a dashboard or
+    realtime read plans no Exchange; above the session's
+    ``spark.sql.files.openCostInBytes`` the same reads shuffle again and
+    return the same rows."""
+    seq = sequences_df(spark, SF)
+    part = F.abs(F.xxhash64(F.col("doc_id").cast("string"))) % 2
+    p = str(tmp_path / "seq")
+    seq.filter(part == 0).write.parquet(p)
+    cfg = RunConfig(
+        input_path=p, output_path=str(tmp_path / "out"), tiers=TIERS,
+        nsalt=2, write_mode="append",
+    )
+    run_pipeline(spark, cfg, str(tmp_path / "ck.json"))
+    seq.filter(part == 1).write.mode("append").parquet(p)
+    src = seq.agg(F.min("source")).first()[0]
+    t0 = EPOCH0 + 86400
+
+    def reads():
+        return [
+            read_rollup(spark, cfg, 1800),
+            read_rollup(spark, cfg, 3600, sources=[src], t_min=t0,
+                        t_max=t0 + 86400),
+            read_rollup(spark, cfg, 1800, realtime=True),
+            read_rollup(spark, cfg, 600, sources=[src], t_min=t0,
+                        t_max=t0 + 86400, realtime=True),
+        ]
+
+    small = reads()
+    for df in small:
+        assert not SHUFFLE.search(plan_text(df)), plan_text(df)
+    with large_reads(spark):
+        large = reads()
+        for df in large:
+            assert SHUFFLE.search(plan_text(df)), plan_text(df)
+        got_large = [_got(df) for df in large]
+    assert [_got(df) for df in small] == got_large
+    assert got_large[2] == _duck(_listed(cfg), 1800) != []
+

@@ -23,6 +23,7 @@ from pyreshaper_spark.plans.delete import delete_docs
 from pyreshaper_spark.plans.pipeline import maintain, run_pipeline
 from pyreshaper_spark.sources.iceberglite import IcebergLite
 from pyreshaper_spark.sql import read_rollup
+from tests.conftest import SHUFFLE, large_reads, plan_text
 
 TIERS = (
     TierSpec("1m", 60, retention_buckets=200),
@@ -203,3 +204,83 @@ def test_hive_partitioned_warehouse_converges(spark, tmp_path):
     want = decode_series_table(rcat.read(spark, "series_enc"))
     cols = ["doc_id", "source", "event_s", "tokens"]
     assert _rows(got, cols) == _rows(want, cols)
+
+
+def _commit_plans(spark, tmp_path, monkeypatch, name):
+    """Plans of every table overwrite of one append cycle, by table."""
+    cfg = _cfg(tmp_path, name, write_mode="append")
+    ck = str(tmp_path / f"ck{name}.json")
+    land(cfg.input_path, "a.parquet", 0, 300)
+    run_pipeline(spark, cfg, ck)
+    land(cfg.input_path, "b.parquet", 300, 60)
+    plans: dict[str, str] = {}
+    overwrite = IcebergLite.overwrite
+
+    def record(self, table, df, *a, **kw):
+        plans[table] = plan_text(df)
+        return overwrite(self, table, df, *a, **kw)
+
+    monkeypatch.setattr(IcebergLite, "overwrite", record)
+    run_pipeline(spark, cfg, ck)
+    monkeypatch.undo()
+    assert {"meta_source", "tier_1m", "tier_10m_filled"} <= set(plans)
+    return plans
+
+
+def test_append_cycle_commits_plan_no_shuffle(spark, tmp_path, monkeypatch):
+    """An append cycle's meta, tier and filled commits read tier-sized
+    files as one partition: no aggregate Exchange, no range sort. Above
+    ``spark.sql.files.openCostInBytes`` the sorted tier commits
+    range-partition again."""
+    plans = _commit_plans(spark, tmp_path, monkeypatch, "_small")
+    for t, plan in plans.items():
+        if t in ("meta_source",) or t.startswith("tier_"):
+            assert not SHUFFLE.search(plan), (t, plan)
+            assert "rangepartitioning" not in plan, (t, plan)
+    with large_reads(spark):
+        plans = _commit_plans(spark, tmp_path, monkeypatch, "_large")
+    for t in ("tier_1m", "tier_10m", "tier_1h"):
+        assert "rangepartitioning" in plans[t], (t, plans[t])
+
+
+def test_small_and_large_reads_converge(spark, tmp_path):
+    """An append cycle and a delete give the same tier, filled and meta
+    tables whether reads run as one partition or in parallel — both
+    equal to DuckDB."""
+    victims = ["d4", "d5", "d100", "d301", "d302"]
+    tiers = (TierSpec("1m", 60), TierSpec("10m", 600), TierSpec("1h", 3600))
+
+    def run(name):
+        cfg = _cfg(tmp_path, name, write_mode="append", tiers=tiers)
+        ck = str(tmp_path / f"ck{name}.json")
+        files = [land(cfg.input_path, "a.parquet", 0, 300)]
+        run_pipeline(spark, cfg, ck)
+        files.append(land(cfg.input_path, "b.parquet", 300, 60))
+        run_pipeline(spark, cfg, ck)
+        delete_docs(spark, cfg, ck, victims)
+        cat = IcebergLite(cfg.output_path)
+        return files, cat, {
+            t: _rows(cat.read(spark, t))
+            for t in tier_tables(cat) + ["meta_source"]
+        }
+
+    files, _, small = run("_small")
+    with large_reads(spark):
+        _, cat, large = run("_large")
+    assert small == large
+    assert sorted(small) == [
+        "meta_source", "tier_10m", "tier_10m_filled", "tier_1h",
+        "tier_1h_filled", "tier_1m",
+    ]
+    for t in tiers:
+        got = _rows(cat.read(spark, f"tier_{t.name}"), AGG)
+        assert got == _duckdb_rollup(files, t.width_s, victims), t.name
+    lst = ", ".join(f"'{p}'" for p in files)
+    excl = ", ".join(f"'{d}'" for d in victims)
+    want = sorted(duckdb.sql(
+        "SELECT source, count(*), sum(n_tok), min(event_s), max(event_s) "
+        f"FROM read_parquet([{lst}]) WHERE doc_id NOT IN ({excl}) "
+        "GROUP BY 1"
+    ).fetchall())
+    cols = ["source", "n_docs", "total_tok", "first_event_s", "last_event_s"]
+    assert _rows(cat.read(spark, "meta_source"), cols) == want

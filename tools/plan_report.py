@@ -17,7 +17,10 @@ the plan properties that matter at 100 TB:
   manifest's source/bucket_s stats and push both predicates into the
   parquet scan;
 * a realtime read is one parquet scan over the tier file and the
-  staged aggregate of the pending files — no union, no raw-input scan.
+  staged aggregate of the pending files — no union, no raw-input scan;
+* reads of files totalling at most ``spark.sql.files.openCostInBytes``
+  are one partition, so rollup reads and append-cycle commits plan no
+  Exchange and no range sampling; above it they shuffle again.
 
 Run: python tools/plan_report.py   (writes PLANS.md at the repo root)
 """
@@ -831,9 +834,81 @@ def main() -> None:
         ],
     ))
 
-    # 20. merge-on-read equality-delete read
+    # 19b. tier-sized reads run in one partition (session.small_read)
     from pyreshaper_spark.sources.iceberglite import IcebergLite
 
+    def commit_plans(cfg) -> dict[str, str]:
+        """Plans of the table overwrites of one append cycle."""
+        plans: dict[str, str] = {}
+        overwrite = IcebergLite.overwrite
+
+        def record(self, table, df, *a, **kw):
+            plans[table] = plan_of(df)
+            return overwrite(self, table, df, *a, **kw)
+
+        IcebergLite.overwrite = record
+        try:
+            run_pipeline(spark, cfg, os.path.join(rt_root, "ck.json"))
+        finally:
+            IcebergLite.overwrite = overwrite
+        return plans
+
+    def shuffles(p: str) -> int:
+        # formatted mode lists each node twice (tree + detail section)
+        return len(re.findall(r"(?<!Broadcast)Exchange\b", p)) // 2
+
+    # the small side: the cycle ingests the pending file of section 19
+    small = commit_plans(rt_cfg)
+    small_tiers = {
+        t: p for t, p in small.items()
+        if t == "meta_source" or t.startswith("tier_")
+    }
+    open_cost = spark.conf.get("spark.sql.files.openCostInBytes")
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    try:
+        seq.limit(50).withColumn(
+            "doc_id", F.concat("doc_id", F.lit("-late2"))
+        ).coalesce(1).write.mode("append").parquet(rt_in)
+        p_route_l = plan_of(read_rollup(spark, rt_cfg, 1800))
+        p_rt_l = plan_of(read_rollup(spark, rt_cfg, 1800, realtime=True))
+        large = commit_plans(rt_cfg)
+    finally:
+        spark.conf.set("spark.sql.files.openCostInBytes", open_cost)
+    sections.append((
+        "Tier-sized reads run in one partition",
+        "\n".join([
+            f"spark.sql.files.openCostInBytes = {open_cost}",
+            "--- tier_10m commit of an append cycle ---",
+            small["tier_10m"],
+            "--- the same commit with openCostInBytes = 1 ---",
+            large["tier_10m"],
+            "--- realtime read with openCostInBytes = 1 ---", p_rt_l,
+        ]),
+        [
+            ("routed read: the tier scan is one partition (Coalesce), "
+             "no Exchange",
+             "Coalesce" in p_route and shuffles(p_route) == 0),
+            ("realtime read: the one scan of tier + staged tail is one "
+             "partition, no Exchange",
+             "Coalesce" in p_rt and shuffles(p_rt) == 0),
+            ("append cycle: meta, tier and filled commits plan no "
+             f"Exchange and no range sampling ({len(small_tiers)} "
+             "commits)",
+             len(small_tiers) == 4
+             and all(shuffles(p) == 0 and "rangepartitioning" not in p
+                     for p in small_tiers.values())),
+            ("openCostInBytes = 1: routed and realtime reads plan their "
+             "Exchange again",
+             shuffles(p_route_l) >= 1 and shuffles(p_rt_l) >= 1
+             and "Coalesce" not in p_route_l),
+            ("openCostInBytes = 1: every sorted tier commit "
+             "range-partitions again",
+             all("rangepartitioning" in large[t]
+                 for t in ("tier_1m", "tier_10m", "tier_10m_filled"))),
+        ],
+    ))
+
+    # 20. merge-on-read equality-delete read
     # ALWAYS rebuild: a stale /tmp table written by an older code
     # version would make these checkmarks meaningless
     mor_root = "/tmp/plan_report_mor"
